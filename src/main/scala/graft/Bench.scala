@@ -161,7 +161,8 @@ object Bench {
       // cells in the builder) and the recall curve (index build)
       "ivf_ann_auto", "ann_recall_curve", "ivfpq_batch", "ivfpq_recall_curve",
       "ivf_ann_filtered",
-      // hybrid_rrf ranks its two bounded top-k lists driver-side
+      // hybrid_rrf runs both retrievals in the builder and returns the
+      // fused lists as a local relation
       "hybrid_rrf",
       // round-12: the rarest-first rewrite collects its |terms|-row df
       // probe in the builder

@@ -24,12 +24,7 @@ object ProfileQuery {
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     graft.functions.NativeFunctions.registerAll(spark)
-    // arbitrary conf pins: SPARK_GRAFT_CONF="k=v;k2=v2" (r19 — A/B any
-    // size-routed policy in the profiling loop)
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(';').foreach { kv =>
-      val Array(k, v) = kv.split("=", 2)
-      spark.conf.set(k.trim, v.trim)
-    })
+    TimeQuery.setConfPins(spark)
     val fn = SparkEntry.queries(name)
     // SPARK_GRAFT_EXPLAIN=1: dump the formatted physical plan once
     // (after any builder-side ensure calls) before the timed reps

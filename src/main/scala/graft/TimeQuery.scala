@@ -9,6 +9,19 @@ import org.apache.spark.sql.SparkSession
   * mirroring Bench's steady-state convention (build-once tables and
   * memos populate during warm-up, exactly like a serving process). */
 object TimeQuery {
+  /** Arbitrary conf pins: SPARK_GRAFT_CONF="k=v;k2=v2" (r19 — lets an
+    * A/B pin any size-routed policy, e.g. graft.gann.fusedMaxEdgeBytes).
+    * Empty segments are skipped; a segment without '=' fails by name. */
+  def setConfPins(spark: SparkSession,
+      pins: Option[String] = sys.env.get("SPARK_GRAFT_CONF")): Unit =
+    pins.foreach(_.split(';')
+      .filter(_.trim.nonEmpty).foreach { kv =>
+        require(kv.contains("="),
+          s"bad SPARK_GRAFT_CONF segment (want k=v): '$kv'")
+        val Array(k, v) = kv.split("=", 2)
+        spark.conf.set(k.trim, v.trim)
+      })
+
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val names = args(1).split(",").toSeq
@@ -30,12 +43,7 @@ object TimeQuery {
       .foreach(spark.conf.set("graft.fts.route", _))
     sys.env.get("SPARK_GRAFT_PPJOIN_ROUTE")
       .foreach(spark.conf.set("graft.ppjoin.route", _))
-    // arbitrary conf pins: SPARK_GRAFT_CONF="k=v;k2=v2" (r19 — lets an
-    // A/B pin any size-routed policy, e.g. graft.gann.fusedMaxEdgeBytes)
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(';').foreach { kv =>
-      val Array(k, v) = kv.split("=", 2)
-      spark.conf.set(k.trim, v.trim)
-    })
+    setConfPins(spark)
     names.foreach { name =>
       val fn = SparkEntry.queries(name)
       try { fn(spark, sfDir).count() }

@@ -229,25 +229,16 @@ object Collections {
     // the second store's anti-join back-fills executors freed by the
     // first store's tail) instead of paying the two absent-check job
     // chains sequentially (r19 verdict #8: s4's cost is 17 sequential
-    // jobs at the dispatch floor). Threads created here inherit the
-    // caller's job group via SparkContext's inheritable local
-    // properties; stores are disjoint directories, so the interleaving
-    // cannot affect either store's state or the digest below.
-    val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]
-    val sinks = Seq(
+    // jobs at the dispatch floor). Stores are disjoint directories, so
+    // the interleaving cannot affect either store's state or the digest
+    // below; a failure in either sink surfaces, the other's attached.
+    DriverThreads.all(Seq(
       (storeA, docs.filter(col("doc_id") % 2 === 0)),
       (storeB, docs.filter(col("lang") === lit("fr")))
-    ).map { case (store, rows) =>
-      val t = new Thread(() =>
-        try {
-          graft.sources.ParquetStore.appendIfAbsent(spark, store, rows,
-            Seq("doc_id"))
-          ()
-        } catch { case t: Throwable => errs.add(t); () })
-      t.start(); t
-    }
-    sinks.foreach(_.join())
-    if (!errs.isEmpty) throw errs.peek()
+    ).map { case (store, rows) => () =>
+      graft.sources.ParquetStore.appendIfAbsent(spark, store, rows,
+        Seq("doc_id"))
+    }: _*)
     val textHash = conv(substring(md5(col("text")), 1, 7), 16, 10)
       .cast("long")
     spark.read.parquet(storeA)

@@ -144,6 +144,12 @@ object GraphAnn {
             / (Similarity.norm(col("embedding")) * qn), 6)
             .as("dist"))
         .collect().map(r => (r.getLong(0), r.getDouble(1))).toMap
+    // a dst without an embeddings row (stale edges table) fails by name
+    def scoredOf(dists: Map[Long, Double], ids: Seq[Long]) = ids.map { id =>
+      require(dists.contains(id),
+        s"edge dst vec_id $id of $edgesT has no embeddings row in $dir")
+      id -> dists(id)
+    }
     // scored: every visited node's (id, dist) — driver-side, bounded
     // by 1 + R·B·M entries of 16 bytes
     var scored = distsOf(Seq(entry))
@@ -192,7 +198,7 @@ object GraphAnn {
         val hop2Ids = e2.map(_._2).distinct.filterNot(known2)
         // job 3: distances for both hops in ONE pruned scan
         val dists = distsOf(fresh1 ++ hop2Ids)
-        scored ++= fresh1.map(id => id -> dists(id))
+        scored ++= scoredOf(dists, fresh1)
         r += 1
         if (r < rounds) {
           // replay round r+1 driver-side from the collected superset:
@@ -208,7 +214,7 @@ object GraphAnn {
             .flatMap(adj.getOrElse(_, Seq.empty[Long]))
             .distinct.filterNot(known2)
           if (fresh2.isEmpty) r = rounds
-          else { scored ++= fresh2.map(id => id -> dists(id)); r += 1 }
+          else { scored ++= scoredOf(dists, fresh2); r += 1 }
         }
       }
     }

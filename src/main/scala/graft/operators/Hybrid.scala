@@ -1,7 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 import graft.functions.TextAnalyzer
 
@@ -23,54 +27,56 @@ import graft.functions.TextAnalyzer
   * to be tuned.
   *
   * Scale shape: each side is already a TakeOrderedAndProject producing
-  * ≤ kEach rows; the fusion is a full-outer join of two k-row frames —
-  * driver-scale work regardless of corpus size. The expensive parts
-  * (the two retrievals) keep their own optimal plans (scan-local FTS,
-  * bucket-pruned ANN probe); fusion adds nothing that grows with data.
+  * ≤ kEach rows; ranking and fusing two such lists is driver-scale work
+  * regardless of corpus size. The expensive parts (the two retrievals)
+  * keep their own optimal plans (scan-local FTS, bucket-pruned ANN
+  * probe); fusion adds nothing that grows with data.
   */
 object Hybrid {
 
   /** RRF of FTS(query text, lang) and KNN(query vector id).
     * Output: (id, rrf, fts_rank, knn_rank) — ranks nullable when a doc
-    * appears in only one list.
-    */
+    * appears in only one list. The retrievals run concurrently (KNN
+    * here, FTS on a second driver thread, [[DriverThreads.all]]); the
+    * fusion is driver-side: `rrf` is the Catalyst expression a
+    * Spark-side fusion ran, folded over a LocalRelation, sorted in
+    * Spark's (rrf desc, id asc) order. Collecting the result fires no
+    * job. */
   def rrfSearch(
       spark: SparkSession, dir: String, query: String, lang: String,
       qid: Long, kEach: Int, kRrf: Int, k: Int): DataFrame = {
-    import spark.implicits._
-    // each retrieval is a TakeOrderedAndProject emitting ≤ kEach rows;
-    // ranking them is driver-scale by construction, so the lists are
-    // collected and ranked locally (one bounded collect per list)
-    // instead of through an unpartitioned row_number window — the plan
-    // keeps zero single-partition operators regardless of corpus size
+    // 1-based ranks of a collected (id, key) list in (key, id) order
+    def ranks(rows: Array[Row], key: Row => Double): Map[Long, Long] =
+      rows.sortBy(r => (key(r), r.getLong(0))).zipWithIndex
+        .map { case (r, i) => r.getLong(0) -> (i + 1L) }.toMap
     // searchAuto rides the persisted index probe when the corpus is
     // past the routing threshold (bit-identical to the scan route,
     // FtsRouteSpec) — the hybrid's FTS side is then corpus-size-
     // independent instead of re-tokenizing documents per query (r18)
-    val fts = Fts.searchAuto(spark, dir, query, lang, kEach)
-      .select(col("doc_id"), col("score")).collect()
-      .map(r => (r.getLong(0), r.getDouble(1)))
-      .sortBy { case (id, s) => (-s, id) }
-      .zipWithIndex
-      .map { case ((id, _), i) => (id, i + 1L) }
-      .toSeq.toDF("doc_id", "fts_rank")
-    val knn = Similarity.knnCosine(spark, dir, qid, kEach, 2.0)
-      .select(col("vec_id"), col("dist")).collect()
-      .map(r => (r.getLong(0), r.getDouble(1)))
-      .sortBy { case (id, dist) => (dist, id) }
-      .zipWithIndex
-      .map { case ((id, _), i) => (id, i + 1L) }
-      .toSeq.toDF("vec_id", "knn_rank")
-    fts.join(knn, col("doc_id") === col("vec_id"), "full_outer")
-      .select(
-        coalesce(col("doc_id"), col("vec_id")).as("id"),
-        round(
-          coalesce(lit(1.0) / (lit(kRrf) + col("fts_rank")), lit(0.0)) +
-            coalesce(lit(1.0) / (lit(kRrf) + col("knn_rank")), lit(0.0)),
-          6).as("rrf"),
-        col("fts_rank"), col("knn_rank"))
-      .orderBy(col("rrf").desc, col("id").asc)
-      .limit(k)
+    val Seq(knn, fts) = DriverThreads.all(
+      () => ranks(Similarity.knnCosine(spark, dir, qid, kEach, 2.0)
+        .select(col("vec_id"), col("dist")).collect(), _.getDouble(1)),
+      () => ranks(Fts.searchAuto(spark, dir, query, lang, kEach)
+        .select(col("doc_id"), col("score")).collect(), -_.getDouble(1)))
+    val ids = (fts.keys ++ knn.keys).toSeq.distinct
+    def side(m: Map[Long, Long], id: Long): Seq[Any] =
+      m.get(id).fold(Seq[Any](null, null))(r => Seq(id, r))
+    val joined = spark.createDataFrame(
+      ids.map(id => Row.fromSeq(side(fts, id) ++ side(knn, id))).asJava,
+      StructType(Seq("doc_id", "fts_rank", "vec_id", "knn_rank")
+        .map(StructField(_, LongType))))
+    val fused = joined.select(
+      coalesce(col("doc_id"), col("vec_id")).as("id"),
+      round(
+        coalesce(lit(1.0) / (lit(kRrf) + col("fts_rank")), lit(0.0)) +
+          coalesce(lit(1.0) / (lit(kRrf) + col("knn_rank")), lit(0.0)),
+        6).as("rrf"),
+      col("fts_rank"), col("knn_rank"))
+    val top = fused.collect().sortWith { (a, b) =>
+      val c = SQLOrderingUtil.compareDoubles(b.getDouble(1), a.getDouble(1))
+      c < 0 || (c == 0 && a.getLong(0) < b.getLong(0))
+    }.take(k)
+    spark.createDataFrame(top.toSeq.asJava, fused.schema)
   }
 
   /** DuckDB oracle mirroring `rrfSearch` (both ranked lists rebuilt with

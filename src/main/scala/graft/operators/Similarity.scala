@@ -1,8 +1,12 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.Tables
 
@@ -445,46 +449,23 @@ object Similarity {
     * a pushable BETWEEN), the nProbe nearest cells — ≤ nProbe1·k2 rows
     * scanned, bounded collect; (3) the standard bucket-pruned exact
     * cosine re-rank inside the probed cells. Every driver collect is
-    * parameter-sized (nProbe1, then nProbe) — the flat probe's k-row
-    * centroid scan never happens. */
+    * parameter-sized (k1 router rows, then ≤ nProbe1·k2 cells) — the
+    * flat probe's k-row centroid scan never happens. */
   def ivfTopKHier(spark: SparkSession, dir: String, qid: Long, k: Int,
       k1: Int, k2: Int, nProbe1: Int, nProbe: Int): DataFrame = {
     val idx = ensureIvfIndexHier(spark, dir, k1, k2)
-    val qv = Tables.embeddings(spark, dir)
-      .filter(col("vec_id") === lit(qid))
-      .select(col("embedding").cast("array<double>"))
-      .head().getSeq[Double](0)
-    val qvCol = typedLit(qv)
-    val qn = math.sqrt(qv.foldLeft(0.0)((acc, x) => acc + x * x))
+    val qv = queryVector(spark, dir, qid)
     // (1) coarse routing: k1 rows, nProbe1 survivors
-    val coarseIds = spark.table(s"${idx}_coarse")
-      .select(col("centroid_id"),
-        round(lit(1.0) - dot(col("cv"), qvCol) / (col("cn") * lit(qn)), 6)
-          .as("qdist"))
-      .orderBy(col("qdist").asc, col("centroid_id").asc)
-      .limit(nProbe1)
-      .collect().map(_.getLong(0)).toSeq
+    val coarseIds = nearestCells(spark.table(s"${idx}_coarse"), qv, nProbe1)
     // (2) cells within the routed groups: pushable id ranges
     val inGroups = coarseIds.map(c =>
       col("centroid_id").between(c * k2, c * k2 + k2 - 1))
       .reduce(_ || _)
-    val cells = spark.table(s"${idx}_cents")
-      .filter(inGroups)
-      .select(col("centroid_id"),
-        round(lit(1.0) - dot(col("cv"), qvCol) / (col("cn") * lit(qn)), 6)
-          .as("qdist"))
-      .orderBy(col("qdist").asc, col("centroid_id").asc)
-      .limit(nProbe)
-      .collect().map(_.getLong(0)).toSeq
+    val cells =
+      nearestCells(spark.table(s"${idx}_cents").filter(inGroups), qv, nProbe)
     // (3) exact re-rank inside the probed (bucket-pruned) cells
-    spark.table(idx)
-      .filter(col("centroid_id").isin(cells: _*))
-      .filter(col("vec_id") =!= lit(qid))
-      .select(col("vec_id"), col("label"), col("centroid_id"),
-        round(lit(1.0) - dot(col("embedding"), qvCol)
-          / (col("nrm") * lit(qn)), 6).as("dist"))
-      .orderBy(col("dist").asc, col("vec_id").asc)
-      .limit(k)
+    rerankCells(spark.table(idx).filter(col("centroid_id").isin(cells: _*)),
+      qid, qv, k)
   }
 
   /** DuckDB twin of [[ivfTopKHier]] — the hierarchical regime's probe
@@ -790,31 +771,13 @@ object Similarity {
   def ivfTopKDeleted(spark: SparkSession, dir: String, qid: Long, k: Int,
       nCentroids: Int, mod: Long, nProbe: Int = 2): DataFrame = {
     val idx = ensureIvfIndex(spark, dir, nCentroids)
-    val qv = Tables.embeddings(spark, dir)
-      .filter(col("vec_id") === lit(qid))
-      .select(col("embedding").cast("array<double>"))
-      .head().getSeq[Double](0)
-    val qvCol = typedLit(qv)
-    val qn = math.sqrt(qv.foldLeft(0.0)((acc, x) => acc + x * x))
-    val cells = spark.table(s"${idx}_cents")
-      .select(col("centroid_id"),
-        round(lit(1.0) - dot(col("cv"), qvCol) / (col("cn") * lit(qn)), 6)
-          .as("qdist"))
-      .orderBy(col("qdist").asc, col("centroid_id").asc)
-      .limit(nProbe)
-      .collect().map(_.getLong(0)).toSeq
+    val qv = queryVector(spark, dir, qid)
     val tomb = Tables.embeddings(spark, dir)
       .filter(col("vec_id") % mod === 0)
       .select(col("vec_id"))
-    spark.table(idx)
-      .filter(col("centroid_id").isin(cells: _*))
-      .filter(col("vec_id") =!= lit(qid))
-      .join(tomb, Seq("vec_id"), "left_anti")
-      .select(col("vec_id"), col("label"), col("centroid_id"),
-        round(lit(1.0) - dot(col("embedding"), qvCol)
-          / (col("nrm") * lit(qn)), 6).as("dist"))
-      .orderBy(col("dist").asc, col("vec_id").asc)
-      .limit(k)
+    rerankCells(spark.table(idx)
+      .filter(col("centroid_id").isin(probeCells(spark, idx, qv, nProbe): _*))
+      .join(tomb, Seq("vec_id"), "left_anti"), qid, qv, k)
   }
 
   /** Index COMPACTION (vacuum) — the maintenance step that closes the
@@ -887,25 +850,89 @@ object Similarity {
       nProbe: Int = 2): DataFrame = {
     val base = ensureIvfIndex(spark, dir, nCentroids)
     val vac = ensureCompactedIvfIndex(spark, dir, nCentroids, mod)
-    val qv = Tables.embeddings(spark, dir)
+    val qv = queryVector(spark, dir, qid)
+    // centroids are the BASE generation's — compaction never retrains
+    rerankCells(spark.table(vac)
+      .filter(col("centroid_id").isin(probeCells(spark, base, qv, nProbe): _*)),
+      qid, qv, k)
+  }
+
+  /** The `_cents` rows (centroid_id, cv, cn) of IVF index `idx`,
+    * memoized per (warehouse, index table name). The name embeds the
+    * embeddings content hash, so a rewritten corpus mints a new key;
+    * entries obey the flat fit's own driver bound. */
+  private val centroidMemo =
+    new DriverMemo[(String, String), (StructType, Seq[Row])](16)
+
+  /** Live centroid-memo entries (spec hook). */
+  def centroidMemoSize: Int = centroidMemo.size
+
+  /** [[centroidMemo]]'s rows as a LocalRelation: a projection over it
+    * folds on the driver, so collecting it launches no job. */
+  private[operators] def centroidFrame(spark: SparkSession,
+      idx: String): DataFrame = {
+    val warehouse = spark.conf.get("spark.sql.warehouse.dir")
+    val (schema, rows) = centroidMemo.getOrCompute((warehouse, idx), idx) {
+      val cents = spark.table(s"${idx}_cents")
+        .select(col("centroid_id"), col("cv"), col("cn"))
+      val rows = cents.collect().toSeq
+      val cells = rows.map(_.getSeq[Double](1).length.toLong).sum
+      require(cells <= Clustering.MaxDriverCentroidCells,
+        s"${idx}_cents holds $cells centroid cells, past " +
+          s"MaxDriverCentroidCells=${Clustering.MaxDriverCentroidCells}")
+      (cents.schema, rows)
+    }
+    spark.createDataFrame(rows.asJava, schema)
+  }
+
+  /** Ids of the `n` rows of a (centroid_id, cv, cn) frame nearest to
+    * `qv` by round-6 cosine: the Catalyst distance expression, collected,
+    * then sorted on the driver in Spark's own (qdist asc, centroid_id
+    * asc) order — nulls first, SQLOrderingUtil's double compare — so
+    * the ids equal an orderBy/limit top-k job's. */
+  private def nearestCells(cents: DataFrame, qv: Seq[Double],
+      n: Int): Seq[Long] = {
+    val qn = math.sqrt(qv.foldLeft(0.0)((acc, x) => acc + x * x))
+    cents.select(col("centroid_id"),
+        round(lit(1.0) - dot(col("cv"), typedLit(qv))
+          / (col("cn") * lit(qn)), 6).as("qdist"))
+      .collect()
+      .sortWith { (a, b) =>
+        val c = (a.isNullAt(1), b.isNullAt(1)) match {
+          case (false, false) =>
+            SQLOrderingUtil.compareDoubles(a.getDouble(1), b.getDouble(1))
+          case (x, y) => y.compare(x)
+        }
+        c < 0 || (c == 0 && a.getLong(0) < b.getLong(0))
+      }
+      .take(n).map(_.getLong(0)).toSeq
+  }
+
+  /** The query's `nProbe` nearest cells of flat IVF index `idx`, ranked
+    * on the driver from [[centroidFrame]] — no job once memoized. */
+  def probeCells(spark: SparkSession, idx: String, qv: Seq[Double],
+      nProbe: Int): Seq[Long] =
+    nearestCells(centroidFrame(spark, idx), qv, nProbe)
+
+  /** One-row point lookup of query vector `qid`; the cast mirrors
+    * dot()'s per-element double cast, so downstream arithmetic is
+    * bit-identical. */
+  private def queryVector(spark: SparkSession, dir: String,
+      qid: Long): Seq[Double] =
+    Tables.embeddings(spark, dir)
       .filter(col("vec_id") === lit(qid))
       .select(col("embedding").cast("array<double>"))
       .head().getSeq[Double](0)
-    val qvCol = typedLit(qv)
+
+  /** Exact re-rank of IVF index rows already pruned to the probed
+    * cells: drop the query itself, round-6 cosine distance, top-k by
+    * (dist, vec_id). */
+  private def rerankCells(rows: DataFrame, qid: Long, qv: Seq[Double],
+      k: Int): DataFrame = {
     val qn = math.sqrt(qv.foldLeft(0.0)((acc, x) => acc + x * x))
-    // centroids are the BASE generation's — compaction never retrains
-    val cells = spark.table(s"${base}_cents")
-      .select(col("centroid_id"),
-        round(lit(1.0) - dot(col("cv"), qvCol) / (col("cn") * lit(qn)), 6)
-          .as("qdist"))
-      .orderBy(col("qdist").asc, col("centroid_id").asc)
-      .limit(nProbe)
-      .collect().map(_.getLong(0)).toSeq
-    spark.table(vac)
-      .filter(col("centroid_id").isin(cells: _*))
-      .filter(col("vec_id") =!= lit(qid))
+    rows.filter(col("vec_id") =!= lit(qid))
       .select(col("vec_id"), col("label"), col("centroid_id"),
-        round(lit(1.0) - dot(col("embedding"), qvCol)
+        round(lit(1.0) - dot(col("embedding"), typedLit(qv))
           / (col("nrm") * lit(qn)), 6).as("dist"))
       .orderBy(col("dist").asc, col("vec_id").asc)
       .limit(k)
@@ -917,9 +944,9 @@ object Similarity {
     * the corpus). Deterministic: tiebreaks on centroid id and vec id.
     *
     * Probe path: the query vector is a one-row driver lookup (inherent
-    * to point-query ANN); the nProbe cell ids come from the centroids
-    * side table (nCentroids rows) and are inlined as an IN-list literal
-    * so the bucketed index scan statically prunes to those buckets
+    * to point-query ANN); the nProbe cell ids are ranked on the driver
+    * ([[probeCells]], no job) and inlined as an IN-list literal so the
+    * bucketed index scan statically prunes to those buckets
     * (plan-asserted in SimilaritySpec). No assignment recompute, no
     * join back to the source table.
     */
@@ -927,31 +954,10 @@ object Similarity {
       spark: SparkSession, dir: String, qid: Long, k: Int,
       nCentroids: Int, nProbe: Int = 2): DataFrame = {
     val idx = ensureIvfIndex(spark, dir, nCentroids)
-    // one-row point lookup of the query vector; cast mirrors dot()'s
-    // per-element double cast so downstream arithmetic is bit-identical
-    val qv = Tables.embeddings(spark, dir)
-      .filter(col("vec_id") === lit(qid))
-      .select(col("embedding").cast("array<double>"))
-      .head().getSeq[Double](0)
-    val qvCol = typedLit(qv)
-    val qn = math.sqrt(qv.foldLeft(0.0)((acc, x) => acc + x * x))
-    // nProbe nearest centroids — tiny frame, collected so the cell ids
-    // become a static IN-list the scan can bucket-prune on
-    val cells = spark.table(s"${idx}_cents")
-      .select(col("centroid_id"),
-        round(lit(1.0) - dot(col("cv"), qvCol) / (col("cn") * lit(qn)), 6)
-          .as("qdist"))
-      .orderBy(col("qdist").asc, col("centroid_id").asc)
-      .limit(nProbe)
-      .collect().map(_.getLong(0)).toSeq
-    spark.table(idx)
-      .filter(col("centroid_id").isin(cells: _*))
-      .filter(col("vec_id") =!= lit(qid))
-      .select(col("vec_id"), col("label"), col("centroid_id"),
-        round(lit(1.0) - dot(col("embedding"), qvCol)
-          / (col("nrm") * lit(qn)), 6).as("dist"))
-      .orderBy(col("dist").asc, col("vec_id").asc)
-      .limit(k)
+    val qv = queryVector(spark, dir, qid)
+    rerankCells(spark.table(idx)
+      .filter(col("centroid_id").isin(probeCells(spark, idx, qv, nProbe): _*)),
+      qid, qv, k)
   }
 
   /** FILTERED ANN — the metadata-predicate + vector-search composition
@@ -970,28 +976,10 @@ object Similarity {
   def ivfTopKFiltered(spark: SparkSession, dir: String, qid: Long,
       label: Int, k: Int, nCentroids: Int, nProbe: Int = 2): DataFrame = {
     val idx = ensureIvfIndex(spark, dir, nCentroids)
-    val qv = Tables.embeddings(spark, dir)
-      .filter(col("vec_id") === lit(qid))
-      .select(col("embedding").cast("array<double>"))
-      .head().getSeq[Double](0)
-    val qvCol = typedLit(qv)
-    val qn = math.sqrt(qv.foldLeft(0.0)((acc, x) => acc + x * x))
-    val cells = spark.table(s"${idx}_cents")
-      .select(col("centroid_id"),
-        round(lit(1.0) - dot(col("cv"), qvCol) / (col("cn") * lit(qn)), 6)
-          .as("qdist"))
-      .orderBy(col("qdist").asc, col("centroid_id").asc)
-      .limit(nProbe)
-      .collect().map(_.getLong(0)).toSeq
-    spark.table(idx)
-      .filter(col("centroid_id").isin(cells: _*))
-      .filter(col("label") === lit(label))
-      .filter(col("vec_id") =!= lit(qid))
-      .select(col("vec_id"), col("label"), col("centroid_id"),
-        round(lit(1.0) - dot(col("embedding"), qvCol)
-          / (col("nrm") * lit(qn)), 6).as("dist"))
-      .orderBy(col("dist").asc, col("vec_id").asc)
-      .limit(k)
+    val qv = queryVector(spark, dir, qid)
+    rerankCells(spark.table(idx)
+      .filter(col("centroid_id").isin(probeCells(spark, idx, qv, nProbe): _*))
+      .filter(col("label") === lit(label)), qid, qv, k)
   }
 
   def ivfTopKFilteredOracleSql(qid: Long, label: Int, k: Int,

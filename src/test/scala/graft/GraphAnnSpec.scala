@@ -14,6 +14,27 @@ class GraphAnnSpec extends SparkSpec {
     assert(spark.table(t).filter(col("src") === col("dst")).count() == 0L)
   }
 
+  test("an edge to a vec_id with no embeddings row fails by name") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft-gann-stale")
+    val path = s"$dir/embeddings.parquet"
+    try {
+      Tables.embeddings(spark, Sf0001).write.parquet(path)
+      val t = GraphAnn.ensureGraphIndex(spark, dir.toString, 8, 6)
+      // a stale edges table: every node also points at a missing vector
+      spark.table(t).select("src").distinct().as[Long].collect().toSeq
+        .map(src => (src, 9999999L, 0.0)).toDF("src", "dst", "dist")
+        .write.insertInto(t)
+      val e = intercept[IllegalArgumentException](GraphAnn.beamSearch(
+        spark, dir.toString, 42L, 0L, 8, 6, 4, 3, 5))
+      assert(e.getMessage.contains("vec_id 9999999") &&
+        e.getMessage.contains(t))
+    } finally {
+      Tables.invalidate(path)
+      graft.sources.ParquetStore.deleteRecursively(dir)
+    }
+  }
+
   test("beam walk recalls most of the exact top-10 from a far entry") {
     val exact = Similarity.knnCosine(spark, Sf0001, 42L, 10, 2.0)
       .collect().map(_.getAs[Long]("vec_id")).toSet

@@ -1,8 +1,83 @@
 package graft
 
-import graft.operators.{Fts, Hybrid, Similarity}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
+
+import graft.operators.{DriverThreads, Fts, Hybrid, Similarity}
 
 class HybridSpec extends SparkSpec {
+
+  /** The former Spark-side fusion: both ranked lists as frames, a full
+    * outer join, rrf, then orderBy/limit in the engine. */
+  private def sparkSideRrf(query: String, lang: String, qid: Long,
+      kEach: Int, kRrf: Int, k: Int): DataFrame = {
+    import spark.implicits._
+    val fts = Fts.searchAuto(spark, Sf0001, query, lang, kEach)
+      .select(col("doc_id"), col("score")).collect()
+      .map(r => (r.getLong(0), r.getDouble(1)))
+      .sortBy { case (id, s) => (-s, id) }
+      .zipWithIndex
+      .map { case ((id, _), i) => (id, i + 1L) }
+      .toSeq.toDF("doc_id", "fts_rank")
+    val knn = Similarity.knnCosine(spark, Sf0001, qid, kEach, 2.0)
+      .select(col("vec_id"), col("dist")).collect()
+      .map(r => (r.getLong(0), r.getDouble(1)))
+      .sortBy { case (id, dist) => (dist, id) }
+      .zipWithIndex
+      .map { case ((id, _), i) => (id, i + 1L) }
+      .toSeq.toDF("vec_id", "knn_rank")
+    fts.join(knn, col("doc_id") === col("vec_id"), "full_outer")
+      .select(
+        coalesce(col("doc_id"), col("vec_id")).as("id"),
+        round(
+          coalesce(lit(1.0) / (lit(kRrf) + col("fts_rank")), lit(0.0)) +
+            coalesce(lit(1.0) / (lit(kRrf) + col("knn_rank")), lit(0.0)),
+          6).as("rrf"),
+        col("fts_rank"), col("knn_rank"))
+      .orderBy(col("rrf").desc, col("id").asc)
+      .limit(k)
+  }
+
+  test("driver-side fusion equals the Spark-side fusion: rows, order, " +
+      "schema; collecting the result fires no job") {
+    for (kEach <- Seq(1, 15, 20); k <- Seq(1, 10, 1000);
+         (query, qid) <- Seq(("hash join merge", 0L), ("index scan", 42L))) {
+      val ctx = s"kEach=$kEach k=$k query='$query' qid=$qid"
+      val got = Hybrid.rrfSearch(spark, Sf0001, query, "en", qid, kEach,
+        60, k)
+      val want = sparkSideRrf(query, "en", qid, kEach, 60, k)
+      assert(got.schema == want.schema, ctx)
+      val (rows, jobs) = jobsFired(got.collect())
+      assert(jobs == 0, s"$ctx: collecting fired $jobs jobs")
+      assert(rows.toSeq == want.collect().toSeq, ctx)
+    }
+  }
+
+  test("an FTS-side failure surfaces as the FTS exception") {
+    val e = intercept[IllegalArgumentException](
+      Hybrid.rrfSearch(spark, Sf0001, "", "en", 0L, 20, 60, 10))
+    assert(e.getMessage.contains("query analyzes to no terms"))
+  }
+
+  test("DriverThreads: results in task order, the caller's job group " +
+      "on forked threads, first failure thrown with the rest suppressed") {
+    val sc = spark.sparkContext
+    sc.setJobGroup("driver-threads-spec", "spec", interruptOnCancel = false)
+    try {
+      val groups = DriverThreads.all(
+        () => sc.getLocalProperty("spark.jobGroup.id"),
+        () => sc.getLocalProperty("spark.jobGroup.id"),
+        () => sc.getLocalProperty("spark.jobGroup.id"))
+      assert(groups == Seq.fill(3)("driver-threads-spec"))
+    } finally sc.clearJobGroup()
+    assert(DriverThreads.all(() => 1, () => 2, () => 3) == Seq(1, 2, 3))
+    val e = intercept[IllegalStateException](DriverThreads.all(
+      () => 0,
+      () => throw new IllegalStateException("second"),
+      () => throw new IllegalArgumentException("third")))
+    assert(e.getMessage == "second")
+    assert(e.getSuppressed.map(_.getMessage).toSeq == Seq("third"))
+  }
 
   test("rrf fuses both lists: docs in both rank above single-list docs of equal rank") {
     val out = Hybrid

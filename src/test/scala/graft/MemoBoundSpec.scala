@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{DriverMemo, Fts}
+import graft.operators.{DriverMemo, Fts, Similarity}
 
 /** Proves the driver-memo discipline (r17 verdict #2): per-query
   * driver state stays BOUNDED under an unbounded stream of distinct
@@ -60,5 +60,20 @@ class MemoBoundSpec extends SparkSpec {
     val before = Fts.dfProbeMemoSize
     pairs.take(5).foreach(ts => Fts.termDfs(spark, idx, ts, "en"))
     assert(Fts.dfProbeMemoSize == before)
+  }
+
+  test("IVF centroid memo holds one entry per index, not per query") {
+    val idx = Similarity.ensureIvfIndex(spark, Sf0001, 10)
+    val vecs = Tables.embeddings(spark, Sf0001)
+      .select(org.apache.spark.sql.functions.col("embedding")
+        .cast("array<double>"))
+      .limit(200).collect().map(_.getSeq[Double](0))
+    Similarity.probeCells(spark, idx, vecs.head, 2)
+    val before = Similarity.centroidMemoSize
+    // 200 distinct query vectors probe the same index generation
+    vecs.foreach(qv => Similarity.probeCells(spark, idx, qv, 2))
+    assert(Similarity.centroidMemoSize == before)
+    assert(Similarity.centroidMemoSize <= 16,
+      s"centroid memo must stay bounded, got ${Similarity.centroidMemoSize}")
   }
 }

@@ -66,7 +66,7 @@ class PlanLintSpec extends SparkSpec {
     "pq_recall",  // Q-row query frame riding the codes/embeddings scans
     "ivfpq_recall", // Q·nProbe probe-pair frame riding the same scans
     "ivfpq_recall_curve", // same probe-pair frame, one row per pool width
-    "ivf_batch", "hybrid_rrf", "keywords_tfidf", "sketch_bloom",
+    "ivf_batch", "keywords_tfidf", "sketch_bloom",
     "bq_ann",    // one-row query frame riding the 16-byte codes scan
     "bq_recall", // Q-row query frame riding the codes scan
     "quant_recall", // Q-row query frame riding the embeddings scan

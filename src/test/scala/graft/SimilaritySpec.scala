@@ -238,6 +238,75 @@ class SimilaritySpec extends SparkSpec {
     }
   }
 
+  /** The former Spark-side probe ranking: a cents-table top-k job. */
+  private def sparkSideCells(idx: String, qv: Seq[Double],
+      nProbe: Int): Seq[Long] = {
+    val qn = math.sqrt(qv.map(x => x * x).sum)
+    spark.table(s"${idx}_cents")
+      .select($"centroid_id",
+        round(lit(1.0) - Similarity.dot($"cv", typedLit(qv))
+          / ($"cn" * lit(qn)), 6).as("qdist"))
+      .orderBy($"qdist".asc, $"centroid_id".asc)
+      .limit(nProbe)
+      .collect().map(_.getLong(0)).toSeq
+  }
+
+  private def queryVec(dir: String, qid: Long): Seq[Double] =
+    Tables.embeddings(spark, dir).filter($"vec_id" === qid)
+      .select($"embedding".cast("array<double>")).head().getSeq[Double](0)
+
+  test("probeCells equals the Spark-side cents ranking and, once the " +
+      "centroids are memoized, fires no job") {
+    val nCentroids = 10
+    val idx = Similarity.ensureIvfIndex(spark, Sf0001, nCentroids)
+    Similarity.probeCells(spark, idx, queryVec(Sf0001, 0L), 1)
+    for (qid <- Seq(0L, 7L, 42L, 123L, 256L, 499L);
+         nProbe <- Seq(1, 2, nCentroids, nCentroids + 3)) {
+      val qv = queryVec(Sf0001, qid)
+      val (cells, jobs) =
+        jobsFired(Similarity.probeCells(spark, idx, qv, nProbe))
+      assert(jobs == 0, s"qid=$qid nProbe=$nProbe fired $jobs jobs")
+      assert(cells == sparkSideCells(idx, qv, nProbe),
+        s"qid=$qid nProbe=$nProbe")
+    }
+  }
+
+  test("rewriting the embeddings mints a new index generation whose " +
+      "probe cells come from the new centroids") {
+    import java.nio.file.Files
+    val dir = Files.createTempDirectory("graft-ivf-gen").toString
+    val path = s"$dir/embeddings.parquet"
+    val src = Tables.embeddings(spark, Sf0001)
+    try {
+      src.write.parquet(path)
+      val idx1 = Similarity.ensureIvfIndex(spark, dir, 8)
+      val qv1 = queryVec(dir, 42L)
+      val cells1 = Similarity.probeCells(spark, idx1, qv1, 3)
+      assert(cells1 == sparkSideCells(idx1, qv1, 3))
+      // rewrite in place: every vector reversed — new files, new
+      // content hash, different trained centroids
+      src.select($"vec_id", $"label", reverse($"embedding").as("embedding"))
+        .write.mode("overwrite").parquet(path)
+      Tables.invalidate(path)
+      val idx2 = Similarity.ensureIvfIndex(spark, dir, 8)
+      assert(idx2 != idx1, "a rewritten corpus must mint a new generation")
+      val qv2 = queryVec(dir, 42L)
+      assert(qv2 == qv1.reverse)
+      val cents1 = spark.table(s"${idx1}_cents").orderBy("centroid_id")
+        .collect().toSeq
+      val cents2 = spark.table(s"${idx2}_cents").orderBy("centroid_id")
+        .collect().toSeq
+      assert(cents1 != cents2)
+      for (nProbe <- Seq(1, 3, 8))
+        assert(Similarity.probeCells(spark, idx2, qv2, nProbe) ==
+          sparkSideCells(idx2, qv2, nProbe), s"nProbe=$nProbe")
+    } finally {
+      Tables.invalidate(path)
+      graft.sources.ParquetStore.deleteRecursively(
+        java.nio.file.Paths.get(dir))
+    }
+  }
+
   test("ivf probe bucket-prunes: index scan touches < all buckets") {
     val df = Similarity.ivfTopK(spark, Sf0001, 42L, 5, 10, 2)
     df.collect() // finalize AQE

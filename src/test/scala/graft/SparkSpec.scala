@@ -30,4 +30,35 @@ object SparkSpec {
 abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.spark
   val Sf0001 = "/root/testdata/sf0.001"
+
+  /** `body`'s value and the number of Spark jobs it started, counting
+    * jobs of threads it forks too (they inherit the job group). A
+    * marker job run afterwards flushes the listener bus, so the count
+    * is exact, zero included. */
+  def jobsFired[A](body: => A): (A, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val group = s"jobs-fired-${java.util.UUID.randomUUID}"
+    val marker = s"$group-marker"
+    val fired = new java.util.concurrent.atomic.AtomicInteger
+    val flushed = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(`group`) => fired.incrementAndGet()
+          case Some(`marker`) => flushed.countDown()
+          case _ =>
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "jobsFired", interruptOnCancel = false)
+      val out = try body finally sc.clearJobGroup()
+      sc.setJobGroup(marker, "jobsFired marker", interruptOnCancel = false)
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(flushed.await(60, java.util.concurrent.TimeUnit.SECONDS),
+        "listener bus did not deliver the marker job")
+      (out, fired.get)
+    } finally sc.removeSparkListener(listener)
+  }
 }
