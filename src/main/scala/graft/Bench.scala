@@ -103,6 +103,24 @@ object Bench {
         l, org.apache.logging.log4j.Level.ERROR))
     graft.functions.NativeFunctions.registerAll(spark)
     val names = SparkEntry.queries.keys.toSeq.sorted
+    // every failed warm-up, pre-touch, timed rep or plan pass lands in
+    // the detail file's "errors" list (query, pass, exception) instead
+    // of vanishing; a timed rep that throws is still discarded
+    val errors = scala.collection.mutable.ArrayBuffer.empty[String]
+    def attempt[T](name: String, pass: String)(body: => T): Option[T] =
+      try Some(body)
+      catch {
+        case scala.util.control.NonFatal(e) =>
+          def js(s: String): String = s.flatMap {
+            case '"' => "\\\""
+            case '\\' => "\\\\"
+            case c if c < ' ' => f"\\u${c.toInt}%04x"
+            case c => c.toString
+          }
+          errors += s"""{"query":"${js(name)}","pass":"$pass",""" +
+            s""""error":"${js(e.toString.take(1000))}"}"""
+          None
+      }
     // warm-up pass (untimed) — this is also the ENSURE PRE-PASS: every
     // persisted family's first touch lands here, and the builders'
     // aggregate wall time is reported as ensure_build_sec on the
@@ -112,8 +130,7 @@ object Bench {
     // detail file means something REBUILT inside the timed loop — a
     // bug signal, never expected.
     names.foreach { name =>
-      try SparkEntry.queries(name)(spark, sfDir).count()
-      catch { case _: Throwable => () }
+      attempt(name, "warmup")(SparkEntry.queries(name)(spark, sfDir).count())
     }
     val ensureBuildSec = graft.operators.ScaleOps.BuildTimer.totalSec
     val ensureBuildN = graft.operators.ScaleOps.BuildTimer.count
@@ -195,8 +212,7 @@ object Bench {
       // steady state 0.3-0.9 s. Min-of-N is DEFINED as the steady-state
       // number (see the methodology note above); the pre-touch makes
       // every rep eligible instead of sacrificing rep 1 to re-warming.
-      try SparkEntry.queries(name)(spark, sfDir).count()
-      catch { case _: Throwable => () }
+      attempt(name, "pretouch")(SparkEntry.queries(name)(spark, sfDir).count())
       // timed reps run under a per-query job group so the artifact can
       // carry jobs-per-rep — the mechanical input to the pairing tool's
       // floor_bound tag (r17 verdict #4: spark_s ≤ jobs × floor_noop ×
@@ -207,23 +223,23 @@ object Bench {
       spark.sparkContext.setJobGroup(s"bench_$name", name,
         interruptOnCancel = false)
       val runs = (0 until reps).flatMap { _ =>
-        try {
+        attempt(name, "timed") {
           val t0 = System.nanoTime()
           SparkEntry.queries(name)(spark, sfDir).count()
-          Some((System.nanoTime() - t0) / 1e9)
-        } catch { case _: Throwable => None }
+          (System.nanoTime() - t0) / 1e9
+        }
       }
       spark.sparkContext.clearJobGroup()
       // separate pass: planning floor (construction through executedPlan)
       val plans =
         if (driverActionBuilders(name)) Seq.empty
         else (0 until reps).flatMap { _ =>
-          try {
+          attempt(name, "plan") {
             val t0 = System.nanoTime()
             SparkEntry.queries(name)(spark, sfDir)
               .queryExecution.executedPlan
-            Some((System.nanoTime() - t0) / 1e9)
-          } catch { case _: Throwable => None }
+            (System.nanoTime() - t0) / 1e9
+          }
         }
       // operators that persist() intermediate frames (minhash family,
       // mixture weights) create NEW cached copies per invocation; over
@@ -277,7 +293,7 @@ object Bench {
     // loop) — expected 0; nonzero means an ensure-guard rebuilt
     val ensureBuildLate =
       graft.operators.ScaleOps.BuildTimer.totalSec - ensureBuildSec
-    val detail = s"""{"metric":"total","value":$total,"unit":"sec","queries":${jmap(results.map(r => (r._1, r._2)))},"sf":"$sfDir","reps":$reps,"plan":${jmap(results.map(r => (r._1, r._3)))},"rep_max":${jmap(results.map(r => (r._1, r._4)))},"jobs":${jmap(results.map(r => (r._1, r._5)))},"contended":[${contended.map("\"" + _._1 + "\"").mkString(",")}],"failed":[${failed.mkString(",")}],"floor_noop":$floorNoop,"ensure_build_sec":$ensureBuildSec,"ensure_build_n":$ensureBuildN,"ensure_build_late_sec":$ensureBuildLate}"""
+    val detail = s"""{"metric":"total","value":$total,"unit":"sec","queries":${jmap(results.map(r => (r._1, r._2)))},"sf":"$sfDir","reps":$reps,"plan":${jmap(results.map(r => (r._1, r._3)))},"rep_max":${jmap(results.map(r => (r._1, r._4)))},"jobs":${jmap(results.map(r => (r._1, r._5)))},"contended":[${contended.map("\"" + _._1 + "\"").mkString(",")}],"failed":[${failed.mkString(",")}],"floor_noop":$floorNoop,"ensure_build_sec":$ensureBuildSec,"ensure_build_n":$ensureBuildN,"ensure_build_late_sec":$ensureBuildLate,"errors":[${errors.mkString(",")}]}"""
     java.nio.file.Files.write(
       java.nio.file.Paths.get("bench_detail.json"),
       detail.getBytes("UTF-8"))

@@ -450,16 +450,11 @@ object Clustering {
   def ensureHierFit(spark: SparkSession, dir: String, k1: Int,
       k2: Int): String = {
     val name = hierFitName(dir, k1, k2)
-    if (!spark.catalog.tableExists(s"${name}_assign")
-        && !ScaleOps.attach(spark,
-          s"${name}_cent" -> ("cluster", 1),
-          s"${name}_assign" -> ("vec_id", 8))) {
+    ScaleOps.ensure(spark,
+        ScaleOps.AttachSpec(s"${name}_cent", "cluster", 1),
+        ScaleOps.AttachSpec(s"${name}_assign", "vec_id", 8)) {
       val (assign, cent) = fitHierarchical(spark, dir, k1, k2)
-      // guard table (`_assign`) written LAST so an aborted build —
-      // died between the two writes — re-runs instead of serving a
-      // fit with no `_cent` companion (r15 ADVICE)
-      ScaleOps.writeBucketed(cent, s"${name}_cent", "cluster", 1)
-      ScaleOps.writeBucketed(assign, s"${name}_assign", "vec_id", 8)
+      Seq(cent, assign)
     }
     name
   }

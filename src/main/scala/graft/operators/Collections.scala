@@ -56,23 +56,11 @@ object Collections {
     // fixture in place (ScaleUp overwrites its out dir) changes the
     // fingerprint and forces a rebuild, so fts_topk / s3_pagination_
     // scoped can never silently serve the stale corpus (r13 ADVICE)
-    val name =
-      s"graft_docs_part_${ScaleOps.contentHash(dir, "documents")}"
-    if (!spark.catalog.tableExists(name)
-        && !ScaleOps.attachAll(spark,
-          Seq(ScaleOps.AttachSpec(name, partitionCols = Seq("lang"))))) {
-      ScaleOps.unmarkAttachable(spark, name)
-      spark.sql(s"DROP TABLE IF EXISTS $name")
-      val warehouse = spark.conf.get("spark.sql.warehouse.dir")
-        .stripPrefix("file:")
-      graft.sources.ParquetStore.deleteRecursively(
-        java.nio.file.Paths.get(warehouse, name.toLowerCase))
-      ScaleOps.BuildTimer.timed(
-        Tables.documents(spark, dir).write.mode("overwrite")
-          .partitionBy("lang").format("parquet").saveAsTable(name))
-      ScaleOps.markAttachable(spark, name)
+    ScaleOps.ensure(spark, ScaleOps.AttachSpec(
+        s"graft_docs_part_${ScaleOps.contentHash(dir, "documents")}",
+        partitionCols = Seq("lang"))) {
+      Seq(Tables.documents(spark, dir))
     }
-    name
   }
 
   /** One collection's documents off the partitioned layout — the

@@ -123,24 +123,16 @@ object Dedup {
     * never form a valid pair anyway). */
   def ensureLshIndex(spark: SparkSession, dir: String): String = {
     val name = s"graft_lsh_${ScaleOps.contentHash(dir, "documents")}"
-    if (!spark.catalog.tableExists(name)
-        && !ScaleOps.attach(spark,
-          s"${name}_sets" -> ("doc_id", 8), name -> ("bkey", 32))) {
+    ScaleOps.ensure(spark, ScaleOps.AttachSpec(s"${name}_sets", "doc_id", 8),
+        ScaleOps.AttachSpec(name, "bkey", 32)) {
       // persist: the shingle-set frame feeds the signature computation
       // AND the sets table — without it the tokenize+shingle pass runs
       // twice in the build
       val docs = docShingleSets(Tables.documentsDense(spark, dir))
         .filter(size(col("sh_set")) > 0)
         .transform(CacheScope.cached)
-      // the GUARD table (`name`) is written LAST: if the build dies
-      // between the two writes (sf1 OOM aborts happen), the guard is
-      // still absent and the next call re-runs the whole build instead
-      // of permanently serving a half-built index whose companion
-      // `_sets` table is missing (r15 ADVICE)
-      ScaleOps.writeBucketed(docs, s"${name}_sets", "doc_id", 8)
-      ScaleOps.writeBucketed(lshBands(docs), name, "bkey", 32)
+      Seq(docs, lshBands(docs))
     }
-    name
   }
 
   def minhashPairs(
@@ -494,32 +486,23 @@ object Dedup {
       threshold: Double): String = {
     val name = s"graft_cur_${math.round(threshold * 100)}_" +
       ScaleOps.contentHash(dir, "documents")
-    if (!spark.catalog.tableExists(name)
-        && !ScaleOps.attachAll(spark, Seq(ScaleOps.AttachSpec(name)))) {
-      ScaleOps.unmarkAttachable(spark, name)
-      spark.sql(s"DROP TABLE IF EXISTS $name")
-      val warehouse = spark.conf.get("spark.sql.warehouse.dir")
-        .stripPrefix("file:")
-      graft.sources.ParquetStore.deleteRecursively(
-        java.nio.file.Paths.get(warehouse, name.toLowerCase))
-      ScaleOps.BuildTimer.timed {
-        val dec = curationDocDecisions(spark, dir, threshold)
-          .transform(CacheScope.cached)
-        val keptDocs = Tables.documentsDense(spark, dir)
-          .join(dec.filter(col("decision") === lit("keep"))
-            .select("doc_id"), Seq("doc_id"))
-          .select(col("doc_id"),
-            TextAnalyzer.tokens(col("text")).as("toks"))
-          .transform(CacheScope.cached)
-        dec.join(spanRemovalStats(keptDocs), Seq("doc_id"), "left")
-          .select(col("doc_id"), col("source"), col("decision"),
-            col("n_tokens"), col("n_kept"), col("n_removed"),
-            col("cleaned_md5"))
-          .write.mode("overwrite").format("parquet").saveAsTable(name)
-      }
-      ScaleOps.markAttachable(spark, name)
-      CacheScope.release(spark)
+    var built = false
+    ScaleOps.ensure(spark, ScaleOps.AttachSpec(name)) {
+      built = true
+      val dec = curationDocDecisions(spark, dir, threshold)
+        .transform(CacheScope.cached)
+      val keptDocs = Tables.documentsDense(spark, dir)
+        .join(dec.filter(col("decision") === lit("keep"))
+          .select("doc_id"), Seq("doc_id"))
+        .select(col("doc_id"),
+          TextAnalyzer.tokens(col("text")).as("toks"))
+        .transform(CacheScope.cached)
+      Seq(dec.join(spanRemovalStats(keptDocs), Seq("doc_id"), "left")
+        .select(col("doc_id"), col("source"), col("decision"),
+          col("n_tokens"), col("n_kept"), col("n_removed"),
+          col("cleaned_md5")))
     }
+    if (built) CacheScope.release(spark)
     name
   }
 
@@ -1834,26 +1817,19 @@ object Dedup {
     * is the query. */
   def ensurePpjoinIndex(spark: SparkSession, dir: String): String = {
     val name = s"graft_ppx_${ScaleOps.contentHash(dir, "documents")}"
-    if (!spark.catalog.tableExists(name)
-        && !ScaleOps.attach(spark,
-          s"${name}_sets" -> ("doc_id", 8), name -> ("shingle", 32))) {
+    ScaleOps.ensure(spark, ScaleOps.AttachSpec(s"${name}_sets", "doc_id", 8),
+        ScaleOps.AttachSpec(name, "shingle", 32)) {
       val sh = docShinglesSized(Tables.documentsDense(spark, dir))
         .transform(CacheScope.cached)
       val dfs = sh.groupBy("shingle").agg(count(lit(1)).as("sdf"))
       val byDoc = org.apache.spark.sql.expressions.Window
         .partitionBy("doc_id")
         .orderBy(col("sdf").asc, col("shingle").asc)
-      // guard table last (see ensureLshIndex): an aborted build re-runs
-      ScaleOps.writeBucketed(
-        docShingleSets(Tables.documentsDense(spark, dir)),
-        s"${name}_sets", "doc_id", 8)
-      ScaleOps.writeBucketed(
+      Seq(docShingleSets(Tables.documentsDense(spark, dir)),
         sh.join(dfs, Seq("shingle"))
           .withColumn("pos", row_number().over(byDoc))
-          .select(col("doc_id"), col("shingle"), col("sz"), col("pos")),
-        name, "shingle", 32)
+          .select(col("doc_id"), col("shingle"), col("sz"), col("pos")))
     }
-    name
   }
 
   /** Formulation switch for the exact-threshold set-similarity join

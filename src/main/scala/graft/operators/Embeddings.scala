@@ -61,14 +61,16 @@ object Embeddings {
     model.transform(docs).select("doc_id", "embedding")
   }
 
-  /** Fit-once model cache, keyed by (dir, dim): the TF-IDF pipeline and
-    * the LSH model are INDEX ARTIFACTS — fitting them is the index
-    * build, and re-fitting per search (the round-2/3 shape) is a
-    * full-corpus pass per query. One fit per corpus per session; at
-    * cluster scale these would be `model.save`d next to the index
-    * table. */
+  /** Fit-once model cache, keyed by the index table name
+    * ([[embIndexName]]: the documents content hash and dim): the TF-IDF
+    * pipeline and the LSH model are INDEX ARTIFACTS — fitting them is
+    * the index build, and re-fitting per search (the round-2/3 shape)
+    * is a full-corpus pass per query. One fit per corpus generation per
+    * session, so an in-place fixture regeneration refits instead of
+    * transforming the new corpus with the old fit; at cluster scale
+    * these would be `model.save`d next to the index table. */
   private val models = new java.util.concurrent.ConcurrentHashMap[
-    (String, Int), (PipelineModel, BucketedRandomProjectionLSHModel)]
+    String, (PipelineModel, BucketedRandomProjectionLSHModel)]
 
   /** Deterministic catalog name for the persisted hashed-embedding
     * index of (dir, dim). */
@@ -85,7 +87,8 @@ object Embeddings {
   def ensureEmbIndex(spark: SparkSession, dir: String,
       dim: Int = DefaultDim):
       ((PipelineModel, BucketedRandomProjectionLSHModel), DataFrame) = {
-    val fitted = models.computeIfAbsent((dir, dim), { _ =>
+    val name = embIndexName(dir, dim)
+    val fitted = models.computeIfAbsent(name, { _ =>
       val docs = Tables.documents(spark, dir)
       val pm = pipeline(dim).fit(docs)
       val lsh = new BucketedRandomProjectionLSH()
@@ -94,7 +97,6 @@ object Embeddings {
       val emb = pm.transform(docs).select("doc_id", "embedding")
       (pm, lsh.fit(emb))
     })
-    val name = embIndexName(dir, dim)
     // NOT attachable (deliberate exception to the r18 attach-many
     // discipline): this table carries ml VectorUDT columns, and an
     // external-table registration declares the parquet STRUCT encoding

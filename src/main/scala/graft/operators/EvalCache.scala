@@ -53,11 +53,9 @@ object EvalCache {
     * constructs the frame. Ground-truth frames are Q·k rows (bounded
     * by the gate's own parameters), so one bucket suffices. */
   def ensure(spark: SparkSession, dir: String, srcTable: String,
-      label: String, bucketCol: String)(build: => DataFrame): DataFrame = {
-    val name = tableName(dir, srcTable, label)
-    if (!spark.catalog.tableExists(name)
-        && !ScaleOps.attach(spark, name -> (bucketCol, 1)))
-      ScaleOps.writeBucketed(build, name, bucketCol, 1)
-    spark.table(name)
-  }
+      label: String, bucketCol: String)(build: => DataFrame): DataFrame =
+    spark.table(ScaleOps.ensure(spark,
+      ScaleOps.AttachSpec(tableName(dir, srcTable, label), bucketCol, 1)) {
+      Seq(build)
+    })
 }

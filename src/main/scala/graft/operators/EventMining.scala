@@ -63,11 +63,9 @@ object EventMining {
       gapSec: Long): String = {
     val name =
       s"graft_sess_${gapSec}_${ScaleOps.contentHash(dir, "events")}"
-    if (!spark.catalog.tableExists(name)
-        && !ScaleOps.attach(spark, name -> ("user_id", 8)))
-      ScaleOps.writeBucketed(sessionAssign(spark, dir, gapSec), name,
-        "user_id", 8)
-    name
+    ScaleOps.ensure(spark, ScaleOps.AttachSpec(name, "user_id", 8)) {
+      Seq(sessionAssign(spark, dir, gapSec))
+    }
   }
 
   private def sessionized(spark: SparkSession, dir: String,

@@ -63,15 +63,10 @@ object Fts {
   def indexName(dir: String): String =
     s"graft_fts_${ScaleOps.contentHash(dir, "documents")}"
 
-  def ensureIndex(spark: SparkSession, dir: String): String = {
-    val name = indexName(dir)
-    if (!spark.catalog.tableExists(name)
-        && !ScaleOps.attach(spark, name -> ("term", 32))) {
-      ScaleOps.writeBucketed(
-        invertedIndex(Tables.documents(spark, dir)), name, "term", 32)
+  def ensureIndex(spark: SparkSession, dir: String): String =
+    ScaleOps.ensure(spark, ScaleOps.AttachSpec(indexName(dir), "term", 32)) {
+      Seq(invertedIndex(Tables.documents(spark, dir)))
     }
-    name
-  }
 
   /** Compaction for the STREAMED index
     * (graft.streaming.EventStreams.indexMaintenance writes one
@@ -318,21 +313,26 @@ object Fts {
     * name ignores any `_dl` sidecar persisted under the old shape. */
   def ensureBm25Stats(spark: SparkSession, dir: String): String = {
     val name = s"graft_ftsb2_${ScaleOps.contentHash(dir, "documents")}"
-    if (!spark.catalog.tableExists(s"${name}_dl")
-        && !ScaleOps.attach(spark,
-          s"${name}_cs" -> ("lang", 1), s"${name}_dl" -> ("doc_id", 8))) {
-      val dl = Tables.documents(spark, dir)
+    ensureDlCs(spark, name) {
+      Tables.documents(spark, dir)
         .select(col("doc_id"), col("lang"),
           size(TextAnalyzer.tokens(col("text"))).as("dl"),
           size(array_distinct(TextAnalyzer.tokens(col("text"))))
             .as("nuniq"))
-        .transform(CacheScope.cached)
-      // guard table (`_dl`) written LAST — aborted builds re-run
-      ScaleOps.writeBucketed(
-        dl.groupBy(col("lang"))
+    }
+  }
+
+  /** The `_cs`/`_dl` pair over one (cached) `_dl` frame; `_cs` is
+    * aggregated from it, so it always describes exactly the `_dl` rows.
+    * Guard table `_dl`. */
+  private def ensureDlCs(spark: SparkSession, name: String)(
+      dl: => DataFrame): String = {
+    ScaleOps.ensure(spark, ScaleOps.AttachSpec(s"${name}_cs", "lang", 1),
+        ScaleOps.AttachSpec(s"${name}_dl", "doc_id", 8)) {
+      val cached = dl.transform(CacheScope.cached)
+      Seq(cached.groupBy(col("lang"))
           .agg(count(lit(1)).as("n"), sum(col("dl")).as("sumdl")),
-        s"${name}_cs", "lang", 1)
-      ScaleOps.writeBucketed(dl, s"${name}_dl", "doc_id", 8)
+        cached)
     }
     name
   }
@@ -346,23 +346,16 @@ object Fts {
     * probe statically prunes. The `_nd` table counts docs with at
     * least one indexed term per lang — the index's own universe, which
     * is what the MLT idf uses (NOT the `_dl` universe, which includes
-    * zero-token docs). Guard table (`name`) written last. */
+    * zero-token docs). */
   def ensureDfStats(spark: SparkSession, dir: String): String = {
     val name = s"graft_ftsdf_${ScaleOps.contentHash(dir, "documents")}"
-    if (!spark.catalog.tableExists(name)
-        && !ScaleOps.attach(spark,
-          s"${name}_nd" -> ("lang", 1), name -> ("term", 8))) {
+    ScaleOps.ensure(spark, ScaleOps.AttachSpec(s"${name}_nd", "lang", 1),
+        ScaleOps.AttachSpec(name, "term", 8)) {
       val idx = spark.table(ensureIndex(spark, dir))
-      ScaleOps.writeBucketed(
-        idx.groupBy("lang")
-          .agg(countDistinct(col("doc_id")).as("n_docs")),
-        s"${name}_nd", "lang", 1)
-      ScaleOps.writeBucketed(
+      Seq(idx.groupBy("lang").agg(countDistinct(col("doc_id")).as("n_docs")),
         idx.groupBy("lang", "term")
-          .agg(countDistinct(col("doc_id")).as("df")),
-        name, "term", 8)
+          .agg(countDistinct(col("doc_id")).as("df")))
     }
-    name
   }
 
   /** Build-once STEMMED index — [[ensureIndex]] with the LightStem
@@ -372,17 +365,13 @@ object Fts {
     * Probed by [[searchStemmedIndexed]]. */
   def ensureStemmedIndex(spark: SparkSession, dir: String): String = {
     val name = s"graft_fts_stem_${ScaleOps.contentHash(dir, "documents")}"
-    if (!spark.catalog.tableExists(name)
-        && !ScaleOps.attach(spark, name -> ("term", 32))) {
-      ScaleOps.writeBucketed(
-        Tables.documents(spark, dir)
-          .select(col("doc_id"), col("lang"),
-            explode(TextAnalyzer.stemmedTokens(col("text"))).as("term"))
-          .groupBy("doc_id", "lang", "term")
-          .agg(count(lit(1)).as("tf")),
-        name, "term", 32)
+    ScaleOps.ensure(spark, ScaleOps.AttachSpec(name, "term", 32)) {
+      Seq(Tables.documents(spark, dir)
+        .select(col("doc_id"), col("lang"),
+          explode(TextAnalyzer.stemmedTokens(col("text"))).as("term"))
+        .groupBy("doc_id", "lang", "term")
+        .agg(count(lit(1)).as("tf")))
     }
-    name
   }
 
   /** Shared probe pivot: pruned postings → one row per doc with the
@@ -540,16 +529,12 @@ object Fts {
     * bucketed by doc_id to co-partition with the `_dl` sidecar. */
   def ensureDocAttrs(spark: SparkSession, dir: String): String = {
     val name = s"graft_ftsat_${ScaleOps.contentHash(dir, "documents")}"
-    if (!spark.catalog.tableExists(name)
-        && !ScaleOps.attach(spark, name -> ("doc_id", 8))) {
+    ScaleOps.ensure(spark, ScaleOps.AttachSpec(name, "doc_id", 8)) {
       val words = filter(split(col("text"), "\\s+"), w => w =!= "")
-      ScaleOps.writeBucketed(
-        Tables.documents(spark, dir)
-          .select(col("doc_id"), col("lang"), col("source"),
-            size(words).as("wc")),
-        name, "doc_id", 8)
+      Seq(Tables.documents(spark, dir)
+        .select(col("doc_id"), col("lang"), col("source"),
+          size(words).as("wc")))
     }
-    name
   }
 
   /** [[phraseSearch]] as an index probe: an occurrence at analyzed
@@ -840,18 +825,14 @@ object Fts {
       lang: String): String = {
     val name =
       s"graft_ftsl_${lang}_${ScaleOps.contentHash(dir, "documents")}"
-    if (!spark.catalog.tableExists(name)
-        && !ScaleOps.attach(spark, name -> ("term", 32))) {
-      ScaleOps.writeBucketed(
-        Tables.documents(spark, dir)
-          .filter(col("lang") === lit(lang))
-          .select(col("doc_id"),
-            explode(TextAnalyzer.tokensFor(col("text"), lang)).as("term"))
-          .groupBy("doc_id", "term")
-          .agg(count(lit(1)).as("tf")),
-        name, "term", 32)
+    ScaleOps.ensure(spark, ScaleOps.AttachSpec(name, "term", 32)) {
+      Seq(Tables.documents(spark, dir)
+        .filter(col("lang") === lit(lang))
+        .select(col("doc_id"),
+          explode(TextAnalyzer.tokensFor(col("text"), lang)).as("term"))
+        .groupBy("doc_id", "term")
+        .agg(count(lit(1)).as("tf")))
     }
-    name
   }
 
   /** [[searchLang]] as a probe of the per-language index —
@@ -1018,8 +999,7 @@ object Fts {
   def ensureLangRoutedIndex(spark: SparkSession, dir: String): String = {
     val name =
       s"graft_ftslang_${ScaleOps.contentHash(dir, "documents")}"
-    if (!spark.catalog.tableExists(name)
-        && !ScaleOps.attach(spark, name -> ("term", 16))) {
+    ScaleOps.ensure(spark, ScaleOps.AttachSpec(name, "term", 16)) {
       val docs = graft.functions.LangId.withDetected(
         Tables.documents(spark, dir).select("doc_id", "lang", "text"),
         "text")
@@ -1035,14 +1015,12 @@ object Fts {
               TextAnalyzer.tokensFor(col("text"), "fr"))
             .otherwise(TextAnalyzer.tokensFor(col("text"), "und"))))
           .as("toks"))
-      val idx = toks.select(col("doc_id"), col("lang"), col("detected"),
+      Seq(toks.select(col("doc_id"), col("lang"), col("detected"),
         explode(col("toks")).as("term"))
         .groupBy(col("detected"), col("doc_id"), col("lang"),
           col("term"))
-        .agg(count(lit(1)).as("tf"))
-      ScaleOps.writeBucketed(idx, name, "term", 16)
+        .agg(count(lit(1)).as("tf")))
     }
-    name
   }
 
   def searchLangRouted(spark: SparkSession, dir: String, query: String,
@@ -1820,15 +1798,11 @@ object Fts {
     * tf. */
   def ensureReverseIndex(spark: SparkSession, dir: String): String = {
     val name = s"graft_fts_rev_${ScaleOps.contentHash(dir, "documents")}"
-    if (!spark.catalog.tableExists(name)
-        && !ScaleOps.attach(spark, name -> ("rterm", 32))) {
-      ScaleOps.writeBucketed(
-        spark.table(ensureIndex(spark, dir))
-          .select(reverse(col("term")).as("rterm"), col("doc_id"),
-            col("lang"), col("tf")),
-        name, "rterm", 32)
+    ScaleOps.ensure(spark, ScaleOps.AttachSpec(name, "rterm", 32)) {
+      Seq(spark.table(ensureIndex(spark, dir))
+        .select(reverse(col("term")).as("rterm"), col("doc_id"),
+          col("lang"), col("tf")))
     }
-    name
   }
 
   def suffixSearch(spark: SparkSession, dir: String, suffix: String,
@@ -1971,24 +1945,8 @@ object Fts {
     * serving path; probe-side consumers then drop the per-query
     * anti-join. Keyed by (corpus fingerprint, mod). */
   def ensureVacuumedIndex(spark: SparkSession, dir: String,
-      mod: Long): String = {
-    val base = ensureIndex(spark, dir)
-    val name = s"${base}_vac$mod"
-    if (!spark.catalog.tableExists(name)
-        && !ScaleOps.attach(spark, name -> ("term", 32))) {
-      // the mod-DERIVED delete set is corpus-proportional, so no
-      // broadcast hint (the ivfDeleteStats lesson): AQE broadcasts it
-      // only when its runtime size is genuinely small. A real API
-      // delete batch (bounded payload) could safely hint.
-      val deletes = Tables.documents(spark, dir)
-        .filter(col("doc_id") % mod === 0).select("doc_id")
-      ScaleOps.writeBucketed(
-        spark.table(base)
-          .join(deletes, Seq("doc_id"), "left_anti"),
-        name, "term", 32)
-    }
-    name
-  }
+      mod: Long): String =
+    ensureVacuumed(spark, dir, ensureIndex(spark, dir), mod, "term", 32)
 
   /** Term statistics over the VACUUMED index — no anti-join anywhere
     * in the query: the rewrite already dropped the tombstoned docs'
@@ -2018,25 +1976,29 @@ object Fts {
   // be invisible to results (merge-on-read ≡ rewrite), and the hash
   // gate holds that equivalence for every family every round.
 
+  // The mod-DERIVED delete set is corpus-proportional, so no broadcast
+  // hint (the ivfDeleteStats lesson): AQE broadcasts it only when its
+  // runtime size is genuinely small. A real API delete batch (bounded
+  // payload) could safely hint.
   private def modDeletes(spark: SparkSession, dir: String,
       mod: Long): DataFrame =
     Tables.documents(spark, dir)
       .filter(col("doc_id") % mod === 0).select("doc_id")
 
+  /** The `(base)_vac(mod)` generation of a single-table family: `base`
+    * minus the deleted docs' rows, in `base`'s bucketed layout. */
+  private def ensureVacuumed(spark: SparkSession, dir: String,
+      base: String, mod: Long, key: String, buckets: Int): String =
+    ScaleOps.ensure(spark,
+        ScaleOps.AttachSpec(s"${base}_vac$mod", key, buckets)) {
+      Seq(spark.table(base)
+        .join(modDeletes(spark, dir, mod), Seq("doc_id"), "left_anti"))
+    }
+
   /** Vacuumed generation of the STEMMED index. */
   def ensureVacuumedStemmedIndex(spark: SparkSession, dir: String,
-      mod: Long): String = {
-    val base = ensureStemmedIndex(spark, dir)
-    val name = s"${base}_vac$mod"
-    if (!spark.catalog.tableExists(name)
-        && !ScaleOps.attach(spark, name -> ("term", 32))) {
-      ScaleOps.writeBucketed(
-        spark.table(base)
-          .join(modDeletes(spark, dir, mod), Seq("doc_id"), "left_anti"),
-        name, "term", 32)
-    }
-    name
-  }
+      mod: Long): String =
+    ensureVacuumed(spark, dir, ensureStemmedIndex(spark, dir), mod, "term", 32)
 
   /** Stemmed-vocabulary stats over the vacuumed stemmed index — no
     * anti-join in the query; the oracle re-stems the surviving corpus. */
@@ -2067,18 +2029,8 @@ object Fts {
 
   /** Vacuumed generation of the REVERSE (suffix) index. */
   def ensureVacuumedReverseIndex(spark: SparkSession, dir: String,
-      mod: Long): String = {
-    val base = ensureReverseIndex(spark, dir)
-    val name = s"${base}_vac$mod"
-    if (!spark.catalog.tableExists(name)
-        && !ScaleOps.attach(spark, name -> ("rterm", 32))) {
-      ScaleOps.writeBucketed(
-        spark.table(base)
-          .join(modDeletes(spark, dir, mod), Seq("doc_id"), "left_anti"),
-        name, "rterm", 32)
-    }
-    name
-  }
+      mod: Long): String =
+    ensureVacuumed(spark, dir, ensureReverseIndex(spark, dir), mod, "rterm", 32)
 
   /** [[suffixSearch]] over the vacuumed reverse index. */
   def suffixSearchVacuumed(spark: SparkSession, dir: String,
@@ -2110,18 +2062,9 @@ object Fts {
 
   /** Vacuumed generation of the LANG-ROUTED analyzer-matrix index. */
   def ensureVacuumedLangRoutedIndex(spark: SparkSession, dir: String,
-      mod: Long): String = {
-    val base = ensureLangRoutedIndex(spark, dir)
-    val name = s"${base}_vac$mod"
-    if (!spark.catalog.tableExists(name)
-        && !ScaleOps.attach(spark, name -> ("term", 16))) {
-      ScaleOps.writeBucketed(
-        spark.table(base)
-          .join(modDeletes(spark, dir, mod), Seq("doc_id"), "left_anti"),
-        name, "term", 16)
-    }
-    name
-  }
+      mod: Long): String =
+    ensureVacuumed(spark, dir, ensureLangRoutedIndex(spark, dir), mod,
+      "term", 16)
 
   /** Per-route-language index health stats over the vacuumed
     * lang-routed index; the oracle re-detects and re-analyzes the
@@ -2172,24 +2115,14 @@ object Fts {
   /** Vacuumed generation of the BM25 `_dl`/`_cs` sidecars: `_dl` drops
     * the deleted docs' rows, `_cs` is RECOMPUTED from the surviving
     * `_dl` (the scalar stats must shrink with the corpus or every
-    * post-delete idf/avgdl is wrong). Guard table `_dl` written LAST. */
+    * post-delete idf/avgdl is wrong). */
   def ensureVacuumedBm25Stats(spark: SparkSession, dir: String,
       mod: Long): String = {
     val base = ensureBm25Stats(spark, dir)
-    val name = s"${base}_vac$mod"
-    if (!spark.catalog.tableExists(s"${name}_dl")
-        && !ScaleOps.attach(spark,
-          s"${name}_cs" -> ("lang", 1), s"${name}_dl" -> ("doc_id", 8))) {
-      val dlv = spark.table(s"${base}_dl")
+    ensureDlCs(spark, s"${base}_vac$mod") {
+      spark.table(s"${base}_dl")
         .join(modDeletes(spark, dir, mod), Seq("doc_id"), "left_anti")
-        .transform(CacheScope.cached)
-      ScaleOps.writeBucketed(
-        dlv.groupBy(col("lang"))
-          .agg(count(lit(1)).as("n"), sum(col("dl")).as("sumdl")),
-        s"${name}_cs", "lang", 1)
-      ScaleOps.writeBucketed(dlv, s"${name}_dl", "doc_id", 8)
     }
-    name
   }
 
   /** Per-language corpus stats over the vacuumed sidecars — reads BOTH
@@ -2222,18 +2155,8 @@ object Fts {
 
   /** Vacuumed generation of the ATTRS sidecar. */
   def ensureVacuumedDocAttrs(spark: SparkSession, dir: String,
-      mod: Long): String = {
-    val base = ensureDocAttrs(spark, dir)
-    val name = s"${base}_vac$mod"
-    if (!spark.catalog.tableExists(name)
-        && !ScaleOps.attach(spark, name -> ("doc_id", 8))) {
-      ScaleOps.writeBucketed(
-        spark.table(base)
-          .join(modDeletes(spark, dir, mod), Seq("doc_id"), "left_anti"),
-        name, "doc_id", 8)
-    }
-    name
-  }
+      mod: Long): String =
+    ensureVacuumed(spark, dir, ensureDocAttrs(spark, dir), mod, "doc_id", 8)
 
   /** [[facetedSearchIndexed]] over the VACUUMED forward index + attrs
     * sidecar — the post-delete facet panel with no anti-join anywhere

@@ -66,8 +66,7 @@ object FuzzySearch {
   def ensureFuzzyIndex(spark: SparkSession, dir: String,
       lang: String): String = {
     val name = s"graft_fuzzy_${lang}_${ScaleOps.contentHash(dir, "documents")}"
-    if (!spark.catalog.tableExists(name)
-        && !ScaleOps.attach(spark, name -> ("variant", 32))) {
+    ScaleOps.ensure(spark, ScaleOps.AttachSpec(name, "variant", 32)) {
       val vocab = spark.table(Fts.ensureIndex(spark, dir))
         .filter(col("lang") === lit(lang))
         .filter(col("term").rlike("^[a-z0-9]+$"))
@@ -76,7 +75,7 @@ object FuzzySearch {
       // one row per deletion position; i = 0 keeps the term itself.
       // expr-form substring accepts column args, so the whole variant
       // projection stays inside whole-stage codegen (no HOF lambda).
-      val variants = vocab
+      Seq(vocab
         .select(col("term"), col("df"),
           explode(sequence(lit(0), length(col("term")))).as("i"))
         .select(col("term"), col("df"),
@@ -84,10 +83,8 @@ object FuzzySearch {
             .otherwise(expr(
               "concat(substring(term, 1, i-1), substring(term, i+1, length(term)-i))"))
             .as("variant"))
-        .distinct()
-      ScaleOps.writeBucketed(variants, name, "variant", 32)
+        .distinct())
     }
-    name
   }
 
   /** Fuzzy expansion of `qTerms`: for each query term, the vocabulary

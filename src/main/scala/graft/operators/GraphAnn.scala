@@ -48,8 +48,7 @@ object GraphAnn {
       nCentroids: Int, m: Int): String = {
     val name =
       s"graft_gann_${nCentroids}_${m}_${ScaleOps.contentHash(dir, "embeddings")}"
-    if (!spark.catalog.tableExists(name)
-        && !ScaleOps.attach(spark, name -> ("src", 16))) {
+    ScaleOps.ensure(spark, ScaleOps.AttachSpec(name, "src", 16)) {
       // probe-2 assignment against the SAME stored trained centroids
       // the IVF index uses (build once, share everywhere)
       val idx = Similarity.ensureIvfIndex(spark, dir, nCentroids)
@@ -80,12 +79,10 @@ object GraphAnn {
         .distinct()
       val wm = Window.partitionBy("src")
         .orderBy(col("dist").asc, col("dst").asc)
-      val edges = pairs.withColumn("rn", row_number().over(wm))
+      Seq(pairs.withColumn("rn", row_number().over(wm))
         .filter(col("rn") <= m)
-        .select("src", "dst", "dist")
-      ScaleOps.writeBucketed(edges, name, "src", 16)
+        .select("src", "dst", "dist"))
     }
-    name
   }
 
   /** Bounded, generation-checked memo of fetched query vectors — the

@@ -2,10 +2,11 @@ package graft.operators
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import org.apache.spark.sql.types.{DataType, DoubleType, LongType,
+  StructField, StructType}
 
 import graft.functions.TextAnalyzer
 
@@ -58,20 +59,34 @@ object Hybrid {
         .select(col("vec_id"), col("dist")).collect(), _.getDouble(1)),
       () => ranks(Fts.searchAuto(spark, dir, query, lang, kEach)
         .select(col("doc_id"), col("score")).collect(), -_.getDouble(1)))
-    val ids = (fts.keys ++ knn.keys).toSeq.distinct
-    def side(m: Map[Long, Long], id: Long): Seq[Any] =
-      m.get(id).fold(Seq[Any](null, null))(r => Seq(id, r))
-    val joined = spark.createDataFrame(
-      ids.map(id => Row.fromSeq(side(fts, id) ++ side(knn, id))).asJava,
-      StructType(Seq("doc_id", "fts_rank", "vec_id", "knn_rank")
-        .map(StructField(_, LongType))))
-    val fused = joined.select(
-      coalesce(col("doc_id"), col("vec_id")).as("id"),
+    fuseOnDriver(spark, "fts_rank" -> fts, "knn_rank" -> knn, LongType,
       round(
         coalesce(lit(1.0) / (lit(kRrf) + col("fts_rank")), lit(0.0)) +
           coalesce(lit(1.0) / (lit(kRrf) + col("knn_rank")), lit(0.0)),
-        6).as("rrf"),
-      col("fts_rank"), col("knn_rank"))
+        6).as("rrf"), k)
+  }
+
+  /** The fusion both hybrids share, on the driver: the two retrievals'
+    * per-id values full-outer-joined into a LocalRelation (doc_id, fts
+    * value, vec_id, knn value) of at most 2·kEach rows, `score` — the
+    * Catalyst expression a Spark-side fusion ran — evaluated over it,
+    * sorted in Spark's (score desc, id asc) order and cut to k. Output
+    * (id, score, fts value, knn value) as a LocalRelation, so
+    * collecting it fires no job. */
+  private def fuseOnDriver(spark: SparkSession,
+      fts: (String, Map[Long, Any]), knn: (String, Map[Long, Any]),
+      valueType: DataType, score: Column, k: Int): DataFrame = {
+    val ids = (fts._2.keys ++ knn._2.keys).toSeq.distinct
+    def side(m: Map[Long, Any], id: Long): Seq[Any] =
+      m.get(id).fold(Seq[Any](null, null))(v => Seq(id, v))
+    val joined = spark.createDataFrame(
+      ids.map(id => Row.fromSeq(side(fts._2, id) ++ side(knn._2, id))).asJava,
+      StructType(Seq(StructField("doc_id", LongType),
+        StructField(fts._1, valueType), StructField("vec_id", LongType),
+        StructField(knn._1, valueType))))
+    val fused = joined.select(
+      coalesce(col("doc_id"), col("vec_id")).as("id"), score,
+      col(fts._1), col(knn._1))
     val top = fused.collect().sortWith { (a, b) =>
       val c = SQLOrderingUtil.compareDoubles(b.getDouble(1), a.getDouble(1))
       c < 0 || (c == 0 && a.getLong(0) < b.getLong(0))
@@ -143,45 +158,31 @@ object Hybrid {
   def linearSearch(
       spark: SparkSession, dir: String, query: String, lang: String,
       qid: Long, kEach: Int, alpha: Double, k: Int): DataFrame = {
-    import spark.implicits._
-    def norm6(x: Double): Double =
-      BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP)
-        .toDouble
-    // index-probe route, bit-identical to the scan route (see
-    // rrfSearch) — the FTS side stays corpus-size-independent
-    val fts = Fts.searchAuto(spark, dir, query, lang, kEach)
-      .select(col("doc_id"), col("score")).collect()
-      .map(r => (r.getLong(0), r.getDouble(1)))
-    // An AND-query matching zero documents yields an empty list —
-    // min/max on it would throw, while the oracle SQL's empty CTE just
-    // contributes nothing. Normalize to an empty frame so the KNN side
-    // still surfaces (and symmetrically for an empty KNN list).
-    val ftsN = (if (fts.isEmpty) Seq.empty[(Long, Double)]
+    // min-max normalize a collected (id, value) list so 1.0 is the best
+    // entry. An AND-query matching zero documents yields an empty list,
+    // which contributes nothing, like the oracle SQL's empty CTE
+    def normed(rows: Array[Row], better: Double => Double): Map[Long, Any] =
+      if (rows.isEmpty) Map.empty
       else {
-        val (fLo, fHi) = (fts.map(_._2).min, fts.map(_._2).max)
-        fts.toSeq.map { case (id, s) =>
-          (id, if (fHi == fLo) 1.0 else norm6((s - fLo) / (fHi - fLo)))
-        }
-      }).toDF("doc_id", "fts_n")
-    val knn = Similarity.knnCosine(spark, dir, qid, kEach, 2.0)
-      .select(col("vec_id"), col("dist")).collect()
-      .map(r => (r.getLong(0), r.getDouble(1)))
-    val knnN = (if (knn.isEmpty) Seq.empty[(Long, Double)]
-      else {
-        val (dLo, dHi) = (knn.map(_._2).min, knn.map(_._2).max)
-        knn.toSeq.map { case (id, d) =>
-          (id, if (dHi == dLo) 1.0 else norm6((dHi - d) / (dHi - dLo)))
-        }
-      }).toDF("vec_id", "knn_n")
-    ftsN.join(knnN, col("doc_id") === col("vec_id"), "full_outer")
-      .select(
-        coalesce(col("doc_id"), col("vec_id")).as("id"),
-        round(lit(alpha) * coalesce(col("fts_n"), lit(0.0)) +
-          lit(1.0 - alpha) * coalesce(col("knn_n"), lit(0.0)), 6)
-          .as("fused"),
-        col("fts_n"), col("knn_n"))
-      .orderBy(col("fused").desc, col("id").asc)
-      .limit(k)
+        val v = rows.map(r => r.getLong(0) -> better(r.getDouble(1)))
+        val (lo, hi) = (v.map(_._2).min, v.map(_._2).max)
+        v.map { case (id, x) =>
+          id -> (if (hi == lo) 1.0
+            else BigDecimal((x - lo) / (hi - lo))
+              .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble)
+        }.toMap
+      }
+    // the index-probe FTS route, bit-identical to the scan route (see
+    // rrfSearch); both retrievals run concurrently
+    val Seq(knn, fts) = DriverThreads.all(
+      () => normed(Similarity.knnCosine(spark, dir, qid, kEach, 2.0)
+        .select(col("vec_id"), col("dist")).collect(), -_),
+      () => normed(Fts.searchAuto(spark, dir, query, lang, kEach)
+        .select(col("doc_id"), col("score")).collect(), identity))
+    fuseOnDriver(spark, "fts_n" -> fts, "knn_n" -> knn, DoubleType,
+      round(lit(alpha) * coalesce(col("fts_n"), lit(0.0)) +
+        lit(1.0 - alpha) * coalesce(col("knn_n"), lit(0.0)), 6)
+        .as("fused"), k)
   }
 
   def linearSearchOracleSql(query: String, lang: String, qid: Long,

@@ -108,30 +108,11 @@ object IvfPq {
   private def codesName(dir: String, nCentroids: Int): String =
     s"graft_ivfpq_${ScaleOps.contentHash(dir, "embeddings")}_c$nCentroids"
 
-  private def ensureTable(spark: SparkSession, name: String,
-      bucket: Option[(String, Int)] = None)(
-      build: => Unit): String = {
-    if (!spark.catalog.tableExists(name)
-        && !ScaleOps.attachAll(spark,
-          Seq(ScaleOps.AttachSpec(name, bucket)))) {
-      ScaleOps.unmarkAttachable(spark, name)
-      spark.sql(s"DROP TABLE IF EXISTS $name")
-      val warehouse = spark.conf.get("spark.sql.warehouse.dir")
-        .stripPrefix("file:")
-      graft.sources.ParquetStore.deleteRecursively(
-        java.nio.file.Paths.get(warehouse, name.toLowerCase))
-      ScaleOps.BuildTimer.timed(build)
-      ScaleOps.markAttachable(spark, name)
-    }
-    name
-  }
-
   /** Build-once: the trained residual codebook as a catalog table. */
   def ensureCodebook(spark: SparkSession, dir: String,
       nCentroids: Int): String =
-    ensureTable(spark, codebookName(dir, nCentroids)) {
-      trainCodebook(spark, dir, nCentroids)
-        .write.mode("overwrite").saveAsTable(codebookName(dir, nCentroids))
+    ScaleOps.ensure(spark, ScaleOps.AttachSpec(codebookName(dir, nCentroids))) {
+      Seq(trainCodebook(spark, dir, nCentroids))
     }
 
   /** The trained residual codebook as a driver-side literal
@@ -174,10 +155,10 @@ object IvfPq {
     * prunes to its nProbe buckets of the 32x-smaller table. */
   def ensureCodesTable(spark: SparkSession, dir: String,
       nCentroids: Int): String =
-    ensureTable(spark, codesName(dir, nCentroids),
-        Some(("centroid_id", nCentroids))) {
-      ScaleOps.writeBucketed(encode(spark, dir, nCentroids),
-        codesName(dir, nCentroids), "centroid_id", nCentroids)
+    ScaleOps.ensure(spark,
+        ScaleOps.AttachSpec(codesName(dir, nCentroids), "centroid_id",
+          nCentroids)) {
+      Seq(encode(spark, dir, nCentroids))
     }
 
   /** Assign + residual-encode an arbitrary (vec_id, label, embedding)

@@ -127,24 +127,12 @@ object ProductQuant {
   }
 
   /** Build-once: the trained codebook persisted as a catalog table.
-    * Idempotent per (dir); same orphan-location handling as
-    * ensurePqTable. */
-  def ensureCodebook(spark: SparkSession, dir: String): String = {
-    val name = s"graft_pqcb_${ScaleOps.contentHash(dir, "embeddings")}"
-    if (!spark.catalog.tableExists(name)
-        && !ScaleOps.attachAll(spark, Seq(ScaleOps.AttachSpec(name)))) {
-      ScaleOps.unmarkAttachable(spark, name)
-      spark.sql(s"DROP TABLE IF EXISTS $name")
-      val warehouse = spark.conf.get("spark.sql.warehouse.dir")
-        .stripPrefix("file:")
-      graft.sources.ParquetStore.deleteRecursively(
-        java.nio.file.Paths.get(warehouse, name.toLowerCase))
-      ScaleOps.BuildTimer.timed(
-        trainCodebook(spark, dir).write.mode("overwrite").saveAsTable(name))
-      ScaleOps.markAttachable(spark, name)
+    * Idempotent per (dir). */
+  def ensureCodebook(spark: SparkSession, dir: String): String =
+    ScaleOps.ensure(spark, ScaleOps.AttachSpec(
+        s"graft_pqcb_${ScaleOps.contentHash(dir, "embeddings")}")) {
+      Seq(trainCodebook(spark, dir))
     }
-    name
-  }
 
   /** The trained codebook as a driver-side literal [s][c][sd] in micro
     * units (M·NCode·Dsub = 1024 values — bounded collect, the same
@@ -187,28 +175,12 @@ object ProductQuant {
 
   /** Build-once: persist the PQ codes as a catalog table (the 32x-
     * smaller scan target every subsequent probe reads). Idempotent per
-    * (dir); same convention as Similarity.ensureIvfIndex. A fresh
-    * session sees tableExists=false while the managed location from a
-    * previous session may still exist on disk — so, like
-    * ScaleOps.writeBucketed, drop the catalog entry and remove an
-    * orphaned location before writing (a bare saveAsTable would fail
-    * with LOCATION_ALREADY_EXISTS on every session after the first). */
-  def ensurePqTable(spark: SparkSession, dir: String): String = {
-    val name = s"graft_pq_${ScaleOps.contentHash(dir, "embeddings")}"
-    if (!spark.catalog.tableExists(name)
-        && !ScaleOps.attachAll(spark, Seq(ScaleOps.AttachSpec(name)))) {
-      ScaleOps.unmarkAttachable(spark, name)
-      spark.sql(s"DROP TABLE IF EXISTS $name")
-      val warehouse = spark.conf.get("spark.sql.warehouse.dir")
-        .stripPrefix("file:")
-      graft.sources.ParquetStore.deleteRecursively(
-        java.nio.file.Paths.get(warehouse, name.toLowerCase))
-      ScaleOps.BuildTimer.timed(
-        encode(spark, dir).write.mode("overwrite").saveAsTable(name))
-      ScaleOps.markAttachable(spark, name)
+    * (dir); same convention as Similarity.ensureIvfIndex. */
+  def ensurePqTable(spark: SparkSession, dir: String): String =
+    ScaleOps.ensure(spark, ScaleOps.AttachSpec(
+        s"graft_pq_${ScaleOps.contentHash(dir, "embeddings")}")) {
+      Seq(encode(spark, dir))
     }
-    name
-  }
 
   /** The query's (micro-unit subspace components, double vector) in ONE
     * point lookup, quantized by the same column expression the corpus

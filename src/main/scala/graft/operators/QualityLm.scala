@@ -70,10 +70,9 @@ object QualityLm {
     * consumers are bit-identical to the inline chain. */
   def ensureNllTable(spark: SparkSession, dir: String): String = {
     val name = s"graft_nll_${ScaleOps.contentHash(dir, "documents")}"
-    if (!spark.catalog.tableExists(name)
-        && !ScaleOps.attach(spark, name -> ("doc_id", 8)))
-      ScaleOps.writeBucketed(unigramNll(spark, dir), name, "doc_id", 8)
-    name
+    ScaleOps.ensure(spark, ScaleOps.AttachSpec(name, "doc_id", 8)) {
+      Seq(unigramNll(spark, dir))
+    }
   }
 
   /** Per-source curation report — the roll-up a data-curation pass

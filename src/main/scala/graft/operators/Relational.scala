@@ -893,6 +893,13 @@ object Relational {
     * Integer-nanosecond arithmetic throughout (`div`,
     * never double division — 1.7e18-scale nanos lose precision as
     * doubles). Deterministic: event_id tiebreak in every window.
+    *
+    * Side effect: the report reads the persisted session assignment
+    * `graft_sess_<gapSec>_<fingerprint>` ([[EventMining.ensureSessionTable]])
+    * and builds it on first use, so every distinct `gapSec` leaves one
+    * warehouse table per corpus generation, never dropped. Pass the
+    * canonical analytics gap; sweep ad-hoc gaps inline through
+    * [[EventMining.sessionAssign]] instead.
     */
   def eventSessions(spark: SparkSession, dir: String,
       gapSec: Long): DataFrame = {

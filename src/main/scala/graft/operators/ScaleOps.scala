@@ -89,17 +89,18 @@ object ScaleOps {
   // --- Build-once / ATTACH-many persisted tables ------------------------
 
   /** Driver-side accounting of persisted-table build time (r19 verdict
-    * #1): every ensure-build that actually constructs a generation —
-    * the bucketed writer plus the few manual saveAsTable builders —
-    * accumulates its wall time here, and `graft.Bench` reports the
-    * warm-up pre-pass's total as `ensure_build_sec` on the contract
-    * line. First-touch build cost is thereby visible as its own number
-    * instead of an unattributable slowdown in whichever session builds
-    * a generation first; a cold-warehouse and a warm-warehouse bench
-    * differ by exactly this figure (plus page-cache noise), so their
-    * per-query mins become comparable. Reentrant: a builder whose
-    * build body ensures another table counts once, under the OUTERMOST
-    * build (per-thread depth guard). */
+    * #1): every [[ensure]] that actually constructs a generation (one
+    * count per generation, however many tables it writes) and every
+    * forced [[writeBucketed]] accumulates its wall time here, and
+    * `graft.Bench` reports the warm-up pre-pass's total as
+    * `ensure_build_sec` on the contract line. First-touch build cost is
+    * thereby visible as its own number instead of an unattributable
+    * slowdown in whichever session builds a generation first; a
+    * cold-warehouse and a warm-warehouse bench differ by exactly this
+    * figure (plus page-cache noise), so their per-query mins become
+    * comparable. Reentrant: a builder whose build body ensures another
+    * table counts once, under the OUTERMOST build (per-thread depth
+    * guard). */
   object BuildTimer {
     private val nanos = new java.util.concurrent.atomic.AtomicLong(0L)
     private val builds = new java.util.concurrent.atomic.AtomicInteger(0)
@@ -144,12 +145,11 @@ object ScaleOps {
     java.nio.file.Paths.get(warehouse, table.toLowerCase)
   }
 
-  /** Marker write — called by [[writeBucketed]] (and the few manual
-    * saveAsTable builders) AFTER a successful commit, so the marker's
+  /** Marker write — after a table's successful commit, so the marker's
     * presence certifies a complete build: any interrupted build or
     * partially-deleted location has no marker (it is deleted FIRST on
     * rebuild) and attach falls through to a clean rebuild. */
-  def markAttachable(spark: SparkSession, table: String): Unit = {
+  private def markAttachable(spark: SparkSession, table: String): Unit = {
     import java.nio.file.{Files, StandardOpenOption => O}
     val loc = tableLocation(spark, table)
     if (java.nio.file.Files.isDirectory(loc))
@@ -158,33 +158,39 @@ object ScaleOps {
         O.CREATE, O.TRUNCATE_EXISTING)
   }
 
-  /** Marker delete — called BEFORE any drop/delete/rewrite of the
-    * location, so no concurrent or later session can attach a dying
-    * generation. */
-  def unmarkAttachable(spark: SparkSession, table: String): Unit =
+  /** Marker delete — BEFORE any drop/delete/rewrite of the location, so
+    * no concurrent or later session can attach a dying generation. */
+  private def unmarkAttachable(spark: SparkSession, table: String): Unit =
     try java.nio.file.Files.deleteIfExists(
       tableLocation(spark, table).resolve(AttachMarker))
     catch { case _: java.io.IOException => () }
 
-  /** One table of an attach group: `bucket` = (key, nBuckets) for
-    * bucketed layouts, `partitionCols` for directory-partitioned ones,
-    * neither for plain parquet tables. */
+  /** One table of a persisted generation, and the single place its
+    * layout is declared: `bucket` = (key, nBuckets) for bucketed+sorted
+    * layouts, `partitionCols` for directory-partitioned ones, neither
+    * for plain parquet tables. */
   case class AttachSpec(table: String,
       bucket: Option[(String, Int)] = None,
       partitionCols: Seq[String] = Nil)
+
+  object AttachSpec {
+    /** The bucketed layout: `AttachSpec(name, "term", 32)`. */
+    def apply(table: String, key: String, buckets: Int): AttachSpec =
+      AttachSpec(table, Some((key, buckets)))
+  }
 
   /** Attach a group of previously-persisted warehouse tables into this
     * session's catalog as external tables — all-or-nothing: true iff
     * EVERY member has a complete (_SUCCESS + current-layout marker)
     * directory and every registration succeeded. On false the caller
-    * builds from scratch exactly as before (writeBucketed starts with
-    * DROP TABLE IF EXISTS, so a partially-registered group is repaired
-    * by the build path). Registration is metadata-only — one parquet
-    * footer read per table for the schema, zero Spark jobs over the
-    * data — and the registered bucket/partition spec reproduces the
-    * built layout bit-for-bit (bucket ids live in the file names), so
-    * bucket pruning and co-located joins behave identically to the
-    * building session (AttachSpec path pinned in ScaleOpsSpec). */
+    * builds from scratch ([[ensure]] drops every member first, so a
+    * partially-registered group is repaired by the build path).
+    * Registration is metadata-only — one parquet footer read per table
+    * for the schema, zero Spark jobs over the data — and the registered
+    * bucket/partition spec reproduces the built layout bit-for-bit
+    * (bucket ids live in the file names), so bucket pruning and
+    * co-located joins behave identically to the building session
+    * (pinned in ScaleOpsSpec). */
   def attachAll(spark: SparkSession, specs: Seq[AttachSpec]): Boolean = {
     import java.nio.file.Files
     val complete = specs.forall { s =>
@@ -217,13 +223,6 @@ object ScaleOps {
       true
     } catch { case scala.util.control.NonFatal(_) => false })
   }
-
-  /** Bucketed-group sugar for the common ensure-site shape:
-    * `attach(spark, name -> ("term", 32), s"${name}_dl" -> ("doc_id", 8))`. */
-  def attach(spark: SparkSession,
-      specs: (String, (String, Int))*): Boolean =
-    attachAll(spark, specs.map { case (t, (k, n)) =>
-      AttachSpec(t, Some((k, n))) })
 
   // --- Single-builder lock ----------------------------------------------
 
@@ -286,69 +285,110 @@ object ScaleOps {
       Thread.sleep(LockPollMs)
   }
 
-  /** Write both sides of a fact-fact join bucketed+sorted by the join
-    * key into the session catalog. A subsequent join of the two tables
-    * on that key is a SortMergeJoin with NO shuffle exchange on either
-    * side (bucketing pre-partitions the data on disk) — at warehouse
-    * scale this is how orders⋈lineitem avoids moving 100 TB.
+  /** Build-once / ATTACH-many: the one lifecycle every persisted
+    * generation goes through (the reference's index DDL runs once;
+    * every request reads the index). `tables` declares the generation's
+    * tables and layouts; the LAST one is the guard, written last, so a
+    * build that dies between two writes leaves the guard absent and the
+    * next call rebuilds the whole group instead of serving a table
+    * missing its companions (r15 ADVICE).
     *
-    * Single-builder discipline (r18): the write runs under a PID-
-    * bearing lock file beside the table location. A concurrent session
-    * racing for the SAME absent generation waits for the winner's
-    * committed marker and ATTACHES it instead of clobbering the files
-    * mid-write (the last unclosed race after the ensure-guards learned
-    * to attach); a lock whose builder PID is dead — or older than
-    * [[StaleLockMs]] — is broken and the build taken over, so a
-    * crashed builder never wedges the fleet. */
+    *  - Fast path: the guard is in this session's catalog — one
+    *    `tableExists`, the per-request cost of every `ensure*` caller.
+    *  - Otherwise attach the committed generation another session built
+    *    (all-or-nothing, [[attachAll]]).
+    *  - Otherwise build under ONE PID-bearing lock keyed on the guard:
+    *    attach again after waiting for or winning the lock (the winner
+    *    of a race builds; every other session attaches its commit
+    *    instead of dropping files the winner's readers scan — the r18
+    *    ladder crash), then unmark, drop and delete every member,
+    *    evaluate `build` (one frame per spec, in spec order — frames may
+    *    not read the group's own tables), write each frame with its
+    *    spec's layout and mark it; all inside one [[BuildTimer.timed]].
+    *
+    * Returns the guard table's name. */
+  def ensure(spark: SparkSession, tables: AttachSpec*)(
+      build: => Seq[DataFrame]): String = {
+    val guard = tables.last.table
+    if (!spark.catalog.tableExists(guard) && !attachAll(spark, tables))
+      lockedWrite(spark, tables, attachAll(spark, tables),
+        attachAll(spark, tables))(build)
+    guard
+  }
+
+  /** A FORCED bucketed (re)write of one table — for outputs that are not
+    * build-once generations (stream compaction, the non-attachable
+    * embeddings table, specs). The same locked write as [[ensure]]: a
+    * write racing a live builder of the same table waits and then
+    * serves that builder's commit instead of clobbering it. Repartition
+    * on the bucket key first: without it every input task writes its
+    * own file per bucket (N_tasks × buckets small files — a 20k-row
+    * band table measured 4071 files and 1.4 s per bare scan), with it
+    * each bucket is exactly one file and probe-side scans open
+    * `buckets` footers. */
   def writeBucketed(df: DataFrame, table: String, key: String,
       buckets: Int): Unit = {
     val spark = df.sparkSession
+    val spec = Seq(AttachSpec(table, key, buckets))
+    lockedWrite(spark, spec, false,
+      attachAll(spark, spec) || spark.catalog.tableExists(table))(Seq(df))
+  }
+
+  /** Single-builder discipline (r18): the write runs under a PID-bearing
+    * lock file beside the guard's location. `settledUnderLock` is
+    * re-checked once the lock is won, `settledAfterWait` after another
+    * builder released it; either being true ends the call without a
+    * write. A lock whose builder PID is dead — or older than
+    * [[StaleLockMs]] — is broken and the build taken over, so a crashed
+    * builder never wedges the fleet. */
+  private def lockedWrite(spark: SparkSession, specs: Seq[AttachSpec],
+      settledUnderLock: => Boolean, settledAfterWait: => Boolean)(
+      frames: => Seq[DataFrame]): Unit = {
+    val guard = specs.last.table
     var attempts = 0
     while (attempts < 100) {
       attempts += 1
-      if (tryAcquireBuildLock(spark, table)) {
-        try {
-          BuildTimer.timed(doWriteBucketed(df, table, key, buckets))
-        } finally releaseBuildLock(spark, table)
+      if (tryAcquireBuildLock(spark, guard)) {
+        try if (!settledUnderLock) rewrite(spark, specs, frames)
+        finally releaseBuildLock(spark, guard)
         return
       }
-      awaitBuildLock(spark, table)
+      awaitBuildLock(spark, guard)
       // the other builder committed: serve its generation (identical
       // by construction — generation names are content-fingerprinted)
-      if (attach(spark, table -> (key, buckets))
-          || spark.catalog.tableExists(table)) return
+      if (settledAfterWait) return
       // died without committing: loop and take over
     }
     // pathological: build unlocked
-    BuildTimer.timed(doWriteBucketed(df, table, key, buckets))
+    rewrite(spark, specs, frames)
   }
 
-  private def doWriteBucketed(df: DataFrame, table: String, key: String,
-      buckets: Int): Unit = {
-    val spark = df.sparkSession
-    // the marker dies FIRST: from here to the post-commit markAttachable
-    // the location is never attachable, so an interrupted rebuild can
-    // only ever be rebuilt, never served
-    unmarkAttachable(spark, table)
-    spark.sql(s"DROP TABLE IF EXISTS $table")
-    // remove an orphaned managed location from a previous session, which
-    // would otherwise fail CREATE TABLE with LOCATION_ALREADY_EXISTS
-    val warehouse = spark.conf.get("spark.sql.warehouse.dir")
-      .stripPrefix("file:")
-    val loc = java.nio.file.Paths.get(warehouse, table.toLowerCase)
-    graft.sources.ParquetStore.deleteRecursively(loc)
-    // repartition on the bucket key FIRST: without it every input task
-    // writes its own file per bucket (N_tasks × buckets small files —
-    // a 20k-row band table measured 4071 files and 1.4 s per bare
-    // scan), with it each bucket is exactly one file and probe-side
-    // scans open `buckets` footers. One extra exchange on the
-    // build-once path buys every probe's scan cost down.
-    df.repartition(buckets, col(key))
-      .write.mode("overwrite")
-      .bucketBy(buckets, key).sortBy(key)
-      .format("parquet")
-      .saveAsTable(table)
-    markAttachable(spark, table)
+  private def rewrite(spark: SparkSession, specs: Seq[AttachSpec],
+      frames: => Seq[DataFrame]): Unit = BuildTimer.timed {
+    // the markers die FIRST: from here to each table's post-commit mark
+    // the group is never attachable, so an interrupted rebuild can only
+    // ever be rebuilt, never served. The drop and the delete remove an
+    // orphaned managed location from a previous session, which would
+    // otherwise fail CREATE TABLE with LOCATION_ALREADY_EXISTS.
+    specs.foreach { s =>
+      unmarkAttachable(spark, s.table)
+      spark.sql(s"DROP TABLE IF EXISTS ${s.table}")
+      graft.sources.ParquetStore.deleteRecursively(
+        tableLocation(spark, s.table))
+    }
+    val dfs = frames
+    require(dfs.size == specs.size,
+      s"${dfs.size} frames for ${specs.map(_.table).mkString(", ")}")
+    specs.zip(dfs).foreach { case (s, df) =>
+      val w = s.bucket match {
+        case Some((key, n)) =>
+          df.repartition(n, col(key)).write.bucketBy(n, key).sortBy(key)
+        case None => df.write
+      }
+      (if (s.partitionCols.isEmpty) w else w.partitionBy(s.partitionCols: _*))
+        .mode("overwrite").format("parquet").saveAsTable(s.table)
+      markAttachable(spark, s.table)
+    }
   }
 
   /** The co-located join over two pre-bucketed tables. */
@@ -361,19 +401,17 @@ object ScaleOps {
     * sides). Idempotent per (dir). */
   def ensureBucketedFacts(spark: SparkSession,
       dir: String): (String, String) = {
-    val bo = s"graft_bord_${contentHash(dir, "orders")}"
-    val bl = s"graft_blin_${contentHash(dir, "lineitem")}"
-    if (!spark.catalog.tableExists(bo)
-        && !attach(spark, bo -> ("o_orderkey", 16)))
-      writeBucketed(graft.Tables.orders(spark, dir)
-        .select("o_orderkey", "o_custkey", "o_orderdate"), bo,
-        "o_orderkey", 16)
-    if (!spark.catalog.tableExists(bl)
-        && !attach(spark, bl -> ("o_orderkey", 16)))
-      writeBucketed(graft.Tables.lineitem(spark, dir)
+    val bo = ensure(spark, AttachSpec(
+        s"graft_bord_${contentHash(dir, "orders")}", "o_orderkey", 16)) {
+      Seq(graft.Tables.orders(spark, dir)
+        .select("o_orderkey", "o_custkey", "o_orderdate"))
+    }
+    val bl = ensure(spark, AttachSpec(
+        s"graft_blin_${contentHash(dir, "lineitem")}", "o_orderkey", 16)) {
+      Seq(graft.Tables.lineitem(spark, dir)
         .select(col("l_orderkey").as("o_orderkey"),
-          col("l_extendedprice"), col("l_discount")), bl,
-        "o_orderkey", 16)
+          col("l_extendedprice"), col("l_discount")))
+    }
     (bo, bl)
   }
 

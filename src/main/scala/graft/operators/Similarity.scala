@@ -398,11 +398,10 @@ object Similarity {
   def ensureIvfIndexHier(spark: SparkSession, dir: String, k1: Int,
       k2: Int): String = {
     val name = ivfHierName(dir, k1, k2)
-    if (!spark.catalog.tableExists(name)
-        && !ScaleOps.attach(spark,
-          s"${name}_cents" -> ("centroid_id", 1),
-          s"${name}_coarse" -> ("centroid_id", 1),
-          name -> ("centroid_id", math.min(k1 * k2, 64)))) {
+    ScaleOps.ensure(spark,
+        ScaleOps.AttachSpec(s"${name}_cents", "centroid_id", 1),
+        ScaleOps.AttachSpec(s"${name}_coarse", "centroid_id", 1),
+        ScaleOps.AttachSpec(name, "centroid_id", math.min(k1 * k2, 64))) {
       // the fit itself is its own build-once artifact (shared with the
       // kmeans_hier gate) — this build is a probe over its tables
       val fitTbl = Clustering.ensureHierFit(spark, dir, k1, k2)
@@ -432,14 +431,8 @@ object Similarity {
           col("cluster").as("centroid_id"),
           round(cosineDistancePre(col("embedding"), col("cv"),
             norm(col("embedding")), col("cn")), 6).as("cdist"))
-      // guard table (`name`) written LAST so an aborted build re-runs
-      // instead of serving an index missing its companions (r15 ADVICE)
-      ScaleOps.writeBucketed(cents, s"${name}_cents", "centroid_id", 1)
-      ScaleOps.writeBucketed(coarse, s"${name}_coarse", "centroid_id", 1)
-      ScaleOps.writeBucketed(rows, name, "centroid_id",
-        math.min(k1 * k2, 64))
+      Seq(cents, coarse, rows)
     }
-    name
   }
 
   /** Two-level ANN probe over the hierarchical index: (1) the query
@@ -628,20 +621,14 @@ object Similarity {
   def ensureIvfIndex(spark: SparkSession, dir: String,
       nCentroids: Int): String = {
     val name = ivfIndexName(dir, nCentroids)
-    if (!spark.catalog.tableExists(name)
-        && !ScaleOps.attach(spark,
-          s"${name}_cents" -> ("centroid_id", 1),
-          name -> ("centroid_id", nCentroids))) {
-      val emb = Tables.embeddings(spark, dir)
+    ScaleOps.ensure(spark,
+        ScaleOps.AttachSpec(s"${name}_cents", "centroid_id", 1),
+        ScaleOps.AttachSpec(name, "centroid_id", nCentroids)) {
       // a driver-local frame (nCentroids rows) — no caching needed for
-      // the two writes below
+      // the two writes
       val cents = trainedCents(spark, dir, nCentroids)
-      // guard table last — aborted builds re-run (r15 ADVICE)
-      ScaleOps.writeBucketed(cents, s"${name}_cents", "centroid_id", 1)
-      ScaleOps.writeBucketed(ivfAssignTo(emb, cents), name,
-        "centroid_id", nCentroids)
+      Seq(cents, ivfAssignTo(Tables.embeddings(spark, dir), cents))
     }
-    name
   }
 
   /** Incremental index maintenance — the append path a production
@@ -796,14 +783,10 @@ object Similarity {
   def ensureCompactedIvfIndex(spark: SparkSession, dir: String,
       nCentroids: Int, mod: Long): String = {
     val base = ensureIvfIndex(spark, dir, nCentroids)
-    val name = s"${base}_vac$mod"
-    if (!spark.catalog.tableExists(name)
-        && !ScaleOps.attach(spark, name -> ("centroid_id", nCentroids))) {
-      ScaleOps.writeBucketed(
-        spark.table(base).filter(col("vec_id") % mod =!= 0),
-        name, "centroid_id", nCentroids)
+    ScaleOps.ensure(spark,
+        ScaleOps.AttachSpec(s"${base}_vac$mod", "centroid_id", nCentroids)) {
+      Seq(spark.table(base).filter(col("vec_id") % mod =!= 0))
     }
-    name
   }
 
   /** Per-cell occupancy AFTER compaction — the introspection that

@@ -249,18 +249,14 @@ object TextOps {
     * pins scan ≡ index on both filter shapes. */
   def ensureMetaAttrs(spark: SparkSession, dir: String): String = {
     val name = s"graft_meta_${ScaleOps.contentHash(dir, "events")}"
-    if (!spark.catalog.tableExists(name)
-        && !ScaleOps.attach(spark, name -> ("event_id", 8))) {
-      ScaleOps.writeBucketed(
-        Tables.events(spark, dir)
-          .select(col("event_id"), col("event_type"), col("props"),
-            from_json(col("props"),
-              org.apache.spark.sql.types.MapType(
-                org.apache.spark.sql.types.StringType,
-                org.apache.spark.sql.types.StringType)).as("attrs")),
-        name, "event_id", 8)
+    ScaleOps.ensure(spark, ScaleOps.AttachSpec(name, "event_id", 8)) {
+      Seq(Tables.events(spark, dir)
+        .select(col("event_id"), col("event_type"), col("props"),
+          from_json(col("props"),
+            org.apache.spark.sql.types.MapType(
+              org.apache.spark.sql.types.StringType,
+              org.apache.spark.sql.types.StringType)).as("attrs")))
     }
-    name
   }
 
   /** [[metadataFilter]] over the sidecar: map lookup, no JSON parse. */
@@ -306,14 +302,10 @@ object TextOps {
   def ensureVacuumedMetaAttrs(spark: SparkSession, dir: String,
       mod: Long): String = {
     val base = ensureMetaAttrs(spark, dir)
-    val name = s"${base}_vac$mod"
-    if (!spark.catalog.tableExists(name)
-        && !ScaleOps.attach(spark, name -> ("event_id", 8))) {
-      ScaleOps.writeBucketed(
-        spark.table(base).filter(col("event_id") % mod =!= 0),
-        name, "event_id", 8)
+    ScaleOps.ensure(spark,
+        ScaleOps.AttachSpec(s"${base}_vac$mod", "event_id", 8)) {
+      Seq(spark.table(base).filter(col("event_id") % mod =!= 0))
     }
-    name
   }
 
   /** The range filter over the VACUUMED sidecar — the oracle replays

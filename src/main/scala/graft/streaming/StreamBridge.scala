@@ -20,8 +20,10 @@ import graft.operators.{Fts, IvfPq, ScaleOps}
   */
 object StreamBridge {
 
+  /** `dropTempView` returns false for a missing view; any other failure
+    * propagates. */
   private def freshView(spark: SparkSession, name: String): Unit =
-    try spark.catalog.dropTempView(name) catch { case _: Throwable => () }
+    spark.catalog.dropTempView(name)
 
   // ---- shared family runner (r12 verdict #8) ---------------------------
   //

@@ -44,4 +44,34 @@ class EmbeddingsSpec extends SparkSpec {
     val dists = rows.map(_.getAs[Double]("dist"))
     assert(dists.sameElements(dists.sorted))
   }
+
+  test("an in-place fixture regeneration refits: the index carries a " +
+      "fresh fit's embeddings, not the old corpus's") {
+    import java.nio.file.Files
+    val dir = Files.createTempDirectory("graft-emb-gen").toString
+    val path = s"$dir/documents.parquet"
+    val src = Tables.documents(spark, Sf0001)
+    def vectors(df: org.apache.spark.sql.DataFrame): Map[Long, Seq[Double]] =
+      df.select("doc_id", "embedding").collect()
+        .map(r => r.getLong(0) -> r.getAs[Vector](1).toArray.toSeq).toMap
+    try {
+      src.write.parquet(path)
+      val (_, idx1) = Embeddings.ensureEmbIndex(spark, dir, 64)
+      assert(vectors(idx1) ==
+        vectors(Embeddings.embedDocuments(spark, dir, 64)))
+      // rewrite in place: half the corpus, so every idf weight moves
+      src.filter(col("doc_id") % 2 === 0)
+        .write.mode("overwrite").parquet(path)
+      Tables.invalidate(path)
+      val (_, idx2) = Embeddings.ensureEmbIndex(spark, dir, 64)
+      val fresh = vectors(Embeddings.embedDocuments(spark, dir, 64))
+      assert(vectors(idx2) == fresh,
+        "the index was built with the previous corpus's fit")
+      assert(fresh != vectors(idx1).filter { case (id, _) => id % 2 == 0 })
+    } finally {
+      Tables.invalidate(path)
+      graft.sources.ParquetStore.deleteRecursively(
+        java.nio.file.Paths.get(dir))
+    }
+  }
 }

@@ -53,6 +53,64 @@ class HybridSpec extends SparkSpec {
     }
   }
 
+  /** The former linearSearch: both normalized lists as frames, a full
+    * outer join, the fused score, then orderBy/limit in the engine. */
+  private def sparkSideLinear(query: String, lang: String, qid: Long,
+      kEach: Int, alpha: Double, k: Int): DataFrame = {
+    import spark.implicits._
+    def norm6(x: Double): Double =
+      BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+    val fts = Fts.searchAuto(spark, Sf0001, query, lang, kEach)
+      .select(col("doc_id"), col("score")).collect()
+      .map(r => (r.getLong(0), r.getDouble(1)))
+    val ftsN = (if (fts.isEmpty) Seq.empty[(Long, Double)]
+      else {
+        val (fLo, fHi) = (fts.map(_._2).min, fts.map(_._2).max)
+        fts.toSeq.map { case (id, s) =>
+          (id, if (fHi == fLo) 1.0 else norm6((s - fLo) / (fHi - fLo)))
+        }
+      }).toDF("doc_id", "fts_n")
+    val knn = Similarity.knnCosine(spark, Sf0001, qid, kEach, 2.0)
+      .select(col("vec_id"), col("dist")).collect()
+      .map(r => (r.getLong(0), r.getDouble(1)))
+    val knnN = (if (knn.isEmpty) Seq.empty[(Long, Double)]
+      else {
+        val (dLo, dHi) = (knn.map(_._2).min, knn.map(_._2).max)
+        knn.toSeq.map { case (id, d) =>
+          (id, if (dHi == dLo) 1.0 else norm6((dHi - d) / (dHi - dLo)))
+        }
+      }).toDF("vec_id", "knn_n")
+    ftsN.join(knnN, col("doc_id") === col("vec_id"), "full_outer")
+      .select(
+        coalesce(col("doc_id"), col("vec_id")).as("id"),
+        round(lit(alpha) * coalesce(col("fts_n"), lit(0.0)) +
+          lit(1.0 - alpha) * coalesce(col("knn_n"), lit(0.0)), 6)
+          .as("fused"),
+        col("fts_n"), col("knn_n"))
+      .orderBy(col("fused").desc, col("id").asc)
+      .limit(k)
+  }
+
+  test("linear fusion on the driver equals the Spark-side join: rows, " +
+      "order, schema, an FTS side matching nothing; collecting fires no " +
+      "job") {
+    for (kEach <- Seq(1, 20); alpha <- Seq(0.0, 0.3, 1.0);
+         k <- Seq(1, 10, 1000);
+         (query, qid) <- Seq(("hash join merge", 0L), ("index scan", 42L),
+           ("zzqxjv", 7L))) {
+      val ctx = s"kEach=$kEach alpha=$alpha k=$k query='$query' qid=$qid"
+      val got = Hybrid.linearSearch(spark, Sf0001, query, "en", qid, kEach,
+        alpha, k)
+      val want = sparkSideLinear(query, "en", qid, kEach, alpha, k)
+      assert(got.schema == want.schema, ctx)
+      val (rows, jobs) = jobsFired(got.collect())
+      assert(jobs == 0, s"$ctx: collecting fired $jobs jobs")
+      assert(rows.toSeq == want.collect().toSeq, ctx)
+      if (query == "zzqxjv")
+        assert(rows.nonEmpty && rows.forall(_.isNullAt(2)), ctx)
+    }
+  }
+
   test("an FTS-side failure surfaces as the FTS exception") {
     val e = intercept[IllegalArgumentException](
       Hybrid.rrfSearch(spark, Sf0001, "", "en", 0L, 20, 60, 10))

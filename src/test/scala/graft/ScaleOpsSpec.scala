@@ -164,7 +164,8 @@ class ScaleOpsSpec extends SparkSpec {
       Files.copy(p, d.resolve(s.relativize(p).toString),
         StandardCopyOption.REPLACE_EXISTING)
     }
-    assert(ScaleOps.attach(spark, dup -> ("doc_id", 8)))
+    def spec(t: String) = ScaleOps.AttachSpec(t, "doc_id", 8)
+    assert(ScaleOps.attachAll(spark, Seq(spec(dup))))
     val a = spark.table(dup).orderBy("doc_id").collect()
     val b = spark.table(src).orderBy("doc_id").collect()
     assert(a.nonEmpty && (a sameElements b))
@@ -183,53 +184,148 @@ class ScaleOpsSpec extends SparkSpec {
       Files.copy(p, d2.resolve(d.relativize(p).toString),
         StandardCopyOption.REPLACE_EXISTING)
     }
-    ScaleOps.unmarkAttachable(spark, dup2)
-    assert(!ScaleOps.attach(spark, dup2 -> ("doc_id", 8)))
+    Files.delete(d2.resolve("_GRAFT_ATTACH"))
+    assert(!ScaleOps.attachAll(spark, Seq(spec(dup2))))
     Files.write(d2.resolve("_GRAFT_ATTACH"),
       "someFutureLayout".getBytes("UTF-8"))
-    assert(!ScaleOps.attach(spark, dup2 -> ("doc_id", 8)))
+    assert(!ScaleOps.attachAll(spark, Seq(spec(dup2))))
     // attach group is all-or-nothing: one missing member fails the group
-    assert(!ScaleOps.attach(spark,
-      dup -> ("doc_id", 8), "graft_attspec_absent" -> ("doc_id", 8)))
+    assert(!ScaleOps.attachAll(spark,
+      Seq(spec(dup), spec("graft_attspec_absent"))))
     spark.sql(s"DROP TABLE IF EXISTS $src")
     spark.sql(s"DROP TABLE IF EXISTS $dup") // external: files survive
     graft.sources.ParquetStore.deleteRecursively(d)
     graft.sources.ParquetStore.deleteRecursively(d2)
   }
 
+  // --- the ensure lifecycle, once per layout ---------------------------
+
+  private val layouts: Seq[(String, String => ScaleOps.AttachSpec)] = Seq(
+    "bucketed" -> (t => ScaleOps.AttachSpec(t, "doc_id", 4)),
+    "partitioned" -> (t => ScaleOps.AttachSpec(t, partitionCols = Seq("part"))),
+    "plain" -> (t => ScaleOps.AttachSpec(t)))
+
+  private def generation(tag: String) =
+    (1L to 100L).map(i => (i, tag, i % 3)).toDF("doc_id", "v", "part")
+
+  private def location(t: String): java.nio.file.Path =
+    java.nio.file.Paths.get(
+      spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:"), t)
+
+  private def lockOf(t: String): java.nio.file.Path =
+    location(t).getParent.resolve(s".graft_build_$t.lock")
+
+  private def reset(t: String): Unit = {
+    spark.sql(s"DROP TABLE IF EXISTS $t")
+    graft.sources.ParquetStore.deleteRecursively(location(t))
+    java.nio.file.Files.deleteIfExists(lockOf(t))
+  }
+
+  /** Installs `src`'s committed files (marker included) as `dst`'s
+    * location, with no catalog entry for `dst`: what a fresh session
+    * sees of a generation another session built. */
+  private def installCopy(src: String, dst: String): Unit = {
+    import java.nio.file.{Files, StandardCopyOption}
+    val (s, d) = (location(src), location(dst))
+    Files.walk(s).forEach { p =>
+      val q = d.resolve(s.relativize(p).toString)
+      if (Files.isDirectory(p)) Files.createDirectories(q)
+      else Files.copy(p, q, StandardCopyOption.REPLACE_EXISTING)
+    }
+  }
+
+  /** (distinct `v` tags, row count) of a table. */
+  private def contents(t: String): (Set[String], Long) = {
+    val df = spark.table(t)
+    (df.select("v").distinct().as[String].collect().toSet, df.count())
+  }
+
   test("build lock: a dead builder's lock is broken and the build " +
       "proceeds; a live builder's lock makes the waiter ATTACH the " +
       "committed generation instead of rewriting it") {
-    import java.nio.file.{Files, Paths}
-    val t = "graft_lockspec"
-    spark.sql(s"DROP TABLE IF EXISTS $t")
-    val wh = spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
-    graft.sources.ParquetStore.deleteRecursively(Paths.get(wh, t))
-    val lock = Paths.get(wh, s".graft_build_$t.lock")
-    // (a) stale lock from a crashed builder (dead PID): broken, build
-    // runs, lock released afterwards
-    Files.createDirectories(lock.getParent)
-    Files.write(lock, "999999999".getBytes("UTF-8"))
-    val gen1 = (1L to 100L).map(i => (i, "gen1")).toDF("doc_id", "v")
-    ScaleOps.writeBucketed(gen1, t, "doc_id", 4)
-    assert(!Files.exists(lock), "lock not released after build")
-    assert(spark.table(t).filter(col("v") === "gen1").count() == 100)
-    // (b) live builder (this JVM's PID) holds the lock; it "commits"
-    // (gen1 above is the committed, marked generation) and releases
-    // 2 s later. The waiter must serve gen1 — NOT clobber it with its
-    // own gen2 frame.
-    Files.write(lock,
-      ProcessHandle.current.pid.toString.getBytes("UTF-8"))
-    val releaser = new Thread(() => {
-      Thread.sleep(2000); Files.deleteIfExists(lock); ()
-    })
-    releaser.start()
-    val gen2 = (1L to 100L).map(i => (i, "gen2")).toDF("doc_id", "v")
-    ScaleOps.writeBucketed(gen2, t, "doc_id", 4) // blocks ~2 s, then attaches
-    releaser.join()
-    assert(spark.table(t).filter(col("v") === "gen1").count() == 100,
-      "waiter clobbered the committed generation instead of attaching")
-    spark.sql(s"DROP TABLE IF EXISTS $t")
-    graft.sources.ParquetStore.deleteRecursively(Paths.get(wh, t))
+    import java.nio.file.Files
+    layouts.foreach { case (layout, spec) =>
+      val (t, src) = (s"graft_lock_$layout", s"graft_lock_${layout}_src")
+      reset(t); reset(src)
+      ScaleOps.ensure(spark, spec(src))(Seq(generation("gen1")))
+      // (a) stale lock from a crashed builder (dead PID): broken, build
+      // runs, lock released afterwards
+      Files.createDirectories(lockOf(t).getParent)
+      Files.write(lockOf(t), "999999999".getBytes("UTF-8"))
+      assert(ScaleOps.ensure(spark, spec(t))(Seq(generation("dead"))) == t)
+      assert(!Files.exists(lockOf(t)), s"$layout: lock not released")
+      assert(contents(t) == ((Set("dead"), 100L)), layout)
+      // (b) live builder (this JVM's PID) holds the lock and commits
+      // gen1 when it releases 2 s later. The waiter must serve gen1 —
+      // NOT clobber it with its own gen2 frame, and not rebuild.
+      reset(t)
+      Files.write(lockOf(t),
+        ProcessHandle.current.pid.toString.getBytes("UTF-8"))
+      val releaser = new Thread(() => {
+        Thread.sleep(2000); installCopy(src, t)
+        Files.deleteIfExists(lockOf(t)); ()
+      })
+      val builds = ScaleOps.BuildTimer.count
+      val t0 = System.nanoTime()
+      releaser.start()
+      ScaleOps.ensure(spark, spec(t))(Seq(generation("gen2")))
+      releaser.join()
+      assert((System.nanoTime() - t0) / 1e9 > 1.5, s"$layout: did not wait")
+      assert(ScaleOps.BuildTimer.count == builds, s"$layout: rebuilt")
+      assert(contents(t) == ((Set("gen1"), 100L)),
+        s"$layout: waiter clobbered the committed generation")
+      reset(t); reset(src)
+    }
+  }
+
+  test("ensure: a killed build (_SUCCESS, no marker) and a foreign " +
+      "marker are refused and rebuilt") {
+    import java.nio.file.Files
+    layouts.foreach { case (layout, spec) =>
+      val (t, src) = (s"graft_kill_$layout", s"graft_kill_${layout}_src")
+      reset(t); reset(src)
+      ScaleOps.ensure(spark, spec(src))(Seq(generation("gen1")))
+      val marker = Files.readAllBytes(location(src).resolve("_GRAFT_ATTACH"))
+      installCopy(src, t)
+      Files.delete(location(t).resolve("_GRAFT_ATTACH"))
+      assert(Files.exists(location(t).resolve("_SUCCESS")))
+      ScaleOps.ensure(spark, spec(t))(Seq(generation("killed")))
+      assert(contents(t) == ((Set("killed"), 100L)), layout)
+      assert(Files.readAllBytes(location(t).resolve("_GRAFT_ATTACH"))
+        sameElements marker, s"$layout: rebuild left no marker")
+      reset(t)
+      installCopy(src, t)
+      Files.write(location(t).resolve("_GRAFT_ATTACH"),
+        "someFutureLayout".getBytes("UTF-8"))
+      ScaleOps.ensure(spark, spec(t))(Seq(generation("foreign")))
+      assert(contents(t) == ((Set("foreign"), 100L)), layout)
+      reset(t); reset(src)
+    }
+  }
+
+  test("ensure: a group whose guard is missing rebuilds every table, " +
+      "in spec order, as one counted build") {
+    import java.nio.file.Files
+    val (companion, guard) = ("graft_group_part", "graft_group_guard")
+    val specs = Seq(layouts(1)._2(companion), layouts(2)._2(guard))
+    reset(companion); reset(guard)
+    ScaleOps.ensure(spark, specs: _*)(
+      Seq(generation("gen1"), generation("gen1")))
+    // the guard is gone (the companion is still registered and marked)
+    spark.sql(s"DROP TABLE $guard")
+    assert(!Files.exists(location(guard)))
+    // the guard's rows survive its write only if the companion was
+    // already committed and marked when the guard's frame ran
+    val companionMarker = location(companion).resolve("_GRAFT_ATTACH")
+    val companionDone = udf(() => Files.exists(companionMarker))
+      .asNondeterministic()
+    val builds = ScaleOps.BuildTimer.count
+    ScaleOps.ensure(spark, specs: _*)(Seq(generation("gen2"),
+      generation("gen2").filter(companionDone())))
+    assert(ScaleOps.BuildTimer.count == builds + 1)
+    assert(contents(companion) == ((Set("gen2"), 100L)))
+    assert(contents(guard) == ((Set("gen2"), 100L)),
+      "the guard was written before its companion")
+    reset(companion); reset(guard)
   }
 }
