@@ -62,8 +62,8 @@ object Bench {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // keep bucketed scans bucketed under pure-filter plans, so index
-      // probes (Similarity.ivfTopK) get static bucket pruning
+      // keep bucketed scans bucketed under pure-filter plans: one task
+      // per bucket (Spark prunes bucket files in non-bucketed scans too)
       .config("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
     sys.env.get("SPARK_GRAFT_AQE").foreach(v =>
       builder.config("spark.sql.adaptive.enabled", v))

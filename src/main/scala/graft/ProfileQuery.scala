@@ -19,7 +19,8 @@ object ProfileQuery {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // same probe regime as Verify/Bench: keep bucketed scans bucketed
+      // same scan regime as Verify/Bench: keep bucketed scans bucketed
+      // (one task per bucket; bucket files are pruned either way)
       .config("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")

@@ -19,8 +19,8 @@ object Verify {
       // events.parquet has TIMESTAMP(NANOS) which Spark 4 otherwise rejects;
       // read as long nanos (Tables/operators normalize)
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // keep bucketed scans bucketed under pure-filter plans, so index
-      // probes (Similarity.ivfTopK) get static bucket pruning
+      // keep bucketed scans bucketed under pure-filter plans: one task
+      // per bucket (Spark prunes bucket files in non-bucketed scans too)
       .config("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -63,6 +63,9 @@ final class DriverMemo[K, V](val maxEntries: Int) {
     }
   }
 
+  /** Drop `key`'s entry, for callers that know its value went stale. */
+  def remove(key: K): Unit = synchronized { map.remove(key) }
+
   /** Live entry count (spec hook). */
   def size: Int = synchronized { map.size }
 }

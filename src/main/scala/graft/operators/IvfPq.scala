@@ -186,12 +186,13 @@ object IvfPq {
     * [[Similarity.appendToIvfIndex]]: [[encodeDelta]] the delta rows
     * and insert into the bucketed codes table. Codebook drift is a
     * rebuild decision, not an append concern — the probe path is
-    * oblivious to how rows arrived. */
+    * oblivious to how rows arrived. The insert withdraws the attach
+    * marker first ([[ScaleOps.appendInto]]), as in
+    * [[Similarity.appendToIvfIndex]]. */
   def appendToCodes(spark: SparkSession, dir: String, nCentroids: Int,
       delta: DataFrame): Unit = {
     val codes = ensureCodesTable(spark, dir, nCentroids)
-    encodeDelta(spark, dir, nCentroids, delta)
-      .write.insertInto(codes) // positional; respects the bucket spec
+    ScaleOps.appendInto(encodeDelta(spark, dir, nCentroids, delta), codes)
   }
 
   /** Compaction for STREAMED code appends (the IVFPQ analog of

@@ -2,6 +2,8 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
+import org.apache.hadoop.fs.{FileStatus, Path}
 
 /** Cluster-scale physical-layout utilities: bucketed co-located joins and
   * skew salting. These are the concrete mechanisms behind the README's
@@ -86,6 +88,97 @@ object ScaleOps {
     }
   }
 
+  // --- Serving-path probes ----------------------------------------------
+
+  /** The size test of every driver-held lookup: true iff a relation of
+    * `bytes` on-disk bytes is within the session's
+    * `spark.sql.autoBroadcastJoinThreshold` — Spark's own bound for a
+    * relation it will hold whole (`-1` turns the lookups off). Above it
+    * the caller keeps its per-request job. The lookups share the join
+    * setting's meaning: raising it for joins also admits larger
+    * lookups, each held in up to 4 memo entries per kind, and a
+    * lookup's heap footprint is a multiple of its compressed on-disk
+    * bytes (the query vectors' `double`s are twice their stored
+    * `float`s, before per-entry overhead). */
+  def withinBroadcastBound(spark: SparkSession, bytes: Long): Boolean = {
+    val bound = spark.sessionState.conf.autoBroadcastJoinThreshold
+    bound >= 0 && bytes <= bound
+  }
+
+  /** A bucketed catalog table as [[bucketProbe]] reads it: schema,
+    * bucket key, bucket count and data files by bucket id. */
+  private case class BucketFiles(schema: StructType, key: String, n: Int,
+      byBucket: Map[Int, Seq[FileStatus]])
+
+  /** [[BucketFiles]] per (warehouse, table), listed once per table
+    * generation: every write of a persisted table goes through
+    * [[rewrite]] or [[appendInto]], and both drop the table's entry
+    * once their files are committed. Like the catalog's own cached
+    * relation, it does not see another JVM rewriting the table. */
+  private val bucketFilesMemo =
+    new DriverMemo[(String, String), BucketFiles](32)
+
+  private def bucketFilesKey(spark: SparkSession,
+      table: String): (String, String) =
+    (spark.conf.get("spark.sql.warehouse.dir"), table.toLowerCase)
+
+  private def bucketFiles(spark: SparkSession, table: String): BucketFiles =
+    bucketFilesMemo.getOrCompute(bucketFilesKey(spark, table), "") {
+      import org.apache.spark.sql.catalyst.TableIdentifier
+      import org.apache.spark.sql.execution.datasources.BucketingUtils
+      val meta = spark.sessionState.catalog
+        .getTableMetadata(TableIdentifier(table))
+      val (key, n) = meta.bucketSpec match {
+        case Some(b) if b.bucketColumnNames.size == 1 =>
+          (b.bucketColumnNames.head, b.numBuckets)
+        case other => throw new IllegalArgumentException(
+          s"$table is not bucketed on one column: $other")
+      }
+      val loc = new Path(meta.location)
+      val files = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        .listStatus(loc).toSeq
+        .filter(f => f.isFile && !f.getPath.getName.startsWith("_") &&
+          !f.getPath.getName.startsWith("."))
+        .flatMap(f => BucketingUtils.getBucketId(f.getPath.getName).map(_ -> f))
+      BucketFiles(meta.schema, key, n, files.groupMap(_._1)(_._2))
+    }
+
+  /** Bucketed catalog table `table` restricted to the bucket files that
+    * hold `values` of its bucket key, with the `key IN values` filter
+    * kept. Bucket ids come from Spark's own hash
+    * (`BucketingUtils.getBucketIdFromValue`), the key and bucket count
+    * from the catalog's bucket spec — the file pruning Spark applies to
+    * a non-bucketed scan of a bucketed table. The selected files are
+    * read as a plain parquet relation, so a probe of 2 of 8 buckets
+    * schedules one task per selected file instead of one per bucket.
+    * The file listing is [[bucketFiles]]' memoized one, so a request
+    * makes no file-system call and fires no listing job, however many
+    * files it selects. */
+  def bucketProbe(spark: SparkSession, table: String,
+      values: Seq[Any]): DataFrame = {
+    import org.apache.spark.sql.catalyst.expressions.{AttributeReference, Cast, Literal}
+    import org.apache.spark.sql.execution.datasources.{BucketingUtils, FileStatusCache, HadoopFsRelation, InMemoryFileIndex}
+    import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+    val b = bucketFiles(spark, table)
+    val keyAttr = AttributeReference(b.key, b.schema(b.key).dataType)()
+    val files = values.map(v => BucketingUtils.getBucketIdFromValue(keyAttr,
+        b.n, Cast(Literal(v), keyAttr.dataType).eval())).distinct
+      .flatMap(b.byBucket.getOrElse(_, Nil)).sortBy(_.getPath.getName)
+    // the index "lists" each selected file from the memoized statuses
+    val listed = new FileStatusCache {
+      private val byPath = files.map(f => f.getPath -> Array(f)).toMap
+      override def getLeafFiles(p: Path): Option[Array[FileStatus]] =
+        byPath.get(p)
+      override def putLeafFiles(p: Path, fs: Array[FileStatus]): Unit = ()
+      override def invalidateAll(): Unit = ()
+    }
+    val index = new InMemoryFileIndex(spark, files.map(_.getPath), Map.empty,
+      Some(b.schema), listed)
+    spark.baseRelationToDataFrame(HadoopFsRelation(index, new StructType(),
+        b.schema, None, new ParquetFileFormat, Map.empty)(spark))
+      .filter(col(b.key).isin(values: _*))
+  }
+
   // --- Build-once / ATTACH-many persisted tables ------------------------
 
   /** Driver-side accounting of persisted-table build time (r19 verdict
@@ -164,6 +257,20 @@ object ScaleOps {
     try java.nio.file.Files.deleteIfExists(
       tableLocation(spark, table).resolve(AttachMarker))
     catch { case _: java.io.IOException => () }
+
+  /** In-place append of `df` to a build-once generation (the
+    * incremental index appends), positional, respecting the table's
+    * bucket spec. The attach marker is withdrawn first: the name then
+    * no longer describes the rows, so no later session may attach it —
+    * [[attachAll]] fails for its group and [[ensure]] rebuilds from the
+    * fixture. This session keeps serving its registered table, and its
+    * probes list the table's files again. */
+  def appendInto(df: DataFrame, table: String): Unit = {
+    val spark = df.sparkSession
+    unmarkAttachable(spark, table)
+    df.write.insertInto(table)
+    bucketFilesMemo.remove(bucketFilesKey(spark, table))
+  }
 
   /** One table of a persisted generation, and the single place its
     * layout is declared: `bucket` = (key, nBuckets) for bucketed+sorted
@@ -388,6 +495,7 @@ object ScaleOps {
       (if (s.partitionCols.isEmpty) w else w.partitionBy(s.partitionCols: _*))
         .mode("overwrite").format("parquet").saveAsTable(s.table)
       markAttachable(spark, s.table)
+      bucketFilesMemo.remove(bucketFilesKey(spark, s.table))
     }
   }
 

@@ -57,21 +57,19 @@ object Similarity {
     lit(1.0) - dot(a, b) / (na * nb)
 
   /** V1+V3+V4: exact KNN of the query vector (row vec_id = qid) over all
-    * other vectors, optional distance threshold, top-k. */
+    * other vectors, optional distance threshold, top-k. The query
+    * vector comes from [[queryVectorOpt]] (driver-held within the
+    * broadcast bound, else a one-row lookup job) and is scored like
+    * [[rerankCells]] does; a missing qid returns no rows. */
   def knnCosine(
       spark: SparkSession, dir: String, qid: Long, k: Int,
       threshold: Double): DataFrame = {
-    val emb = Tables.embeddings(spark, dir)
-    val q = emb.filter(col("vec_id") === lit(qid))
-      .select(col("embedding").as("qv"), norm(col("embedding")).as("qn"))
-    emb.filter(col("vec_id") =!= lit(qid))
-      .select(col("vec_id"), col("label"), col("embedding"),
-        norm(col("embedding")).as("nrm"))
-      .crossJoin(broadcast(q))
-      .select(
-        col("vec_id"), col("label"),
-        round(cosineDistancePre(col("embedding"), col("qv"),
-          col("nrm"), col("qn")), 6).as("dist"))
+    val qv = queryVectorOpt(spark, dir, qid)
+    Tables.embeddings(spark, dir)
+      .filter(if (qv.isDefined) col("vec_id") =!= lit(qid) else lit(false))
+      .select(col("vec_id"), col("label"),
+        queryDist(col("embedding"), norm(col("embedding")),
+          qv.getOrElse(Nil)).as("dist"))
       .filter(col("dist") <= lit(threshold))
       .orderBy(col("dist").asc, col("vec_id").asc)
       .limit(k)
@@ -456,9 +454,8 @@ object Similarity {
       .reduce(_ || _)
     val cells =
       nearestCells(spark.table(s"${idx}_cents").filter(inGroups), qv, nProbe)
-    // (3) exact re-rank inside the probed (bucket-pruned) cells
-    rerankCells(spark.table(idx).filter(col("centroid_id").isin(cells: _*)),
-      qid, qv, k)
+    // (3) exact re-rank inside the probed cells' bucket files
+    rerankCells(spark, idx, cells, qid, qv, k)()
   }
 
   /** DuckDB twin of [[ivfTopKHier]] — the hierarchical regime's probe
@@ -638,12 +635,15 @@ object Similarity {
     * within an index generation) and insert into the bucketed table.
     * Cost ∝ |delta|, not corpus; the probe path is oblivious to how
     * rows arrived. Centroid drift is a rebuild decision, not an append
-    * concern. */
+    * concern. The insert ([[ScaleOps.appendInto]]) withdraws the
+    * generation's attach marker first: its name no longer describes its
+    * rows, so a later session rebuilds from the fixture instead of
+    * attaching them. */
   def appendToIvfIndex(spark: SparkSession, dir: String, nCentroids: Int,
       delta: DataFrame): Unit = {
     val name = ensureIvfIndex(spark, dir, nCentroids)
-    ivfAssignTo(delta, spark.table(s"${name}_cents"))
-      .write.insertInto(name) // positional; respects the bucket spec
+    ScaleOps.appendInto(
+      ivfAssignTo(delta, spark.table(s"${name}_cents")), name)
   }
 
   /** Vector-index DELETE path — the tombstone merge-on-read story
@@ -762,9 +762,8 @@ object Similarity {
     val tomb = Tables.embeddings(spark, dir)
       .filter(col("vec_id") % mod === 0)
       .select(col("vec_id"))
-    rerankCells(spark.table(idx)
-      .filter(col("centroid_id").isin(probeCells(spark, idx, qv, nProbe): _*))
-      .join(tomb, Seq("vec_id"), "left_anti"), qid, qv, k)
+    rerankCells(spark, idx, probeCells(spark, idx, qv, nProbe), qid, qv,
+      k)(_.join(tomb, Seq("vec_id"), "left_anti"))
   }
 
   /** Index COMPACTION (vacuum) — the maintenance step that closes the
@@ -835,9 +834,7 @@ object Similarity {
     val vac = ensureCompactedIvfIndex(spark, dir, nCentroids, mod)
     val qv = queryVector(spark, dir, qid)
     // centroids are the BASE generation's — compaction never retrains
-    rerankCells(spark.table(vac)
-      .filter(col("centroid_id").isin(probeCells(spark, base, qv, nProbe): _*)),
-      qid, qv, k)
+    rerankCells(spark, vac, probeCells(spark, base, qv, nProbe), qid, qv, k)()
   }
 
   /** The `_cents` rows (centroid_id, cv, cn) of IVF index `idx`,
@@ -875,10 +872,8 @@ object Similarity {
     * the ids equal an orderBy/limit top-k job's. */
   private def nearestCells(cents: DataFrame, qv: Seq[Double],
       n: Int): Seq[Long] = {
-    val qn = math.sqrt(qv.foldLeft(0.0)((acc, x) => acc + x * x))
     cents.select(col("centroid_id"),
-        round(lit(1.0) - dot(col("cv"), typedLit(qv))
-          / (col("cn") * lit(qn)), 6).as("qdist"))
+        queryDist(col("cv"), col("cn"), qv).as("qdist"))
       .collect()
       .sortWith { (a, b) =>
         val c = (a.isNullAt(1), b.isNullAt(1)) match {
@@ -897,50 +892,103 @@ object Similarity {
       nProbe: Int): Seq[Long] =
     nearestCells(centroidFrame(spark, idx), qv, nProbe)
 
-  /** One-row point lookup of query vector `qid`; the cast mirrors
-    * dot()'s per-element double cast, so downstream arithmetic is
-    * bit-identical. */
-  private def queryVector(spark: SparkSession, dir: String,
-      qid: Long): Seq[Double] =
-    Tables.embeddings(spark, dir)
-      .filter(col("vec_id") === lit(qid))
-      .select(col("embedding").cast("array<double>"))
-      .head().getSeq[Double](0)
+  /** The embeddings generation's vectors by vec_id, held on the driver
+    * per (dir, content hash) — filled by one read of the fixture files
+    * (not the session's memoized relation, whose file listing may
+    * predate the hashed content), then no job per request. Used only
+    * while the table is within the broadcast bound
+    * ([[ScaleOps.withinBroadcastBound]]); `None` above it. The values
+    * are the same `array<double>` cast the per-request lookup reads,
+    * first row per vec_id as its `take(1)` takes. */
+  private val vectorMemo =
+    new DriverMemo[(String, String), Map[Long, Seq[Double]]](4)
 
-  /** Exact re-rank of IVF index rows already pruned to the probed
-    * cells: drop the query itself, round-6 cosine distance, top-k by
-    * (dist, vec_id). */
-  private def rerankCells(rows: DataFrame, qid: Long, qv: Seq[Double],
-      k: Int): DataFrame = {
+  /** Live query-vector memo entries (spec hook). */
+  def vectorMemoSize: Int = vectorMemo.size
+
+  private def driverVectors(spark: SparkSession,
+      dir: String): Option[Map[Long, Seq[Double]]] =
+    if (!ScaleOps.withinBroadcastBound(spark,
+        ScaleOps.tableBytes(dir, "embeddings"))) None
+    else {
+      val gen = ScaleOps.contentHash(dir, "embeddings")
+      Some(vectorMemo.getOrCompute((dir, gen), gen) {
+        val rows = spark.read.parquet(s"$dir/embeddings.parquet")
+          .select(col("vec_id"), col("embedding").cast("array<double>"))
+          .collect()
+        rows.reverseIterator.filterNot(_.isNullAt(1))
+          .map(r => r.getLong(0) -> (scala.collection.immutable.ArraySeq
+            .unsafeWrapArray(r.getSeq[Double](1).toArray): Seq[Double]))
+          .toMap
+      })
+    }
+
+  /** Query vector `qid`, if the embeddings hold it: from
+    * [[driverVectors]] within the bound, else a one-row point lookup.
+    * The cast mirrors dot()'s per-element double cast, so downstream
+    * arithmetic is bit-identical. */
+  private def queryVectorOpt(spark: SparkSession, dir: String,
+      qid: Long): Option[Seq[Double]] =
+    driverVectors(spark, dir) match {
+      case Some(vectors) => vectors.get(qid)
+      case None =>
+        Tables.embeddings(spark, dir)
+          .filter(col("vec_id") === lit(qid))
+          .select(col("embedding").cast("array<double>"))
+          .take(1).headOption.map(_.getSeq[Double](0))
+    }
+
+  /** [[queryVectorOpt]] for the IVF probes, which need the vector to
+    * rank cells: a missing qid fails by name. */
+  private def queryVector(spark: SparkSession, dir: String,
+      qid: Long): Seq[Double] = {
+    val qv = queryVectorOpt(spark, dir, qid)
+    require(qv.isDefined,
+      s"query vector id $qid not found in $dir/embeddings")
+    qv.get
+  }
+
+  /** Round-6 cosine distance of `vec` (norm `nrm`) to the driver-held
+    * query vector `qv`, whose norm is summed left to right on the
+    * driver exactly as `norm` sums it in Spark. */
+  private def queryDist(vec: Column, nrm: Column, qv: Seq[Double]): Column = {
     val qn = math.sqrt(qv.foldLeft(0.0)((acc, x) => acc + x * x))
-    rows.filter(col("vec_id") =!= lit(qid))
+    round(lit(1.0) - dot(vec, typedLit(qv)) / (nrm * lit(qn)), 6)
+  }
+
+  /** Exact re-rank inside the probed `cells` of IVF index table `idx`:
+    * read only their bucket files ([[ScaleOps.bucketProbe]]), apply
+    * `restrict`, drop the query itself, round-6 cosine distance, top-k
+    * by (dist, vec_id). */
+  private def rerankCells(spark: SparkSession, idx: String,
+      cells: Seq[Long], qid: Long, qv: Seq[Double], k: Int)(
+      restrict: DataFrame => DataFrame = identity): DataFrame =
+    restrict(ScaleOps.bucketProbe(spark, idx, cells))
+      .filter(col("vec_id") =!= lit(qid))
       .select(col("vec_id"), col("label"), col("centroid_id"),
-        round(lit(1.0) - dot(col("embedding"), typedLit(qv))
-          / (col("nrm") * lit(qn)), 6).as("dist"))
+        queryDist(col("embedding"), col("nrm"), qv).as("dist"))
       .orderBy(col("dist").asc, col("vec_id").asc)
       .limit(k)
-  }
 
   /** ANN search: probe the query's `nProbe` nearest IVF cells, exact
     * re-rank inside them — the standard ivfflat recall/latency trade
     * (probing more cells raises recall, touching nProbe/nCentroids of
     * the corpus). Deterministic: tiebreaks on centroid id and vec id.
     *
-    * Probe path: the query vector is a one-row driver lookup (inherent
-    * to point-query ANN); the nProbe cell ids are ranked on the driver
-    * ([[probeCells]], no job) and inlined as an IN-list literal so the
-    * bucketed index scan statically prunes to those buckets
-    * (plan-asserted in SimilaritySpec). No assignment recompute, no
-    * join back to the source table.
+    * Probe path: the query vector comes from [[queryVector]] (driver-held
+    * within the broadcast bound, else a one-row lookup job); the nProbe
+    * cell ids are ranked on the driver ([[probeCells]], no job) and
+    * only their bucket files are read ([[ScaleOps.bucketProbe]], one
+    * task per file — spec-asserted in SimilaritySpec). A warm request
+    * is the one result job. No assignment recompute, no join back to
+    * the source table.
     */
   def ivfTopK(
       spark: SparkSession, dir: String, qid: Long, k: Int,
       nCentroids: Int, nProbe: Int = 2): DataFrame = {
     val idx = ensureIvfIndex(spark, dir, nCentroids)
     val qv = queryVector(spark, dir, qid)
-    rerankCells(spark.table(idx)
-      .filter(col("centroid_id").isin(probeCells(spark, idx, qv, nProbe): _*)),
-      qid, qv, k)
+    rerankCells(spark, idx, probeCells(spark, idx, qv, nProbe), qid, qv, k)()
   }
 
   /** FILTERED ANN — the metadata-predicate + vector-search composition
@@ -960,9 +1008,8 @@ object Similarity {
       label: Int, k: Int, nCentroids: Int, nProbe: Int = 2): DataFrame = {
     val idx = ensureIvfIndex(spark, dir, nCentroids)
     val qv = queryVector(spark, dir, qid)
-    rerankCells(spark.table(idx)
-      .filter(col("centroid_id").isin(probeCells(spark, idx, qv, nProbe): _*))
-      .filter(col("label") === lit(label)), qid, qv, k)
+    rerankCells(spark, idx, probeCells(spark, idx, qv, nProbe), qid, qv,
+      k)(_.filter(col("label") === lit(label)))
   }
 
   def ivfTopKFilteredOracleSql(qid: Long, label: Int, k: Int,

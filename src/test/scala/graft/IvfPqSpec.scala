@@ -122,6 +122,9 @@ class IvfPqSpec extends SparkSpec {
       Similarity.appendToIvfIndex(spark, Sf0001, N, delta)
       IvfPq.appendToCodes(spark, Sf0001, N, delta)
       assert(spark.table(codes).count() == before + 1)
+      // the appended codes generation is no longer attachable by name
+      assert(!graft.operators.ScaleOps.attachAll(spark,
+        Seq(graft.operators.ScaleOps.AttachSpec(codes, "centroid_id", N))))
       val row = spark.table(codes)
         .filter($"vec_id" === 900001L).head()
       assert(row.getAs[Long]("centroid_id") == v3cell)

@@ -49,17 +49,60 @@ class MemoBoundSpec extends SparkSpec {
     val idx = Fts.ensureIndex(spark, Sf0001)
     // a handful of real (tiny) statistics jobs through the memo — the
     // BOUND itself is proven by the unit tests above against the same
-    // DriverMemo class; this pins that termDfs actually rides it
+    // DriverMemo class; this pins that termDfs actually rides it.
+    // With the broadcast bound off, the term dictionary stands aside
+    // and every df lookup is the per-query probe.
     val vocab = Seq("hash", "join", "merge", "sort", "scan", "index",
       "table", "query")
     val pairs = for (a <- vocab; b <- vocab if a < b) yield Seq(a, b)
-    pairs.foreach(ts => Fts.termDfs(spark, idx, ts, "en"))
-    assert(Fts.dfProbeMemoSize <= 256,
-      s"df memo must stay bounded, got ${Fts.dfProbeMemoSize}")
-    // repeats of recent queries hit the memo — size must not grow
-    val before = Fts.dfProbeMemoSize
-    pairs.take(5).foreach(ts => Fts.termDfs(spark, idx, ts, "en"))
-    assert(Fts.dfProbeMemoSize == before)
+    withBroadcastThreshold("-1") {
+      pairs.foreach(ts => Fts.termDfs(spark, idx, ts, "en"))
+      assert(Fts.dfProbeMemoSize <= 256,
+        s"df memo must stay bounded, got ${Fts.dfProbeMemoSize}")
+      // repeats of recent queries hit the memo — size must not grow
+      val before = Fts.dfProbeMemoSize
+      pairs.take(5).foreach(ts => Fts.termDfs(spark, idx, ts, "en"))
+      assert(Fts.dfProbeMemoSize == before)
+    }
+    // within the bound the dictionary answers the same dfs
+    for (ts <- pairs.take(5))
+      assert(Fts.termDfs(spark, idx, ts, "en") ==
+        withBroadcastThreshold("-1")(Fts.termDfs(spark, idx, ts, "en")))
+  }
+
+  test("query-vector and term-dictionary memos stay bounded across " +
+      "generations") {
+    import java.nio.file.Files
+    import spark.implicits._
+    val dirs = (0 until 6).map(_ =>
+      Files.createTempDirectory("graft-memo-gen").toString)
+    val tables = (0 until 6).map(i => s"graft_memo_dict_t$i")
+    try {
+      dirs.zipWithIndex.foreach { case (dir, i) =>
+        // six distinct corpora: six generations of each lookup
+        Seq((1L, 0, Seq(1.0f, i.toFloat)), (2L, 0, Seq(0.0f, 1.0f)))
+          .toDF("vec_id", "label", "embedding")
+          .write.parquet(s"$dir/embeddings.parquet")
+        assert(Similarity.knnCosine(spark, dir, 1L, 5, 2.0).count() == 1)
+        graft.operators.ScaleOps.writeBucketed(
+          Seq((1L, "en", s"term$i", 1L, Seq(0))).toDF(
+            "doc_id", "lang", "term", "tf", "positions"),
+          tables(i), "term", 32)
+        assert(Fts.termDfs(spark, tables(i), Seq(s"term$i"), "en") ==
+          Map(s"term$i" -> 1L))
+        assert(Similarity.vectorMemoSize <= 4,
+          s"vector memo must stay bounded, got ${Similarity.vectorMemoSize}")
+        assert(Fts.termDictMemoSize <= 4,
+          s"term dictionary must stay bounded, got ${Fts.termDictMemoSize}")
+      }
+      assert(Similarity.vectorMemoSize == 4 && Fts.termDictMemoSize == 4)
+    } finally {
+      tables.foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+      dirs.foreach(d => {
+        Tables.invalidateDir(d)
+        graft.sources.ParquetStore.deleteRecursively(java.nio.file.Paths.get(d))
+      })
+    }
   }
 
   test("IVF centroid memo holds one entry per index, not per query") {

@@ -71,9 +71,10 @@ class PlanFactsSpec extends SparkSpec {
     // codes-side broadcast, per-query top-k window shuffle + the
     // grouped take + ordered output — the Q-independent exchange set
     "ivf_batch" -> Facts(3, 2, false),
-    // brute-force cosine top-k: one broadcast (query-vector ride),
-    // zero shuffles (TakeOrderedAndProject)
-    "knn_cosine" -> Facts(0, 1, false),
+    // brute-force cosine top-k: the query vector rides as a literal
+    // (driver-held, or one lookup job above the broadcast bound) — no
+    // broadcast, zero shuffles (TakeOrderedAndProject)
+    "knn_cosine" -> Facts(0, 0, false),
     // MinHash+LSH banding over the PERSISTED band index (r15): joins
     // are UNHINTED — real table stats self-correct with scale, so at
     // THIS fixture's size the planner broadcasts one (genuinely tiny)

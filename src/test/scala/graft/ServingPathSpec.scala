@@ -1,0 +1,182 @@
+package graft
+
+import org.apache.spark.sql.DataFrame
+
+import graft.operators.{Fts, Similarity}
+
+/** The serving path's driver-held lookups (query vectors, the FTS term
+  * dictionary) and bucket-file probes: both sides of the broadcast
+  * bound answer bit-identically, a warm request fires one job whose
+  * scan has one task per selected bucket file, and a missing query
+  * vector fails by name. */
+class ServingPathSpec extends SparkSpec {
+
+  private def result(df: => DataFrame): (String, Seq[Seq[Any]]) = {
+    val d = df
+    (d.schema.json, d.collect().map(_.toSeq.toList).toSeq)
+  }
+
+  /** (lookups off, lookups on) results of `df`. */
+  private def bothPaths(df: => DataFrame)
+      : ((String, Seq[Seq[Any]]), (String, Seq[Seq[Any]])) =
+    (withBroadcastThreshold("-1")(result(df)), result(df))
+
+  test("knnCosine: driver-held query vector is bit-identical to the " +
+      "per-request lookup; a missing qid returns no rows on both") {
+    for (qid <- Seq(0L, 42L, 499L); threshold <- Seq(0.95, 2.0)) {
+      val (off, on) =
+        bothPaths(Similarity.knnCosine(spark, Sf0001, qid, 10, threshold))
+      assert(on == off, s"qid=$qid threshold=$threshold")
+      assert(on._2.nonEmpty)
+    }
+    val (off, on) =
+      bothPaths(Similarity.knnCosine(spark, Sf0001, 999999L, 10, 2.0))
+    assert(on == off)
+    assert(on._2.isEmpty)
+  }
+
+  test("ivfTopK and ivfTopKFiltered are bit-identical on both paths") {
+    for (qid <- Seq(0L, 42L, 499L)) {
+      val (off, on) =
+        bothPaths(Similarity.ivfTopK(spark, Sf0001, qid, 10, 10, 2))
+      assert(on == off && on._2.nonEmpty, s"ivfTopK qid=$qid")
+      val label = Tables.embeddings(spark, Sf0001)
+        .filter(s"vec_id = $qid").select("label").head().getInt(0)
+      val (foff, fon) = bothPaths(
+        Similarity.ivfTopKFiltered(spark, Sf0001, qid, label, 10, 10, 3))
+      assert(fon == foff, s"ivfTopKFiltered qid=$qid")
+    }
+  }
+
+  test("searchIndexed is bit-identical on both paths and takes the " +
+      "same AND route") {
+    def route(q: String) = Fts.searchIndexed(spark, Sf0001, q, "en", 10)
+      .queryExecution.executedPlan.toString.contains("Join")
+    val queries = Seq("hash", "hash join", "hash join merge",
+      "hash zzqxabsent")
+    for (q <- queries) {
+      val (off, on) = bothPaths(Fts.searchIndexed(spark, Sf0001, q, "en", 10))
+      assert(on == off, q)
+      assert(withBroadcastThreshold("-1")(route(q)) == route(q), q)
+    }
+    assert(result(Fts.searchIndexed(spark, Sf0001, "hash join", "en", 10))
+      ._2.nonEmpty)
+    assert(result(Fts.searchIndexed(spark, Sf0001, "hash zzqxabsent",
+      "en", 10))._2.isEmpty)
+    // both AND routes are exercised: the share pin forces the chain,
+    // and the two paths still agree on it
+    try {
+      spark.conf.set("graft.fts.rarestMaxDfShare", "1.0")
+      assert(route("hash join merge"))
+      val (off, on) = bothPaths(
+        Fts.searchIndexed(spark, Sf0001, "hash join merge", "en", 10))
+      assert(on == off && on._2.nonEmpty)
+    } finally spark.conf.unset("graft.fts.rarestMaxDfShare")
+  }
+
+  test("an in-place rewrite of the embeddings mints a new vector-memo " +
+      "entry") {
+    import java.nio.file.Files
+    import org.apache.spark.sql.functions.{col, lit, transform}
+    val dir = Files.createTempDirectory("graft-qv-gen").toString
+    val path = s"$dir/embeddings.parquet"
+    val src = Tables.embeddings(spark, Sf0001)
+    try {
+      src.write.parquet(path)
+      Tables.embeddings(spark, dir) // schema inference is a job of its own
+      val (r1, fill1) = jobsFired(result(
+        Similarity.knnCosine(spark, dir, 42L, 10, 2.0)))
+      assert(fill1 == 3,
+        "first request fills the memo (schema, vectors), then one job")
+      // shift every component: new content, different cosines
+      src.select(col("vec_id"), col("label"),
+          transform(col("embedding"), x => x + lit(0.5f)).as("embedding"))
+        .write.mode("overwrite").parquet(path)
+      // a request before the relation is invalidated still fills the
+      // new generation's entry from the new files
+      val (_, fill2) = jobsFired(Similarity.knnCosine(spark, dir, 42L, 10, 2.0))
+      assert(fill2 == 2, "the rewritten generation fills a new entry")
+      Tables.invalidate(path)
+      Tables.embeddings(spark, dir)
+      val (r2, warm2) = jobsFired(result(
+        Similarity.knnCosine(spark, dir, 42L, 10, 2.0)))
+      assert(warm2 == 1)
+      assert(r2 != r1)
+      assert(r2 == withBroadcastThreshold("-1")(result(
+        Similarity.knnCosine(spark, dir, 42L, 10, 2.0))))
+      val (_, warm) = jobsFired(result(
+        Similarity.knnCosine(spark, dir, 42L, 10, 2.0)))
+      assert(warm == 1)
+    } finally {
+      Tables.invalidate(path)
+      graft.sources.ParquetStore.deleteRecursively(
+        java.nio.file.Paths.get(dir))
+    }
+  }
+
+  test("warm requests: ivfTopK is one job with one task per selected " +
+      "bucket file, knnCosine one job, multi-term searchIndexed none " +
+      "before its action") {
+    val idx = Similarity.ensureIvfIndex(spark, Sf0001, 10)
+    Similarity.ivfTopK(spark, Sf0001, 42L, 10, 10, 2).collect()
+    val (df, jobs) = jobStagesFired {
+      val df = Similarity.ivfTopK(spark, Sf0001, 42L, 10, 10, 2)
+      df.collect()
+      df
+    }
+    val files = inputFileNames(df)
+    assert(files.nonEmpty && files.size < 10)
+    assert(jobs == Seq(Seq(files.size)), s"jobs (task counts): $jobs")
+    val qv = Tables.embeddings(spark, Sf0001).filter("vec_id = 42")
+      .selectExpr("CAST(embedding AS array<double>)").head().getSeq[Double](0)
+    assert(files == bucketFileNames(idx,
+      Similarity.probeCells(spark, idx, qv, 2)))
+
+    Similarity.knnCosine(spark, Sf0001, 42L, 10, 0.95).collect()
+    assert(jobsFired(
+      Similarity.knnCosine(spark, Sf0001, 7L, 10, 0.95).collect())._2 == 1)
+
+    Fts.searchIndexed(spark, Sf0001, "hash join", "en", 10)
+    for (q <- Seq("sort merge", "hash join merge", "table scan index"))
+      assert(jobsFired(Fts.searchIndexed(spark, Sf0001, q, "en", 10))._2 == 0,
+        q)
+  }
+
+  test("a bucket-file probe selecting more than 32 files is one job " +
+      "and no listing; an append is probed at once") {
+    import org.apache.spark.sql.functions.col
+    import graft.operators.ScaleOps
+    import spark.implicits._
+    val t = "graft_serving_probe48"
+    try {
+      ScaleOps.writeBucketed((0L until 480L).map(i => (i, s"v$i")).toDF("k", "v"),
+        t, "k", 48)
+      val keys = (0L until 480L by 5L).toSeq
+      for (pass <- Seq("cold", "warm")) {
+        val (df, jobs) = jobStagesFired {
+          val df = ScaleOps.bucketProbe(spark, t, keys)
+          assert(df.collect().length == keys.size)
+          df
+        }
+        val files = inputFileNames(df)
+        assert(files == bucketFileNames(t, keys) && files.size > 32, pass)
+        // one scan stage; Spark packs this many small files into fewer
+        // tasks than files
+        assert(jobs.size == 1 && jobs.head.size == 1 &&
+          jobs.head.head <= files.size, s"$pass: jobs (task counts) $jobs")
+      }
+      ScaleOps.appendInto(Seq((1000L, "new")).toDF("k", "v"), t)
+      assert(ScaleOps.bucketProbe(spark, t, Seq(1000L, 5L))
+        .orderBy(col("k")).collect().map(_.getLong(0)).toSeq == Seq(5L, 1000L))
+    } finally spark.sql(s"DROP TABLE IF EXISTS $t")
+  }
+
+  test("a missing query vector fails by name on both paths") {
+    for (t <- Seq("-1", "10485760")) withBroadcastThreshold(t) {
+      val e = intercept[IllegalArgumentException](
+        Similarity.ivfTopK(spark, Sf0001, 999999L, 10, 10, 2))
+      assert(e.getMessage.contains("999999") &&
+        e.getMessage.contains(Sf0001), e.getMessage)
+    }
+  }
+}

@@ -240,14 +240,19 @@ class SimilaritySpec extends SparkSpec {
 
   /** The former Spark-side probe ranking: a cents-table top-k job. */
   private def sparkSideCells(idx: String, qv: Seq[Double],
-      nProbe: Int): Seq[Long] = {
+      nProbe: Int): Seq[Long] =
+    sparkSideRank(spark.table(s"${idx}_cents"), qv, nProbe)
+
+  /** Ids of the `n` (centroid_id, cv, cn) rows nearest to `qv`. */
+  private def sparkSideRank(cents: org.apache.spark.sql.DataFrame,
+      qv: Seq[Double], n: Int): Seq[Long] = {
     val qn = math.sqrt(qv.map(x => x * x).sum)
-    spark.table(s"${idx}_cents")
+    cents
       .select($"centroid_id",
         round(lit(1.0) - Similarity.dot($"cv", typedLit(qv))
           / ($"cn" * lit(qn)), 6).as("qdist"))
       .orderBy($"qdist".asc, $"centroid_id".asc)
-      .limit(nProbe)
+      .limit(n)
       .collect().map(_.getLong(0)).toSeq
   }
 
@@ -309,12 +314,13 @@ class SimilaritySpec extends SparkSpec {
 
   test("ivf probe bucket-prunes: index scan touches < all buckets") {
     val df = Similarity.ivfTopK(spark, Sf0001, 42L, 5, 10, 2)
-    df.collect() // finalize AQE
-    val plan = df.queryExecution.executedPlan.toString
-    val m = "SelectedBucketsCount: (\\d+) out of (\\d+)".r
-      .findFirstMatchIn(plan)
-    assert(m.isDefined, s"no bucket pruning in plan:\n$plan")
-    assert(m.get.group(1).toInt < m.get.group(2).toInt)
+    df.collect()
+    // the scan reads exactly the probed cells' bucket files
+    val idx = Similarity.ensureIvfIndex(spark, Sf0001, 10)
+    val cells = Similarity.probeCells(spark, idx, queryVec(Sf0001, 42L), 2)
+    val want = bucketFileNames(idx, cells)
+    assert(inputFileNames(df) == want)
+    assert(want.nonEmpty && want.size < 10)
   }
 
   test("embcos pair self-join is co-located: only the final sort shuffles") {
@@ -368,6 +374,26 @@ class SimilaritySpec extends SparkSpec {
     } finally {
       // ALWAYS drop: a failure above must not leave the fake row in the
       // shared index that later tests' ensureIvfIndex would reuse
+      spark.sql(s"DROP TABLE IF EXISTS $idx")
+      spark.sql(s"DROP TABLE IF EXISTS ${idx}_cents")
+    }
+  }
+
+  test("an append withdraws its generation's attach marker") {
+    import graft.operators.ScaleOps
+    import graft.operators.ScaleOps.AttachSpec
+    // a generation of its own (6 cells), dropped afterwards
+    val idx = Similarity.ensureIvfIndex(spark, Sf0001, 6)
+    val group = Seq(AttachSpec(s"${idx}_cents", "centroid_id", 1),
+      AttachSpec(idx, "centroid_id", 6))
+    try {
+      assert(ScaleOps.attachAll(spark, group))
+      val delta = Tables.embeddings(spark, Sf0001).limit(1)
+        .select(lit(900002L).as("vec_id"), $"label", $"embedding")
+      Similarity.appendToIvfIndex(spark, Sf0001, 6, delta)
+      assert(!ScaleOps.attachAll(spark, group),
+        "an appended generation must not be attachable by its name")
+    } finally {
       spark.sql(s"DROP TABLE IF EXISTS $idx")
       spark.sql(s"DROP TABLE IF EXISTS ${idx}_cents")
     }
@@ -448,12 +474,17 @@ class SimilaritySpec extends SparkSpec {
         .collect().map(_.toString).toSeq
     }
     assert(hier == exact, "full-width hier probe must equal exact KNN")
-    // narrow probe: the index scan is statically bucket-pruned
+    // narrow probe: the index scan reads only the probed cells' bucket
+    // files — the nearest coarse group, then its 2 nearest cells
     val narrow = Similarity.ivfTopKHier(spark, Sf0001, 42L, 10,
       k1, k2, 1, 2)
-    val plan = narrow.queryExecution.executedPlan.toString
-    assert(plan.contains("SelectedBucketsCount"),
-      s"narrow hier probe should bucket-prune:\n$plan")
+    val qv = queryVec(Sf0001, 42L)
+    val coarse = sparkSideRank(spark.table(s"${idx}_coarse"), qv, 1).head
+    val cells = sparkSideRank(spark.table(s"${idx}_cents").filter(
+      $"centroid_id".between(coarse * k2, coarse * k2 + k2 - 1)), qv, 2)
+    val want = bucketFileNames(idx, cells)
+    assert(inputFileNames(narrow) == want)
+    assert(want.nonEmpty && want.size < k1 * k2)
     assert(narrow.collect().nonEmpty)
     // routing arithmetic: the auto policy crosses to hier past the
     // driver bound (cells*64 > 1e7 <=> cells > 156250 <=> n > ~1.5e8)
