@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main (driver contract): runs every SparkEntry query on
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line with per-query seconds.
   *
@@ -23,7 +21,11 @@ import org.apache.spark.sql.SparkSession
   *   - "plan": per-query seconds to analyze+optimize+physically plan
   *     (DataFrame construction through executedPlan), min-of-N, measured
   *     in a SEPARATE untimed pass — the fixed Catalyst floor each query
-  *     pays regardless of data volume.
+  *     pays regardless of data volume; -1 for a query whose builder
+  *     starts jobs (not separable from execution).
+  *   - "builder_jobs" (detail): the Spark jobs each query's pre-touch
+  *     started while its DataFrame was being built, counted by
+  *     [[JobCounter]] — the record that decides plan = -1.
   *   - "floor_noop": min-of-N seconds for `spark.range(1).count` — pure
   *     job-dispatch cost, the irreducible per-job scheduling overhead.
   *     Also on the stdout contract line: it moves with HOST LOAD, not
@@ -52,74 +54,28 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
-    val shuffleParts =
-      sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", "8")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffleParts)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // keep bucketed scans bucketed under pure-filter plans: one task
-      // per bucket (Spark prunes bucket files in non-bucketed scans too)
-      .config("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
-    sys.env.get("SPARK_GRAFT_AQE").foreach(v =>
-      builder.config("spark.sql.adaptive.enabled", v))
-    sys.env.get("SPARK_GRAFT_CONSTRAINT_PROP").foreach(v =>
-      builder.config("spark.sql.constraintPropagation.enabled", v))
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // the remaining no-partition windows are all lint-documented bounded
-    // cases (PlanLintSpec allowlist); their repeated WindowExec warnings
-    // burned ~300 chars of the driver's 2000-char stdout tail budget, so
-    // drop that one logger to ERROR and let the tail carry data
-    // same budget reasoning for the streaming bridges' per-run WARN
-    // pair (MicroBatchExecution: watermark-disabled + AQE-not-
-    // supported-in-stateful — both inherent to the bridge design and
-    // lint-documented) and the state-store provider's maintenance note
-    Seq(
-      "org.apache.spark.sql.execution.window.WindowExec",
-      // Spark 4.1 moved the micro-batch runtime under .streaming.runtime
-      "org.apache.spark.sql.execution.streaming.runtime.MicroBatchExecution",
-      "org.apache.spark.sql.execution.streaming.runtime.ResolveWriteToStream",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-      "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider",
-      // "Asked to cache already cached data": CacheScope.cached is
-      // deliberately idempotent across reps; 300+ repeats of this line
-      // are pure tail noise
-      "org.apache.spark.sql.execution.CacheManager",
-      // "Assume no metadata directory": the bridges read plain parquet
-      // fixtures, never a FileStreamSink-written directory
-      "org.apache.spark.sql.execution.streaming.sinks.FileStreamSink",
-      // "Failed to cancel job group": the job-ledger queries cancel
-      // their group on cleanup whether or not it still has active jobs
-      // (cancelJobGroup is deliberately idempotent); benign, and the
-      // two lines land exactly in the driver's 2000-char stdout tail
-      "org.apache.spark.scheduler.DAGScheduler"
-    ).foreach(l =>
-      org.apache.logging.log4j.core.config.Configurator.setLevel(
-        l, org.apache.logging.log4j.Level.ERROR))
-    graft.functions.NativeFunctions.registerAll(spark)
+    val spark = Session.create(Session.cpus,
+      sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", "8").toInt)
     val names = SparkEntry.queries.keys.toSeq.sorted
     // every failed warm-up, pre-touch, timed rep or plan pass lands in
     // the detail file's "errors" list (query, pass, exception) instead
     // of vanishing; a timed rep that throws is still discarded
     val errors = scala.collection.mutable.ArrayBuffer.empty[String]
+    def error(name: String, pass: String, e: Throwable): Unit = {
+      def js(s: String): String = s.flatMap {
+        case '"' => "\\\""
+        case '\\' => "\\\\"
+        case c if c < ' ' => f"\\u${c.toInt}%04x"
+        case c => c.toString
+      }
+      errors += s"""{"query":"${js(name)}","pass":"$pass",""" +
+        s""""error":"${js(e.toString.take(1000))}"}"""
+    }
     def attempt[T](name: String, pass: String)(body: => T): Option[T] =
       try Some(body)
       catch {
-        case scala.util.control.NonFatal(e) =>
-          def js(s: String): String = s.flatMap {
-            case '"' => "\\\""
-            case '\\' => "\\\\"
-            case c if c < ' ' => f"\\u${c.toInt}%04x"
-            case c => c.toString
-          }
-          errors += s"""{"query":"${js(name)}","pass":"$pass",""" +
-            s""""error":"${js(e.toString.take(1000))}"}"""
-          None
+        case scala.util.control.NonFatal(e) => error(name, pass, e); None
       }
     // warm-up pass (untimed) — this is also the ENSURE PRE-PASS: every
     // persisted family's first touch lands here, and the builders'
@@ -136,9 +92,8 @@ object Bench {
     val ensureBuildN = graft.operators.ScaleOps.BuildTimer.count
     // drop the warm-up pass's persist()ed frames so the FIRST timed
     // query doesn't run under ~110 queries of dead-cache LRU churn the
-    // per-query clearCache below spares every later query
-    graft.operators.CacheScope.release(spark)
-    spark.catalog.clearCache()
+    // per-query release below spares every later query
+    Timing.release(spark)
     // GC barrier so warm-up garbage is not collected mid-measurement
     System.gc()
     Thread.sleep(500)
@@ -147,129 +102,58 @@ object Bench {
       spark.range(1).count()
       (System.nanoTime() - t0) / 1e9
     }.min
-    // Queries whose BUILDERS run driver-side Spark jobs (point-lookup
-    // head()/collect(), iterative supersteps): reaching executedPlan
-    // already executes those jobs, so a "planning floor" number would
-    // really be execution time — report plan = -1 (not separable)
-    // instead of a lie, and skip the redundant extra executions.
-    val driverActionBuilders = Set("ivf_ann", "emb_tfidf_ann",
-      "dedup_clusters", "pq_scan", "join_bloom_prune",
-      // round-9 additions: iterative loops (pagerank checkpoint, the
-      // cluster superstep composed into reduction/canonical), BPE fit
-      // passes, bounded-collect literals (zorder tmin, semdedup k), and
-      // every approxQuantile-backed prefix-sum builder
-      "pagerank_dups", "dedup_reduction", "dedup_canonical",
-      "bpe_merges", "bpe_vocab", "bpe_compression",
-      "zorder_key", "semdedup_report",
-      "select_budget", "quality_ppl_buckets", "pack_sequences",
-      "win_ntile_scale",
-      // round-10: streaming bridges run the micro-batch engine inside
-      // the builder (awaitTermination before returning the frame);
-      // kmeans now collects its k hash-spread seed ids driver-side
-      "events_tumbling_stream", "stream_index_termstats",
-      "stream_ivfpq_append", "events_late_drop_stream",
-      "stream_click_attrib", "events_sessions_stream",
-      "stream_custom_sessions", "stream_running_totals",
-      "kmeans_clusters", "pq_recall",
-      // round-10 additions: index builds / point lookups / probe-cell
-      // collects in the builder (IVFPQ family), bucketed-table build
-      "ivfpq_ann", "ivfpq_recall", "bucketed_revenue",
-      // round-11: auto-cell-count probe (count + index build + probe
-      // cells in the builder) and the recall curve (index build)
-      "ivf_ann_auto", "ann_recall_curve", "ivfpq_batch", "ivfpq_recall_curve",
-      "ivf_ann_filtered",
-      // hybrid_rrf runs both retrievals in the builder and returns the
-      // fused lists as a local relation
-      "hybrid_rrf",
-      // round-12: the rarest-first rewrite collects its |terms|-row df
-      // probe in the builder
-      "fts_rarest_first",
-      // round-16: the TF-IDF recall gate counts the corpus for idf N
-      // in the builder; ppjoin runs its candidate-volume estimate (one
-      // tiny agg over the cached prefix) to pick its filter stack
-      "emb_tfidf_recall", "dedup_ppjoin",
-      // round-19 (measurement-bug fix, disclosed in OPTIMIZATION_r19):
-      // these builders also run driver actions — the beam supersteps
-      // (localCheckpoint/collect per round), the NB per-class scalar
-      // collect, the PCA power-iteration loop, and the s4 SINK itself —
-      // so the r18 "plans" pass was silently EXECUTING them 3 more
-      // times per bench (the s4 store was appended/scanned thrice
-      // extra; plan=1.2 s rows in bench_detail were executions, not
-      // planning). Their plan floor reports -1 (not separable), like
-      // the rest of this list.
-      "graph_ann", "graph_ann_batch", "gann_recall", "nb_confusion",
-      "emb_pca_power", "s4_append_state")
-    // timed pass: min of N successful runs per query (construction +
-    // count(), nothing double-planned); -1 only if every rep failed
+    // timed pass: Timing's warm regime — one untimed pre-touch
+    // re-establishes steady state for THIS query (the global warm-up
+    // ran up to ~280 queries ago, and the per-query releases plus OS
+    // page-cache churn can leave rep 1 partially cold: the round-10
+    // driver stamp showed a 5-13x swing on the queries sharing the FTS
+    // index), then min of N successful runs of construction + count(),
+    // nothing double-planned; -1 only if every rep failed. The timed
+    // runs' jobs per rep are the mechanical input to the pairing
+    // tool's floor_bound tag (r17 verdict #4).
     val results = names.map { name =>
-      // one untimed pre-touch re-establishes steady state for THIS query
-      // before its timed reps: the global warm-up pass ran ~160 queries
-      // ago for the early-alphabet names, and the per-query cache clears
-      // below plus OS page-cache churn can leave rep 1 partially cold —
-      // the round-10 driver stamp showed exactly that as a 5-13x swing
-      // concentrated on the queries sharing the biggest persisted index
-      // (FTS), while a fresh ProfileQuery session measured them at
-      // steady state 0.3-0.9 s. Min-of-N is DEFINED as the steady-state
-      // number (see the methodology note above); the pre-touch makes
-      // every rep eligible instead of sacrificing rep 1 to re-warming.
-      attempt(name, "pretouch")(SparkEntry.queries(name)(spark, sfDir).count())
-      // timed reps run under a per-query job group so the artifact can
-      // carry jobs-per-rep — the mechanical input to the pairing tool's
-      // floor_bound tag (r17 verdict #4: spark_s ≤ jobs × floor_noop ×
-      // margin classifies a weak entry as job-floor-bound by
-      // MEASUREMENT instead of by BENCHNOTES prose). Builders that set
-      // their own group (job-ledger family) undercount here — their
-      // jobs field is advisory, like every tag input.
-      spark.sparkContext.setJobGroup(s"bench_$name", name,
-        interruptOnCancel = false)
-      val runs = (0 until reps).flatMap { _ =>
-        attempt(name, "timed") {
-          val t0 = System.nanoTime()
-          SparkEntry.queries(name)(spark, sfDir).count()
-          (System.nanoTime() - t0) / 1e9
-        }
-      }
-      spark.sparkContext.clearJobGroup()
-      // separate pass: planning floor (construction through executedPlan)
+      val m = Timing.measure(spark, reps, Timing.Warm)(
+        SparkEntry.queries(name)(spark, sfDir))
+      m.errors.foreach { case (pass, e) => error(name, pass, e) }
+      // separate pass: planning floor (construction through
+      // executedPlan). A builder that started jobs in the pre-touch
+      // (point lookups, iterative supersteps, streaming sinks, index
+      // builds) would EXECUTE them again here, so its plan floor is
+      // not separable: plan = -1 and no pass. The pass is counted too:
+      // a job it fires is an error, not a planning number.
       val plans =
-        if (driverActionBuilders(name)) Seq.empty
-        else (0 until reps).flatMap { _ =>
-          attempt(name, "plan") {
-            val t0 = System.nanoTime()
-            SparkEntry.queries(name)(spark, sfDir)
-              .queryExecution.executedPlan
-            (System.nanoTime() - t0) / 1e9
+        if (m.builderJobs > 0) Seq.empty
+        else {
+          val (ps, jobs) = JobCounter.count(spark) {
+            (0 until reps).flatMap { _ =>
+              attempt(name, "plan") {
+                val t0 = System.nanoTime()
+                SparkEntry.queries(name)(spark, sfDir)
+                  .queryExecution.executedPlan
+                (System.nanoTime() - t0) / 1e9
+              }
+            }
+          }
+          if (jobs == 0) ps
+          else {
+            error(name, "plan", new IllegalStateException(
+              s"plan pass started $jobs Spark jobs"))
+            Seq.empty
           }
         }
       // operators that persist() intermediate frames (minhash family,
-      // mixture weights) create NEW cached copies per invocation; over
-      // 100+ queries × reps the dead copies accumulate until LRU
-      // eviction churns. Dropping the cache between queries keeps the
-      // memory profile flat (catalog TABLES — the persisted indexes —
-      // live on disk and are unaffected). release() first so the
-      // CacheScope registry does not grow across 100+ queries.
-      graft.operators.CacheScope.release(spark)
-      spark.catalog.clearCache()
-      // jobs-per-rep read AFTER the plans pass — the status store is
-      // fed asynchronously off the listener bus, and the intervening
-      // work gives it time to drain (the count is a tag input, not a
-      // correctness number)
-      val jobsPerRep =
-        if (runs.isEmpty) -1.0
-        else spark.sparkContext.statusTracker
-          .getJobIdsForGroup(s"bench_$name").length.toDouble / runs.size
-      (name,
-        if (runs.nonEmpty) runs.min else -1.0,
-        if (plans.nonEmpty) plans.min else -1.0,
-        if (runs.nonEmpty) runs.max else -1.0,
-        jobsPerRep)
+      // mixture weights) create NEW cached copies per invocation;
+      // releasing between queries keeps the memory profile flat
+      Timing.release(spark)
+      (name, m.min, if (plans.nonEmpty) plans.min else -1.0, m.max,
+        m.jobsPerRep, m.builderJobs)
     }
     def jmap(kvs: Seq[(String, Double)]): String =
       kvs.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
     // a query that failed every rep must not shrink the headline total
     // (summing its -1 sentinel would make failures look like speedups)
     val ok = results.filter(_._2 >= 0)
-    val failed = results.collect { case (n, t, _, _, _) if t < 0 => "\"" + n + "\"" }
+    val failed = results.collect { case (n, t, _, _, _, _) if t < 0 => "\"" + n + "\"" }
     val total = ok.map(_._2).sum
     // Contention self-identification (r15 verdict #2: a 36% same-HEAD
     // total swing can hide a real 2× regression): a query whose max/min
@@ -293,7 +177,7 @@ object Bench {
     // loop) — expected 0; nonzero means an ensure-guard rebuilt
     val ensureBuildLate =
       graft.operators.ScaleOps.BuildTimer.totalSec - ensureBuildSec
-    val detail = s"""{"metric":"total","value":$total,"unit":"sec","queries":${jmap(results.map(r => (r._1, r._2)))},"sf":"$sfDir","reps":$reps,"plan":${jmap(results.map(r => (r._1, r._3)))},"rep_max":${jmap(results.map(r => (r._1, r._4)))},"jobs":${jmap(results.map(r => (r._1, r._5)))},"contended":[${contended.map("\"" + _._1 + "\"").mkString(",")}],"failed":[${failed.mkString(",")}],"floor_noop":$floorNoop,"ensure_build_sec":$ensureBuildSec,"ensure_build_n":$ensureBuildN,"ensure_build_late_sec":$ensureBuildLate,"errors":[${errors.mkString(",")}]}"""
+    val detail = s"""{"metric":"total","value":$total,"unit":"sec","queries":${jmap(results.map(r => (r._1, r._2)))},"sf":"$sfDir","reps":$reps,"plan":${jmap(results.map(r => (r._1, r._3)))},"rep_max":${jmap(results.map(r => (r._1, r._4)))},"jobs":${jmap(results.map(r => (r._1, r._5)))},"builder_jobs":${jmap(results.map(r => (r._1, r._6.toDouble)))},"contended":[${contended.map("\"" + _._1 + "\"").mkString(",")}],"failed":[${failed.mkString(",")}],"floor_noop":$floorNoop,"ensure_build_sec":$ensureBuildSec,"ensure_build_n":$ensureBuildN,"ensure_build_late_sec":$ensureBuildLate,"errors":[${errors.mkString(",")}]}"""
     java.nio.file.Files.write(
       java.nio.file.Paths.get("bench_detail.json"),
       detail.getBytes("UTF-8"))

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Prints the formatted physical plan of selected queries — the
   * plan-quality review loop (pushdown, pruning, join strategy, top-k).
   *
@@ -10,18 +8,7 @@ import org.apache.spark.sql.SparkSession
 object PlanCheck {
   def main(args: Array[String]): Unit = {
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // same probe regime as Verify/Bench: keep bucketed scans bucketed
-      // so index probes show their bucket pruning in the plan
-      .config("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    graft.functions.NativeFunctions.registerAll(spark)
+    val spark = Session.create(Session.cpus, Session.cpus)
     val wanted =
       if (args.nonEmpty) args.toSeq else SparkEntry.queries.keys.toSeq.sorted
     wanted.foreach { name =>

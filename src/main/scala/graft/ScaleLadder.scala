@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Scale-ladder proof run: time a set of queries at two fixture scales
   * (default sf0.1 and the ScaleUp-generated 10× sf1) and report the
   * per-query growth ratio. The pass criterion for 10× data is
@@ -10,6 +8,9 @@ import org.apache.spark.sql.SparkSession
   * collect) that must be fixed before it would survive 100 TB.
   *
   *   runMain graft.ScaleLadder <smallDir> <bigDir> [reps] [names…]
+  *
+  * Each query is timed by [[Timing.measure]] in the cold regime at
+  * `local[SPARK_GRAFT_CPUS]` with as many shuffle partitions.
   */
 object ScaleLadder {
   val DefaultQueries: Seq[String] = Seq(
@@ -68,35 +69,20 @@ object ScaleLadder {
     val big = if (args.length > 1) args(1) else "target/testdata/sf1"
     val reps = if (args.length > 2) args(2).toInt else 3
     val names = if (args.length > 3) args.drop(3).toSeq else DefaultQueries
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    graft.functions.NativeFunctions.registerAll(spark)
+    val cpus = Session.cpus
+    val spark = Session.create(cpus, cpus)
 
-    def time(name: String, dir: String): (Double, Long) = {
-      val fn = SparkEntry.queries(name)
-      var best = Double.MaxValue; var rows = 0L
-      // rep 0 is the untimed warm-up (JIT + codegen); min of the rest
-      (0 to reps).foreach { i =>
-        val t0 = System.nanoTime()
-        rows = fn(spark, dir).count()
-        val dt = (System.nanoTime() - t0) / 1e9
-        if (i > 0 && dt < best) best = dt
-        operators.CacheScope.release(spark)
-      }
-      (best, rows)
+    // min seconds and rows of `query`; the first failed pass throws
+    def time(query: => org.apache.spark.sql.DataFrame): (Double, Long) = {
+      val m = Timing.measure(spark, reps, Timing.Cold)(query)
+      m.errors.headOption.foreach { case (_, e) => throw e }
+      (m.min, m.rows)
     }
 
     println(f"${"query"}%-24s ${"t_small"}%8s ${"t_big"}%8s ${"ratio"}%7s  rows_small->rows_big")
     val results = names.map { n =>
-      val (ts, rs) = time(n, small)
-      val (tb, rb) = time(n, big)
+      val (ts, rs) = time(SparkEntry.queries(n)(spark, small))
+      val (tb, rb) = time(SparkEntry.queries(n)(spark, big))
       val ratio = tb / ts
       println(f"$n%-24s $ts%8.2f $tb%8.2f $ratio%7.1fx  $rs->$rb")
       (n, ts, tb, ratio)
@@ -110,14 +96,8 @@ object ScaleLadder {
       val n = Tables.embeddings(spark, dir).count()
       val k = operators.Similarity.autoNCentroids(n)
       operators.Similarity.ensureIvfIndex(spark, dir, k)
-      var best = Double.MaxValue; var rows = 0L
-      (0 to reps).foreach { i =>
-        val t0 = System.nanoTime()
-        rows = operators.Similarity.ivfTopK(spark, dir, 42L, 10, k, 2)
-          .count()
-        val dt = (System.nanoTime() - t0) / 1e9
-        if (i > 0 && dt < best) best = dt
-      }
+      val (best, rows) =
+        time(operators.Similarity.ivfTopK(spark, dir, 42L, 10, k, 2))
       (best, rows, k)
     }
     val (ats, ars, aks) = autoProbe(small)

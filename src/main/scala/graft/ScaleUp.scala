@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 
 /** Scale-ladder fixture generator: replicate an existing SF directory
@@ -26,14 +26,7 @@ import org.apache.spark.sql.functions._
 object ScaleUp {
   def main(args: Array[String]): Unit = {
     val (src, out, factor) = (args(0), args(1), args(2).toInt)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.create(Session.cpus, 32)
 
     def copies(df: DataFrame): DataFrame =
       df.crossJoin(

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Skew-stress rung (VERDICT r12 #9): on a deterministic zipf-keyed
@@ -12,7 +11,7 @@ import org.apache.spark.sql.functions._
   * {"n":…,"unsalted_sec":…,"salted_sec":…,"speedup":…,"rows":…}
   * and exits nonzero if results differ (exactness is part of the
   * claim; the wall-clock win is recorded in BENCHNOTES, not asserted,
-  * because local[32] timings jitter).
+  * because local timings jitter).
   *
   * Key law: user_id = n / id for id in 1..n — the head key (1) owns
   * half the rows; distinct item domain capped at 10⁶ so the head
@@ -23,15 +22,8 @@ import org.apache.spark.sql.functions._
 object SkewStress {
   def main(args: Array[String]): Unit = {
     val n = if (args.nonEmpty) args(0).toLong else 5000000L
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      // isolate the two plans' shuffle behavior from AQE coalescing
-      // differences: both run under identical session confs
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // both plans run under identical session confs
+    val spark = Session.create(Session.cpus, Session.cpus)
     val df = spark.range(1L, n + 1L)
       .select((lit(n) / col("id")).cast("long").as("user_id"),
         (col("id") % 1000000L).as("item"))

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -10,21 +9,7 @@ object Verify {
     val (sfDir, outDir) = (args(0), args(1))
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // events.parquet has TIMESTAMP(NANOS) which Spark 4 otherwise rejects;
-      // read as long nanos (Tables/operators normalize)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // keep bucketed scans bucketed under pure-filter plans: one task
-      // per bucket (Spark prunes bucket files in non-bucketed scans too)
-      .config("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.functions.NativeFunctions.registerAll(spark)
+    val spark = Session.create(Session.cpus, Session.cpus)
     new java.io.File(outDir).mkdirs()
     // A query that throws must be VISIBLE in the artifact, not just on
     // stderr: round 6's pq_scan threw (orphaned table location), its
@@ -41,15 +26,13 @@ object Verify {
           System.err.println(s"[verify] running $name")
           fn(spark, sfDir).coalesce(1).write.mode("overwrite")
             .parquet(s"$outDir/$name")
-          // drop per-query persist()ed frames (see Bench) so cached
-          // copies don't accumulate across the 100+ query dump
-          graft.operators.CacheScope.release(spark)
-          spark.catalog.clearCache()
+          // drop per-query persist()ed frames so cached copies don't
+          // accumulate across the 100+ query dump
+          Timing.release(spark)
           None
         } catch { case e: Throwable =>
           System.err.println(s"[verify] $name failed: ${e.getMessage}")
-          graft.operators.CacheScope.release(spark)
-          spark.catalog.clearCache()
+          Timing.release(spark)
           Some(name -> s"${e.getClass.getSimpleName}: ${e.getMessage}")
         }
       }

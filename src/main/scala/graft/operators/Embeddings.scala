@@ -97,18 +97,31 @@ object Embeddings {
       val emb = pm.transform(docs).select("doc_id", "embedding")
       (pm, lsh.fit(emb))
     })
-    // NOT attachable (deliberate exception to the r18 attach-many
-    // discipline): this table carries ml VectorUDT columns, and an
+    // NOT attachable (deliberate exception to the attach-many
+    // lifecycle): this table carries ml VectorUDT columns, and an
     // external-table registration declares the parquet STRUCT encoding
     // — a fresh session attaching it would hand GenericRow structs to
     // consumers that cast to ml.linalg.Vector. The fit itself is
-    // per-JVM driver state anyway, so the rebuild is the honest cost.
-    if (!spark.catalog.tableExists(name)) {
-      val docs = Tables.documents(spark, dir)
-      val emb = fitted._1.transform(docs).select("doc_id", "embedding")
-      ScaleOps.writeBucketed(fitted._2.transform(emb), name, "doc_id", 8)
+    // per-JVM driver state anyway, so each JVM builds its own table in
+    // its own location: no attach marker, no cross-JVM build lock, and
+    // no other JVM's files to drop.
+    if (!spark.catalog.tableExists(name)) models.synchronized {
+      if (!spark.catalog.tableExists(name)) ScaleOps.BuildTimer.timed {
+        val docs = Tables.documents(spark, dir)
+        val emb = fitted._1.transform(docs).select("doc_id", "embedding")
+        ScaleOps.saveAs(fitted._2.transform(emb),
+          ScaleOps.AttachSpec(name, "doc_id", 8),
+          Some(privateDir.resolve(name).toString))
+      }
     }
     (fitted, spark.table(name))
+  }
+
+  /** This JVM's home for the hashed-embedding tables, deleted at exit. */
+  private lazy val privateDir: java.nio.file.Path = {
+    val d = java.nio.file.Files.createTempDirectory("graft-emb-")
+    sys.addShutdownHook(graft.sources.ParquetStore.deleteRecursively(d))
+    d
   }
 
   /** LSH index + ANN query: top-k nearest neighbors of the document

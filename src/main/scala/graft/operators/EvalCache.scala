@@ -27,19 +27,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * from scratch — the hash gate would catch a divergent cache. */
 object EvalCache {
 
-  /** 20-hex digest of a parameter list, for table-name keys. 10 digest
-    * bytes (80 bits): a 32-bit truncation had a real birthday-collision
-    * chance between parameter sets of the same gate family, and a
-    * collision here silently serves the WRONG exact reference to a
-    * recall gate — misreported recall, not a loud failure (r15
-    * ADVICE). 80 bits puts the collision odds past any session size;
-    * table names have room. */
-  def keyOf(parts: Any*): String = {
-    val s = parts.map(_.toString).mkString("|")
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(s.getBytes("UTF-8")).take(10).map("%02x".format(_))
-      .mkString
-  }
+  /** [[ScaleOps.digest]] of a parameter list, for table-name keys: a
+    * collision here would silently serve the WRONG exact reference to
+    * a recall gate — misreported recall, not a loud failure. */
+  def keyOf(parts: Any*): String =
+    ScaleOps.digest(parts.map(_.toString).mkString("|"))
 
   /** The generation-bearing catalog name [[ensure]] persists under —
     * exposed so consumers can key driver memos on the SAME identity

@@ -11,12 +11,19 @@ import org.apache.hadoop.fs.{FileStatus, Path}
   */
 object ScaleOps {
 
-  /** Stable 8-hex-char key for a corpus directory — the shared naming
-    * scheme for every per-corpus derived artifact (index tables,
-    * fixtures). One definition so they can never drift apart. */
-  def dirHash(dir: String): String =
+  /** 20-hex-char name key of `s`: 10 MD5 bytes (80 bits). A 32-bit
+    * truncation has a real birthday-collision chance across the
+    * generations one warehouse holds, and a collision silently serves
+    * another input's table under the colliding name. The one digest of
+    * every generation and cache-table name. */
+  def digest(s: String): String =
     java.security.MessageDigest.getInstance("MD5")
-      .digest(dir.getBytes("UTF-8")).take(4).map("%02x".format(_)).mkString
+      .digest(s.getBytes("UTF-8")).take(10).map("%02x".format(_)).mkString
+
+  /** Stable key for a corpus directory — the shared naming scheme for
+    * every per-corpus derived artifact (index tables, fixtures). One
+    * definition so they can never drift apart. */
+  def dirHash(dir: String): String = digest(dir)
 
   /** Content fingerprint of one fixture table under `dir`: a digest
     * over the path plus every data file's (name, size, mtime). Derived
@@ -47,9 +54,7 @@ object ScaleOps {
     val sig = files.map(f =>
       s"${f.getFileName}:${Files.size(f)}:" +
         s"${Files.getLastModifiedTime(f).toMillis}").mkString("|")
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(s"$dir|$sig".getBytes("UTF-8"))
-      .take(4).map("%02x".format(_)).mkString
+    digest(s"$dir|$sig")
   }
 
   /** Driver-side size in bytes of one fixture table under `dir` —
@@ -424,15 +429,12 @@ object ScaleOps {
   }
 
   /** A FORCED bucketed (re)write of one table — for outputs that are not
-    * build-once generations (stream compaction, the non-attachable
-    * embeddings table, specs). The same locked write as [[ensure]]: a
-    * write racing a live builder of the same table waits and then
-    * serves that builder's commit instead of clobbering it. Repartition
-    * on the bucket key first: without it every input task writes its
-    * own file per bucket (N_tasks × buckets small files — a 20k-row
-    * band table measured 4071 files and 1.4 s per bare scan), with it
-    * each bucket is exactly one file and probe-side scans open
-    * `buckets` footers. */
+    * build-once generations (stream compaction, specs). The same locked
+    * write as [[ensure]]: a write racing a live builder of the same
+    * table waits and then serves that builder's commit instead of
+    * clobbering it. One file per
+    * bucket ([[saveAs]]): a 20k-row band table written without the
+    * repartition measured 4071 files and 1.4 s per bare scan. */
   def writeBucketed(df: DataFrame, table: String, key: String,
       buckets: Int): Unit = {
     val spark = df.sparkSession
@@ -487,16 +489,28 @@ object ScaleOps {
     require(dfs.size == specs.size,
       s"${dfs.size} frames for ${specs.map(_.table).mkString(", ")}")
     specs.zip(dfs).foreach { case (s, df) =>
-      val w = s.bucket match {
-        case Some((key, n)) =>
-          df.repartition(n, col(key)).write.bucketBy(n, key).sortBy(key)
-        case None => df.write
-      }
-      (if (s.partitionCols.isEmpty) w else w.partitionBy(s.partitionCols: _*))
-        .mode("overwrite").format("parquet").saveAsTable(s.table)
+      saveAs(df, s)
       markAttachable(spark, s.table)
       bucketFilesMemo.remove(bucketFilesKey(spark, s.table))
     }
+  }
+
+  /** Writes `df` as catalog table `s.table` with `s`'s layout: in the
+    * warehouse, or at `location` as an external table. Repartition on
+    * the bucket key first: without it every input task writes its own
+    * file per bucket (N_tasks × buckets small files), with it each
+    * bucket is exactly one file. */
+  def saveAs(df: DataFrame, s: AttachSpec,
+      location: Option[String] = None): Unit = {
+    val w = s.bucket match {
+      case Some((key, n)) =>
+        df.repartition(n, col(key)).write.bucketBy(n, key).sortBy(key)
+      case None => df.write
+    }
+    val placed = location.fold(w)(w.option("path", _))
+    (if (s.partitionCols.isEmpty) placed
+     else placed.partitionBy(s.partitionCols: _*))
+      .mode("overwrite").format("parquet").saveAsTable(s.table)
   }
 
   /** The co-located join over two pre-bucketed tables. */

@@ -1,6 +1,5 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.Trigger
 
 /** Runnable demonstration of the streaming operators against the events
@@ -12,14 +11,7 @@ import org.apache.spark.sql.streaming.Trigger
 object StreamDemo {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.create(graft.Session.cpus, graft.Session.cpus)
 
     val ckpt = java.nio.file.Files.createTempDirectory("demo_ckpt").toString
     val q = EventStreams.windowedCounts(EventStreams.readEvents(spark, dir))

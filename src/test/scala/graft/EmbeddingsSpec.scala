@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.ml.linalg.Vector
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 
 import graft.operators.Embeddings
 
@@ -43,6 +44,24 @@ class EmbeddingsSpec extends SparkSpec {
     assert(!rows.map(_.getAs[Long]("doc_id")).contains(0L))
     val dists = rows.map(_.getAs[Double]("dist"))
     assert(dists.sameElements(dists.sorted))
+  }
+
+  test("the hashed-embedding index lives outside the warehouse, with no " +
+      "attach marker, and is not attachable") {
+    Embeddings.ensureEmbIndex(spark, Sf0001, 32)
+    val name = Embeddings.embIndexName(Sf0001, 32)
+    val loc = java.nio.file.Paths.get(spark.sessionState.catalog
+      .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(name))
+      .location)
+    val warehouse = java.nio.file.Paths.get(new java.net.URI(
+      spark.conf.get("spark.sql.warehouse.dir")).getPath)
+    assert(!loc.startsWith(warehouse), s"$loc is under the warehouse")
+    val files = java.nio.file.Files.walk(loc)
+    try assert(!files.iterator().asScala.exists(
+      _.getFileName.toString == "_GRAFT_ATTACH"))
+    finally files.close()
+    assert(!graft.operators.ScaleOps.attachAll(spark,
+      Seq(graft.operators.ScaleOps.AttachSpec(name, "doc_id", 8))))
   }
 
   test("an in-place fixture regeneration refits: the index carries a " +

@@ -10,6 +10,9 @@ class ScaleOpsSpec extends SparkSpec {
   test("contentHash: stable for unchanged files, changes when a table " +
       "is regenerated in place, differs across dirs") {
     val h1 = ScaleOps.contentHash(Sf0001, "documents")
+    // 10 digest bytes: a 4-byte name risks a silent collision
+    assert(h1.matches("[0-9a-f]{20}"), h1)
+    assert(ScaleOps.dirHash(Sf0001).matches("[0-9a-f]{20}"))
     assert(h1 == ScaleOps.contentHash(Sf0001, "documents"))
     assert(h1 != ScaleOps.contentHash(Sf0001, "embeddings"))
     // simulate an in-place fixture regeneration: same path, new bytes
