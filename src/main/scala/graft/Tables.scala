@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.LongType
+import org.apache.spark.sql.types.{LongType, StructType}
 
 /** Loaders for the driver-generated parquet tables (TESTDATA.md).
   *
@@ -44,7 +44,35 @@ object Tables {
         })
     }
     relCache.computeIfAbsent((spark, s"$dir/$name.parquet"),
-      k => k._1.read.parquet(k._2))
+      k => footerSchema(k._1, k._2)
+        .fold(k._1.read.parquet(k._2))(k._1.read.schema(_).parquet(k._2)))
+  }
+
+  /** The schema `spark.read.parquet(path)` infers, without its Spark
+    * job: the footer of the file Spark's inference picks (a summary
+    * file, else the first data file in path order) read on the driver
+    * through Spark's own conversion under the session's settings. None
+    * when `path` holds no file, so inference raises Spark's error. */
+  private def footerSchema(spark: SparkSession,
+      path: String): Option[StructType] = {
+    import org.apache.parquet.format.converter.ParquetMetadataConverter
+    import org.apache.parquet.hadoop.Footer
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import org.apache.spark.sql.execution.datasources.InMemoryFileIndex
+    import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
+    val files = new InMemoryFileIndex(spark,
+        Seq(new org.apache.hadoop.fs.Path(path)), Map.empty, None)
+      .allFiles().sortBy(_.getPath.toString)
+    val summaries = Seq("_common_metadata", "_metadata")
+    summaries.flatMap(n => files.find(_.getPath.getName == n)).headOption
+      .orElse(files.find(f => !summaries.contains(f.getPath.getName)))
+      .map { f =>
+        val meta = ParquetFooterReader.readFooter(
+          HadoopInputFile.fromStatus(f, spark.sessionState.newHadoopConf()),
+          ParquetMetadataConverter.SKIP_ROW_GROUPS)
+        ParquetFileFormat.readSchemaFromFooter(new Footer(f.getPath, meta),
+          new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+      }
   }
 
   /** Drop the memoized relation for one parquet path (every session) —

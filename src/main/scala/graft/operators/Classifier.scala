@@ -56,7 +56,8 @@ object Classifier {
     // function of the corpus split, re-tokenizing the train corpus per
     // invocation was the nb_model/nb_confusion job-floor cost (r16).
     // Vocab-grain rows, one bucket.
-    EvalCache.ensure(spark, dir, "documents", "nbcnt", "term")(
+    EvalCache.ensure(spark, dir, "documents", ScaleOps.Family("nbcnt", 1),
+      "term")(
       tokenized(trainDocs(spark, dir))
         .groupBy(col("lang"), col("term"))
         .agg(count(lit(1)).as("n")))

@@ -234,7 +234,7 @@ object Clustering {
     // k×dim interpreted-lambda argmin scan becomes a one-time build and
     // every later call is a table probe (r16 job-floor pass)
     val assign = EvalCache.ensure(spark, dir, "embeddings",
-      s"kasg$k", "cluster")(assignInline)
+      ScaleOps.Family("kasg", 1), "cluster", k)(assignInline)
     val sizes = assign.groupBy(col("cluster"))
       .agg(count(lit(1)).as("n_vecs"))
     val energy = cent.groupBy(col("cluster"))
@@ -450,7 +450,7 @@ object Clustering {
   def ensureHierFit(spark: SparkSession, dir: String, k1: Int,
       k2: Int): String = {
     val name = hierFitName(dir, k1, k2)
-    ScaleOps.ensure(spark,
+    ScaleOps.ensure(spark, ScaleOps.Family("hier_fit", 1),
         ScaleOps.AttachSpec(s"${name}_cent", "cluster", 1),
         ScaleOps.AttachSpec(s"${name}_assign", "vec_id", 8)) {
       val (assign, cent) = fitHierarchical(spark, dir, k1, k2)

@@ -56,7 +56,8 @@ object Collections {
     // fixture in place (ScaleUp overwrites its out dir) changes the
     // fingerprint and forces a rebuild, so fts_topk / s3_pagination_
     // scoped can never silently serve the stale corpus (r13 ADVICE)
-    ScaleOps.ensure(spark, ScaleOps.AttachSpec(
+    ScaleOps.ensure(spark, ScaleOps.Family("docs_by_lang", 1),
+      ScaleOps.AttachSpec(
         s"graft_docs_part_${ScaleOps.contentHash(dir, "documents")}",
         partitionCols = Seq("lang"))) {
       Seq(Tables.documents(spark, dir))

@@ -23,12 +23,6 @@ import graft.functions.TextAnalyzer
   */
 object Dedup {
 
-  /** Distinct analyzed tokens per document: (doc_id, token). */
-  private def docTokens(documents: DataFrame): DataFrame =
-    documents
-      .select(col("doc_id"),
-        explode(array_distinct(TextAnalyzer.tokens(col("text")))).as("token"))
-
   /** Exact dedup on canonicalized content: signature = md5 of the sorted
     * distinct token set. Returns groups with >1 member: the kept (min)
     * id, the group size, and the member list.
@@ -123,7 +117,8 @@ object Dedup {
     * never form a valid pair anyway). */
   def ensureLshIndex(spark: SparkSession, dir: String): String = {
     val name = s"graft_lsh_${ScaleOps.contentHash(dir, "documents")}"
-    ScaleOps.ensure(spark, ScaleOps.AttachSpec(s"${name}_sets", "doc_id", 8),
+    ScaleOps.ensure(spark, ScaleOps.Family("lsh", 1),
+        ScaleOps.AttachSpec(s"${name}_sets", "doc_id", 8),
         ScaleOps.AttachSpec(name, "bkey", 32)) {
       // persist: the shingle-set frame feeds the signature computation
       // AND the sets table — without it the tokenize+shingle pass runs
@@ -487,7 +482,8 @@ object Dedup {
     val name = s"graft_cur_${math.round(threshold * 100)}_" +
       ScaleOps.contentHash(dir, "documents")
     var built = false
-    ScaleOps.ensure(spark, ScaleOps.AttachSpec(name)) {
+    ScaleOps.ensure(spark, ScaleOps.Family("curation", 1),
+        ScaleOps.AttachSpec(name)) {
       built = true
       val dec = curationDocDecisions(spark, dir, threshold)
         .transform(CacheScope.cached)
@@ -1817,7 +1813,8 @@ object Dedup {
     * is the query. */
   def ensurePpjoinIndex(spark: SparkSession, dir: String): String = {
     val name = s"graft_ppx_${ScaleOps.contentHash(dir, "documents")}"
-    ScaleOps.ensure(spark, ScaleOps.AttachSpec(s"${name}_sets", "doc_id", 8),
+    ScaleOps.ensure(spark, ScaleOps.Family("ppjoin", 1),
+        ScaleOps.AttachSpec(s"${name}_sets", "doc_id", 8),
         ScaleOps.AttachSpec(name, "shingle", 32)) {
       val sh = docShinglesSized(Tables.documentsDense(spark, dir))
         .transform(CacheScope.cached)
@@ -1980,7 +1977,7 @@ object Dedup {
     // per-evaluation cost; the LSH side under test always runs live).
     // dedup_ppjoin, the operator itself, stays fully live.
     val exact = EvalCache.ensure(spark, dir, "documents",
-        s"jac_${EvalCache.keyOf(threshold)}", "a")(
+        ScaleOps.Family("jac", 1), "a", EvalCache.keyOf(threshold))(
         ppjoinPairs(spark, dir, threshold).select(col("a"), col("b")))
       .select(col("a"), col("b"), lit(1L).as("in_e"))
     val lsh = minhashPairs(spark, dir, threshold)

@@ -63,7 +63,8 @@ object EventMining {
       gapSec: Long): String = {
     val name =
       s"graft_sess_${gapSec}_${ScaleOps.contentHash(dir, "events")}"
-    ScaleOps.ensure(spark, ScaleOps.AttachSpec(name, "user_id", 8)) {
+    ScaleOps.ensure(spark, ScaleOps.Family("sessions", 1),
+        ScaleOps.AttachSpec(name, "user_id", 8)) {
       Seq(sessionAssign(spark, dir, gapSec))
     }
   }

@@ -64,7 +64,8 @@ object Fts {
     s"graft_fts_${ScaleOps.contentHash(dir, "documents")}"
 
   def ensureIndex(spark: SparkSession, dir: String): String =
-    ScaleOps.ensure(spark, ScaleOps.AttachSpec(indexName(dir), "term", 32)) {
+    ScaleOps.ensure(spark, ScaleOps.Family("fts_index", 1),
+        ScaleOps.AttachSpec(indexName(dir), "term", 32)) {
       Seq(invertedIndex(Tables.documents(spark, dir)))
     }
 
@@ -343,12 +344,10 @@ object Fts {
     * stats. BM25 consumes (dl, n, sumdl); the ts_rank normalization
     * cascade consumes (dl, nuniq). At 100 TB these are the
     * posting-index sidecar every ranked-search service stores
-    * (Lucene's norms file + the segment's docCount/sumTotalTermFreq).
-    * Name versioned `ftsb2` — the r16 schema added nuniq, and a fresh
-    * name ignores any `_dl` sidecar persisted under the old shape. */
+    * (Lucene's norms file + the segment's docCount/sumTotalTermFreq). */
   def ensureBm25Stats(spark: SparkSession, dir: String): String = {
-    val name = s"graft_ftsb2_${ScaleOps.contentHash(dir, "documents")}"
-    ensureDlCs(spark, name) {
+    val name = s"graft_ftsb_${ScaleOps.contentHash(dir, "documents")}"
+    ensureDlCs(spark, ScaleOps.Family("fts_bm25", 1), name) {
       Tables.documents(spark, dir)
         .select(col("doc_id"), col("lang"),
           size(TextAnalyzer.tokens(col("text"))).as("dl"),
@@ -360,9 +359,10 @@ object Fts {
   /** The `_cs`/`_dl` pair over one (cached) `_dl` frame; `_cs` is
     * aggregated from it, so it always describes exactly the `_dl` rows.
     * Guard table `_dl`. */
-  private def ensureDlCs(spark: SparkSession, name: String)(
-      dl: => DataFrame): String = {
-    ScaleOps.ensure(spark, ScaleOps.AttachSpec(s"${name}_cs", "lang", 1),
+  private def ensureDlCs(spark: SparkSession, family: ScaleOps.Family,
+      name: String)(dl: => DataFrame): String = {
+    ScaleOps.ensure(spark, family,
+        ScaleOps.AttachSpec(s"${name}_cs", "lang", 1),
         ScaleOps.AttachSpec(s"${name}_dl", "doc_id", 8)) {
       val cached = dl.transform(CacheScope.cached)
       Seq(cached.groupBy(col("lang"))
@@ -384,7 +384,8 @@ object Fts {
     * zero-token docs). */
   def ensureDfStats(spark: SparkSession, dir: String): String = {
     val name = s"graft_ftsdf_${ScaleOps.contentHash(dir, "documents")}"
-    ScaleOps.ensure(spark, ScaleOps.AttachSpec(s"${name}_nd", "lang", 1),
+    ScaleOps.ensure(spark, ScaleOps.Family("fts_df", 1),
+        ScaleOps.AttachSpec(s"${name}_nd", "lang", 1),
         ScaleOps.AttachSpec(name, "term", 8)) {
       val idx = spark.table(ensureIndex(spark, dir))
       Seq(idx.groupBy("lang").agg(countDistinct(col("doc_id")).as("n_docs")),
@@ -400,7 +401,8 @@ object Fts {
     * Probed by [[searchStemmedIndexed]]. */
   def ensureStemmedIndex(spark: SparkSession, dir: String): String = {
     val name = s"graft_fts_stem_${ScaleOps.contentHash(dir, "documents")}"
-    ScaleOps.ensure(spark, ScaleOps.AttachSpec(name, "term", 32)) {
+    ScaleOps.ensure(spark, ScaleOps.Family("fts_stem", 1),
+        ScaleOps.AttachSpec(name, "term", 32)) {
       Seq(Tables.documents(spark, dir)
         .select(col("doc_id"), col("lang"),
           explode(TextAnalyzer.stemmedTokens(col("text"))).as("term"))
@@ -564,7 +566,8 @@ object Fts {
     * bucketed by doc_id to co-partition with the `_dl` sidecar. */
   def ensureDocAttrs(spark: SparkSession, dir: String): String = {
     val name = s"graft_ftsat_${ScaleOps.contentHash(dir, "documents")}"
-    ScaleOps.ensure(spark, ScaleOps.AttachSpec(name, "doc_id", 8)) {
+    ScaleOps.ensure(spark, ScaleOps.Family("fts_attrs", 1),
+        ScaleOps.AttachSpec(name, "doc_id", 8)) {
       val words = filter(split(col("text"), "\\s+"), w => w =!= "")
       Seq(Tables.documents(spark, dir)
         .select(col("doc_id"), col("lang"), col("source"),
@@ -860,7 +863,8 @@ object Fts {
       lang: String): String = {
     val name =
       s"graft_ftsl_${lang}_${ScaleOps.contentHash(dir, "documents")}"
-    ScaleOps.ensure(spark, ScaleOps.AttachSpec(name, "term", 32)) {
+    ScaleOps.ensure(spark, ScaleOps.Family("fts_lang", 1),
+        ScaleOps.AttachSpec(name, "term", 32)) {
       Seq(Tables.documents(spark, dir)
         .filter(col("lang") === lit(lang))
         .select(col("doc_id"),
@@ -1034,7 +1038,8 @@ object Fts {
   def ensureLangRoutedIndex(spark: SparkSession, dir: String): String = {
     val name =
       s"graft_ftslang_${ScaleOps.contentHash(dir, "documents")}"
-    ScaleOps.ensure(spark, ScaleOps.AttachSpec(name, "term", 16)) {
+    ScaleOps.ensure(spark, ScaleOps.Family("fts_lang_routed", 1),
+        ScaleOps.AttachSpec(name, "term", 16)) {
       val docs = graft.functions.LangId.withDetected(
         Tables.documents(spark, dir).select("doc_id", "lang", "text"),
         "text")
@@ -1833,7 +1838,8 @@ object Fts {
     * tf. */
   def ensureReverseIndex(spark: SparkSession, dir: String): String = {
     val name = s"graft_fts_rev_${ScaleOps.contentHash(dir, "documents")}"
-    ScaleOps.ensure(spark, ScaleOps.AttachSpec(name, "rterm", 32)) {
+    ScaleOps.ensure(spark, ScaleOps.Family("fts_reverse", 1),
+        ScaleOps.AttachSpec(name, "rterm", 32)) {
       Seq(spark.table(ensureIndex(spark, dir))
         .select(reverse(col("term")).as("rterm"), col("doc_id"),
           col("lang"), col("tf")))
@@ -1936,26 +1942,17 @@ object Fts {
     * term-bucketed index; downstream stats aggregate over survivors.
     * The merge-on-read dual of [[compactStreamedIndex]]'s upsert side —
     * together they close the index maintenance lifecycle.
-    *
-    * A real API delete batch is the bounded-broadcast side; the
-    * mod-DERIVED stand-in here is corpus-proportional, so the
-    * anti-join carries no hint and AQE broadcasts only when the
-    * runtime size is genuinely small (the ivfDeleteStats lesson).
     * [[ensureVacuumedIndex]] folds tombstones in off the serving
     * path. */
   def termStatsAfterDelete(spark: SparkSession, dir: String,
-      mod: Long): DataFrame = {
-    val deletes = Tables.documents(spark, dir)
-      .filter(col("doc_id") % mod === 0).select("doc_id")
-    spark.table(ensureIndex(spark, dir))
-      .join(deletes, Seq("doc_id"), "left_anti")
+      mod: Long): DataFrame =
+    withoutDeletes(spark, dir, mod)(spark.table(ensureIndex(spark, dir)))
       .groupBy("term")
       .agg(
         countDistinct(col("doc_id")).as("df"),
         sum(col("tf")).as("total_tf"))
       .orderBy(col("df").desc, col("term").asc)
       .limit(100)
-  }
 
   def termStatsAfterDeleteOracleSql(mod: Long): String =
     s"""WITH toks AS (
@@ -1981,7 +1978,8 @@ object Fts {
     * anti-join. Keyed by (corpus fingerprint, mod). */
   def ensureVacuumedIndex(spark: SparkSession, dir: String,
       mod: Long): String =
-    ensureVacuumed(spark, dir, ensureIndex(spark, dir), mod, "term", 32)
+    ScaleOps.ensureVacuumed(spark, ensureIndex(spark, dir), mod)(
+      withoutDeletes(spark, dir, mod))
 
   /** Term statistics over the VACUUMED index — no anti-join anywhere
     * in the query: the rewrite already dropped the tombstoned docs'
@@ -1999,47 +1997,32 @@ object Fts {
       .orderBy(col("df").desc, col("term").asc)
       .limit(100)
 
-  // --- r17: vacuum generations for EVERY persisted index family -------
+  // --- vacuum generations for every persisted index family ----------
   //
-  // r16 verdict #8: the stemmed, reverse, lang-routed, bm25-sidecar
-  // (and the new r17 attrs) tables persist per corpus generation but
-  // only the main FTS/IVF indexes had the tombstone-fold vacuum. Each
-  // family now gets the [[ensureVacuumedIndex]] discipline — rewrite
-  // WITHOUT the deleted docs' rows into a (fingerprint, mod)-keyed
-  // generation, off the serving path, observed through a query whose
-  // oracle recomputes from the surviving corpus directly: vacuum must
-  // be invisible to results (merge-on-read ≡ rewrite), and the hash
-  // gate holds that equivalence for every family every round.
+  // Each family is rewritten WITHOUT the deleted docs' rows into a
+  // (fingerprint, mod)-keyed generation off the serving path
+  // ([[ScaleOps.ensureVacuumed]]), observed through a query whose
+  // oracle recomputes from the surviving corpus: vacuum must be
+  // invisible to results (merge-on-read ≡ rewrite).
 
-  // The mod-DERIVED delete set is corpus-proportional, so no broadcast
-  // hint (the ivfDeleteStats lesson): AQE broadcasts it only when its
-  // runtime size is genuinely small. A real API delete batch (bounded
-  // payload) could safely hint.
-  private def modDeletes(spark: SparkSession, dir: String,
-      mod: Long): DataFrame =
-    Tables.documents(spark, dir)
-      .filter(col("doc_id") % mod === 0).select("doc_id")
-
-  /** The `(base)_vac(mod)` generation of a single-table family: `base`
-    * minus the deleted docs' rows, in `base`'s bucketed layout. */
-  private def ensureVacuumed(spark: SparkSession, dir: String,
-      base: String, mod: Long, key: String, buckets: Int): String =
-    ScaleOps.ensure(spark,
-        ScaleOps.AttachSpec(s"${base}_vac$mod", key, buckets)) {
-      Seq(spark.table(base)
-        .join(modDeletes(spark, dir, mod), Seq("doc_id"), "left_anti"))
-    }
-
-  /** Vacuumed generation of the STEMMED index. */
-  def ensureVacuumedStemmedIndex(spark: SparkSession, dir: String,
-      mod: Long): String =
-    ensureVacuumed(spark, dir, ensureStemmedIndex(spark, dir), mod, "term", 32)
+  /** A doc-keyed frame minus the deleted docs' rows: the `live` side
+    * of every doc-keyed vacuum generation ([[ScaleOps.ensureVacuumed]]).
+    * The mod-DERIVED delete set is corpus-proportional, so no broadcast
+    * hint (the ivfDeleteStats lesson): AQE broadcasts it only when its
+    * runtime size is genuinely small. A real API delete batch (bounded
+    * payload) could safely hint. */
+  private def withoutDeletes(spark: SparkSession, dir: String,
+      mod: Long)(df: DataFrame): DataFrame =
+    df.join(Tables.documents(spark, dir)
+      .filter(col("doc_id") % mod === 0).select("doc_id"),
+      Seq("doc_id"), "left_anti")
 
   /** Stemmed-vocabulary stats over the vacuumed stemmed index — no
     * anti-join in the query; the oracle re-stems the surviving corpus. */
   def stemmedTermStatsVacuumed(spark: SparkSession, dir: String,
       mod: Long): DataFrame =
-    spark.table(ensureVacuumedStemmedIndex(spark, dir, mod))
+    spark.table(ScaleOps.ensureVacuumed(spark, ensureStemmedIndex(spark, dir),
+      mod)(withoutDeletes(spark, dir, mod)))
       .groupBy("term")
       .agg(countDistinct(col("doc_id")).as("df"),
         sum(col("tf")).as("total_tf"))
@@ -2062,15 +2045,11 @@ object Fts {
        |FROM idx GROUP BY term
        |ORDER BY df DESC, term ASC LIMIT 100""".stripMargin
 
-  /** Vacuumed generation of the REVERSE (suffix) index. */
-  def ensureVacuumedReverseIndex(spark: SparkSession, dir: String,
-      mod: Long): String =
-    ensureVacuumed(spark, dir, ensureReverseIndex(spark, dir), mod, "rterm", 32)
-
   /** [[suffixSearch]] over the vacuumed reverse index. */
   def suffixSearchVacuumed(spark: SparkSession, dir: String,
       suffix: String, mod: Long, k: Int): DataFrame =
-    spark.table(ensureVacuumedReverseIndex(spark, dir, mod))
+    spark.table(ScaleOps.ensureVacuumed(spark, ensureReverseIndex(spark, dir),
+      mod)(withoutDeletes(spark, dir, mod)))
       .filter(col("rterm").startsWith(suffix.reverse))
       .groupBy("doc_id")
       .agg(
@@ -2095,18 +2074,13 @@ object Fts {
        |GROUP BY doc_id
        |ORDER BY matched_tf DESC, doc_id ASC LIMIT $k""".stripMargin
 
-  /** Vacuumed generation of the LANG-ROUTED analyzer-matrix index. */
-  def ensureVacuumedLangRoutedIndex(spark: SparkSession, dir: String,
-      mod: Long): String =
-    ensureVacuumed(spark, dir, ensureLangRoutedIndex(spark, dir), mod,
-      "term", 16)
-
   /** Per-route-language index health stats over the vacuumed
     * lang-routed index; the oracle re-detects and re-analyzes the
     * surviving corpus under the same per-policy chain. */
   def langRoutedStatsVacuumed(spark: SparkSession, dir: String,
       mod: Long): DataFrame =
-    spark.table(ensureVacuumedLangRoutedIndex(spark, dir, mod))
+    spark.table(ScaleOps.ensureVacuumed(spark,
+      ensureLangRoutedIndex(spark, dir), mod)(withoutDeletes(spark, dir, mod)))
       .groupBy("detected")
       .agg(countDistinct(col("doc_id")).as("n_docs"),
         countDistinct(col("term")).as("n_terms"),
@@ -2154,9 +2128,8 @@ object Fts {
   def ensureVacuumedBm25Stats(spark: SparkSession, dir: String,
       mod: Long): String = {
     val base = ensureBm25Stats(spark, dir)
-    ensureDlCs(spark, s"${base}_vac$mod") {
-      spark.table(s"${base}_dl")
-        .join(modDeletes(spark, dir, mod), Seq("doc_id"), "left_anti")
+    ensureDlCs(spark, ScaleOps.Vacuum, s"${base}_vac$mod") {
+      withoutDeletes(spark, dir, mod)(spark.table(s"${base}_dl"))
     }
   }
 
@@ -2188,11 +2161,6 @@ object Fts {
        |FROM perdoc GROUP BY lang ORDER BY lang ASC""".stripMargin
   }
 
-  /** Vacuumed generation of the ATTRS sidecar. */
-  def ensureVacuumedDocAttrs(spark: SparkSession, dir: String,
-      mod: Long): String =
-    ensureVacuumed(spark, dir, ensureDocAttrs(spark, dir), mod, "doc_id", 8)
-
   /** [[facetedSearchIndexed]] over the VACUUMED forward index + attrs
     * sidecar — the post-delete facet panel with no anti-join anywhere
     * in the query (both generations already dropped the tombstones);
@@ -2203,7 +2171,8 @@ object Fts {
     require(terms.nonEmpty, "query analyzes to no terms")
     val postings = spark.table(ensureVacuumedIndex(spark, dir, mod))
       .filter(col("term").isin(terms.map(t => t: Any): _*))
-    val attrs = spark.table(ensureVacuumedDocAttrs(spark, dir, mod))
+    val attrs = spark.table(ScaleOps.ensureVacuumed(spark,
+        ensureDocAttrs(spark, dir), mod)(withoutDeletes(spark, dir, mod)))
       .select("doc_id", "lang", "source")
     pivotedTfs(postings, terms)
       .filter(terms.indices.map(i => col(s"tf$i").isNotNull)

@@ -66,7 +66,8 @@ object FuzzySearch {
   def ensureFuzzyIndex(spark: SparkSession, dir: String,
       lang: String): String = {
     val name = s"graft_fuzzy_${lang}_${ScaleOps.contentHash(dir, "documents")}"
-    ScaleOps.ensure(spark, ScaleOps.AttachSpec(name, "variant", 32)) {
+    ScaleOps.ensure(spark, ScaleOps.Family("fuzzy", 1),
+        ScaleOps.AttachSpec(name, "variant", 32)) {
       val vocab = spark.table(Fts.ensureIndex(spark, dir))
         .filter(col("lang") === lit(lang))
         .filter(col("term").rlike("^[a-z0-9]+$"))

@@ -48,7 +48,8 @@ object GraphAnn {
       nCentroids: Int, m: Int): String = {
     val name =
       s"graft_gann_${nCentroids}_${m}_${ScaleOps.contentHash(dir, "embeddings")}"
-    ScaleOps.ensure(spark, ScaleOps.AttachSpec(name, "src", 16)) {
+    ScaleOps.ensure(spark, ScaleOps.Family("graph_ann", 1),
+        ScaleOps.AttachSpec(name, "src", 16)) {
       // probe-2 assignment against the SAME stored trained centroids
       // the IVF index uses (build once, share everywhere)
       val idx = Similarity.ensureIvfIndex(spark, dir, nCentroids)
@@ -315,16 +316,9 @@ object GraphAnn {
       .orderBy(col("q_id").asc, col("dist").asc, col("vec_id").asc)
   }
 
-  /** Oracle for [[batchBeamSearch]]: the single-query oracle's build
-    * chain verbatim, with every walk CTE keyed by q_id (windows become
-    * PARTITION BY q_id; the known-set check becomes a per-query
-    * anti-join). Each s$r is MATERIALIZED — inlined, the round
-    * recurrence would re-evaluate the edge build per round. */
-  def batchBeamSearchOracleSql(qids: Seq[Long], entry: Long,
-      nCentroids: Int, m: Int, beam: Int, rounds: Int, k: Int): String =
-    batchBeamSearchOracleCore(qids, entry, "", nCentroids.toString, m,
-      beam, rounds, k)
-
+  /** Oracle for [[batchBeamSearch]]: the single-query oracle's chain
+    * with every walk CTE keyed by q_id; each s$r is MATERIALIZED, or
+    * the round recurrence would re-evaluate the edge build per round. */
   private def batchBeamSearchOracleCore(qids: Seq[Long], entry: Long,
       kpick: String, kSql: String,
       m: Int, beam: Int, rounds: Int, k: Int): String = {
@@ -423,25 +417,6 @@ object GraphAnn {
       .orderBy(col("q_id").asc)
   }
 
-  def beamRecallOracleSql(qids: Seq[Long], entry: Long, nCentroids: Int,
-      m: Int, beam: Int, rounds: Int, k: Int): String =
-    s"""WITH ex AS (
-       |  SELECT q_id, vec_id
-       |  FROM (${Similarity.knnBatchOracleSql(qids, k)}) x
-       |), ap AS (
-       |  SELECT q_id, vec_id
-       |  FROM (${batchBeamSearchOracleSql(qids, entry, nCentroids, m,
-            beam, rounds, k)}) y
-       |)
-       |SELECT ex.q_id, count(*) AS n_exact,
-       |  CAST(sum(CASE WHEN ap.vec_id IS NOT NULL THEN 1 ELSE 0 END)
-       |    AS BIGINT) AS n_common,
-       |  CAST(sum(CASE WHEN ap.vec_id IS NOT NULL THEN 1 ELSE 0 END)
-       |    * 1000000 // $k AS BIGINT) AS recall_micro
-       |FROM ex LEFT JOIN ap
-       |  ON ap.q_id = ex.q_id AND ap.vec_id = ex.vec_id
-       |GROUP BY ex.q_id ORDER BY ex.q_id ASC""".stripMargin
-
   /** Corpus-relative cell count for the graph build — the
     * [[Similarity.autoNCentroids]] policy applied to the edge
     * candidate generation: cells grow with the corpus so the bounded
@@ -513,11 +488,6 @@ object GraphAnn {
 
   /** Oracle: replay the trained-centroid chain, the 2-probe edge
     * build, and the SAME R beam rounds unrolled as CTEs. */
-  def beamSearchOracleSql(qid: Long, entry: Long, nCentroids: Int,
-      m: Int, beam: Int, rounds: Int, k: Int): String =
-    beamSearchOracleCore(qid, entry, "", nCentroids.toString, m, beam,
-      rounds, k)
-
   private def beamSearchOracleCore(qid: Long, entry: Long,
       kpick: String, kSql: String,
       m: Int, beam: Int, rounds: Int, k: Int): String = {

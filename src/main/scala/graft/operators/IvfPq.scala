@@ -111,7 +111,8 @@ object IvfPq {
   /** Build-once: the trained residual codebook as a catalog table. */
   def ensureCodebook(spark: SparkSession, dir: String,
       nCentroids: Int): String =
-    ScaleOps.ensure(spark, ScaleOps.AttachSpec(codebookName(dir, nCentroids))) {
+    ScaleOps.ensure(spark, ScaleOps.Family("ivfpq_codebook", 1),
+        ScaleOps.AttachSpec(codebookName(dir, nCentroids))) {
       Seq(trainCodebook(spark, dir, nCentroids))
     }
 
@@ -155,7 +156,7 @@ object IvfPq {
     * prunes to its nProbe buckets of the 32x-smaller table. */
   def ensureCodesTable(spark: SparkSession, dir: String,
       nCentroids: Int): String =
-    ScaleOps.ensure(spark,
+    ScaleOps.ensure(spark, ScaleOps.Family("ivfpq_codes", 1),
         ScaleOps.AttachSpec(codesName(dir, nCentroids), "centroid_id",
           nCentroids)) {
       Seq(encode(spark, dir, nCentroids))

@@ -84,10 +84,10 @@ object Ngrams {
     // discipline; r16 job-floor pass): later invocations probe the
     // vocab-grain tables and only tokenize the eval split
     val cb = EvalCache.ensure(spark, dir, "documents",
-      s"bgcb${mod}r$evalRem", "bigram")(
+      ScaleOps.Family("bgcb", 1), "bigram", mod, evalRem)(
       bigramsOf(train).groupBy("bigram").agg(count(lit(1)).as("cb")))
     val cu = EvalCache.ensure(spark, dir, "documents",
-      s"bgcu${mod}r$evalRem", "w")(
+      ScaleOps.Family("bgcu", 1), "w", mod, evalRem)(
       unigramsOf(train).groupBy("w").agg(count(lit(1)).as("cu")))
     // the corpus total is the SUM of the stored vocab counts — same
     // value as counting the unigram stream, one whole pass cheaper
@@ -183,12 +183,12 @@ object Ngrams {
     // model-table discipline, r16): later invocations are vocab-grain
     // probes, never a corpus re-tokenize
     val cbAll = EvalCache.ensure(spark, dir, "documents",
-      "pmicb", "bigram")(
+      ScaleOps.Family("pmicb", 1), "bigram")(
       bigramsOf(docToks(Tables.documentsDense(spark, dir)))
         .groupBy("bigram").agg(count(lit(1)).as("n")))
     val cb = cbAll.filter(col("n") >= minCount)
     val cu = EvalCache.ensure(spark, dir, "documents",
-      "pmicu", "w")(
+      ScaleOps.Family("pmicu", 1), "w")(
       unigramsOf(docToks(Tables.documentsDense(spark, dir)))
         .groupBy("w").agg(count(lit(1)).as("cu")))
     // corpus totals derived from the cached vocab-grain counts (same

@@ -49,12 +49,6 @@ object ProductQuant {
     Similarity.dot(a, a) - lit(2.0) * Similarity.dot(a, b) +
       Similarity.dot(b, b)
 
-  /** Integer squared distance between two BIGINT arrays — exact, no
-    * rounding discipline needed. */
-  private[operators] def il2(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => (x - y) * (x - y)),
-      lit(0L), (acc, x) => acc + x)
-
   /** (vec_id, s, sd, q): embeddings exploded to micro-unit subspace
     * components — s = subspace, sd = dim within it. Same quantization
     * as Clustering.ivec (round-half-away ×1e6 → BIGINT). */
@@ -129,7 +123,8 @@ object ProductQuant {
   /** Build-once: the trained codebook persisted as a catalog table.
     * Idempotent per (dir). */
   def ensureCodebook(spark: SparkSession, dir: String): String =
-    ScaleOps.ensure(spark, ScaleOps.AttachSpec(
+    ScaleOps.ensure(spark, ScaleOps.Family("pq_codebook", 1),
+      ScaleOps.AttachSpec(
         s"graft_pqcb_${ScaleOps.contentHash(dir, "embeddings")}")) {
       Seq(trainCodebook(spark, dir))
     }
@@ -177,7 +172,8 @@ object ProductQuant {
     * smaller scan target every subsequent probe reads). Idempotent per
     * (dir); same convention as Similarity.ensureIvfIndex. */
   def ensurePqTable(spark: SparkSession, dir: String): String =
-    ScaleOps.ensure(spark, ScaleOps.AttachSpec(
+    ScaleOps.ensure(spark, ScaleOps.Family("pq_codes", 1),
+      ScaleOps.AttachSpec(
         s"graft_pq_${ScaleOps.contentHash(dir, "embeddings")}")) {
       Seq(encode(spark, dir))
     }
@@ -288,8 +284,8 @@ object ProductQuant {
     * while the quantization parameters are being tuned. */
   private[operators] def exactL2Gt(spark: SparkSession, dir: String,
       qids: Seq[Long], k: Int): DataFrame =
-    EvalCache.ensure(spark, dir, "embeddings",
-      s"l2_${EvalCache.keyOf(qids, k)}", "q_id") {
+    EvalCache.ensure(spark, dir, "embeddings", ScaleOps.Family("l2", 1),
+      "q_id", EvalCache.keyOf(qids, k)) {
       val fetched = fetchQueries(spark, dir, qids)
       val qvsLit = typedLit(qids.map(q => fetched(q)._2.toSeq))
       val qdf = broadcast(spark.createDataFrame(

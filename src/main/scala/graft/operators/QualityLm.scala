@@ -70,7 +70,8 @@ object QualityLm {
     * consumers are bit-identical to the inline chain. */
   def ensureNllTable(spark: SparkSession, dir: String): String = {
     val name = s"graft_nll_${ScaleOps.contentHash(dir, "documents")}"
-    ScaleOps.ensure(spark, ScaleOps.AttachSpec(name, "doc_id", 8)) {
+    ScaleOps.ensure(spark, ScaleOps.Family("nll", 1),
+        ScaleOps.AttachSpec(name, "doc_id", 8)) {
       Seq(unigramNll(spark, dir))
     }
   }

@@ -61,7 +61,7 @@ object Sampling {
     // the two unigram LMs as ONE persisted vocab-grain table
     // (term, n_c, n_t), built once per corpus generation
     val lm = EvalCache.ensure(spark, dir, "documents",
-      s"dsir_$targetSource", "term")(
+      ScaleOps.Family("dsir", 1), "term", targetSource)(
       idx.join(attrs, Seq("doc_id"))
         .groupBy(col("term"))
         .agg(sum(col("tf")).as("n_c"),

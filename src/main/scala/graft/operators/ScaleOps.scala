@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 import org.apache.hadoop.fs.{FileStatus, Path}
+import scala.jdk.CollectionConverters._
 
 /** Cluster-scale physical-layout utilities: bucketed co-located joins and
   * skew salting. These are the concrete mechanisms behind the README's
@@ -26,13 +27,10 @@ object ScaleOps {
   def dirHash(dir: String): String = digest(dir)
 
   /** Content fingerprint of one fixture table under `dir`: a digest
-    * over the path plus every data file's (name, size, mtime). Derived
-    * tables memoized by catalog name MUST key on this rather than
-    * [[dirHash]] alone when their consumers outlive a fixture
-    * regeneration — ScaleUp overwrites the same out dir, and a
-    * dir-only key would keep serving the STALE corpus from the session
-    * catalog (r13 ADVICE, ensurePartitionedDocuments). Handles both
-    * fixture layouts: single file `<t>.parquet` and Spark-written
+    * over the path plus every data file's (name, size, mtime), so a
+    * fixture regenerated in place (ScaleUp overwrites its out dir)
+    * names new generations instead of serving the stale ones. Handles
+    * both fixture layouts: single file `<t>.parquet` and Spark-written
     * directories. */
   def contentHash(dir: String, table: String): String = {
     import java.nio.file.{Files, Path, Paths}
@@ -186,19 +184,13 @@ object ScaleOps {
 
   // --- Build-once / ATTACH-many persisted tables ------------------------
 
-  /** Driver-side accounting of persisted-table build time (r19 verdict
-    * #1): every [[ensure]] that actually constructs a generation (one
-    * count per generation, however many tables it writes) and every
-    * forced [[writeBucketed]] accumulates its wall time here, and
-    * `graft.Bench` reports the warm-up pre-pass's total as
-    * `ensure_build_sec` on the contract line. First-touch build cost is
-    * thereby visible as its own number instead of an unattributable
-    * slowdown in whichever session builds a generation first; a
-    * cold-warehouse and a warm-warehouse bench differ by exactly this
-    * figure (plus page-cache noise), so their per-query mins become
-    * comparable. Reentrant: a builder whose build body ensures another
-    * table counts once, under the OUTERMOST build (per-thread depth
-    * guard). */
+  /** Driver-side accounting of persisted-table build time: every
+    * [[ensure]] that constructs a generation (one count per generation,
+    * however many tables it writes) and every forced [[writeBucketed]]
+    * adds its wall time here; `graft.Bench` reports the warm-up
+    * pre-pass's total as `ensure_build_sec`, so first-touch build cost
+    * is its own number. Reentrant: a build body that ensures another
+    * table counts once, under the OUTERMOST build (per-thread depth). */
   object BuildTimer {
     private val nanos = new java.util.concurrent.atomic.AtomicLong(0L)
     private val builds = new java.util.concurrent.atomic.AtomicInteger(0)
@@ -222,18 +214,23 @@ object ScaleOps {
     def count: Int = builds.get
   }
 
-  /** Layout-version stamp baked into every attachable table's marker.
-    * BUMP THIS whenever ANY persisted-table builder changes its output
-    * schema, content, or bucketing — a stale on-disk generation from
-    * older builder code then fails the marker check and is rebuilt
-    * (today's per-JVM behavior) instead of being silently attached.
-    * Within one code version, a fresh JVM ATTACHES the existing files
-    * instead of rebuilding — which is both the serving-fleet design at
-    * 100 TB (indexes are built once and attached by every session) and
-    * the fix for the cross-JVM clobber race (a fresh JVM's in-memory
-    * catalog sees tableExists=false and would otherwise DROP+rewrite
-    * files a concurrent session is mid-scan on — the r18 ladder crash). */
-  private val AttachLayoutVersion = "r18a"
+  /** One persisted family's identity, declared beside its
+    * [[AttachSpec]]s at its [[ensure]] call: `tag` names the family in
+    * every attach marker and in FamilyFingerprintSpec's golden list;
+    * `version` is the generation format. Bump `version` whenever the
+    * builder changes what it writes — schema, content or plan. A fresh
+    * session then refuses the older generations by their markers and
+    * rebuilds them, while every other family keeps attaching. A family
+    * that reads another family's tables is bumped with it. */
+  case class Family(tag: String, version: Int)
+
+  /** The family of tables written outside a declared one:
+    * [[writeBucketed]]'s forced writes and ad-hoc groups. */
+  val Adhoc: Family = Family("adhoc", 1)
+
+  /** The vacuum generations of [[ensureVacuumed]]. */
+  val Vacuum: Family = Family("vacuum", 1)
+
   private val AttachMarker = "_GRAFT_ATTACH"
 
   private def tableLocation(spark: SparkSession,
@@ -243,17 +240,55 @@ object ScaleOps {
     java.nio.file.Paths.get(warehouse, table.toLowerCase)
   }
 
+  /** A committed table's attach marker: its family, the layout it was
+    * written with, its catalog schema and the [[planDigest]] of the
+    * frame it was written from, one `key=value` line each. */
+  case class Marker(family: Family, layout: String, schema: StructType,
+      plan: String)
+
+  object Marker {
+    /** `table`'s marker, if it has a well-formed one. */
+    def read(spark: SparkSession, table: String): Option[Marker] = try {
+      val kv = java.nio.file.Files.readAllLines(tableLocation(spark, table)
+          .resolve(AttachMarker)).asScala.map(_.split("=", 2))
+        .collect { case Array(k, v) => k -> v }.toMap
+      Some(Marker(Family(kv("family"), kv("version").toInt), kv("layout"),
+        org.apache.spark.sql.types.DataType.fromJson(kv("schema"))
+          .asInstanceOf[StructType], kv("plan")))
+    } catch { case scala.util.control.NonFatal(_) => None }
+  }
+
+  /** The marker's form of `s`'s layout. */
+  private def layoutOf(s: AttachSpec): String =
+    s.bucket.map { case (k, n) => s"bucket($k,$n)" }
+      .orElse(Option.when(s.partitionCols.nonEmpty)(
+        s.partitionCols.mkString("partition(", ",", ")")))
+      .getOrElse("plain")
+
+  /** [[digest]] of a build frame's canonicalized analyzed plan and its
+    * output schema (canonicalization drops column names): what the
+    * frame computes, independent of expression ids, of the fixture's
+    * location and of the generation names it reads (every 20-hex
+    * digest is masked). A builder edit that changes the plan changes
+    * it. */
+  private def planDigest(df: DataFrame): String =
+    digest((df.queryExecution.analyzed.canonicalized.toString +
+      df.schema.json).replaceAll("[0-9a-f]{20}", "*"))
+
   /** Marker write — after a table's successful commit, so the marker's
     * presence certifies a complete build: any interrupted build or
     * partially-deleted location has no marker (it is deleted FIRST on
     * rebuild) and attach falls through to a clean rebuild. */
-  private def markAttachable(spark: SparkSession, table: String): Unit = {
-    import java.nio.file.{Files, StandardOpenOption => O}
-    val loc = tableLocation(spark, table)
+  private def markAttachable(spark: SparkSession, family: Family,
+      s: AttachSpec, plan: String): Unit = {
+    val loc = tableLocation(spark, s.table)
+    val schema = spark.sessionState.catalog.getTableMetadata(
+      org.apache.spark.sql.catalyst.TableIdentifier(s.table)).schema
     if (java.nio.file.Files.isDirectory(loc))
-      Files.write(loc.resolve(AttachMarker),
-        AttachLayoutVersion.getBytes("UTF-8"),
-        O.CREATE, O.TRUNCATE_EXISTING)
+      java.nio.file.Files.write(loc.resolve(AttachMarker), Seq(
+        s"family=${family.tag}", s"version=${family.version}",
+        s"layout=${layoutOf(s)}", s"plan=$plan", s"schema=${schema.json}")
+        .asJava)
   }
 
   /** Marker delete — BEFORE any drop/delete/rewrite of the location, so
@@ -293,30 +328,28 @@ object ScaleOps {
 
   /** Attach a group of previously-persisted warehouse tables into this
     * session's catalog as external tables — all-or-nothing: true iff
-    * EVERY member has a complete (_SUCCESS + current-layout marker)
-    * directory and every registration succeeded. On false the caller
-    * builds from scratch ([[ensure]] drops every member first, so a
-    * partially-registered group is repaired by the build path).
-    * Registration is metadata-only — one parquet footer read per table
-    * for the schema, zero Spark jobs over the data — and the registered
-    * bucket/partition spec reproduces the built layout bit-for-bit
-    * (bucket ids live in the file names), so bucket pruning and
-    * co-located joins behave identically to the building session
-    * (pinned in ScaleOpsSpec). */
-  def attachAll(spark: SparkSession, specs: Seq[AttachSpec]): Boolean = {
-    import java.nio.file.Files
-    val complete = specs.forall { s =>
-      val loc = tableLocation(spark, s.table)
-      Files.exists(loc.resolve("_SUCCESS")) &&
-        (try new String(Files.readAllBytes(loc.resolve(AttachMarker)),
-          "UTF-8") == AttachLayoutVersion
-        catch { case _: java.io.IOException => false })
+    * EVERY member has a complete (`_SUCCESS`) directory whose marker
+    * records `family`'s version and the member's own layout, and every
+    * registration succeeded. On false the caller builds from scratch
+    * ([[ensure]] drops every member first, so a partially-registered
+    * group is repaired by the build path). Registration is
+    * metadata-only — the schema is the marker's, so no footer is read
+    * and no Spark job runs — and the registered bucket/partition spec
+    * is the one the files were written with (bucket ids live in the
+    * file names), so bucket pruning and co-located joins behave
+    * identically to the building session (pinned in ScaleOpsSpec). */
+  def attachAll(spark: SparkSession, specs: Seq[AttachSpec],
+      family: Family = Adhoc): Boolean = {
+    val markers = specs.map { s =>
+      Marker.read(spark, s.table).filter(m =>
+        m.family.version == family.version && m.layout == layoutOf(s) &&
+          java.nio.file.Files.exists(
+            tableLocation(spark, s.table).resolve("_SUCCESS")))
     }
-    complete && (try {
-      specs.foreach { s =>
+    markers.forall(_.isDefined) && (try {
+      specs.zip(markers.flatten).foreach { case (s, m) =>
         if (!spark.catalog.tableExists(s.table)) {
           val loc = tableLocation(spark, s.table)
-          val schema = spark.read.parquet(loc.toString).schema
           val bucketDdl = s.bucket.map { case (k, n) =>
             s"CLUSTERED BY (`$k`) SORTED BY (`$k`) INTO $n BUCKETS"
           }.getOrElse("")
@@ -325,7 +358,7 @@ object ScaleOps {
             else s.partitionCols.mkString(
               "PARTITIONED BY (`", "`, `", "`)")
           spark.sql(
-            s"""CREATE TABLE `${s.table}` (${schema.toDDL})
+            s"""CREATE TABLE `${s.table}` (${m.schema.toDDL})
                |USING PARQUET $partDdl $bucketDdl
                |LOCATION '${loc.toUri}'""".stripMargin)
           if (s.partitionCols.nonEmpty)
@@ -399,16 +432,16 @@ object ScaleOps {
 
   /** Build-once / ATTACH-many: the one lifecycle every persisted
     * generation goes through (the reference's index DDL runs once;
-    * every request reads the index). `tables` declares the generation's
-    * tables and layouts; the LAST one is the guard, written last, so a
-    * build that dies between two writes leaves the guard absent and the
-    * next call rebuilds the whole group instead of serving a table
-    * missing its companions (r15 ADVICE).
+    * every request reads the index). `family` names the generation's
+    * format; `tables` declares its tables and layouts; the LAST one is
+    * the guard, written last, so a build that dies between two writes
+    * leaves the guard absent and the next call rebuilds the whole group
+    * instead of serving a table missing its companions (r15 ADVICE).
     *
     *  - Fast path: the guard is in this session's catalog — one
     *    `tableExists`, the per-request cost of every `ensure*` caller.
     *  - Otherwise attach the committed generation another session built
-    *    (all-or-nothing, [[attachAll]]).
+    *    (all-or-nothing, [[attachAll]] under `family`'s version).
     *  - Otherwise build under ONE PID-bearing lock keyed on the guard:
     *    attach again after waiting for or winning the lock (the winner
     *    of a race builds; every other session attaches its commit
@@ -419,13 +452,34 @@ object ScaleOps {
     *    spec's layout and mark it; all inside one [[BuildTimer.timed]].
     *
     * Returns the guard table's name. */
-  def ensure(spark: SparkSession, tables: AttachSpec*)(
+  def ensure(spark: SparkSession, family: Family, tables: AttachSpec*)(
       build: => Seq[DataFrame]): String = {
     val guard = tables.last.table
-    if (!spark.catalog.tableExists(guard) && !attachAll(spark, tables))
-      lockedWrite(spark, tables, attachAll(spark, tables),
-        attachAll(spark, tables))(build)
+    if (!spark.catalog.tableExists(guard) &&
+        !attachAll(spark, tables, family))
+      lockedWrite(spark, family, tables, attachAll(spark, tables, family),
+        attachAll(spark, tables, family))(build)
     guard
+  }
+
+  /** [[ensure]] for an ad-hoc group, outside any declared family. */
+  def ensure(spark: SparkSession, tables: AttachSpec*)(
+      build: => Seq[DataFrame]): String =
+    ensure(spark, Adhoc, tables: _*)(build)
+
+  /** The `(base)_vac(mod)` generation of single-table family `base`:
+    * `live` applied to `base` (the rows that survive `mod`'s deletes),
+    * written in `base`'s own layout, read from the catalog. `base` is
+    * in this session's catalog (its `ensure*` returned its name). */
+  def ensureVacuumed(spark: SparkSession, base: String, mod: Long)(
+      live: DataFrame => DataFrame): String = {
+    import org.apache.spark.sql.catalyst.TableIdentifier
+    val layout = spark.sessionState.catalog
+      .getTableMetadata(TableIdentifier(base)).bucketSpec
+      .map(b => (b.bucketColumnNames.head, b.numBuckets))
+    ensure(spark, Vacuum, AttachSpec(s"${base}_vac$mod", layout)) {
+      Seq(live(spark.table(base)))
+    }
   }
 
   /** A FORCED bucketed (re)write of one table — for outputs that are not
@@ -439,7 +493,7 @@ object ScaleOps {
       buckets: Int): Unit = {
     val spark = df.sparkSession
     val spec = Seq(AttachSpec(table, key, buckets))
-    lockedWrite(spark, spec, false,
+    lockedWrite(spark, Adhoc, spec, false,
       attachAll(spark, spec) || spark.catalog.tableExists(table))(Seq(df))
   }
 
@@ -450,15 +504,15 @@ object ScaleOps {
     * write. A lock whose builder PID is dead — or older than
     * [[StaleLockMs]] — is broken and the build taken over, so a crashed
     * builder never wedges the fleet. */
-  private def lockedWrite(spark: SparkSession, specs: Seq[AttachSpec],
-      settledUnderLock: => Boolean, settledAfterWait: => Boolean)(
-      frames: => Seq[DataFrame]): Unit = {
+  private def lockedWrite(spark: SparkSession, family: Family,
+      specs: Seq[AttachSpec], settledUnderLock: => Boolean,
+      settledAfterWait: => Boolean)(frames: => Seq[DataFrame]): Unit = {
     val guard = specs.last.table
     var attempts = 0
     while (attempts < 100) {
       attempts += 1
       if (tryAcquireBuildLock(spark, guard)) {
-        try if (!settledUnderLock) rewrite(spark, specs, frames)
+        try if (!settledUnderLock) rewrite(spark, family, specs, frames)
         finally releaseBuildLock(spark, guard)
         return
       }
@@ -469,10 +523,11 @@ object ScaleOps {
       // died without committing: loop and take over
     }
     // pathological: build unlocked
-    rewrite(spark, specs, frames)
+    rewrite(spark, family, specs, frames)
   }
 
-  private def rewrite(spark: SparkSession, specs: Seq[AttachSpec],
+  private def rewrite(spark: SparkSession, family: Family,
+      specs: Seq[AttachSpec],
       frames: => Seq[DataFrame]): Unit = BuildTimer.timed {
     // the markers die FIRST: from here to each table's post-commit mark
     // the group is never attachable, so an interrupted rebuild can only
@@ -489,8 +544,9 @@ object ScaleOps {
     require(dfs.size == specs.size,
       s"${dfs.size} frames for ${specs.map(_.table).mkString(", ")}")
     specs.zip(dfs).foreach { case (s, df) =>
+      val plan = planDigest(df)
       saveAs(df, s)
-      markAttachable(spark, s.table)
+      markAttachable(spark, family, s, plan)
       bucketFilesMemo.remove(bucketFilesKey(spark, s.table))
     }
   }
@@ -523,12 +579,12 @@ object ScaleOps {
     * sides). Idempotent per (dir). */
   def ensureBucketedFacts(spark: SparkSession,
       dir: String): (String, String) = {
-    val bo = ensure(spark, AttachSpec(
+    val bo = ensure(spark, Family("bucketed_orders", 1), AttachSpec(
         s"graft_bord_${contentHash(dir, "orders")}", "o_orderkey", 16)) {
       Seq(graft.Tables.orders(spark, dir)
         .select("o_orderkey", "o_custkey", "o_orderdate"))
     }
-    val bl = ensure(spark, AttachSpec(
+    val bl = ensure(spark, Family("bucketed_lineitem", 1), AttachSpec(
         s"graft_blin_${contentHash(dir, "lineitem")}", "o_orderkey", 16)) {
       Seq(graft.Tables.lineitem(spark, dir)
         .select(col("l_orderkey").as("o_orderkey"),

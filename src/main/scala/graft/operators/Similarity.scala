@@ -396,7 +396,7 @@ object Similarity {
   def ensureIvfIndexHier(spark: SparkSession, dir: String, k1: Int,
       k2: Int): String = {
     val name = ivfHierName(dir, k1, k2)
-    ScaleOps.ensure(spark,
+    ScaleOps.ensure(spark, ScaleOps.Family("ivf_hier", 1),
         ScaleOps.AttachSpec(s"${name}_cents", "centroid_id", 1),
         ScaleOps.AttachSpec(s"${name}_coarse", "centroid_id", 1),
         ScaleOps.AttachSpec(name, "centroid_id", math.min(k1 * k2, 64))) {
@@ -618,7 +618,7 @@ object Similarity {
   def ensureIvfIndex(spark: SparkSession, dir: String,
       nCentroids: Int): String = {
     val name = ivfIndexName(dir, nCentroids)
-    ScaleOps.ensure(spark,
+    ScaleOps.ensure(spark, ScaleOps.Family("ivf", 1),
         ScaleOps.AttachSpec(s"${name}_cents", "centroid_id", 1),
         ScaleOps.AttachSpec(name, "centroid_id", nCentroids)) {
       // a driver-local frame (nCentroids rows) — no caching needed for
@@ -766,27 +766,16 @@ object Similarity {
       k)(_.join(tomb, Seq("vec_id"), "left_anti"))
   }
 
-  /** Index COMPACTION (vacuum) — the maintenance step that closes the
-    * tombstone story: rewrite the bucketed index WITHOUT the tombstoned
-    * rows into a new index GENERATION, leaving centroids untouched (no
+  /** Index COMPACTION (vacuum): the bucketed index rewritten WITHOUT
+    * the tombstoned rows into a new generation, centroids untouched (no
     * re-clustering — pgvector's VACUUM likewise reclaims ivfflat dead
-    * tuples without retraining lists;
-    * /root/reference/src/core/vector_store.py:360-385 deletes rows and
-    * relies on the database's vacuum for space). Probes over the
-    * compacted generation drop the per-probe tombstone anti-join
-    * ([[ivfTopKDeleted]]) — the serving-path win compaction buys.
-    * One bucketed-scan → filter → bucketed-write job, cost ∝ live
-    * rows, schedulable off the serving path; the old generation stays
-    * readable until swapped. Keyed by (corpus fingerprint, mod) like
-    * every derived artifact. */
+    * tuples without retraining lists). Probes over it drop the
+    * per-probe tombstone anti-join of [[ivfTopKDeleted]]. Keyed by
+    * (corpus fingerprint, mod). */
   def ensureCompactedIvfIndex(spark: SparkSession, dir: String,
-      nCentroids: Int, mod: Long): String = {
-    val base = ensureIvfIndex(spark, dir, nCentroids)
-    ScaleOps.ensure(spark,
-        ScaleOps.AttachSpec(s"${base}_vac$mod", "centroid_id", nCentroids)) {
-      Seq(spark.table(base).filter(col("vec_id") % mod =!= 0))
-    }
-  }
+      nCentroids: Int, mod: Long): String =
+    ScaleOps.ensureVacuumed(spark, ensureIvfIndex(spark, dir, nCentroids),
+      mod)(_.filter(col("vec_id") % mod =!= 0))
 
   /** Per-cell occupancy AFTER compaction — the introspection that
     * confirms the vacuum reclaimed what [[ivfDeleteStats]] reported as
@@ -1164,8 +1153,8 @@ object Similarity {
     * to the inline computation. */
   def knnBatchGt(spark: SparkSession, dir: String, qids: Seq[Long],
       k: Int): DataFrame =
-    EvalCache.ensure(spark, dir, "embeddings",
-      s"cos_${EvalCache.keyOf(qids, k)}", "q_id")(
+    EvalCache.ensure(spark, dir, "embeddings", ScaleOps.Family("cos", 1),
+      "q_id", EvalCache.keyOf(qids, k))(
       knnBatch(spark, dir, qids, k).select(col("q_id"), col("vec_id")))
 
   def annRecall(spark: SparkSession, dir: String, qids: Seq[Long],

@@ -240,7 +240,6 @@ object Sketches {
 
   val BloomBits = 256
   val BloomWordBits = 32 // words stay < 2^32: no sign traps in either engine
-  val BloomWords = BloomBits / BloomWordBits
   val BloomHashes = 4
 
   /** bit index k(value) = first hex byte of md5(k || ':' || value),

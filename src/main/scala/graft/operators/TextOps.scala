@@ -249,7 +249,8 @@ object TextOps {
     * pins scan ≡ index on both filter shapes. */
   def ensureMetaAttrs(spark: SparkSession, dir: String): String = {
     val name = s"graft_meta_${ScaleOps.contentHash(dir, "events")}"
-    ScaleOps.ensure(spark, ScaleOps.AttachSpec(name, "event_id", 8)) {
+    ScaleOps.ensure(spark, ScaleOps.Family("meta_attrs", 1),
+        ScaleOps.AttachSpec(name, "event_id", 8)) {
       Seq(Tables.events(spark, dir)
         .select(col("event_id"), col("event_type"), col("props"),
           from_json(col("props"),
@@ -296,24 +297,15 @@ object TextOps {
       metadataRangeFilterIndexed(spark, dir, key, lo, hi)
     else metadataRangeFilter(spark, dir, key, lo, hi)
 
-  /** Vacuumed generation of the metadata sidecar (the ensureVacuumed*
-    * lifecycle every persisted family carries, r17): rewrite minus the
-    * event_id % mod tombstones. */
-  def ensureVacuumedMetaAttrs(spark: SparkSession, dir: String,
-      mod: Long): String = {
-    val base = ensureMetaAttrs(spark, dir)
-    ScaleOps.ensure(spark,
-        ScaleOps.AttachSpec(s"${base}_vac$mod", "event_id", 8)) {
-      Seq(spark.table(base).filter(col("event_id") % mod =!= 0))
-    }
-  }
-
-  /** The range filter over the VACUUMED sidecar — the oracle replays
-    * the same filter over the surviving events from scratch. */
+  /** The range filter over the VACUUMED metadata sidecar (the vacuum
+    * generation every persisted family carries, r17: a rewrite minus
+    * the event_id % mod tombstones) — the oracle replays the same
+    * filter over the surviving events from scratch. */
   def metadataRangeFilterVacuumed(spark: SparkSession, dir: String,
       key: String, lo: Long, hi: Long, mod: Long): DataFrame = {
     val kv = col("attrs").getItem(key).cast("long")
-    spark.table(ensureVacuumedMetaAttrs(spark, dir, mod))
+    spark.table(ScaleOps.ensureVacuumed(spark, ensureMetaAttrs(spark, dir),
+        mod)(_.filter(col("event_id") % mod =!= 0)))
       .withColumn("kv", kv)
       .filter(col("kv") >= lit(lo) && col("kv") < lit(hi))
       .groupBy("event_type")

@@ -331,4 +331,41 @@ class ScaleOpsSpec extends SparkSpec {
       "the guard was written before its companion")
     reset(companion); reset(guard)
   }
+
+  test("attach: a generation written in another layout is refused, and " +
+      "ensure rebuilds it in the caller's layout") {
+    import org.apache.spark.sql.catalyst.TableIdentifier
+    val (src, t) = ("graft_layout_src", "graft_layout_dst")
+    reset(src); reset(t)
+    ScaleOps.ensure(spark, ScaleOps.AttachSpec(src, "doc_id", 8))(
+      Seq(generation("gen8")))
+    installCopy(src, t)
+    val four = ScaleOps.AttachSpec(t, "doc_id", 4)
+    assert(!ScaleOps.attachAll(spark, Seq(four)))
+    assert(!spark.catalog.tableExists(t))
+    val builds = ScaleOps.BuildTimer.count
+    ScaleOps.ensure(spark, four)(Seq(generation("gen4")))
+    assert(ScaleOps.BuildTimer.count == builds + 1)
+    assert(contents(t) == ((Set("gen4"), 100L)))
+    assert(spark.sessionState.catalog.getTableMetadata(TableIdentifier(t))
+      .bucketSpec.map(_.numBuckets).contains(4))
+    reset(src); reset(t)
+  }
+
+  test("attach: registering a built group starts no Spark job and " +
+      "registers the building session's schema") {
+    layouts.foreach { case (layout, spec) =>
+      val (t, src) = (s"graft_cost_$layout", s"graft_cost_${layout}_src")
+      reset(t); reset(src)
+      ScaleOps.ensure(spark, spec(src))(Seq(generation("gen1")))
+      installCopy(src, t)
+      val (attached, jobs) = jobsFired(ScaleOps.attachAll(spark, Seq(spec(t))))
+      assert(attached && jobs == 0, s"$layout: $jobs jobs")
+      // the written types: inference would read the long `part`
+      // partition values back as ints
+      assert(spark.table(t).schema == spark.table(src).schema, layout)
+      assert(contents(t) == ((Set("gen1"), 100L)), layout)
+      reset(t); reset(src)
+    }
+  }
 }
