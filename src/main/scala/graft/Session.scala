@@ -60,8 +60,10 @@ object Session {
       // events.parquet has TIMESTAMP(NANOS), which Spark 4 otherwise
       // rejects; read as long nanos (Tables.tsSeconds normalizes)
       "spark.sql.legacy.parquet.nanosAsLong" -> "true",
-      // keep bucketed scans bucketed under pure-filter plans: one task
-      // per bucket (Spark prunes bucket files in non-bucketed scans too)
+      // keep bucketed scans bucketed under pure-filter plans. No index
+      // probe relies on it (probes read their bucket files through
+      // ScaleOps.bucketProbe); it stays because the svcbench session
+      // sets the same value, and the two must plan alike
       "spark.sql.sources.bucketing.autoBucketedScan.enabled" -> "false")
     val builder = SparkSession.builder().master(s"local[$cpus]")
     (shared ++ conf ++ confPins(pins)).foreach { case (k, v) =>

@@ -443,9 +443,9 @@ object Fts {
       query: String, lang: String, k: Int): DataFrame = {
     val terms = TextAnalyzer.analyzeStemmed(query).distinct
     require(terms.nonEmpty, "query analyzes to no terms")
-    val postings = spark.table(ensureStemmedIndex(spark, dir))
-      .filter(col("lang") === lit(lang) &&
-        col("term").isin(terms.map(t => t: Any): _*))
+    val postings =
+      ScaleOps.bucketProbe(spark, ensureStemmedIndex(spark, dir), terms)
+      .filter(col("lang") === lit(lang))
     scoredTopK(pivotedTfs(postings, terms), terms.length, k)
   }
 
@@ -464,9 +464,8 @@ object Fts {
     val terms = TextAnalyzer.analyze(query).distinct
     require(terms.nonEmpty, "query analyzes to no terms")
     val stats = ensureBm25Stats(spark, dir)
-    val postings = spark.table(ensureIndex(spark, dir))
-      .filter(col("lang") === lit(lang) &&
-        col("term").isin(terms.map(t => t: Any): _*))
+    val postings = ScaleOps.bucketProbe(spark, ensureIndex(spark, dir), terms)
+      .filter(col("lang") === lit(lang))
     val dl = spark.table(s"${stats}_dl")
       .filter(col("lang") === lit(lang))
       .select(col("doc_id"), col("dl").cast("double").as("doclen"),
@@ -506,9 +505,8 @@ object Fts {
       query: String, lang: String, k: Int): DataFrame = {
     val terms = TextAnalyzer.analyze(query).distinct
     require(terms.nonEmpty, "query analyzes to no terms")
-    val postings = spark.table(ensureIndex(spark, dir))
-      .filter(col("lang") === lit(lang) &&
-        col("term").isin(terms.map(t => t: Any): _*))
+    val postings = ScaleOps.bucketProbe(spark, ensureIndex(spark, dir), terms)
+      .filter(col("lang") === lit(lang))
     val posAggs = terms.indices.map(i =>
       coalesce(
         max(when(col("term") === lit(terms(i)), col("positions"))),
@@ -588,9 +586,8 @@ object Fts {
     require(terms.length >= 2, "phrase needs at least 2 analyzed terms")
     val uniq = terms.distinct
     val slot = terms.map(uniq.indexOf) // phrase slot j → pivot column
-    val postings = spark.table(ensureIndex(spark, dir))
-      .filter(col("lang") === lit(lang) &&
-        col("term").isin(uniq.map(t => t: Any): _*))
+    val postings = ScaleOps.bucketProbe(spark, ensureIndex(spark, dir), uniq)
+      .filter(col("lang") === lit(lang))
     val matches = filter(col(s"pos${slot.head}"),
       p => terms.indices.tail
         .map(j => array_contains(col(s"pos${slot(j)}"), p + j))
@@ -621,9 +618,8 @@ object Fts {
       b: String, w: Int, lang: String, k: Int): DataFrame = {
     val Seq(ta, tb) = TextAnalyzer.analyze(s"$a $b").take(2)
     val uniq = Seq(ta, tb).distinct
-    val postings = spark.table(ensureIndex(spark, dir))
-      .filter(col("lang") === lit(lang) &&
-        col("term").isin(uniq.map(t => t: Any): _*))
+    val postings = ScaleOps.bucketProbe(spark, ensureIndex(spark, dir), uniq)
+      .filter(col("lang") === lit(lang))
     val posA = col(s"pos${uniq.indexOf(ta)}")
     val posB = col(s"pos${uniq.indexOf(tb)}")
     val gaps = flatten(transform(posA,
@@ -651,9 +647,8 @@ object Fts {
       a: String, b: String, n: Int, lang: String, k: Int): DataFrame = {
     val Seq(ta, tb) = TextAnalyzer.analyze(s"$a $b").take(2)
     val uniq = Seq(ta, tb).distinct
-    val postings = spark.table(ensureIndex(spark, dir))
-      .filter(col("lang") === lit(lang) &&
-        col("term").isin(uniq.map(t => t: Any): _*))
+    val postings = ScaleOps.bucketProbe(spark, ensureIndex(spark, dir), uniq)
+      .filter(col("lang") === lit(lang))
     val posA = col(s"pos${uniq.indexOf(ta)}")
     val posB = col(s"pos${uniq.indexOf(tb)}")
     val hits = filter(posA, p => array_contains(posB, p + lit(n)))
@@ -688,9 +683,8 @@ object Fts {
     val ast = BoolQuery.parse(query)
     val terms = BoolQuery.terms(ast)
     val pos = BoolQuery.positiveTerms(ast)
-    val postings = spark.table(ensureIndex(spark, dir))
-      .filter(col("lang") === lit(lang) &&
-        col("term").isin(terms.map(t => t: Any): _*))
+    val postings = ScaleOps.bucketProbe(spark, ensureIndex(spark, dir), terms)
+      .filter(col("lang") === lit(lang))
     val tfAggs = terms.map(t =>
       coalesce(max(when(col("term") === lit(t), col("tf"))), lit(0L))
         .as(s"tf_$t"))
@@ -737,9 +731,8 @@ object Fts {
       case WPhrase(ts) => ts
       case other => throw new IllegalStateException(s"non-leaf $other")
     }.distinct
-    val postings = spark.table(ensureIndex(spark, dir))
-      .filter(col("lang") === lit(lang) &&
-        col("term").isin(fetch.map(t => t: Any): _*))
+    val postings = ScaleOps.bucketProbe(spark, ensureIndex(spark, dir), fetch)
+      .filter(col("lang") === lit(lang))
     // one pivot carrying BOTH tf and positions per fetched term
     val aggs = fetch.indices.flatMap(i => Seq(
       coalesce(max(when(col("term") === lit(fetch(i)), col("tf"))),
@@ -794,9 +787,8 @@ object Fts {
       minScore: Double, k: Int): DataFrame = {
     val terms = TextAnalyzer.analyze(query).distinct
     require(terms.nonEmpty, "query analyzes to no terms")
-    val postings = spark.table(ensureIndex(spark, dir))
-      .filter(col("lang") === lit(lang) &&
-        col("term").isin(terms.map(t => t: Any): _*))
+    val postings = ScaleOps.bucketProbe(spark, ensureIndex(spark, dir), terms)
+      .filter(col("lang") === lit(lang))
     val attrs = spark.table(ensureDocAttrs(spark, dir))
       .filter(col("lang") === lit(lang) &&
         col("wc").cast("string") === lit(metaWordCount))
@@ -833,8 +825,7 @@ object Fts {
       query: String): DataFrame = {
     val terms = TextAnalyzer.analyze(query).distinct
     require(terms.nonEmpty, "query analyzes to no terms")
-    val postings = spark.table(ensureIndex(spark, dir))
-      .filter(col("term").isin(terms.map(t => t: Any): _*))
+    val postings = ScaleOps.bucketProbe(spark, ensureIndex(spark, dir), terms)
     val attrs = spark.table(ensureDocAttrs(spark, dir))
       .select("doc_id", "lang", "source")
     pivotedTfs(postings, terms)
@@ -880,8 +871,8 @@ object Fts {
       lang: String, k: Int): DataFrame = {
     val terms = TextAnalyzer.analyzeFor(query, lang).distinct
     require(terms.nonEmpty, "query analyzes to no terms")
-    val postings = spark.table(ensureLangIndex(spark, dir, lang))
-      .filter(col("term").isin(terms.map(t => t: Any): _*))
+    val postings =
+      ScaleOps.bucketProbe(spark, ensureLangIndex(spark, dir, lang), terms)
     scoredTopK(pivotedTfs(postings, terms), terms.length, k)
   }
 
@@ -904,9 +895,8 @@ object Fts {
     val terms = TextAnalyzer.analyze(query).distinct
     require(terms.nonEmpty, "query analyzes to no terms")
     val stats = ensureBm25Stats(spark, dir)
-    val postings = spark.table(ensureIndex(spark, dir))
-      .filter(col("lang") === lit(lang) &&
-        col("term").isin(terms.map(t => t: Any): _*))
+    val postings = ScaleOps.bucketProbe(spark, ensureIndex(spark, dir), terms)
+      .filter(col("lang") === lit(lang))
       .transform(CacheScope.cached)
     val tfAggs = terms.indices.map(i =>
       coalesce(max(when(col("term") === lit(terms(i)), col("tf"))), lit(0L))
@@ -1070,11 +1060,10 @@ object Fts {
     val qterms = routeLangs.flatMap(l =>
       TextAnalyzer.analyzeStemmedFor(query, l).distinct.map(t => (l, t)))
     require(qterms.nonEmpty, "query analyzes to no terms")
-    // probe of the persisted routed index: the driver-known term
-    // IN-list statically prunes the term buckets (the fts_topk probe
-    // shape)
-    val idx = spark.table(ensureLangRoutedIndex(spark, dir))
-      .filter(col("term").isin(qterms.map(_._2).distinct: _*))
+    // probe of the persisted routed index: only the driver-known
+    // terms' bucket files are read (the fts_topk probe shape)
+    val idx = ScaleOps.bucketProbe(spark, ensureLangRoutedIndex(spark, dir),
+      qterms.map(_._2).distinct)
     import spark.implicits._
     val qt = qterms.toDF("route_lang", "qterm")
     val nt = routeLangs
@@ -2169,8 +2158,8 @@ object Fts {
       query: String, mod: Long): DataFrame = {
     val terms = TextAnalyzer.analyze(query).distinct
     require(terms.nonEmpty, "query analyzes to no terms")
-    val postings = spark.table(ensureVacuumedIndex(spark, dir, mod))
-      .filter(col("term").isin(terms.map(t => t: Any): _*))
+    val postings =
+      ScaleOps.bucketProbe(spark, ensureVacuumedIndex(spark, dir, mod), terms)
     val attrs = spark.table(ScaleOps.ensureVacuumed(spark,
         ensureDocAttrs(spark, dir), mod)(withoutDeletes(spark, dir, mod)))
       .select("doc_id", "lang", "source")
@@ -2635,12 +2624,10 @@ object Fts {
     // driver-side: the terms came from local query strings — collecting
     // them back out of a DataFrame would cost a whole Spark job
     val allTerms = analyzed.flatMap(_._3).distinct
-    // probe the persisted index: the term IN-list statically prunes to
-    // the query terms' buckets — cost ∝ posting lists touched, however
-    // large the corpus
-    val idx = spark.table(ensureIndex(spark, dir))
+    // probe the persisted index: only the query terms' bucket files
+    // are read — cost ∝ posting lists touched, however large the corpus
+    val idx = ScaleOps.bucketProbe(spark, ensureIndex(spark, dir), allTerms)
       .filter(col("lang") === lit(lang))
-      .filter(col("term").isin(allTerms: _*))
     val perQueryDoc = idx
       .join(broadcast(queryTerms), "term")
       .groupBy("query_idx", "n_terms", "doc_id")
@@ -2803,8 +2790,7 @@ object Fts {
       query: String, k: Int): DataFrame = {
     val terms = TextAnalyzer.analyze(query).distinct
     require(terms.nonEmpty, "query analyzes to no terms")
-    val idx = spark.table(ensureIndex(spark, dir))
-      .filter(col("term").isin(terms: _*))
+    val idx = ScaleOps.bucketProbe(spark, ensureIndex(spark, dir), terms)
     idx
       .groupBy("lang", "doc_id")
       .agg(count(lit(1)).as("nmatch"),

@@ -107,9 +107,9 @@ object FuzzySearch {
       .flatMap(q => variantsOf(q).map(v => (q, v)))
       .toDF("q_term", "variant")
     val allVars = qTerms.distinct.flatMap(variantsOf).distinct
-    // driver-known variant IN-list -> static pruning to |q|+1 buckets
-    val cand = spark.table(ensureFuzzyIndex(spark, dir, lang))
-      .filter(col("variant").isin(allVars: _*))
+    // driver-known variants -> a probe of at most |q|+1 bucket files
+    val cand = ScaleOps.bucketProbe(spark,
+        ensureFuzzyIndex(spark, dir, lang), allVars)
       .join(broadcast(qv), "variant")
       .select(col("q_term"), col("term"), col("df"))
       .distinct()
@@ -195,9 +195,9 @@ object FuzzySearch {
     require(nSlots > 0, s"query '$query' has no fuzzy expansions")
     val expDf = exp.toSeq.toDF("q_term", "term")
     val allTerms = exp.map(_._2).distinct.toSeq
-    val idx = spark.table(Fts.ensureIndex(spark, dir))
+    val idx =
+      ScaleOps.bucketProbe(spark, Fts.ensureIndex(spark, dir), allTerms)
       .filter(col("lang") === lit(lang))
-      .filter(col("term").isin(allTerms: _*))
     val perSlot = idx.join(broadcast(expDf), "term")
       .groupBy("doc_id", "q_term")
       .agg(max(col("tf")).as("best_tf"))

@@ -152,15 +152,14 @@ object GraphAnn {
     // by 1 + R·B·M entries of 16 bytes
     var scored = distsOf(Seq(entry))
     var r = 0
-    val edges = spark.table(edgesT)
     // TWO-HOP FUSED ROUNDS (r19 verdict #4): THREE single-stage
     // bucket-pruned jobs serve TWO beam rounds — (1) the frontier's
     // one-hop dsts, (2) the unseen candidates' out-edges, (3) one
     // distance scan for both hops — where the r18 loop paid a
     // join+broadcast+collect chain (2-3 scheduled jobs) PER ROUND.
-    // Every probe is a driver-known IN-list (bounded by B·M then
-    // B·M²), so static bucket pruning survives at any corpus size —
-    // no full edge scan, no size route needed. The driver REPLAYS
+    // Every edge probe has a driver-known key list (bounded by B·M
+    // then B·M²) and reads only its keys' bucket files at any corpus
+    // size — no full edge scan, no size route needed. The driver REPLAYS
     // round r+1's selection from the collected superset; exactness
     // rests on the top-B monotonicity invariant: distances never
     // change and the visited set only grows, so a node outside the
@@ -176,8 +175,7 @@ object GraphAnn {
       val known = scored.keySet
       // job 1: one-hop dsts off the frontier's buckets (≤ B·M rows;
       // deduped driver-side so the job stays single-stage)
-      val fresh1 = edges
-        .filter(col("src").isin(frontier.map(Long.box): _*))
+      val fresh1 = ScaleOps.bucketProbe(spark, edgesT, frontier)
         .select(col("dst"))
         .collect().map(_.getLong(0)).distinct.filterNot(known)
         .sorted.toSeq
@@ -188,8 +186,7 @@ object GraphAnn {
         r += 1
       } else {
         // job 2: the fresh candidates' out-edges (≤ B·M² pairs)
-        val e2 = edges
-          .filter(col("src").isin(fresh1.map(Long.box): _*))
+        val e2 = ScaleOps.bucketProbe(spark, edgesT, fresh1)
           .select(col("src"), col("dst"))
           .collect().map(row => (row.getLong(0), row.getLong(1))).toSeq
         val known2 = known ++ fresh1

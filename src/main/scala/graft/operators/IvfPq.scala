@@ -262,8 +262,8 @@ object IvfPq {
         s + 1), element_at(col("codes"), s + 1) + 1))
       .reduce(_ + _)
 
-  /** IVF-PQ search: statically prune the bucketed codes table to the
-    * query's nProbe cells, ADC-rank the survivors (integer, exact vs
+  /** IVF-PQ search: read only the query's nProbe cells' bucket files
+    * of the codes table, ADC-rank the survivors (integer, exact vs
     * the oracle), keep nCand, exact-refine them by full-dim (rounded
     * double) L2² against the original vectors. Output (vec_id, label,
     * centroid_id, adist, dist). The cellpos mapping is a when-chain
@@ -285,8 +285,7 @@ object IvfPq {
         case (acc, (cell, i)) =>
           acc.when(col("centroid_id") === lit(cell), lit(i))
       }
-    val cand = spark.table(codes)
-      .filter(col("centroid_id").isin(cells: _*))
+    val cand = ScaleOps.bucketProbe(spark, codes, cells)
       .filter(col("vec_id") =!= lit(qid))
       .select(col("vec_id"), col("label"), col("centroid_id"),
         adcDist(lutLit, cellpos).as("adist"))

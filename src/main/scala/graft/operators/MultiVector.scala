@@ -126,18 +126,19 @@ object MultiVector {
     * spec measures its agreement with the exact path. */
   def maxSimPruned(spark: SparkSession, dir: String, qDoc: Long,
       groups: Int, qCap: Long, nCentroids: Int, k: Int): DataFrame = {
-    val idx = spark.table(Similarity.ensureIvfIndex(spark, dir, nCentroids))
+    val ivf = Similarity.ensureIvfIndex(spark, dir, nCentroids)
+    def docs(t: DataFrame) = t
       .select((col("vec_id") % groups).as("mv_doc"), col("vec_id"),
         col("embedding"), col("nrm"), col("centroid_id"))
+    val idx = docs(spark.table(ivf))
     // the probed cells: the capped query bag's own assignments — a
-    // bounded driver list (<= qCap/groups cells), inlined so the
-    // bucketed index scan statically prunes to those cells
+    // bounded driver list (<= qCap/groups cells), so the candidate
+    // probe reads only those cells' bucket files
     val qcells = idx.filter(col("mv_doc") === lit(qDoc) &&
         col("vec_id") < lit(qCap))
       .select("centroid_id").distinct()
-      .collect().map(_.getLong(0)).sorted
-    val cands = idx
-      .filter(col("centroid_id").isin(qcells.map(Long.box): _*))
+      .collect().map(_.getLong(0)).sorted.toSeq
+    val cands = docs(ScaleOps.bucketProbe(spark, ivf, qcells))
       .filter(col("mv_doc") =!= lit(qDoc))
       .select("mv_doc").distinct()
     val q = idx.filter(col("mv_doc") === lit(qDoc) &&

@@ -261,7 +261,9 @@ object Relational {
     * (status, priority), per status, and the grand total in ONE Expand +
     * aggregate pass (no self-union, no re-scan). grouping_id
     * disambiguates a NULL group key from a rolled-up level, exactly as
-    * DuckDB's GROUPING() pair does on the oracle side. */
+    * DuckDB's GROUPING() pair does on the oracle side. The price is
+    * summed as a decimal: a double sum depends on the order rows meet
+    * in, and its rounded grand total differs from DuckDB's at sf1. */
   def groupingSetsSummary(spark: SparkSession, dir: String): DataFrame =
     Tables.orders(spark, dir)
       .groupingSets(
@@ -269,7 +271,8 @@ object Relational {
           Seq(col("o_orderstatus")), Seq()),
         col("o_orderstatus"), col("o_orderpriority"))
       .agg(count(lit(1)).as("n"),
-        round(sum(col("o_totalprice")), 2).as("sum_price"),
+        round(sum(col("o_totalprice").cast("decimal(18,6)")), 2)
+          .cast("double").as("sum_price"),
         grouping_id().as("gid"))
       .orderBy(col("gid").asc,
         col("o_orderstatus").asc_nulls_first,
@@ -277,7 +280,8 @@ object Relational {
 
   val groupingSetsOracleSql: String =
     """SELECT o_orderstatus, o_orderpriority, count(*) AS n,
-      |  round(sum(o_totalprice), 2) AS sum_price,
+      |  CAST(round(sum(CAST(o_totalprice AS DECIMAL(18,6))), 2)
+      |    AS DOUBLE) AS sum_price,
       |  CAST(GROUPING(o_orderstatus) * 2 + GROUPING(o_orderpriority)
       |       AS BIGINT) AS gid
       |FROM orders

@@ -220,8 +220,7 @@ object ScaleOps {
     * `version` is the generation format. Bump `version` whenever the
     * builder changes what it writes — schema, content or plan. A fresh
     * session then refuses the older generations by their markers and
-    * rebuilds them, while every other family keeps attaching. A family
-    * that reads another family's tables is bumped with it. */
+    * rebuilds them, while every other family keeps attaching. */
   case class Family(tag: String, version: Int)
 
   /** The family of tables written outside a declared one:
@@ -241,21 +240,56 @@ object ScaleOps {
   }
 
   /** A committed table's attach marker: its family, the layout it was
-    * written with, its catalog schema and the [[planDigest]] of the
-    * frame it was written from, one `key=value` line each. */
+    * written with, its catalog schema, the [[planDigest]] of the frame
+    * it was written from and, per generation its build read, that
+    * input's [[markerDigest]] when the build ran; one `key=value` line
+    * each (`input=<table>:<digest>`). */
   case class Marker(family: Family, layout: String, schema: StructType,
-      plan: String)
+      plan: String, inputs: Seq[(String, String)])
 
   object Marker {
     /** `table`'s marker, if it has a well-formed one. */
     def read(spark: SparkSession, table: String): Option[Marker] = try {
-      val kv = java.nio.file.Files.readAllLines(tableLocation(spark, table)
+      val lines = java.nio.file.Files.readAllLines(tableLocation(spark, table)
           .resolve(AttachMarker)).asScala.map(_.split("=", 2))
-        .collect { case Array(k, v) => k -> v }.toMap
+        .collect { case Array(k, v) => k -> v }.toSeq
+      val kv = lines.toMap
       Some(Marker(Family(kv("family"), kv("version").toInt), kv("layout"),
         org.apache.spark.sql.types.DataType.fromJson(kv("schema"))
-          .asInstanceOf[StructType], kv("plan")))
+          .asInstanceOf[StructType], kv("plan"),
+        lines.collect { case ("input", v) =>
+          val Array(t, d) = v.split(":", 2)
+          t -> d
+        }))
     } catch { case scala.util.control.NonFatal(_) => None }
+  }
+
+  /** [[digest]] of `table`'s marker file, if it has one: what a
+    * dependent generation records of its input. Any rebuild that
+    * changes the input's version, layout, schema, plan or own inputs
+    * changes it. */
+  private def markerDigest(spark: SparkSession,
+      table: String): Option[String] =
+    try Some(digest(new String(java.nio.file.Files.readAllBytes(
+      tableLocation(spark, table).resolve(AttachMarker)), "UTF-8")))
+    catch { case _: java.io.IOException => None }
+
+  /** The guards [[ensure]] resolves on this thread while a [[rewrite]]
+    * evaluates its build, innermost build first: inputs a build reads
+    * as driver-side values (a codebook collected into literals), which
+    * no catalog relation of its frames shows. */
+  private val resolvedGuards =
+    new ThreadLocal[List[scala.collection.mutable.Set[String]]] {
+      override def initialValue = Nil
+    }
+
+  /** Catalog tables `df`'s analyzed plan reads. */
+  private def catalogInputs(df: DataFrame): Seq[String] = {
+    import org.apache.spark.sql.execution.datasources.LogicalRelation
+    df.queryExecution.analyzed.collectWithSubqueries {
+      case r: LogicalRelation if r.catalogTable.isDefined =>
+        r.catalogTable.get.identifier.table
+    }
   }
 
   /** The marker's form of `s`'s layout. */
@@ -280,15 +314,15 @@ object ScaleOps {
     * partially-deleted location has no marker (it is deleted FIRST on
     * rebuild) and attach falls through to a clean rebuild. */
   private def markAttachable(spark: SparkSession, family: Family,
-      s: AttachSpec, plan: String): Unit = {
+      s: AttachSpec, plan: String, inputs: Seq[(String, String)]): Unit = {
     val loc = tableLocation(spark, s.table)
     val schema = spark.sessionState.catalog.getTableMetadata(
       org.apache.spark.sql.catalyst.TableIdentifier(s.table)).schema
     if (java.nio.file.Files.isDirectory(loc))
-      java.nio.file.Files.write(loc.resolve(AttachMarker), Seq(
+      java.nio.file.Files.write(loc.resolve(AttachMarker), (Seq(
         s"family=${family.tag}", s"version=${family.version}",
-        s"layout=${layoutOf(s)}", s"plan=$plan", s"schema=${schema.json}")
-        .asJava)
+        s"layout=${layoutOf(s)}", s"plan=$plan", s"schema=${schema.json}") ++
+        inputs.map { case (t, d) => s"input=$t:$d" }).asJava)
   }
 
   /** Marker delete — BEFORE any drop/delete/rewrite of the location, so
@@ -329,9 +363,10 @@ object ScaleOps {
   /** Attach a group of previously-persisted warehouse tables into this
     * session's catalog as external tables — all-or-nothing: true iff
     * EVERY member has a complete (`_SUCCESS`) directory whose marker
-    * records `family`'s version and the member's own layout, and every
-    * registration succeeded. On false the caller builds from scratch
-    * ([[ensure]] drops every member first, so a partially-registered
+    * records `family`'s version and the member's own layout, every
+    * input the marker records still has the marker it was built from,
+    * and every registration succeeded. On false the caller builds from
+    * scratch ([[ensure]] drops every member first, so a partially-registered
     * group is repaired by the build path). Registration is
     * metadata-only — the schema is the marker's, so no footer is read
     * and no Spark job runs — and the registered bucket/partition spec
@@ -343,6 +378,8 @@ object ScaleOps {
     val markers = specs.map { s =>
       Marker.read(spark, s.table).filter(m =>
         m.family.version == family.version && m.layout == layoutOf(s) &&
+          m.inputs.forall { case (t, d) =>
+            markerDigest(spark, t).contains(d) } &&
           java.nio.file.Files.exists(
             tableLocation(spark, s.table).resolve("_SUCCESS")))
     }
@@ -440,6 +477,8 @@ object ScaleOps {
     *
     *  - Fast path: the guard is in this session's catalog — one
     *    `tableExists`, the per-request cost of every `ensure*` caller.
+    *    Called while a build runs on this thread, the guard is also
+    *    recorded as an input of that build.
     *  - Otherwise attach the committed generation another session built
     *    (all-or-nothing, [[attachAll]] under `family`'s version).
     *  - Otherwise build under ONE PID-bearing lock keyed on the guard:
@@ -455,6 +494,7 @@ object ScaleOps {
   def ensure(spark: SparkSession, family: Family, tables: AttachSpec*)(
       build: => Seq[DataFrame]): String = {
     val guard = tables.last.table
+    resolvedGuards.get.headOption.foreach(_ += guard.toLowerCase)
     if (!spark.catalog.tableExists(guard) &&
         !attachAll(spark, tables, family))
       lockedWrite(spark, family, tables, attachAll(spark, tables, family),
@@ -540,13 +580,23 @@ object ScaleOps {
       graft.sources.ParquetStore.deleteRecursively(
         tableLocation(spark, s.table))
     }
-    val dfs = frames
+    // the inputs: the generations the frames read as catalog tables,
+    // and every guard resolved while they were built
+    val resolved = scala.collection.mutable.Set.empty[String]
+    resolvedGuards.set(resolved :: resolvedGuards.get)
+    val dfs = try frames finally resolvedGuards.set(resolvedGuards.get.tail)
     require(dfs.size == specs.size,
       s"${dfs.size} frames for ${specs.map(_.table).mkString(", ")}")
+    val inputs = (resolved.toSeq ++ dfs.flatMap(catalogInputs))
+      .map(_.toLowerCase).distinct.sorted
+      .filterNot(specs.map(_.table.toLowerCase).contains)
+      // an input without a marker (appended in place) records a digest
+      // no marker has: the next session rebuilds the dependent with it
+      .map(t => t -> markerDigest(spark, t).getOrElse("none"))
     specs.zip(dfs).foreach { case (s, df) =>
       val plan = planDigest(df)
       saveAs(df, s)
-      markAttachable(spark, family, s, plan)
+      markAttachable(spark, family, s, plan, inputs)
       bucketFilesMemo.remove(bucketFilesKey(spark, s.table))
     }
   }

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 
-import graft.functions.TextAnalyzer
+import graft.functions.{BoolQuery, TextAnalyzer}
 import graft.operators.{CacheScope, Fts, ScaleOps}
 
 /** Pins the flagship-search routing policy (r15 verdict #1): the switch
@@ -185,19 +185,20 @@ class FtsRouteSpec extends SparkSpec {
   }
 
   test("positional probe plans prune to the query terms' buckets") {
-    // the positional family must inherit the IN-list static bucket
-    // pruning — cost bounded by the terms' posting lists, not the index
-    for (probe <- Seq(
-        Fts.phraseSearchIndexed(spark, Sf0001, "hash join", "en", 10),
-        Fts.nearSearchIndexed(spark, Sf0001, "hash", "merge", 8, "en", 10),
-        Fts.booleanSearchIndexed(spark, Sf0001,
-          "(hash | merge) & !sort", "en", 10))) {
-      val plan = probe.queryExecution.executedPlan.toString
-      val sel = "SelectedBucketsCount: (\\d+) out of (\\d+)".r
-        .findFirstMatchIn(plan)
-      assert(sel.nonEmpty, s"no bucket pruning in plan:\n$plan")
-      assert(sel.get.group(1).toInt < sel.get.group(2).toInt)
-      assert(!plan.contains("documents.parquet"))
+    // the positional family probes like searchIndexed — cost bounded by
+    // the terms' posting lists, not the index
+    val idx = Fts.ensureIndex(spark, Sf0001)
+    val bool = "(hash | merge) & !sort"
+    for ((probe, terms) <- Seq(
+        Fts.phraseSearchIndexed(spark, Sf0001, "hash join", "en", 10) ->
+          TextAnalyzer.analyze("hash join"),
+        Fts.nearSearchIndexed(spark, Sf0001, "hash", "merge", 8, "en", 10) ->
+          TextAnalyzer.analyze("hash merge"),
+        Fts.booleanSearchIndexed(spark, Sf0001, bool, "en", 10) ->
+          BoolQuery.terms(BoolQuery.parse(bool)))) {
+      val want = bucketFileNames(idx, terms.distinct)
+      assert(inputFileNames(probe) == want)
+      assert(want.nonEmpty && want.size < 32)
     }
   }
 

@@ -227,9 +227,12 @@ class ScaleOpsSpec extends SparkSpec {
   /** Installs `src`'s committed files (marker included) as `dst`'s
     * location, with no catalog entry for `dst`: what a fresh session
     * sees of a generation another session built. */
-  private def installCopy(src: String, dst: String): Unit = {
+  private def installCopy(src: String, dst: String): Unit =
+    installCopyTo(location(src), location(dst))
+
+  private def installCopyTo(s: java.nio.file.Path,
+      d: java.nio.file.Path): Unit = {
     import java.nio.file.{Files, StandardCopyOption}
-    val (s, d) = (location(src), location(dst))
     Files.walk(s).forEach { p =>
       val q = d.resolve(s.relativize(p).toString)
       if (Files.isDirectory(p)) Files.createDirectories(q)
@@ -350,6 +353,56 @@ class ScaleOpsSpec extends SparkSpec {
     assert(spark.sessionState.catalog.getTableMetadata(TableIdentifier(t))
       .bucketSpec.map(_.numBuckets).contains(4))
     reset(src); reset(t)
+  }
+
+  test("ensure: a generation built over another family's table is " +
+      "refused and rebuilt once that input is rebuilt under a new " +
+      "version, whether it read the input as a table or as literals") {
+    import java.nio.file.Files
+    val (in, rel, lits) = ("graft_dep_in", "graft_dep_rel", "graft_dep_lit")
+    Seq(in, rel, lits).foreach(reset)
+    def ensureIn(version: Int, tag: String) =
+      ScaleOps.ensure(spark, ScaleOps.Family("dep_in", version),
+        ScaleOps.AttachSpec(in))(Seq(generation(tag)))
+    def ensureDependents(version: Int): Unit = {
+      ScaleOps.ensure(spark, ScaleOps.Family("dep_rel", 1),
+        ScaleOps.AttachSpec(rel))(
+        Seq(spark.table(ensureIn(version, "unused")).select("doc_id", "v")))
+      ScaleOps.ensure(spark, ScaleOps.Family("dep_lit", 1),
+        ScaleOps.AttachSpec(lits)) {
+        val tag = spark.table(ensureIn(version, "unused"))
+          .select("v").head().getString(0)
+        Seq(generation(tag))
+      }
+    }
+    // a fresh session's view: every table's files, no catalog entry
+    def forget(): Unit = Seq(in, rel, lits).foreach { t =>
+      val keep = Files.createTempDirectory("graft-dep")
+      installCopyTo(location(t), keep)
+      reset(t)
+      installCopyTo(keep, location(t))
+      graft.sources.ParquetStore.deleteRecursively(keep)
+    }
+    ensureIn(1, "gen1")
+    ensureDependents(1)
+    assert(contents(rel)._1 == Set("gen1") && contents(lits)._1 == Set("gen1"))
+    // unchanged input: everything attaches
+    forget()
+    val builds = ScaleOps.BuildTimer.count
+    ensureIn(1, "unused")
+    ensureDependents(1)
+    assert(ScaleOps.BuildTimer.count == builds)
+    assert(contents(rel)._1 == Set("gen1") && contents(lits)._1 == Set("gen1"))
+    // the input's builder changed and its version was bumped; the
+    // dependents' versions were not
+    forget()
+    ensureIn(2, "gen2")
+    assert(ScaleOps.BuildTimer.count == builds + 1)
+    ensureDependents(2)
+    assert(ScaleOps.BuildTimer.count == builds + 3,
+      "a dependent attached over its rebuilt input")
+    assert(contents(rel)._1 == Set("gen2") && contents(lits)._1 == Set("gen2"))
+    Seq(in, rel, lits).foreach(reset)
   }
 
   test("attach: registering a built group starts no Spark job and " +

@@ -171,6 +171,84 @@ class ServingPathSpec extends SparkSpec {
     } finally spark.sql(s"DROP TABLE IF EXISTS $t")
   }
 
+  /** (tasks, files read) of each scan of catalog table `table` that
+    * `body` ran and that read some but not all of its files: its probe
+    * scans. The scans come from the executed plans of `body`'s actions,
+    * and each one's tasks and files from its input RDD's partitions. */
+  private def probeScans(table: String)(body: => Unit): Seq[(Int, Int)] = {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.datasources.FilePartition
+    import org.apache.spark.sql.util.QueryExecutionListener
+    import scala.jdk.CollectionConverters._
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        plans.add(qe.executedPlan)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    // the count's marker job flushes the listener bus
+    try jobsFired(body) finally spark.listenerManager.unregister(listener)
+    def scans(p: SparkPlan): Seq[FileSourceScanExec] = p match {
+      case a: AdaptiveSparkPlanExec => scans(a.executedPlan)
+      case s: QueryStageExec => scans(s.plan)
+      case f: FileSourceScanExec => Seq(f)
+      case m: InMemoryTableScanExec => scans(m.relation.cachedPlan)
+      case other => (other.children ++ other.subqueries).flatMap(scans)
+    }
+    val all = tableFileNames(table)
+    plans.asScala.toSeq.flatMap(scans).flatMap { s =>
+      val rdd = s.inputRDDs().head
+      val files = rdd.partitions.toSeq.flatMap {
+        case fp: FilePartition => fp.files.map(_.toPath.getName).toSeq
+      }
+      Option.when(files.nonEmpty && files.forall(all) &&
+        files.size < all.size)((rdd.getNumPartitions, files.size))
+    }
+  }
+
+  test("warm probes of every module run at most one task per selected " +
+      "bucket file and fewer tasks than buckets") {
+    import graft.operators.{CacheScope, FuzzySearch, GraphAnn, IvfPq, MultiVector}
+    val idx = Fts.ensureIndex(spark, Sf0001)
+    val probes: Seq[(String, String, () => Unit)] = Seq(
+      ("phrase", idx, () =>
+        Fts.phraseSearchIndexed(spark, Sf0001, "hash join", "en", 10)),
+      ("boolean", idx, () => Fts.booleanSearchIndexed(spark, Sf0001,
+        "(hash | merge) & !sort", "en", 10)),
+      ("bm25ScoredIndexed", idx, () =>
+        Fts.bm25ScoredIndexed(spark, Sf0001, "hash join", "en")),
+      ("searchLangIndexed", Fts.ensureLangIndex(spark, Sf0001, "fr"), () =>
+        Fts.searchLangIndexed(spark, Sf0001, "le merge et la table", "fr",
+          10)),
+      ("fuzzySearch", idx, () => FuzzySearch.fuzzySearch(spark, Sf0001,
+        "hashe joim merg", "en", 10, 8)),
+      ("ivfPqScan", IvfPq.ensureCodesTable(spark, Sf0001, 10), () =>
+        IvfPq.ivfPqScan(spark, Sf0001, 13L, 20, 5, 10, 2)),
+      ("beamSearch", GraphAnn.ensureGraphIndex(spark, Sf0001, 8, 4), () =>
+        GraphAnn.beamSearch(spark, Sf0001, 42L, 0L, 8, 4, 2, 3, 5)),
+      ("maxSimPruned", Similarity.ensureIvfIndex(spark, Sf0001, 10), () =>
+        MultiVector.maxSimPruned(spark, Sf0001, 3L, 50, 100L, 10, 10))
+    ).map { case (name, t, df) => (name, t, () => {
+      df().collect()
+      CacheScope.release(spark)
+    }) }
+    for ((name, table, run) <- probes) {
+      run()
+      val buckets = spark.sessionState.catalog.getTableMetadata(
+        org.apache.spark.sql.catalyst.TableIdentifier(table))
+        .bucketSpec.get.numBuckets
+      val scans = probeScans(table)(run())
+      assert(scans.nonEmpty, s"$name: no probe scan of $table")
+      scans.foreach { case (tasks, files) =>
+        assert(tasks <= files && tasks < buckets,
+          s"$name: $tasks tasks for $files files of $buckets buckets")
+      }
+    }
+  }
+
   test("a missing query vector fails by name on both paths") {
     for (t <- Seq("-1", "10485760")) withBroadcastThreshold(t) {
       val e = intercept[IllegalArgumentException](

@@ -31,17 +31,25 @@ abstract class SparkSpec extends AnyFunSuite {
     * write assigns it: `pmod(hash(key), numBuckets)`. */
   def bucketFileNames(table: String, keys: Seq[Any]): Set[String] = {
     import org.apache.spark.sql.functions.{hash, lit, pmod}
-    val meta = spark.sessionState.catalog.getTableMetadata(
-      org.apache.spark.sql.catalyst.TableIdentifier(table))
-    val n = meta.bucketSpec.get.numBuckets
+    val n = tableMeta(table).bucketSpec.get.numBuckets
     val ids = keys.map(k => spark.range(1)
       .select(pmod(hash(lit(k)), lit(n))).head().getInt(0)).toSet
     val file = "part-.*_(\\d{5})\\.c\\d{3}.*\\.parquet".r
-    val listing = java.nio.file.Files.list(java.nio.file.Paths.get(meta.location))
+    tableFileNames(table).collect { case f @ file(id) if ids(id.toInt) => f }
+  }
+
+  /** Names of catalog table `table`'s data files. */
+  def tableFileNames(table: String): Set[String] = {
+    val listing = java.nio.file.Files.list(
+      java.nio.file.Paths.get(tableMeta(table).location))
     try listing.toArray.map(_.toString.split('/').last)
-      .collect { case f @ file(id) if ids(id.toInt) => f }.toSet
+      .filter(_.endsWith(".parquet")).toSet
     finally listing.close()
   }
+
+  private def tableMeta(table: String) =
+    spark.sessionState.catalog.getTableMetadata(
+      org.apache.spark.sql.catalyst.TableIdentifier(table))
 
   /** `body` with `spark.sql.autoBroadcastJoinThreshold` at `v` (`"-1"`
     * turns the driver-held lookups off), restored afterwards. */
