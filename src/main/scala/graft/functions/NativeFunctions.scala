@@ -20,5 +20,6 @@ object NativeFunctions {
     BqAsymScore.register(spark)
     QuantizeI8.register(spark)
     KMeansAssign.register(spark)
+    RequestParam.register(spark)
   }
 }

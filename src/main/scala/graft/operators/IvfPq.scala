@@ -49,19 +49,16 @@ object IvfPq {
   /** The centroid micro matrix [centroid_id][dim] driver-side —
     * nCentroids·64 BIGINTs, bounded. Requantizes the STORED trained
     * centroids (the coarse layer is the IVF family's — one source of
-    * truth) from [[Similarity.centroidFrame]]'s driver memo, so the
-    * probe/encode paths run no collect job for it: cv = cq/1e6 with
-    * |cq| ≪ 2⁵², so round(cv·1e6) recovers the trained integer centroid
-    * exactly, by the same column expression as every other micro path. */
+    * truth) from [[Similarity.centroidRows]]' driver memo, so the
+    * probe/encode paths run no job or query for it: cv = cq/1e6 with
+    * |cq| ≪ 2⁵², so cv·1e6 lies within far less than 0.5 of the
+    * trained integer centroid, and rounding recovers it exactly. */
   private def centroidMicro(spark: SparkSession, dir: String,
       nCentroids: Int): Array[Array[Long]] = {
     val idx = Similarity.ensureIvfIndex(spark, dir, nCentroids)
     val cm = Array.ofDim[Array[Long]](nCentroids)
-    Similarity.centroidFrame(spark, idx)
-      .select(col("centroid_id"), transform(col("cv"),
-        x => round(x.cast("double") * 1e6).cast("long")).as("qm"))
-      .collect()
-      .foreach(r => cm(r.getLong(0).toInt) = r.getSeq[Long](1).toArray)
+    Similarity.centroidRows(spark, idx).foreach(r => cm(r.getLong(0).toInt) =
+      r.getSeq[Double](1).map(x => math.round(x * 1e6)).toArray)
     cm
   }
 

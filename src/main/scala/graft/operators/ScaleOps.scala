@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{NumericType, StructType}
 import org.apache.hadoop.fs.{FileStatus, Path}
 import scala.jdk.CollectionConverters._
 
@@ -159,14 +159,15 @@ object ScaleOps {
     * files it selects. */
   def bucketProbe(spark: SparkSession, table: String,
       values: Seq[Any]): DataFrame = {
-    import org.apache.spark.sql.catalyst.expressions.{AttributeReference, Cast, Literal}
+    import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
+    import org.apache.spark.sql.catalyst.expressions.{AttributeReference, Cast, InSet, Literal}
     import org.apache.spark.sql.execution.datasources.{BucketingUtils, FileStatusCache, HadoopFsRelation, InMemoryFileIndex}
     import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
     val b = bucketFiles(spark, table)
     val keyAttr = AttributeReference(b.key, b.schema(b.key).dataType)()
-    val files = values.map(v => BucketingUtils.getBucketIdFromValue(keyAttr,
-        b.n, Cast(Literal(v), keyAttr.dataType).eval())).distinct
-      .flatMap(b.byBucket.getOrElse(_, Nil)).sortBy(_.getPath.getName)
+    val keys = values.map(v => Cast(Literal(v), keyAttr.dataType).eval())
+    val files = keys.map(BucketingUtils.getBucketIdFromValue(keyAttr, b.n, _))
+      .distinct.flatMap(b.byBucket.getOrElse(_, Nil)).sortBy(_.getPath.getName)
     // the index "lists" each selected file from the memoized statuses
     val listed = new FileStatusCache {
       private val byPath = files.map(f => f.getPath -> Array(f)).toMap
@@ -177,9 +178,15 @@ object ScaleOps {
     }
     val index = new InMemoryFileIndex(spark, files.map(_.getPath), Map.empty,
       Some(b.schema), listed)
+    // an InSet's code reads its keys by reference (a numeric isin inlines)
+    val keep = keyAttr.dataType match {
+      case _: NumericType => org.apache.spark.sql.GraftPlanBridge.column(
+        InSet(UnresolvedAttribute.quoted(b.key), keys.toSet))
+      case _ => col(b.key).isin(values: _*)
+    }
     spark.baseRelationToDataFrame(HadoopFsRelation(index, new StructType(),
         b.schema, None, new ParquetFileFormat, Map.empty)(spark))
-      .filter(col(b.key).isin(values: _*))
+      .filter(keep)
   }
 
   // --- Build-once / ATTACH-many persisted tables ------------------------

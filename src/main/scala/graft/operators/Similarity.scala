@@ -1,14 +1,15 @@
 package graft.operators
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
-import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Divide, Literal, Multiply, Round, Subtract}
+import org.apache.spark.sql.catalyst.util.{GenericArrayData, SQLOrderingUtil}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{ArrayType, DoubleType}
 
 import graft.Tables
+import graft.functions.VecDot
 
 /** Vector similarity search (SURVEY.md §2.3 — the reference's legacy
   * pgvector path, /root/reference/src/core/vector_store.py:263-319).
@@ -66,7 +67,7 @@ object Similarity {
       threshold: Double): DataFrame = {
     val qv = queryVectorOpt(spark, dir, qid)
     Tables.embeddings(spark, dir)
-      .filter(if (qv.isDefined) col("vec_id") =!= lit(qid) else lit(false))
+      .filter(if (qv.isDefined) col("vec_id") =!= param(qid) else lit(false))
       .select(col("vec_id"), col("label"),
         queryDist(col("embedding"), norm(col("embedding")),
           qv.getOrElse(Nil)).as("dist"))
@@ -447,13 +448,14 @@ object Similarity {
     val idx = ensureIvfIndexHier(spark, dir, k1, k2)
     val qv = queryVector(spark, dir, qid)
     // (1) coarse routing: k1 rows, nProbe1 survivors
-    val coarseIds = nearestCells(spark.table(s"${idx}_coarse"), qv, nProbe1)
+    val coarseIds = nearestCells(spark.table(s"${idx}_coarse").collect(), qv,
+      nProbe1)
     // (2) cells within the routed groups: pushable id ranges
     val inGroups = coarseIds.map(c =>
       col("centroid_id").between(c * k2, c * k2 + k2 - 1))
       .reduce(_ || _)
-    val cells =
-      nearestCells(spark.table(s"${idx}_cents").filter(inGroups), qv, nProbe)
+    val cells = nearestCells(spark.table(s"${idx}_cents").filter(inGroups)
+      .collect(), qv, nProbe)
     // (3) exact re-rank inside the probed cells' bucket files
     rerankCells(spark, idx, cells, qid, qv, k)()
   }
@@ -830,56 +832,56 @@ object Similarity {
     * memoized per (warehouse, index table name). The name embeds the
     * embeddings content hash, so a rewritten corpus mints a new key;
     * entries obey the flat fit's own driver bound. */
-  private val centroidMemo =
-    new DriverMemo[(String, String), (StructType, Seq[Row])](16)
+  private val centroidMemo = new DriverMemo[(String, String), Seq[Row]](16)
 
   /** Live centroid-memo entries (spec hook). */
   def centroidMemoSize: Int = centroidMemo.size
 
-  /** [[centroidMemo]]'s rows as a LocalRelation: a projection over it
-    * folds on the driver, so collecting it launches no job. */
-  private[operators] def centroidFrame(spark: SparkSession,
-      idx: String): DataFrame = {
+  private[operators] def centroidRows(spark: SparkSession,
+      idx: String): Seq[Row] = {
     val warehouse = spark.conf.get("spark.sql.warehouse.dir")
-    val (schema, rows) = centroidMemo.getOrCompute((warehouse, idx), idx) {
-      val cents = spark.table(s"${idx}_cents")
-        .select(col("centroid_id"), col("cv"), col("cn"))
-      val rows = cents.collect().toSeq
+    centroidMemo.getOrCompute((warehouse, idx), idx) {
+      val rows = spark.table(s"${idx}_cents")
+        .select(col("centroid_id"), col("cv"), col("cn")).collect().toSeq
       val cells = rows.map(_.getSeq[Double](1).length.toLong).sum
       require(cells <= Clustering.MaxDriverCentroidCells,
         s"${idx}_cents holds $cells centroid cells, past " +
           s"MaxDriverCentroidCells=${Clustering.MaxDriverCentroidCells}")
-      (cents.schema, rows)
+      rows
     }
-    spark.createDataFrame(rows.asJava, schema)
   }
 
-  /** Ids of the `n` rows of a (centroid_id, cv, cn) frame nearest to
-    * `qv` by round-6 cosine: the Catalyst distance expression, collected,
-    * then sorted on the driver in Spark's own (qdist asc, centroid_id
-    * asc) order — nulls first, SQLOrderingUtil's double compare — so
-    * the ids equal an orderBy/limit top-k job's. */
-  private def nearestCells(cents: DataFrame, qv: Seq[Double],
-      n: Int): Seq[Long] = {
-    cents.select(col("centroid_id"),
-        queryDist(col("cv"), col("cn"), qv).as("qdist"))
-      .collect()
-      .sortWith { (a, b) =>
-        val c = (a.isNullAt(1), b.isNullAt(1)) match {
-          case (false, false) =>
-            SQLOrderingUtil.compareDoubles(a.getDouble(1), b.getDouble(1))
-          case (x, y) => y.compare(x)
-        }
-        c < 0 || (c == 0 && a.getLong(0) < b.getLong(0))
+  /** Ids of the `n` rows of (centroid_id, cv, cn) nearest to `qv` by
+    * round-6 cosine, ranked on the driver with no Dataset: [[queryDist]]'s
+    * Catalyst tree, evaluated by `Expression.eval` over each row's cv
+    * and cn, then Spark's (qdist asc, centroid_id asc) order, nulls
+    * first, by SQLOrderingUtil's double compare. So the ids equal an
+    * orderBy/limit job's over the same rows. */
+  private[graft] def nearestCells(cents: collection.Seq[Row],
+      qv: Seq[Double], n: Int): Seq[Long] = {
+    val qdist = Round(Subtract(Literal(1.0), Divide(
+      VecDot(BoundReference(0, ArrayType(DoubleType), nullable = true),
+        Literal(new GenericArrayData(qv), ArrayType(DoubleType))),
+      Multiply(BoundReference(1, DoubleType, nullable = true),
+        Literal(qNorm(qv))))), Literal(6))
+    cents.map { r =>
+      val cv = r.getAs[collection.Seq[Any]]("cv")
+      r.getAs[Long]("centroid_id") -> qdist.eval(InternalRow(
+        if (cv == null) null else new GenericArrayData(cv), r.getAs[Any]("cn")))
+    }.sortWith { case ((ia, da), (ib, db)) =>
+      val c = (da, db) match {
+        case (x: Double, y: Double) => SQLOrderingUtil.compareDoubles(x, y)
+        case _ => (db == null).compare(da == null)
       }
-      .take(n).map(_.getLong(0)).toSeq
+      c < 0 || (c == 0 && ia < ib)
+    }.take(n).map(_._1).toSeq
   }
 
   /** The query's `nProbe` nearest cells of flat IVF index `idx`, ranked
-    * on the driver from [[centroidFrame]] — no job once memoized. */
+    * on the memoized centroid rows ([[nearestCells]]): no job, no query. */
   def probeCells(spark: SparkSession, idx: String, qv: Seq[Double],
       nProbe: Int): Seq[Long] =
-    nearestCells(centroidFrame(spark, idx), qv, nProbe)
+    nearestCells(centroidRows(spark, idx), qv, nProbe)
 
   /** The embeddings generation's vectors by vec_id, held on the driver
     * per (dir, content hash) — filled by one read of the fixture files
@@ -937,13 +939,18 @@ object Similarity {
     qv.get
   }
 
+  /** The norm of `qv`, summed left to right exactly as `norm` sums it. */
+  private def qNorm(qv: Seq[Double]): Double =
+    math.sqrt(qv.foldLeft(0.0)((acc, x) => acc + x * x))
+
+  /** `v` bound by reference ([[graft.functions.RequestParam]]). */
+  private def param(v: Any): Column = call_function("graft_param", lit(v))
+
   /** Round-6 cosine distance of `vec` (norm `nrm`) to the driver-held
-    * query vector `qv`, whose norm is summed left to right on the
-    * driver exactly as `norm` sums it in Spark. */
-  private def queryDist(vec: Column, nrm: Column, qv: Seq[Double]): Column = {
-    val qn = math.sqrt(qv.foldLeft(0.0)((acc, x) => acc + x * x))
-    round(lit(1.0) - dot(vec, typedLit(qv)) / (nrm * lit(qn)), 6)
-  }
+    * query vector `qv`; the vector and its norm reach generated code by
+    * reference. */
+  private def queryDist(vec: Column, nrm: Column, qv: Seq[Double]): Column =
+    round(lit(1.0) - dot(vec, typedLit(qv)) / (nrm * param(qNorm(qv))), 6)
 
   /** Exact re-rank inside the probed `cells` of IVF index table `idx`:
     * read only their bucket files ([[ScaleOps.bucketProbe]]), apply
@@ -953,7 +960,7 @@ object Similarity {
       cells: Seq[Long], qid: Long, qv: Seq[Double], k: Int)(
       restrict: DataFrame => DataFrame = identity): DataFrame =
     restrict(ScaleOps.bucketProbe(spark, idx, cells))
-      .filter(col("vec_id") =!= lit(qid))
+      .filter(col("vec_id") =!= param(qid))
       .select(col("vec_id"), col("label"), col("centroid_id"),
         queryDist(col("embedding"), col("nrm"), qv).as("dist"))
       .orderBy(col("dist").asc, col("vec_id").asc)
@@ -966,11 +973,11 @@ object Similarity {
     *
     * Probe path: the query vector comes from [[queryVector]] (driver-held
     * within the broadcast bound, else a one-row lookup job); the nProbe
-    * cell ids are ranked on the driver ([[probeCells]], no job) and
-    * only their bucket files are read ([[ScaleOps.bucketProbe]], one
-    * task per file — spec-asserted in SimilaritySpec). A warm request
-    * is the one result job. No assignment recompute, no join back to
-    * the source table.
+    * cell ids are ranked on the driver ([[probeCells]], no job, no
+    * query) and only their bucket files are read
+    * ([[ScaleOps.bucketProbe]], one task per file). A warm request is
+    * the one result job and compiles no code (request values are bound
+    * by reference). No assignment recompute, no join back to the source.
     */
   def ivfTopK(
       spark: SparkSession, dir: String, qid: Long, k: Int,
@@ -986,9 +993,9 @@ object Similarity {
     * pgvector's ivfflat applies the WHERE inside the probed lists):
     * probe the query's nProbe cells, apply the label predicate to the
     * surviving rows, exact re-rank, top-k. PRE-FILTER semantics inside
-    * the probed cells — the filter pushes into the bucket-pruned index
-    * scan (label rides in-row, so the scan reads no extra columns and
-    * Parquet gets both the bucket prune AND the pushed label filter);
+    * the probed cells' files, in the scan's stage (label rides in-row;
+    * bound by reference, so it is not pushed to Parquet and a new label
+    * compiles no code);
     * the recall caveat is the standard one: a highly selective filter
     * can starve k inside nProbe cells, and the remedy is probing wider,
     * exactly as in pgvector. Deterministic: same rounding/tiebreaks as
@@ -998,7 +1005,7 @@ object Similarity {
     val idx = ensureIvfIndex(spark, dir, nCentroids)
     val qv = queryVector(spark, dir, qid)
     rerankCells(spark, idx, probeCells(spark, idx, qv, nProbe), qid, qv,
-      k)(_.filter(col("label") === lit(label)))
+      k)(_.filter(col("label") === param(label)))
   }
 
   def ivfTopKFilteredOracleSql(qid: Long, label: Int, k: Int,

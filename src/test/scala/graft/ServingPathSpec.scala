@@ -2,13 +2,14 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 
-import graft.operators.{Fts, Similarity}
+import graft.operators.{Fts, Hybrid, Relational, Similarity}
 
 /** The serving path's driver-held lookups (query vectors, the FTS term
   * dictionary) and bucket-file probes: both sides of the broadcast
   * bound answer bit-identically, a warm request fires one job whose
-  * scan has one task per selected bucket file, and a missing query
-  * vector fails by name. */
+  * scan has one task per selected bucket file and compiles no code,
+  * request values bound by reference give the same rows interpreted
+  * and compiled, and a missing query vector fails by name. */
 class ServingPathSpec extends SparkSpec {
 
   private def result(df: => DataFrame): (String, Seq[Seq[Any]]) = {
@@ -256,5 +257,115 @@ class ServingPathSpec extends SparkSpec {
       assert(e.getMessage.contains("999999") &&
         e.getMessage.contains(Sf0001), e.getMessage)
     }
+  }
+
+  /** Classes Spark's code generator compiled (cache misses) in `body`. */
+  private def compiles(body: => Unit): Long = {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    body
+    CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+  }
+
+  /** (vec_id, label) of every embedding, by vec_id. */
+  private lazy val vectors: IndexedSeq[(Long, Int)] =
+    Tables.embeddings(spark, Sf0001).select("vec_id", "label")
+      .orderBy("vec_id").collect().map(r => (r.getLong(0), r.getInt(1)))
+      .toIndexedSeq
+
+  private lazy val ivfCells = Similarity.autoNCentroids(vectors.size.toLong)
+
+  test("warm requests compile nothing: 20 distinct requests of each " +
+      "serving class add no generated class") {
+    import org.apache.spark.sql.functions.{col, count, desc}
+    // one or two of the 21 most frequent English terms per query
+    val terms = spark.table(Fts.ensureIndex(spark, Sf0001))
+      .filter(col("lang") === "en").groupBy("term").agg(count("*").as("df"))
+      .orderBy(desc("df"), col("term")).limit(21).collect()
+      .map(_.getString(0)).toIndexedSeq
+    def text(i: Int) =
+      if (i % 2 == 0) terms(i / 2) else s"${terms(i / 2)} ${terms(i / 2 + 1)}"
+    def vec(i: Int) = vectors(i * 7)
+    val index = Seq("graft.fts.route" -> "index")
+    val classes: Seq[(String, Seq[(String, String)], Int => DataFrame)] = Seq(
+      ("knnCosine", Nil,
+        i => Similarity.knnCosine(spark, Sf0001, vec(i)._1, 10, 0.95)),
+      ("ivfTopKAuto", Nil,
+        i => Similarity.ivfTopKAuto(spark, Sf0001, vec(i)._1, 10)),
+      ("ivfTopKFiltered", Nil, i => Similarity.ivfTopKFiltered(spark,
+        Sf0001, vec(i)._1, vec(i)._2, 10, ivfCells, 2)),
+      ("rrfSearch (scan route)", Seq("graft.fts.route" -> "scan"),
+        i => Hybrid.rrfSearch(spark, Sf0001, text(i), "en", vec(i)._1, 20,
+          60, 10)),
+      ("rrfSearch (index route)", index,
+        i => Hybrid.rrfSearch(spark, Sf0001, text(i), "en", vec(i)._1, 20,
+          60, 10)),
+      ("searchAuto (index route)", index,
+        i => Fts.searchAuto(spark, Sf0001, text(i), "en", 10)),
+      ("searchBm25Auto", Nil,
+        i => Fts.searchBm25Auto(spark, Sf0001, text(i), "en", 10)),
+      ("paginateDocuments", Nil,
+        i => Relational.paginateDocuments(spark, Sf0001, 50, 7 * i)))
+    val counts = classes.map { case (name, conf, request) =>
+      withConf(conf: _*) {
+        (0 until 20).foreach(request(_).collect())
+        name -> compiles((20 until 40).foreach(request(_).collect()))
+      }
+    }
+    assert(counts.forall(_._2 == 0),
+      s"compilations over 20 warm requests: $counts")
+  }
+
+  test("vector requests return the same rows interpreted and compiled, " +
+      "and two requests in a row return their own rows") {
+    val label = vectors.toMap
+    val requests: Seq[(String, Long => DataFrame)] = Seq(
+      "knnCosine" -> (q => Similarity.knnCosine(spark, Sf0001, q, 10, 2.0)),
+      "ivfTopKAuto" -> (q => Similarity.ivfTopKAuto(spark, Sf0001, q, 10)),
+      "ivfTopKFiltered" -> (q => Similarity.ivfTopKFiltered(spark, Sf0001,
+        q, label(q), 10, ivfCells, 3)),
+      "ivfTopKHier" ->
+        (q => Similarity.ivfTopKHier(spark, Sf0001, q, 10, 4, 4, 2, 2)),
+      "rrfSearch" -> (q =>
+        Hybrid.rrfSearch(spark, Sf0001, "hash join", "en", q, 20, 60, 10)))
+    val interpreted = Seq("spark.sql.codegen.factoryMode" -> "NO_CODEGEN",
+      "spark.sql.codegen.wholeStage" -> "false")
+    val compiled = Seq("spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY",
+      "spark.sql.codegen.fallback" -> "false")
+    for ((name, request) <- requests) {
+      val want = Seq(0L, 7L, 8L, 499L).map(q =>
+        q -> withConf(interpreted: _*)(result(request(q)))).toMap
+      for (q <- Seq(0L, 499L))
+        assert(withConf(compiled: _*)(result(request(q))) == want(q),
+          s"$name qid=$q")
+      val (a, b) = withConf(compiled: _*)(
+        (result(request(7L)), result(request(8L))))
+      assert(a == want(7L) && b == want(8L) && a != b, name)
+    }
+  }
+
+  test("a numeric-key bucket probe pushes its key list to the scan as " +
+      "In; a string-key probe keeps its isin filter") {
+    import graft.operators.GraphAnn
+    import graft.operators.ScaleOps.bucketProbe
+    // (the plan's filter, the scan's pushed filters)
+    def filters(df: DataFrame) = {
+      val plan = df.queryExecution.executedPlan.toString
+      val pushed = "PushedFilters: \\[(.*?)\\], ReadSchema".r
+      (plan.linesIterator.find(_.contains("Filter ")).getOrElse(plan),
+        pushed.findFirstMatchIn(plan).map(_.group(1)).getOrElse(plan))
+    }
+    val (ivf, ivfPushed) =
+      filters(Similarity.ivfTopK(spark, Sf0001, 42L, 10, 10, 2))
+    assert(ivf.contains("centroid_id") && ivf.contains("INSET"), ivf)
+    assert(ivfPushed.contains("In(centroid_id, ["), ivfPushed)
+    val edges = GraphAnn.ensureGraphIndex(spark, Sf0001, 8, 4)
+    val (graph, graphPushed) = filters(bucketProbe(spark, edges, Seq(1L, 2L)))
+    assert(graph.contains("src#") && graph.contains("INSET 1, 2"), graph)
+    assert(graphPushed.contains("In(src, [1,2])"), graphPushed)
+    val (fts, ftsPushed) = filters(bucketProbe(spark,
+      Fts.ensureIndex(spark, Sf0001), Seq("hash", "join")))
+    assert(fts.contains("term#") && fts.contains(" IN (hash,join)"), fts)
+    assert(ftsPushed.contains("In(term, [hash,join])"), ftsPushed)
   }
 }

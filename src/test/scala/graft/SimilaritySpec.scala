@@ -276,6 +276,39 @@ class SimilaritySpec extends SparkSpec {
     }
   }
 
+  test("the driver ranker returns a Spark orderBy/limit ranking's ids " +
+      "for every query vector, a null-norm centroid included") {
+    import org.apache.spark.sql.expressions.Window
+    val idx = Similarity.ensureIvfIndex(spark, Sf0001, 10)
+    val stored = spark.table(s"${idx}_cents")
+      .select($"centroid_id", $"cv", $"cn")
+    val cents = stored.union(stored.limit(1).select(lit(99L), $"cv",
+      lit(null).cast("double")))
+    val rows = cents.collect().toSeq
+    val queries = Tables.embeddings(spark, Sf0001)
+      .select($"vec_id", $"embedding".cast("array<double>").as("qv"))
+    // every query's top 5 in one job: a row_number over Spark's
+    // (qdist asc, centroid_id asc) sort, whose prefixes are the
+    // orderBy/limit top-n
+    val spark5 = queries.crossJoin(cents)
+      .select($"vec_id", $"centroid_id",
+        round(lit(1.0) - Similarity.dot($"cv", $"qv") /
+          ($"cn" * Similarity.norm($"qv")), 6).as("qdist"))
+      .withColumn("rn", row_number().over(Window.partitionBy("vec_id")
+        .orderBy($"qdist".asc, $"centroid_id".asc)))
+      .filter($"rn" <= 5)
+      .collect().groupBy(_.getLong(0))
+      .map { case (q, rs) => q -> rs.sortBy(_.getInt(3)).map(_.getLong(1)) }
+    val qvs = queries.collect()
+    assert(qvs.length == spark5.size && qvs.length > 100)
+    for (q <- qvs; n <- Seq(1, 2, 5)) {
+      val qid = q.getLong(0)
+      assert(Similarity.nearestCells(rows, q.getSeq[Double](1), n) ==
+        spark5(qid).take(n).toSeq, s"qid=$qid n=$n")
+    }
+    assert(spark5.values.forall(_.head == 99L), "null distances sort first")
+  }
+
   test("rewriting the embeddings mints a new index generation whose " +
       "probe cells come from the new centroids") {
     import java.nio.file.Files

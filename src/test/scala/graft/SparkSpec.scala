@@ -51,14 +51,20 @@ abstract class SparkSpec extends AnyFunSuite {
     spark.sessionState.catalog.getTableMetadata(
       org.apache.spark.sql.catalyst.TableIdentifier(table))
 
+  /** `body` with the session settings `kv`, each restored afterwards. */
+  def withConf[A](kv: (String, String)*)(body: => A): A = {
+    val prev = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kv.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally prev.foreach { case (k, p) =>
+      p.fold(spark.conf.unset(k))(spark.conf.set(k, _))
+    }
+  }
+
   /** `body` with `spark.sql.autoBroadcastJoinThreshold` at `v` (`"-1"`
     * turns the driver-held lookups off), restored afterwards. */
-  def withBroadcastThreshold[A](v: String)(body: => A): A = {
-    val key = "spark.sql.autoBroadcastJoinThreshold"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, v)
-    try body finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
-  }
+  def withBroadcastThreshold[A](v: String)(body: => A): A =
+    withConf("spark.sql.autoBroadcastJoinThreshold" -> v)(body)
 
   /** File names a frame's scans read. */
   def inputFileNames(df: org.apache.spark.sql.DataFrame): Set[String] =
