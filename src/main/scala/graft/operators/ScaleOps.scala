@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{NumericType, StructType}
+import org.apache.spark.sql.types.StructType
 import org.apache.hadoop.fs.{FileStatus, Path}
 import scala.jdk.CollectionConverters._
 
@@ -178,15 +178,11 @@ object ScaleOps {
     }
     val index = new InMemoryFileIndex(spark, files.map(_.getPath), Map.empty,
       Some(b.schema), listed)
-    // an InSet's code reads its keys by reference (a numeric isin inlines)
-    val keep = keyAttr.dataType match {
-      case _: NumericType => org.apache.spark.sql.GraftPlanBridge.column(
-        InSet(UnresolvedAttribute.quoted(b.key), keys.toSet))
-      case _ => col(b.key).isin(values: _*)
-    }
+    // InSet: its code reads the keys by reference; pushed as In(key, ...)
     spark.baseRelationToDataFrame(HadoopFsRelation(index, new StructType(),
         b.schema, None, new ParquetFileFormat, Map.empty)(spark))
-      .filter(keep)
+      .filter(org.apache.spark.sql.GraftPlanBridge.column(
+        InSet(UnresolvedAttribute.quoted(b.key), keys.toSet)))
   }
 
   // --- Build-once / ATTACH-many persisted tables ------------------------

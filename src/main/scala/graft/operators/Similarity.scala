@@ -1,15 +1,15 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftPlanBridge, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BoundReference, Divide, Literal, Multiply, Round, Subtract}
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Divide, Expression, Literal, Multiply, Round, Subtract}
 import org.apache.spark.sql.catalyst.util.{GenericArrayData, SQLOrderingUtil}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DoubleType}
 
 import graft.Tables
-import graft.functions.VecDot
+import graft.functions.{RequestParam, VecDot}
 
 /** Vector similarity search (SURVEY.md §2.3 — the reference's legacy
   * pgvector path, /root/reference/src/core/vector_store.py:263-319).
@@ -851,19 +851,15 @@ object Similarity {
     }
   }
 
-  /** Ids of the `n` rows of (centroid_id, cv, cn) nearest to `qv` by
-    * round-6 cosine, ranked on the driver with no Dataset: [[queryDist]]'s
-    * Catalyst tree, evaluated by `Expression.eval` over each row's cv
-    * and cn, then Spark's (qdist asc, centroid_id asc) order, nulls
-    * first, by SQLOrderingUtil's double compare. So the ids equal an
-    * orderBy/limit job's over the same rows. */
+  /** Ids of the `n` rows of (centroid_id, cv, cn) nearest to `qv`,
+    * ranked on the driver with no Dataset: [[cosDist]] evaluated over
+    * each row's cv and cn, then Spark's (qdist asc, centroid_id asc)
+    * order, nulls first, by SQLOrderingUtil's double compare; so the ids
+    * equal an orderBy/limit job's over the same rows. */
   private[graft] def nearestCells(cents: collection.Seq[Row],
       qv: Seq[Double], n: Int): Seq[Long] = {
-    val qdist = Round(Subtract(Literal(1.0), Divide(
-      VecDot(BoundReference(0, ArrayType(DoubleType), nullable = true),
-        Literal(new GenericArrayData(qv), ArrayType(DoubleType))),
-      Multiply(BoundReference(1, DoubleType, nullable = true),
-        Literal(qNorm(qv))))), Literal(6))
+    val qdist = cosDist(BoundReference(0, ArrayType(DoubleType), nullable = true),
+      BoundReference(1, DoubleType, nullable = true), qv)
     cents.map { r =>
       val cv = r.getAs[collection.Seq[Any]]("cv")
       r.getAs[Long]("centroid_id") -> qdist.eval(InternalRow(
@@ -939,18 +935,24 @@ object Similarity {
     qv.get
   }
 
-  /** The norm of `qv`, summed left to right exactly as `norm` sums it. */
-  private def qNorm(qv: Seq[Double]): Double =
-    math.sqrt(qv.foldLeft(0.0)((acc, x) => acc + x * x))
-
   /** `v` bound by reference ([[graft.functions.RequestParam]]). */
   private def param(v: Any): Column = call_function("graft_param", lit(v))
 
-  /** Round-6 cosine distance of `vec` (norm `nrm`) to the driver-held
-    * query vector `qv`; the vector and its norm reach generated code by
-    * reference. */
+  /** Round-6 cosine distance of vector `v` (norm `n`) to the driver-held
+    * `qv`, whose norm is summed left to right exactly as `norm` sums it;
+    * both reach generated code by reference. Queried by [[queryDist]],
+    * evaluated on the driver by [[nearestCells]]. */
+  private def cosDist(v: Expression, n: Expression,
+      qv: Seq[Double]): Expression =
+    Round(Subtract(Literal(1.0), Divide(
+      VecDot(v, Literal(new GenericArrayData(qv),
+        ArrayType(DoubleType, containsNull = false))),
+      Multiply(n, RequestParam(math.sqrt(qv.foldLeft(0.0)((acc, x) =>
+        acc + x * x)), DoubleType)))), Literal(6))
+
   private def queryDist(vec: Column, nrm: Column, qv: Seq[Double]): Column =
-    round(lit(1.0) - dot(vec, typedLit(qv)) / (nrm * param(qNorm(qv))), 6)
+    GraftPlanBridge.column(cosDist(GraftPlanBridge.expression(vec),
+      GraftPlanBridge.expression(nrm), qv))
 
   /** Exact re-rank inside the probed `cells` of IVF index table `idx`:
     * read only their bucket files ([[ScaleOps.bucketProbe]]), apply

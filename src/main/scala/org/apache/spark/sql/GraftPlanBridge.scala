@@ -13,8 +13,10 @@ object GraftPlanBridge {
   def dataFrame(spark: SparkSession, plan: LogicalPlan): DataFrame =
     ClassicDataset.ofRows(spark.asInstanceOf[ClassicSession], plan)
 
-  /** A Column over a Catalyst expression with no public builder. */
+  /** Column <-> Catalyst expression, for expressions with no public
+    * builder (the expression of a Column is unresolved). */
   def column(e: Expression): Column = ExpressionUtils.column(e)
+  def expression(c: Column): Expression = ExpressionUtils.expression(c)
 
   /** The session's `private[sql]` UUID — a stable string identity for
     * JVM-static memo maps (StreamBridge) that must be keyed per session

@@ -95,8 +95,9 @@ class FtsSpec extends SparkSpec {
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     val ordered = terms.sortBy(t => (dfs(t), t))
     val plan = rf.queryExecution.optimizedPlan.toString
-    val pos = ordered.map(t => t -> plan.indexOf(s"= $t)"))
-    pos.foreach { case (t, p) => assert(p >= 0, s"term $t not in plan") }
+    val pos = ordered.map(t => t -> s"INSET $t\\b".r.findFirstMatchIn(plan)
+      .fold(-1)(_.start))
+    pos.foreach { case (t, p) => assert(p >= 0, s"term $t not in plan\n$plan") }
     assert(pos.map(_._2) == pos.map(_._2).sorted,
       s"posting scans out of df order: $pos\n$plan")
   }

@@ -344,8 +344,8 @@ class ServingPathSpec extends SparkSpec {
     }
   }
 
-  test("a numeric-key bucket probe pushes its key list to the scan as " +
-      "In; a string-key probe keeps its isin filter") {
+  test("a bucket probe filters its key list with an InSet and pushes it " +
+      "to the scan as In, for numeric and string keys") {
     import graft.operators.GraphAnn
     import graft.operators.ScaleOps.bucketProbe
     // (the plan's filter, the scan's pushed filters)
@@ -365,7 +365,7 @@ class ServingPathSpec extends SparkSpec {
     assert(graphPushed.contains("In(src, [1,2])"), graphPushed)
     val (fts, ftsPushed) = filters(bucketProbe(spark,
       Fts.ensureIndex(spark, Sf0001), Seq("hash", "join")))
-    assert(fts.contains("term#") && fts.contains(" IN (hash,join)"), fts)
+    assert(fts.contains("term#") && fts.contains("INSET hash, join"), fts)
     assert(ftsPushed.contains("In(term, [hash,join])"), ftsPushed)
   }
 }
