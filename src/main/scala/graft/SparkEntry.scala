@@ -50,15 +50,15 @@ object SparkEntry {
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // §2.2 full-text search
     // ROUTED (r15 verdict #1): probes the persisted term-bucketed index
-    // when built or past the corpus threshold — the reference's GIN
-    // plan shape — else the zero-exchange scan; identical frames
-    "fts_topk" -> ((s, d) => Fts.searchAuto(s, d, "hash join merge", "en", 10)),
+    // past the corpus threshold — the reference's GIN plan shape — else
+    // the zero-exchange scan; one scorer over either posting source
+    "fts_topk" -> ((s, d) => Fts.search(s, d, "hash join merge", "en", 10)),
     // language-keyed analysis: French stopwords strip the query's
     // function words; zh runs the bare-tokenization (PG `simple`) path
     "fts_topk_fr" -> ((s, d) =>
-      Fts.searchLangAuto(s, d, "le merge et la table", "fr", 10)),
+      Fts.searchLang(s, d, "le merge et la table", "fr", 10)),
     "fts_topk_zh" -> ((s, d) =>
-      Fts.searchLangAuto(s, d, "the stream filter", "zh", 10)),
+      Fts.searchLang(s, d, "the stream filter", "zh", 10)),
     // analyzer-matrix round-trip: per-DETECTED-lang index ∘ per-lang
     // query over the mixed corpus; misroutes visible via labeled_lang
     "fts_lang_roundtrip" -> ((s, d) =>
@@ -66,32 +66,32 @@ object SparkEntry {
     // ts_rank_cd normalization bitmask beyond the hardwired 32:
     // 33 = (1 | 32) → log-doc-length damping then rank/(rank+1)
     "fts_topk_norm" -> ((s, d) =>
-      Fts.searchNormalizedAuto(s, d, "hash join merge", "en", 10, 33)),
+      Fts.searchNormalized(s, d, "hash join merge", "en", 10, 33)),
     "fts_topk_cd" -> ((s, d) =>
-      Fts.searchCoverDensityAuto(s, d, "hash join merge", "en", 10)),
+      Fts.searchCoverDensity(s, d, "hash join merge", "en", 10)),
     // stemmed search: "merging streams" matches docs containing the base
     // forms "merge"/"stream" (the reference's plainto_tsquery behavior)
     "fts_topk_stemmed" -> ((s, d) =>
-      Fts.searchStemmedAuto(s, d, "merging streams", "en", 10)),
-    "fts_phrase" -> ((s, d) => Fts.phraseSearchAuto(s, d, "hash join", "en", 10)),
+      Fts.searchStemmed(s, d, "merging streams", "en", 10)),
+    "fts_phrase" -> ((s, d) => Fts.phraseSearch(s, d, "hash join", "en", 10)),
     // full boolean algebra (& | ! parens) — one AST emits both engines
     "fts_boolean" -> ((s, d) =>
-      Fts.booleanSearchAuto(s, d, "(hash | merge) & !sort", "en", 10)),
+      Fts.booleanSearch(s, d, "(hash | merge) & !sort", "en", 10)),
     // websearch_to_tsquery: quoted phrase, bare OR, glued -negation
     "fts_websearch" -> ((s, d) =>
-      Fts.websearchSearchAuto(s, d, "\"hash join\" OR merge -sort", "en", 10)),
+      Fts.websearchSearch(s, d, "\"hash join\" OR merge -sort", "en", 10)),
     // proximity search (NEAR/8, unordered) + the tsquery_phrase
     // distance operator `hash <2> merge` (b exactly n after a)
     "fts_near" -> ((s, d) =>
-      Fts.nearSearchAuto(s, d, "hash", "merge", 8, "en", 10)),
+      Fts.nearSearch(s, d, "hash", "merge", 8, "en", 10)),
     "fts_phrase_dist" -> ((s, d) =>
-      Fts.phraseDistSearchAuto(s, d, "hash", "merge", 2, "en", 10)),
+      Fts.phraseDistSearch(s, d, "hash", "merge", 2, "en", 10)),
     // Okapi BM25 (k1=1.2, b=0.75), OR-match — the ts_rank alternative
-    "fts_bm25" -> ((s, d) => Fts.searchBm25Auto(s, d, "hash join merge", "en", 10)),
+    "fts_bm25" -> ((s, d) => Fts.searchBm25(s, d, "hash join merge", "en", 10)),
     // the full endpoint parameter surface composed in one query:
     // collection scope + string-coerced metadata filter + min_score
     "fts_endpoint" -> ((s, d) =>
-      Fts.searchEndpointAuto(s, d, "hash join merge", "en", "80", 0.79, 10)),
+      Fts.searchEndpoint(s, d, "hash join merge", "en", "80", 0.79, 10)),
     "fts_termstats" -> ((s, d) => Fts.termStats(s, d)),
     // prefix search (the tsquery 'pre:*' analog) over the term index
     "fts_prefix" -> ((s, d) => Fts.prefixSearch(s, d, "ha", 10)),
@@ -126,7 +126,7 @@ object SparkEntry {
     // posting-length decade histogram (index health introspection)
     "fts_df_histogram" -> ((s, d) => Fts.dfHistogram(s, d)),
     // facet panel: (lang, source) doc counts over the AND-match set
-    "fts_facets" -> ((s, d) => Fts.facetedSearchAuto(s, d, "hash join")),
+    "fts_facets" -> ((s, d) => Fts.facetedSearch(s, d, "hash join")),
     // TF-IDF keyword extraction: top-3 characteristic terms per doc
     "keywords_tfidf" -> ((s, d) => Fts.keywordsTfidf(s, d, 3)),
     // ts_headline analog: KWIC snippets around the first term hit

@@ -56,8 +56,9 @@ object Fts {
     * bucketed by term"). The tokenize+group build runs ONCE per corpus;
     * index-shaped workloads (term statistics, multi-query batch search)
     * probe it, and a term IN-list probe statically prunes to the terms'
-    * buckets. Single ad-hoc searches keep the scan-local zero-exchange
-    * path in `search` — strictly better when nothing is amortized. */
+    * buckets. Below the routing threshold a single ad-hoc search reads
+    * the scan-local zero-exchange posting source instead ([[postings]]) —
+    * strictly better when nothing is amortized. */
   /** Catalog name of the persisted index for `dir` — computable
     * without building (the routing policy checks existence). */
   def indexName(dir: String): String =
@@ -91,44 +92,17 @@ object Fts {
     table
   }
 
-  /** F2–F7: AND-match + rank + top-k, scoped to one language — the
-    * SMALL-CORPUS route of [[searchAuto]].
-    *
-    * Shuffle-free formulation: with the query terms known up front, each
-    * document's per-term tf is computable scan-locally (array filter over
-    * the analyzed tokens) — the plan is scan → project → filter →
-    * TakeOrderedAndProject with ZERO exchanges. This wins while the
-    * corpus is small enough that the scan is a task wave; past the
-    * routing threshold a per-query corpus tokenize loses to the
-    * posting-list probe ([[searchIndexed]]) at an ever-growing rate —
-    * the reference's own GIN plan is the probe, and [[searchAuto]]
-    * routes accordingly (r15 verdict #1).
-    */
+  /** F2–F7: AND-match + rank + top-k, scoped to one language: the
+    * query's terms from the [[postings]] source (a scan of the
+    * collection's documents or a probe of the persisted index), the
+    * ts_rank score over their tf columns, TakeOrderedAndProject. */
   def search(
       spark: SparkSession, dir: String, query: String, lang: String,
       k: Int): DataFrame = {
     val terms = TextAnalyzer.analyze(query).distinct
     require(terms.nonEmpty, "query analyzes to no terms")
-    // explode(array(...)) barrier: materialize the token array once per
-    // row so the per-term filters don't re-run the tokenizer.
-    // F6 scope reads the partition-by-collection layout: the lang
-    // filter is a PartitionFilter (directory pruning), not just a
-    // row-group PushedFilter — the SURVEY §4.3 physical contract.
-    val withToks = Collections.scopedDocuments(spark, dir, lang)
-      .select(col("doc_id"),
-        explode(array(TextAnalyzer.tokens(col("text")))).as("toks"))
-    val tfCols = terms.indices.map(i =>
-      size(filter(col("toks"), x => x === lit(terms(i)))).as(s"tf$i"))
-    val s = terms.indices
-      .map(i => log(lit(1.0) + col(s"tf$i")))
-      .reduce(_ + _)
-    withToks
-      .select(col("doc_id") +: tfCols: _*)
-      .filter(terms.indices.map(i => col(s"tf$i") > 0).reduce(_ && _)) // F3
-      .select(col("doc_id"),
-        round(s / (lit(1.0) + s), 6).as("score"))
-      .orderBy(col("score").desc, col("doc_id").asc) // deterministic tiebreak
-      .limit(k)
+    topK(andScored(postings(spark, dir, terms, plain, Some(lang),
+      Want(allTerms = true)), terms.length), k)
   }
 
   /** Oracle SQL mirroring `search` exactly (DuckDB dialect). */
@@ -151,14 +125,14 @@ object Fts {
        |ORDER BY score DESC, doc_id ASC LIMIT $k""".stripMargin
   }
 
-  // --- Corpus-size routing for the flagship search path ----------------
+  // --- Corpus-size routing: one posting source per query ---------------
   //
   // The reference IS an index-probe service (GIN bitmap scan over a
   // trigger-maintained tsvector, /root/reference/src/db/models.py:61-63);
   // a per-query full-collection tokenize is the one plan PG itself would
-  // never pick at 100 TB. The scan-local zero-exchange shape in `search`
-  // still wins for small/one-shot corpora (nothing amortized, one task),
-  // so the flagship entry points route — the kmeansAuto discipline:
+  // never pick at 100 TB. A scan of a small corpus still wins (nothing
+  // amortized, one task), so [[postings]] decides the route once per
+  // query — the kmeansAuto discipline:
   //
   //   probe the persisted term-bucketed index when the corpus exceeds
   //   `graft.fts.indexRouteMinBytes` (default 4 MiB): below it the
@@ -173,10 +147,11 @@ object Fts {
   //   cheaper at a given corpus size does not depend on whether some
   //   other workload happened to build the index first.
   //
-  // Both routes return BIT-IDENTICAL frames (FtsRouteSpec pins this and
-  // the switch point): the indexed paths pivot postings to the same
-  // per-term tf columns the scan path computes, so every double is
-  // produced by the same expression in the same left-to-right order.
+  // Either route yields the same per-document columns (tf, 0-based
+  // positions, doc stats), and each query applies its one scorer to
+  // them, so every double comes from the same expression in the same
+  // term order on both routes (FtsRouteSpec pins this and the switch
+  // point).
 
   /** Routing threshold in bytes (session-overridable). */
   def indexRouteMinBytes(spark: SparkSession): Long =
@@ -269,72 +244,201 @@ object Fts {
         }
     }
 
-  /** `search` as an index probe: only the query terms' bucket files of
-    * the persisted index are read ([[ScaleOps.bucketProbe]]; cost = the
-    * terms' posting lists, not the corpus), one doc-keyed
-    * partial-aggregated pivot turns postings into the scan path's tf
-    * columns, and the same fixed-order score expression +
-    * TakeOrderedAndProject finish. This is the GIN-probe plan shape of
-    * the reference at any corpus size.
+  /** A query's analyzer: the scan route's tokenizer and the persisted
+    * index the probe route reads. `oneLang`: the index holds a single
+    * language and has no lang column. */
+  private final case class Analyzer(tokens: Column => Column,
+      index: (SparkSession, String) => String, oneLang: Boolean = false)
+
+  private val plain = Analyzer(TextAnalyzer.tokens, ensureIndex)
+  private val stemmed =
+    Analyzer(TextAnalyzer.stemmedTokens, ensureStemmedIndex)
+  private def ownAnalyzer(lang: String) = Analyzer(
+    TextAnalyzer.tokensFor(_, lang), ensureLangIndex(_, _, lang), true)
+
+  /** What a query reads per candidate document beyond `doc_id` and the
+    * `tf$i` columns: `pos$i` position lists, the `dl`/`nuniq` doc
+    * stats, the `lang`/`source`/`wc` attributes, BM25's corpus stats
+    * (`n`, `sumdl`, `df$i`), every document in scope rather than only
+    * those holding a query term (`universe`), and whether the query
+    * keeps only documents holding every term (`allTerms`, which lets
+    * the probe intersect posting lists). */
+  private final case class Want(positions: Boolean = false,
+      docStats: Boolean = false, attrs: Boolean = false,
+      corpus: Boolean = false, universe: Boolean = false,
+      allTerms: Boolean = false)
+
+  /** THE posting source of every ranked FTS query: one row per
+    * candidate document of scope `lang` (all languages when `None`)
+    * with `tf$i` (long, 0 when term i is absent) and what `want` asks
+    * for; positions are 0-based offsets into the analyzed token stream,
+    * empty when the term is absent. The route is decided here, once:
     *
-    * ADAPTIVE AND-intersection (r16 verdict #3): the pivot reads the
-    * FULL posting list of every query term — with one frequent term at
-    * 100 TB that list is the corpus. When the terms' dfs ([[termDfs]],
-    * driver-held within the broadcast bound, so a warm request fires
-    * no job before its action) show the rare/frequent skew past
-    * [[rarestMaxDfShare]], the probe routes to the rarest-first join
-    * chain instead, whose intermediate frames are bounded by the rarest
-    * df (the frequent list is only ever the streamed probe side of a
-    * candidate-bounded join). Both formulations produce bit-identical
-    * frames — the chain collects tf columns join-order-free and replays
-    * the same fixed-order score tree (see [[searchRarestFirst]]) — so
-    * the route is free to flip with corpus statistics under ONE oracle
-    * (FtsRouteSpec).
-    * `graft.fts.andRoute` = pivot|chain pins it for plan tests. */
-  def searchIndexed(spark: SparkSession, dir: String, query: String,
-      lang: String, k: Int): DataFrame = {
-    val terms = TextAnalyzer.analyze(query).distinct
-    require(terms.nonEmpty, "query analyzes to no terms")
-    val idxName = ensureIndex(spark, dir)
-    val route = spark.conf.getOption("graft.fts.andRoute") match {
-      case Some(r @ ("pivot" | "chain")) => r
+    *   - scan: the collection's documents (the partition-pruned layout,
+    *     [[Collections.scopedDocuments]]), every column computed from the
+    *     analyzed token array inside the scan — zero exchanges;
+    *   - index: the terms' bucket files of the persisted index
+    *     ([[ScaleOps.bucketProbe]]) pivoted to the same columns by one
+    *     doc-keyed aggregate, with the `_dl`/`_cs` and attrs sidecars
+    *     joined in for what postings cannot carry. */
+  private def postings(spark: SparkSession, dir: String,
+      terms: Seq[String], analyzer: Analyzer, lang: Option[String],
+      want: Want): DataFrame =
+    if (routeToIndex(spark, dir))
+      probed(spark, dir, terms, analyzer, lang, want)
+    else scanned(spark, dir, terms, analyzer, lang, want)
+
+  private def scanned(spark: SparkSession, dir: String,
+      terms: Seq[String], analyzer: Analyzer, lang: Option[String],
+      want: Want): DataFrame = {
+    val docs = lang.fold(Tables.documents(spark, dir))(
+      Collections.scopedDocuments(spark, dir, _))
+    val attrs = if (want.attrs) Seq("lang", "source", "wc") else Nil
+    val words = filter(split(col("text"), "\\s+"), w => w =!= "")
+    // explode(array(...)) barrier: materialize the token array once per
+    // row — project collapse would otherwise inline the tokenizer into
+    // EVERY term column, and subexpression elimination is off inside
+    // HOF lambdas (measured: 2.1 s -> phrase-class at sf0.1)
+    val toks = col("toks")
+    val withToks = docs.select(col("doc_id") +: attrs.map {
+        case "wc" => size(words).as("wc")
+        case a => col(a)
+      } :+ explode(array(analyzer.tokens(col("text")))).as("toks"): _*)
+    val tfs = terms.indices.map(i =>
+      size(filter(toks, x => x === lit(terms(i)))).cast("long").as(s"tf$i"))
+    val pos =
+      if (!want.positions) Nil
+      else terms.indices.map(i => filter(
+        transform(toks, (x, j) => when(x === lit(terms(i)), j)
+          .otherwise(lit(-1))),
+        p => p >= 0).as(s"pos$i"))
+    val stats =
+      if (!want.docStats && !want.corpus) Nil
+      else Seq(size(toks).as("dl"), size(array_distinct(toks)).as("nuniq"))
+    val perDoc = withToks.select(col("doc_id") +:
+      (tfs ++ pos ++ stats ++ attrs.map(col)): _*)
+    if (!want.corpus) perDoc
+    else {
+      // (n, Σdl, df_i) as ONE tiny aggregate row cross-joined back by
+      // broadcast: a full scan + a 1-row broadcast, no per-term shuffle
+      val aggs = count(lit(1)).as("n") +: sum(col("dl")).as("sumdl") +:
+        terms.indices.map(i =>
+          sum(when(col(s"tf$i") > 0, 1L).otherwise(0L)).as(s"df$i"))
+      perDoc.crossJoin(broadcast(perDoc.agg(aggs.head, aggs.tail: _*)))
+    }
+  }
+
+  private def probed(spark: SparkSession, dir: String,
+      terms: Seq[String], analyzer: Analyzer, lang: Option[String],
+      want: Want): DataFrame = {
+    val idxName = analyzer.index(spark, dir)
+    if ((analyzer eq plain) && want == Want(allTerms = true) &&
+        lang.exists(chainRoute(spark, idxName, terms, _)))
+      return rarestFirstChain(spark, idxName, terms, lang.get)
+    def scoped(df: DataFrame) =
+      lang.fold(df)(l => df.filter(col("lang") === lit(l)))
+    val probe = ScaleOps.bucketProbe(spark, idxName, terms)
+    val hits = (if (analyzer.oneLang) probe else scoped(probe))
+      .transform(p => if (want.corpus) CacheScope.cached(p) else p)
+    var docs = pivot(hits, terms, want.positions)
+    if (want.docStats || want.corpus || want.universe) {
+      val dl = scoped(spark.table(s"${ensureBm25Stats(spark, dir)}_dl"))
+        .select("doc_id", "dl", "nuniq")
+      // a pure-negation query matches documents with no query-term
+      // posting at all: start from the `_dl` universe (which counts even
+      // zero-token docs) and read an absent posting as tf 0
+      docs =
+        if (!want.universe) docs.join(dl, Seq("doc_id"))
+        else dl.join(docs, Seq("doc_id"), "left").select(col("doc_id") +:
+          col("dl") +: col("nuniq") +: terms.indices.flatMap(i =>
+            coalesce(col(s"tf$i"), lit(0L)).as(s"tf$i") +: (
+              if (!want.positions) Nil
+              else Seq(coalesce(col(s"pos$i"), array().cast("array<int>"))
+                .as(s"pos$i")))): _*)
+    }
+    if (want.attrs)
+      docs = docs.join(scoped(spark.table(ensureDocAttrs(spark, dir)))
+        .select("doc_id", "lang", "source", "wc"), Seq("doc_id"))
+    if (want.corpus) {
+      // dfs aggregate over the already-pruned postings; (n, sumdl) from
+      // `_cs` — two ONE-ROW broadcast frames
+      val dfAggs = terms.indices.map(i =>
+        sum(when(col("term") === lit(terms(i)), 1L).otherwise(0L))
+          .as(s"df$i"))
+      val cs = scoped(spark.table(s"${ensureBm25Stats(spark, dir)}_cs"))
+        .select(col("n"), col("sumdl"))
+      docs = docs.crossJoin(broadcast(hits.agg(dfAggs.head, dfAggs.tail: _*)))
+        .crossJoin(broadcast(cs))
+    }
+    docs
+  }
+
+  /** Pruned postings → one row per doc with each term's tf (0 when
+    * absent) and, when asked, its sorted position list (empty when
+    * absent; collected ascending at build, the order the scan emits). */
+  private def pivot(hits: DataFrame, terms: Seq[String],
+      positions: Boolean): DataFrame = {
+    def of(t: String, c: String) = max(when(col("term") === lit(t), col(c)))
+    val aggs = terms.indices.flatMap(i =>
+      coalesce(of(terms(i), "tf"), lit(0L)).as(s"tf$i") +: (
+        if (!positions) Nil
+        else Seq(coalesce(of(terms(i), "positions"),
+          array().cast("array<int>")).as(s"pos$i"))))
+    hits.groupBy(col("doc_id")).agg(aggs.head, aggs.tail: _*)
+  }
+
+  /** ADAPTIVE AND-intersection (r16 verdict #3) for the AND probe: the
+    * pivot reads the FULL posting list of every query term — with one
+    * frequent term at 100 TB that list is the corpus. When the terms'
+    * dfs ([[termDfs]], driver-held within the broadcast bound, so a
+    * warm request fires no job before its action) show the
+    * rare/frequent skew past [[rarestMaxDfShare]], the probe takes the
+    * rarest-first join chain instead, whose intermediate frames are
+    * bounded by the rarest df. Both yield the same tf columns, so the
+    * route is free to flip with corpus statistics under ONE oracle
+    * (FtsRouteSpec). `graft.fts.andRoute` = pivot|chain pins it. */
+  private def chainRoute(spark: SparkSession, idxName: String,
+      terms: Seq[String], lang: String): Boolean =
+    spark.conf.getOption("graft.fts.andRoute") match {
+      case Some("pivot") => false
+      case Some("chain") => true
       case Some(other) =>
         throw new IllegalArgumentException(
           s"graft.fts.andRoute must be pivot|chain, got '$other'")
       case None =>
-        // single-term queries take the pivot unconditionally, BEFORE
-        // the df probe — the statistics job cannot affect a one-term
-        // route, so paying it would be a wasted job per novel query
-        // (r17 ADVICE)
-        if (terms.length < 2) "pivot"
-        else {
+        // single-term queries take the pivot BEFORE the df probe — the
+        // statistics cannot affect a one-term route (r17 ADVICE); an
+        // absent term makes the AND-match provably empty, which the
+        // pivot's AND filter expresses without any join
+        terms.length >= 2 && {
           val dfs = termDfs(spark, idxName, terms, lang)
-          // absent term → AND-match provably empty; the pivot's AND
-          // filter expresses that without any join
-          if (terms.exists(t => !dfs.contains(t))) "pivot"
-          else {
+          terms.forall(dfs.contains) && {
             val ds = terms.map(dfs)
-            if (ds.min <= rarestMaxDfShare(spark) * ds.max) "chain"
-            else "pivot"
+            ds.min <= rarestMaxDfShare(spark) * ds.max
           }
         }
     }
-    if (route == "chain")
-      return rarestFirstChain(spark, idxName, terms, lang, k)
-    val postings = ScaleOps.bucketProbe(spark, idxName, terms)
-      .filter(col("lang") === lit(lang))
-    // pivot to per-term tf columns: score doubles are then summed in
-    // the SAME left-to-right term order as `search`'s reduce — the two
-    // routes are bit-identical by construction, not by luck of
-    // aggregation order
-    scoredTopK(pivotedTfs(postings, terms), terms.length, k)
+
+  /** AND-match + the ts_rank score s/(1+s), s = Σ ln(1 + tf_i) summed in
+    * query-term order — the tf scorer of search, stemmed, lang and the
+    * endpoint. */
+  private def andScored(docs: DataFrame, nTerms: Int): DataFrame = {
+    val s = (0 until nTerms)
+      .map(i => log(lit(1.0) + col(s"tf$i")))
+      .reduce(_ + _)
+    docs
+      .filter((0 until nTerms).map(i => col(s"tf$i") > 0).reduce(_ && _))
+      .select(col("doc_id"), round(s / (lit(1.0) + s), 6).as("score"))
   }
 
-  /** The ROUTED flagship entry point (registered as `fts_topk`). */
+  /** Top-k by score with the deterministic doc_id tiebreak. */
+  private def topK(scored: DataFrame, k: Int): DataFrame =
+    scored.orderBy(col("score").desc, col("doc_id").asc).limit(k)
+
+  /** [[search]] under its former routed name; kept for the service
+    * benchmark's callers. */
   def searchAuto(spark: SparkSession, dir: String, query: String,
-      lang: String, k: Int): DataFrame =
-    if (routeToIndex(spark, dir)) searchIndexed(spark, dir, query, lang, k)
-    else search(spark, dir, query, lang, k)
+      lang: String, k: Int): DataFrame = search(spark, dir, query, lang, k)
 
   /** Doc-stats side tables for the index routes, built once per corpus
     * generation: `_dl` (doc_id, lang, dl, nuniq) bucketed by doc_id —
@@ -384,6 +488,9 @@ object Fts {
     * zero-token docs). */
   def ensureDfStats(spark: SparkSession, dir: String): String = {
     val name = s"graft_ftsdf_${ScaleOps.contentHash(dir, "documents")}"
+    // the input first: its generation must be current before this
+    // family's marker is checked against it
+    ensureIndex(spark, dir)
     ScaleOps.ensure(spark, ScaleOps.Family("fts_df", 1),
         ScaleOps.AttachSpec(s"${name}_nd", "lang", 1),
         ScaleOps.AttachSpec(name, "term", 8)) {
@@ -398,7 +505,7 @@ object Fts {
     * chain applied at index time, the `to_tsvector('english', ...)`
     * layout the reference's trigger actually maintains
     * (/root/reference/src/db/models.py:58-63 stores stemmed lexemes).
-    * Probed by [[searchStemmedIndexed]]. */
+    * Probed by [[searchStemmed]] on the index route. */
   def ensureStemmedIndex(spark: SparkSession, dir: String): String = {
     val name = s"graft_fts_stem_${ScaleOps.contentHash(dir, "documents")}"
     ScaleOps.ensure(spark, ScaleOps.Family("fts_stem", 1),
@@ -409,150 +516,6 @@ object Fts {
         .groupBy("doc_id", "lang", "term")
         .agg(count(lit(1)).as("tf")))
     }
-  }
-
-  /** Shared probe pivot: pruned postings → one row per doc with the
-    * query terms' tf columns (fixed column order = the scan paths'
-    * expression order, so downstream score math is bit-identical). */
-  private def pivotedTfs(postings: DataFrame,
-      terms: Seq[String]): DataFrame = {
-    val tfAggs = terms.indices.map(i =>
-      max(when(col("term") === lit(terms(i)), col("tf"))).as(s"tf$i"))
-    postings.groupBy(col("doc_id")).agg(tfAggs.head, tfAggs.tail: _*)
-  }
-
-  /** AND-match + ln(1+tf) score + top-k over a pivoted tf frame — the
-    * shared tail of the search/searchStemmed index probes. */
-  private def scoredTopK(pivoted: DataFrame, nTerms: Int,
-      k: Int): DataFrame = {
-    val s = (0 until nTerms)
-      .map(i => log(lit(1.0) + col(s"tf$i")))
-      .reduce(_ + _)
-    pivoted
-      .filter((0 until nTerms).map(i => col(s"tf$i").isNotNull)
-        .reduce(_ && _))
-      .select(col("doc_id"),
-        round(s / (lit(1.0) + s), 6).as("score"))
-      .orderBy(col("score").desc, col("doc_id").asc)
-      .limit(k)
-  }
-
-  /** [[searchStemmed]] as a probe of the persisted stemmed index —
-    * bit-identical by the pivot construction. */
-  def searchStemmedIndexed(spark: SparkSession, dir: String,
-      query: String, lang: String, k: Int): DataFrame = {
-    val terms = TextAnalyzer.analyzeStemmed(query).distinct
-    require(terms.nonEmpty, "query analyzes to no terms")
-    val postings =
-      ScaleOps.bucketProbe(spark, ensureStemmedIndex(spark, dir), terms)
-      .filter(col("lang") === lit(lang))
-    scoredTopK(pivotedTfs(postings, terms), terms.length, k)
-  }
-
-  def searchStemmedAuto(spark: SparkSession, dir: String, query: String,
-      lang: String, k: Int): DataFrame =
-    if (routeToIndex(spark, dir))
-      searchStemmedIndexed(spark, dir, query, lang, k)
-    else searchStemmed(spark, dir, query, lang, k)
-
-  /** [[searchNormalized]] as an index probe: tf columns from the
-    * pruned postings pivot, (doclen, nuniq) from the `_dl` sidecar —
-    * the identical normalization cascade over identical values. */
-  def searchNormalizedIndexed(spark: SparkSession, dir: String,
-      query: String, lang: String, k: Int,
-      normalization: Int): DataFrame = {
-    val terms = TextAnalyzer.analyze(query).distinct
-    require(terms.nonEmpty, "query analyzes to no terms")
-    val stats = ensureBm25Stats(spark, dir)
-    val postings = ScaleOps.bucketProbe(spark, ensureIndex(spark, dir), terms)
-      .filter(col("lang") === lit(lang))
-    val dl = spark.table(s"${stats}_dl")
-      .filter(col("lang") === lit(lang))
-      .select(col("doc_id"), col("dl").cast("double").as("doclen"),
-        col("nuniq").cast("double").as("nuniq"))
-    var s: Column = terms.indices
-      .map(i => log(lit(1.0) + col(s"tf$i")))
-      .reduce(_ + _)
-    if ((normalization & 1) != 0) s = s / (lit(1.0) + log(col("doclen")))
-    if ((normalization & 2) != 0) s = s / col("doclen")
-    if ((normalization & 8) != 0) s = s / col("nuniq")
-    if ((normalization & 16) != 0) s = s / (lit(1.0) + log(col("nuniq")))
-    if ((normalization & 32) != 0) s = s / (lit(1.0) + s)
-    pivotedTfs(postings, terms)
-      .filter(terms.indices.map(i => col(s"tf$i").isNotNull)
-        .reduce(_ && _))
-      .join(dl, Seq("doc_id"))
-      .select(col("doc_id"), round(s, 6).as("score"))
-      .orderBy(col("score").desc, col("doc_id").asc)
-      .limit(k)
-  }
-
-  def searchNormalizedAuto(spark: SparkSession, dir: String,
-      query: String, lang: String, k: Int,
-      normalization: Int): DataFrame =
-    if (routeToIndex(spark, dir))
-      searchNormalizedIndexed(spark, dir, query, lang, k, normalization)
-    else searchNormalized(spark, dir, query, lang, k, normalization)
-
-  /** [[searchCoverDensity]] as an index probe: the index row's SORTED
-    * position list per (doc, term) — collected ascending at build, the
-    * same order the scan path's transform/filter emits — pivots to the
-    * per-term position-array argument of the native
-    * cover_density_score expression. Docs missing a query term
-    * coalesce to an empty array (the scan path's shape for an
-    * unmatched term); the score>0 filter then drops them identically. */
-  def searchCoverDensityIndexed(spark: SparkSession, dir: String,
-      query: String, lang: String, k: Int): DataFrame = {
-    val terms = TextAnalyzer.analyze(query).distinct
-    require(terms.nonEmpty, "query analyzes to no terms")
-    val postings = ScaleOps.bucketProbe(spark, ensureIndex(spark, dir), terms)
-      .filter(col("lang") === lit(lang))
-    val posAggs = terms.indices.map(i =>
-      coalesce(
-        max(when(col("term") === lit(terms(i)), col("positions"))),
-        array().cast("array<int>")).as(s"p$i"))
-    postings.groupBy(col("doc_id"))
-      .agg(posAggs.head, posAggs.tail: _*)
-      .select(col("doc_id"),
-        array(terms.indices.map(i => col(s"p$i")): _*).as("pos_arrays"))
-      .select(col("doc_id"),
-        round(expr("cover_density_score(pos_arrays)"), 6).as("score"))
-      .filter(col("score") > 0)
-      .orderBy(col("score").desc, col("doc_id").asc)
-      .limit(k)
-  }
-
-  def searchCoverDensityAuto(spark: SparkSession, dir: String,
-      query: String, lang: String, k: Int): DataFrame =
-    if (routeToIndex(spark, dir))
-      searchCoverDensityIndexed(spark, dir, query, lang, k)
-    else searchCoverDensity(spark, dir, query, lang, k)
-
-  // --- r17: positional / boolean / facet / endpoint probes -------------
-  //
-  // The last per-query corpus-tokenize plan class (r16 verdict #1).
-  // phrase/near/dist matching needs only the per-(doc, term) SORTED
-  // position lists the index already stores (the data a GIN tsvector
-  // entry carries, /root/reference/src/db/models.py:61-63);
-  // boolean/websearch additionally handle NOT terms over postings (a
-  // doc absent from a term's posting list coalesces to tf 0, and a
-  // PURE-NEGATION query — one that matches the all-absent row — starts
-  // from the `_dl` doc universe instead); the endpoint's metadata
-  // coercion and the facet panel read the (doc_id, lang, source, wc)
-  // attrs sidecar. Every probe pivots the pruned postings into exactly
-  // the scan path's per-term columns, so both routes are bit-identical
-  // and ONE oracle gates both physical plans (FtsRouteSpec).
-
-  /** Shared probe pivot for POSITION lists: pruned postings → one row
-    * per doc with the query terms' sorted position arrays. Missing
-    * terms stay null — callers AND-require all terms non-null (the
-    * positional queries) or coalesce to empty (websearch phrases). */
-  private def pivotedPositions(postings: DataFrame,
-      terms: Seq[String]): DataFrame = {
-    val aggs = terms.indices.map(i =>
-      max(when(col("term") === lit(terms(i)), col("positions")))
-        .as(s"pos$i"))
-    postings.groupBy(col("doc_id")).agg(aggs.head, aggs.tail: _*)
   }
 
   /** Build-once (doc_id, lang, source, wc) attrs sidecar — the
@@ -573,283 +536,12 @@ object Fts {
     }
   }
 
-  /** [[phraseSearch]] as an index probe: an occurrence at analyzed
-    * position p is p ∈ positions(term₀) with p+j ∈ positions(termⱼ)
-    * for every later phrase slot — the scan path's k-gram window count
-    * over the SAME analyzed position space (the index's posexplode
-    * positions and the scan's window starts are both 0-based offsets
-    * into the analyzed token stream, and a full match can never run
-    * past the end because its last slot's position exists). */
-  def phraseSearchIndexed(spark: SparkSession, dir: String,
-      phrase: String, lang: String, k: Int): DataFrame = {
-    val terms = TextAnalyzer.analyze(phrase)
-    require(terms.length >= 2, "phrase needs at least 2 analyzed terms")
-    val uniq = terms.distinct
-    val slot = terms.map(uniq.indexOf) // phrase slot j → pivot column
-    val postings = ScaleOps.bucketProbe(spark, ensureIndex(spark, dir), uniq)
-      .filter(col("lang") === lit(lang))
-    val matches = filter(col(s"pos${slot.head}"),
-      p => terms.indices.tail
-        .map(j => array_contains(col(s"pos${slot(j)}"), p + j))
-        .reduce(_ && _))
-    pivotedPositions(postings, uniq)
-      .filter(uniq.indices.map(i => col(s"pos$i").isNotNull)
-        .reduce(_ && _))
-      .select(col("doc_id"),
-        size(matches).cast("long").as("n_occurrences"))
-      .filter(col("n_occurrences") > 0)
-      .orderBy(col("n_occurrences").desc, col("doc_id").asc)
-      .limit(k)
-  }
-
-  def phraseSearchAuto(spark: SparkSession, dir: String, phrase: String,
-      lang: String, k: Int): DataFrame =
-    if (routeToIndex(spark, dir))
-      phraseSearchIndexed(spark, dir, phrase, lang, k)
-    else phraseSearch(spark, dir, phrase, lang, k)
-
-  /** [[nearSearch]] as an index probe: the pair-gap set is computed
-    * from the two terms' pivoted position lists — |y − x| is invariant
-    * to the position base (the scan path counts 1-based, the index
-    * 0-based), and both lists are ascending (the index sorts at build;
-    * the scan's filter(sequence) emits in order), so even the gaps
-    * array's element ORDER matches the scan route element-for-element. */
-  def nearSearchIndexed(spark: SparkSession, dir: String, a: String,
-      b: String, w: Int, lang: String, k: Int): DataFrame = {
-    val Seq(ta, tb) = TextAnalyzer.analyze(s"$a $b").take(2)
-    val uniq = Seq(ta, tb).distinct
-    val postings = ScaleOps.bucketProbe(spark, ensureIndex(spark, dir), uniq)
-      .filter(col("lang") === lit(lang))
-    val posA = col(s"pos${uniq.indexOf(ta)}")
-    val posB = col(s"pos${uniq.indexOf(tb)}")
-    val gaps = flatten(transform(posA,
-      x => transform(posB, y => abs(y - x))))
-    pivotedPositions(postings, uniq)
-      .filter(uniq.indices.map(i => col(s"pos$i").isNotNull)
-        .reduce(_ && _))
-      .select(col("doc_id"),
-        size(filter(gaps, d => d <= lit(w))).cast("long").as("n_pairs"),
-        array_min(gaps).as("min_gap"))
-      .filter(col("n_pairs") > 0)
-      .orderBy(col("min_gap").asc, col("n_pairs").desc, col("doc_id").asc)
-      .limit(k)
-  }
-
-  def nearSearchAuto(spark: SparkSession, dir: String, a: String,
-      b: String, w: Int, lang: String, k: Int): DataFrame =
-    if (routeToIndex(spark, dir))
-      nearSearchIndexed(spark, dir, a, b, w, lang, k)
-    else nearSearch(spark, dir, a, b, w, lang, k)
-
-  /** [[phraseDistSearch]] (`a <N> b`) as an index probe: occurrences
-    * are positions p ∈ positions(a) with p+n ∈ positions(b). */
-  def phraseDistSearchIndexed(spark: SparkSession, dir: String,
-      a: String, b: String, n: Int, lang: String, k: Int): DataFrame = {
-    val Seq(ta, tb) = TextAnalyzer.analyze(s"$a $b").take(2)
-    val uniq = Seq(ta, tb).distinct
-    val postings = ScaleOps.bucketProbe(spark, ensureIndex(spark, dir), uniq)
-      .filter(col("lang") === lit(lang))
-    val posA = col(s"pos${uniq.indexOf(ta)}")
-    val posB = col(s"pos${uniq.indexOf(tb)}")
-    val hits = filter(posA, p => array_contains(posB, p + lit(n)))
-    pivotedPositions(postings, uniq)
-      .filter(uniq.indices.map(i => col(s"pos$i").isNotNull)
-        .reduce(_ && _))
-      .select(col("doc_id"),
-        size(hits).cast("long").as("n_occurrences"))
-      .filter(col("n_occurrences") > 0)
-      .orderBy(col("n_occurrences").desc, col("doc_id").asc)
-      .limit(k)
-  }
-
-  def phraseDistSearchAuto(spark: SparkSession, dir: String, a: String,
-      b: String, n: Int, lang: String, k: Int): DataFrame =
-    if (routeToIndex(spark, dir))
-      phraseDistSearchIndexed(spark, dir, a, b, n, lang, k)
-    else phraseDistSearch(spark, dir, a, b, n, lang, k)
-
-  /** [[booleanSearch]] as an index probe. NOT terms need no special
-    * plan: a doc absent from a term's posting list pivots to null and
-    * coalesces to tf 0, exactly the scan path's zero count. The one
-    * case postings alone cannot serve is a PURE-NEGATION query — one
-    * whose predicate is true with every term absent (e.g. `!sort`):
-    * its matches include docs with NO query-term postings at all, so
-    * the probe starts from the `_dl` doc universe (which counts even
-    * zero-token docs) and left-joins the pivot. The driver-side
-    * all-absent evaluation picks the branch per QUERY, not per row. */
-  def booleanSearchIndexed(spark: SparkSession, dir: String,
-      query: String, lang: String, k: Int): DataFrame = {
-    import graft.functions.BoolQuery
-    val ast = BoolQuery.parse(query)
-    val terms = BoolQuery.terms(ast)
-    val pos = BoolQuery.positiveTerms(ast)
-    val postings = ScaleOps.bucketProbe(spark, ensureIndex(spark, dir), terms)
-      .filter(col("lang") === lit(lang))
-    val tfAggs = terms.map(t =>
-      coalesce(max(when(col("term") === lit(t), col("tf"))), lit(0L))
-        .as(s"tf_$t"))
-    var piv = postings.groupBy(col("doc_id"))
-      .agg(tfAggs.head, tfAggs.tail: _*)
-    if (BoolQuery.matches(ast, _ => false)) {
-      val universe = spark.table(s"${ensureBm25Stats(spark, dir)}_dl")
-        .filter(col("lang") === lit(lang)).select("doc_id")
-      piv = universe.join(piv, Seq("doc_id"), "left")
-        .select(col("doc_id") +: terms.map(t =>
-          coalesce(col(s"tf_$t"), lit(0L)).as(s"tf_$t")): _*)
-    }
-    val pred = BoolQuery.predicate(ast, t => col(s"tf_$t") > 0)
-    val rank =
-      if (pos.isEmpty) lit(0L)
-      else pos.map(t => col(s"tf_$t").cast("long")).reduce(_ + _)
-    piv.filter(pred)
-      .select(col("doc_id"), rank.as("matched_tf"))
-      .orderBy(col("matched_tf").desc, col("doc_id").asc)
-      .limit(k)
-  }
-
-  def booleanSearchAuto(spark: SparkSession, dir: String, query: String,
-      lang: String, k: Int): DataFrame =
-    if (routeToIndex(spark, dir))
-      booleanSearchIndexed(spark, dir, query, lang, k)
-    else booleanSearch(spark, dir, query, lang, k)
-
-  /** [[websearchSearch]] as an index probe: term atoms count via the
-    * tf pivot, phrase atoms via the position pivot (the
-    * [[phraseSearchIndexed]] rule with missing constituents coalesced
-    * to empty lists → count 0, the scan path's shape), and the
-    * pure-negation universe branch mirrors [[booleanSearchIndexed]]. */
-  def websearchSearchIndexed(spark: SparkSession, dir: String,
-      query: String, lang: String, k: Int): DataFrame = {
-    import graft.functions.WebSearchQuery
-    import graft.functions.WebSearchQuery.{Term => WTerm, Phrase => WPhrase}
-    val ast = WebSearchQuery.parse(query)
-    val atoms = WebSearchQuery.atoms(ast)
-    val posAtoms = WebSearchQuery.positiveAtoms(ast)
-    val name = atoms.zipWithIndex.map { case (a, i) => a -> s"m$i" }.toMap
-    val fetch = atoms.flatMap {
-      case WTerm(t) => Seq(t)
-      case WPhrase(ts) => ts
-      case other => throw new IllegalStateException(s"non-leaf $other")
-    }.distinct
-    val postings = ScaleOps.bucketProbe(spark, ensureIndex(spark, dir), fetch)
-      .filter(col("lang") === lit(lang))
-    // one pivot carrying BOTH tf and positions per fetched term
-    val aggs = fetch.indices.flatMap(i => Seq(
-      coalesce(max(when(col("term") === lit(fetch(i)), col("tf"))),
-        lit(0L)).as(s"tf$i"),
-      coalesce(max(when(col("term") === lit(fetch(i)), col("positions"))),
-        array().cast("array<int>")).as(s"pos$i")))
-    val piv = postings.groupBy(col("doc_id")).agg(aggs.head, aggs.tail: _*)
-    def posOf(t: String) = col(s"pos${fetch.indexOf(t)}")
-    def phraseCount(ts: Seq[String]): Column =
-      if (ts.length == 1) size(posOf(ts.head))
-      else size(filter(posOf(ts.head),
-        p => ts.indices.tail
-          .map(j => array_contains(posOf(ts(j)), p + j))
-          .reduce(_ && _)))
-    val mCols = atoms.map {
-      case a @ WTerm(t) => col(s"tf${fetch.indexOf(t)}").as(name(a))
-      case a @ WPhrase(ts) => phraseCount(ts).as(name(a))
-      case other => throw new IllegalStateException(s"non-leaf $other")
-    }
-    var matched = piv.select(col("doc_id") +: mCols: _*)
-    if (WebSearchQuery.matches(ast, _ => false)) {
-      val universe = spark.table(s"${ensureBm25Stats(spark, dir)}_dl")
-        .filter(col("lang") === lit(lang)).select("doc_id")
-      matched = universe.join(matched, Seq("doc_id"), "left")
-        .select(col("doc_id") +: atoms.map(a =>
-          coalesce(col(name(a)), lit(0L)).as(name(a))): _*)
-    }
-    val pred = WebSearchQuery.predicate(ast, a => col(name(a)))
-    val rank =
-      if (posAtoms.isEmpty) lit(0L)
-      else posAtoms.map(a => col(name(a)).cast("long")).reduce(_ + _)
-    matched.filter(pred)
-      .select(col("doc_id"), rank.as("matched_tf"))
-      .orderBy(col("matched_tf").desc, col("doc_id").asc)
-      .limit(k)
-  }
-
-  def websearchSearchAuto(spark: SparkSession, dir: String,
-      query: String, lang: String, k: Int): DataFrame =
-    if (routeToIndex(spark, dir))
-      websearchSearchIndexed(spark, dir, query, lang, k)
-    else websearchSearch(spark, dir, query, lang, k)
-
-  /** [[searchEndpoint]] as an index probe: the tf pivot carries the
-    * match + score, the attrs sidecar carries the string-coerced
-    * word-count metadata filter (an inner join — predicate order
-    * against the scan route is immaterial because both are pure
-    * filters on the same doc set), min_score compares on the same
-    * ROUNDED score. */
-  def searchEndpointIndexed(spark: SparkSession, dir: String,
-      query: String, lang: String, metaWordCount: String,
-      minScore: Double, k: Int): DataFrame = {
-    val terms = TextAnalyzer.analyze(query).distinct
-    require(terms.nonEmpty, "query analyzes to no terms")
-    val postings = ScaleOps.bucketProbe(spark, ensureIndex(spark, dir), terms)
-      .filter(col("lang") === lit(lang))
-    val attrs = spark.table(ensureDocAttrs(spark, dir))
-      .filter(col("lang") === lit(lang) &&
-        col("wc").cast("string") === lit(metaWordCount))
-      .select("doc_id")
-    val s = terms.indices
-      .map(i => log(lit(1.0) + col(s"tf$i")))
-      .reduce(_ + _)
-    pivotedTfs(postings, terms)
-      .filter(terms.indices.map(i => col(s"tf$i").isNotNull)
-        .reduce(_ && _))
-      .join(attrs, Seq("doc_id"))
-      .select(col("doc_id"),
-        round(s / (lit(1.0) + s), 6).as("score"))
-      .filter(col("score") >= lit(minScore))
-      .orderBy(col("score").desc, col("doc_id").asc)
-      .limit(k)
-  }
-
-  def searchEndpointAuto(spark: SparkSession, dir: String,
-      query: String, lang: String, metaWordCount: String,
-      minScore: Double, k: Int): DataFrame =
-    if (routeToIndex(spark, dir))
-      searchEndpointIndexed(spark, dir, query, lang, metaWordCount,
-        minScore, k)
-    else searchEndpoint(spark, dir, query, lang, metaWordCount,
-      minScore, k)
-
-  /** [[facetedSearch]] as an index probe: the AND-matched doc set from
-    * the pruned (all-language) postings pivot, facet keys joined in
-    * from the attrs sidecar, one partial-aggregated groupBy — the
-    * facet panel's cost is the posting lists plus a |matches|-row
-    * join, never a corpus tokenize. */
-  def facetedSearchIndexed(spark: SparkSession, dir: String,
-      query: String): DataFrame = {
-    val terms = TextAnalyzer.analyze(query).distinct
-    require(terms.nonEmpty, "query analyzes to no terms")
-    val postings = ScaleOps.bucketProbe(spark, ensureIndex(spark, dir), terms)
-    val attrs = spark.table(ensureDocAttrs(spark, dir))
-      .select("doc_id", "lang", "source")
-    pivotedTfs(postings, terms)
-      .filter(terms.indices.map(i => col(s"tf$i").isNotNull)
-        .reduce(_ && _))
-      .join(attrs, Seq("doc_id"))
-      .groupBy("lang", "source")
-      .agg(count(lit(1)).as("n_docs"),
-        sum(terms.indices.map(i => col(s"tf$i")).reduce(_ + _))
-          .cast("long").as("matched_tf"))
-      .orderBy(col("lang").asc, col("source").asc)
-  }
-
-  def facetedSearchAuto(spark: SparkSession, dir: String,
-      query: String): DataFrame =
-    if (routeToIndex(spark, dir)) facetedSearchIndexed(spark, dir, query)
-    else facetedSearch(spark, dir, query)
-
   /** Build-once per-(corpus, LANGUAGE) index under that language's
     * analyzer policy — what PG's trigger maintains when the deployment
     * parameter picks a non-English config (settings.py:21): the `fr`
     * index stores stop-filtered French tokens, a no-stopword language
     * stores bare tokens. Keyed by (lang, corpus fingerprint); probed
-    * by [[searchLangIndexed]]. */
+    * by [[searchLang]] on the index route. */
   def ensureLangIndex(spark: SparkSession, dir: String,
       lang: String): String = {
     val name =
@@ -865,90 +557,12 @@ object Fts {
     }
   }
 
-  /** [[searchLang]] as a probe of the per-language index —
-    * bit-identical by the shared pivot + score tail. */
-  def searchLangIndexed(spark: SparkSession, dir: String, query: String,
-      lang: String, k: Int): DataFrame = {
-    val terms = TextAnalyzer.analyzeFor(query, lang).distinct
-    require(terms.nonEmpty, "query analyzes to no terms")
-    val postings =
-      ScaleOps.bucketProbe(spark, ensureLangIndex(spark, dir, lang), terms)
-    scoredTopK(pivotedTfs(postings, terms), terms.length, k)
-  }
-
-  def searchLangAuto(spark: SparkSession, dir: String, query: String,
-      lang: String, k: Int): DataFrame =
-    if (routeToIndex(spark, dir))
-      searchLangIndexed(spark, dir, query, lang, k)
-    else searchLang(spark, dir, query, lang, k)
-
-  /** [[bm25Scored]] as an index probe, bit-identical by construction:
-    * postings pruned to the query terms' buckets pivot to the scan
-    * path's tf columns; dl rides in from the bucketed `_dl` sidecar;
-    * (n, sumdl) and the per-term dfs are two ONE-ROW broadcast frames
-    * (the df aggregate runs over the already-pruned postings — cost
-    * bounded by the posting lists). The contrib/grade expressions are
-    * the same column formulas as the scan path, so every double is the
-    * same IEEE value. */
-  def bm25ScoredIndexed(spark: SparkSession, dir: String, query: String,
-      lang: String, k1: Double = 1.2, b: Double = 0.75): DataFrame = {
-    val terms = TextAnalyzer.analyze(query).distinct
-    require(terms.nonEmpty, "query analyzes to no terms")
-    val stats = ensureBm25Stats(spark, dir)
-    val postings = ScaleOps.bucketProbe(spark, ensureIndex(spark, dir), terms)
-      .filter(col("lang") === lit(lang))
-      .transform(CacheScope.cached)
-    val tfAggs = terms.indices.map(i =>
-      coalesce(max(when(col("term") === lit(terms(i)), col("tf"))), lit(0L))
-        .as(s"tf$i"))
-    val pivoted = postings.groupBy(col("doc_id"))
-      .agg(tfAggs.head, tfAggs.tail: _*)
-    val dfAggs = terms.indices.map(i =>
-      sum(when(col("term") === lit(terms(i)), 1L).otherwise(0L))
-        .as(s"df$i"))
-    val dfRow = postings.agg(dfAggs.head, dfAggs.tail: _*)
-    val cs = spark.table(s"${stats}_cs")
-      .filter(col("lang") === lit(lang)).select(col("n"), col("sumdl"))
-    val dl = spark.table(s"${stats}_dl")
-      .filter(col("lang") === lit(lang)).select(col("doc_id"), col("dl"))
-    val avgdl = col("sumdl").cast("double") / col("n")
-    val contrib = terms.indices.map { i =>
-      val idf = log(lit(1.0) +
-        (col("n") - col(s"df$i") + lit(0.5)) / (col(s"df$i") + lit(0.5)))
-      when(col(s"tf$i") > 0,
-        idf * (col(s"tf$i") * lit(k1 + 1.0)) /
-          (col(s"tf$i") + lit(k1) *
-            (lit(1.0) - lit(b) + lit(b) * col("dl") / avgdl)))
-        .otherwise(lit(0.0))
-    }
-    val grade = terms.indices
-      .map(i => when(col(s"tf$i") > 0, 1).otherwise(0))
-      .reduce(_ + _)
-    pivoted
-      .join(dl, Seq("doc_id"))
-      .crossJoin(broadcast(dfRow))
-      .crossJoin(broadcast(cs))
-      .filter(terms.indices.map(i => col(s"tf$i") > 0).reduce(_ || _))
-      .select(col("doc_id"),
-        round(contrib.reduce(_ + _), 6).as("score"),
-        grade.as("grade"))
-  }
-
-  def searchBm25Indexed(spark: SparkSession, dir: String, query: String,
-      lang: String, k: Int, k1: Double = 1.2,
-      b: Double = 0.75): DataFrame =
-    bm25ScoredIndexed(spark, dir, query, lang, k1, b)
-      .select(col("doc_id"), col("score"))
-      .orderBy(col("score").desc, col("doc_id").asc)
-      .limit(k)
-
-  /** The ROUTED BM25 entry point (registered as `fts_bm25`). */
+  /** [[searchBm25]] under its former routed name; kept for the service
+    * benchmark's callers. */
   def searchBm25Auto(spark: SparkSession, dir: String, query: String,
       lang: String, k: Int, k1: Double = 1.2,
       b: Double = 0.75): DataFrame =
-    if (routeToIndex(spark, dir))
-      searchBm25Indexed(spark, dir, query, lang, k, k1, b)
-    else searchBm25(spark, dir, query, lang, k, k1, b)
+    searchBm25(spark, dir, query, lang, k, k1, b)
 
   /** `search` with language-keyed analysis (reference surface: the FTS
     * language is a deployment parameter, settings.py:21) — both the
@@ -957,30 +571,15 @@ object Fts {
     * to the content terms; the English analyzer would keep every one of
     * those function words and match nothing), bare tokenization for
     * languages without a stopword set, and the stemmer stays
-    * English-only (`TextAnalyzer.stemmedTokensFor`). Identical
-    * zero-exchange plan shape as `search`. */
+    * English-only (`TextAnalyzer.stemmedTokensFor`). The index route
+    * probes the per-language index ([[ensureLangIndex]]). */
   def searchLang(
       spark: SparkSession, dir: String, query: String, lang: String,
       k: Int): DataFrame = {
     val terms = TextAnalyzer.analyzeFor(query, lang).distinct
     require(terms.nonEmpty, "query analyzes to no terms")
-    val withToks = Tables.documents(spark, dir)
-      .filter(col("lang") === lit(lang))
-      .select(col("doc_id"),
-        explode(array(TextAnalyzer.tokensFor(col("text"), lang)))
-          .as("toks"))
-    val tfCols = terms.indices.map(i =>
-      size(filter(col("toks"), x => x === lit(terms(i)))).as(s"tf$i"))
-    val s = terms.indices
-      .map(i => log(lit(1.0) + col(s"tf$i")))
-      .reduce(_ + _)
-    withToks
-      .select(col("doc_id") +: tfCols: _*)
-      .filter(terms.indices.map(i => col(s"tf$i") > 0).reduce(_ && _))
-      .select(col("doc_id"),
-        round(s / (lit(1.0) + s), 6).as("score"))
-      .orderBy(col("score").desc, col("doc_id").asc)
-      .limit(k)
+    topK(andScored(postings(spark, dir, terms, ownAnalyzer(lang),
+      Some(lang), Want(allTerms = true)), terms.length), k)
   }
 
   /** Oracle SQL mirroring `searchLang` exactly (DuckDB dialect). */
@@ -1153,34 +752,19 @@ object Fts {
     * indexed document text and the query go through the `english`
     * stemmer (`plainto_tsquery('english', ...)`,
     * /root/reference/src/core/vector_store.py:222), so searching
-    * "merging" matches documents containing "merge". Identical
-    * shuffle-free plan shape to `search`; the per-token stem runs inside
-    * whole-stage codegen via the native `light_stem` expression
-    * (graft.functions.LightStem — spec in TextAnalyzer.stemOne).
+    * "merging" matches documents containing "merge". The scan route
+    * stems inside whole-stage codegen via the native `light_stem`
+    * expression (graft.functions.LightStem — spec in
+    * TextAnalyzer.stemOne, registered at session setup); the index
+    * route probes the stemmed index ([[ensureStemmedIndex]]).
     */
   def searchStemmed(
       spark: SparkSession, dir: String, query: String, lang: String,
       k: Int): DataFrame = {
-    // light_stem is registered at session setup (NativeFunctions
-    // .registerAll) — this builder is side-effect-free
     val terms = TextAnalyzer.analyzeStemmed(query).distinct
     require(terms.nonEmpty, "query analyzes to no terms")
-    val withToks = Tables.documents(spark, dir)
-      .filter(col("lang") === lit(lang))            // F6 — pushed down
-      .select(col("doc_id"),
-        explode(array(TextAnalyzer.stemmedTokens(col("text")))).as("toks"))
-    val tfCols = terms.indices.map(i =>
-      size(filter(col("toks"), x => x === lit(terms(i)))).as(s"tf$i"))
-    val s = terms.indices
-      .map(i => log(lit(1.0) + col(s"tf$i")))
-      .reduce(_ + _)
-    withToks
-      .select(col("doc_id") +: tfCols: _*)
-      .filter(terms.indices.map(i => col(s"tf$i") > 0).reduce(_ && _))
-      .select(col("doc_id"),
-        round(s / (lit(1.0) + s), 6).as("score"))
-      .orderBy(col("score").desc, col("doc_id").asc)
-      .limit(k)
+    topK(andScored(postings(spark, dir, terms, stemmed, Some(lang),
+      Want(allTerms = true)), terms.length), k)
   }
 
   /** Oracle SQL mirroring `searchStemmed` exactly: the document tokens
@@ -1221,37 +805,30 @@ object Fts {
     *   bit 32: s = s / (1 + s)
     * (bit 4, mean-harmonic-cover-distance, belongs to the
     * cover-density scorer — CoverDensityScore carries proximity there.)
-    * doclen/nuniq are computed scan-locally from the same materialized
-    * token array as the tf columns — the plan stays zero-exchange.
+    * doclen/nuniq come from the posting source's doc stats (the
+    * analyzed token array on the scan route, the `_dl` sidecar on the
+    * index route).
     */
   def searchNormalized(
       spark: SparkSession, dir: String, query: String, lang: String,
       k: Int, normalization: Int): DataFrame = {
     val terms = TextAnalyzer.analyze(query).distinct
     require(terms.nonEmpty, "query analyzes to no terms")
-    val withToks = Tables.documents(spark, dir)
-      .filter(col("lang") === lit(lang))
-      .select(col("doc_id"),
-        explode(array(TextAnalyzer.tokens(col("text")))).as("toks"))
-    val tfCols = terms.indices.map(i =>
-      size(filter(col("toks"), x => x === lit(terms(i)))).as(s"tf$i"))
-    val statCols = Seq(
-      size(col("toks")).cast("double").as("doclen"),
-      size(array_distinct(col("toks"))).cast("double").as("nuniq"))
+    val doclen = col("dl").cast("double")
+    val nuniq = col("nuniq").cast("double")
     var s: Column = terms.indices
       .map(i => log(lit(1.0) + col(s"tf$i")))
       .reduce(_ + _)
-    if ((normalization & 1) != 0) s = s / (lit(1.0) + log(col("doclen")))
-    if ((normalization & 2) != 0) s = s / col("doclen")
-    if ((normalization & 8) != 0) s = s / col("nuniq")
-    if ((normalization & 16) != 0) s = s / (lit(1.0) + log(col("nuniq")))
+    if ((normalization & 1) != 0) s = s / (lit(1.0) + log(doclen))
+    if ((normalization & 2) != 0) s = s / doclen
+    if ((normalization & 8) != 0) s = s / nuniq
+    if ((normalization & 16) != 0) s = s / (lit(1.0) + log(nuniq))
     if ((normalization & 32) != 0) s = s / (lit(1.0) + s)
-    withToks
-      .select(col("doc_id") +: (tfCols ++ statCols): _*)
+    val docs = postings(spark, dir, terms, plain, Some(lang),
+      Want(docStats = true, allTerms = true))
+    topK(docs
       .filter(terms.indices.map(i => col(s"tf$i") > 0).reduce(_ && _))
-      .select(col("doc_id"), round(s, 6).as("score"))
-      .orderBy(col("score").desc, col("doc_id").asc)
-      .limit(k)
+      .select(col("doc_id"), round(s, 6).as("score")), k)
   }
 
   /** Oracle SQL mirroring `searchNormalized` (DuckDB dialect). */
@@ -1297,35 +874,21 @@ object Fts {
     * accepts and drops (vector_store.py:181,211-227). Metadata here is
     * the P4-extracted `word_count` (the documents table has no stored
     * metadata column; extraction is the pipeline's own metadata
-    * source). All three predicates compose scan-locally on the same
-    * single pass as `search` — zero exchanges, top-k via
-    * TakeOrderedAndProject. min_score compares on the ROUNDED score so
-    * the oracle filter is bit-identical.
+    * source). The word count is the posting source's `wc` attribute
+    * (computed in the scan, or the attrs sidecar on the index route);
+    * min_score compares on the ROUNDED score so the oracle filter is
+    * bit-identical.
     */
   def searchEndpoint(
       spark: SparkSession, dir: String, query: String, lang: String,
       metaWordCount: String, minScore: Double, k: Int): DataFrame = {
     val terms = TextAnalyzer.analyze(query).distinct
     require(terms.nonEmpty, "query analyzes to no terms")
-    val words = filter(split(col("text"), "\\s+"), w => w =!= "")
-    val withToks = Tables.documents(spark, dir)
-      .filter(col("lang") === lit(lang))                          // scope
-      .filter(size(words).cast("string") === lit(metaWordCount))  // coerced
-      .select(col("doc_id"),
-        explode(array(TextAnalyzer.tokens(col("text")))).as("toks"))
-    val tfCols = terms.indices.map(i =>
-      size(filter(col("toks"), x => x === lit(terms(i)))).as(s"tf$i"))
-    val s = terms.indices
-      .map(i => log(lit(1.0) + col(s"tf$i")))
-      .reduce(_ + _)
-    withToks
-      .select(col("doc_id") +: tfCols: _*)
-      .filter(terms.indices.map(i => col(s"tf$i") > 0).reduce(_ && _))
-      .select(col("doc_id"),
-        round(s / (lit(1.0) + s), 6).as("score"))
-      .filter(col("score") >= lit(minScore))                      // min_score
-      .orderBy(col("score").desc, col("doc_id").asc)
-      .limit(k)
+    val docs = postings(spark, dir, terms, plain, Some(lang),
+        Want(attrs = true, allTerms = true))
+      .filter(col("wc").cast("string") === lit(metaWordCount))  // coerced
+    topK(andScored(docs, terms.length)
+      .filter(col("score") >= lit(minScore)), k)                // min_score
   }
 
   /** Oracle SQL mirroring `searchEndpoint` exactly (DuckDB dialect). */
@@ -1357,9 +920,10 @@ object Fts {
 
   /** F4 v2: cover-density-ranked search using the native Catalyst
     * expression graft.functions.CoverDensityScore (the ts_rank_cd
-    * analog — proximity-aware, unlike the tf-only v1 formula). Same
-    * shuffle-free plan shape as `search`: per-term position arrays are
-    * computed scan-locally, the expression runs inside whole-stage
+    * analog — proximity-aware, unlike the tf-only v1 formula) over the
+    * posting source's per-term position arrays (a doc missing a term
+    * carries an empty array and the score>0 filter drops it); the
+    * expression (registered at session setup) runs inside whole-stage
     * codegen, top-k via TakeOrderedAndProject. Hash-gated: the oracle
     * (searchCoverDensityOracleSql above) re-expresses the sweep with
     * window functions; CoverDensitySpec additionally pins the native
@@ -1368,28 +932,15 @@ object Fts {
   def searchCoverDensity(
       spark: SparkSession, dir: String, query: String, lang: String,
       k: Int): DataFrame = {
-    // cover_density_score is registered at session setup (NativeFunctions
-    // .registerAll) — this builder is side-effect-free
     val terms = TextAnalyzer.analyze(query).distinct
     require(terms.nonEmpty, "query analyzes to no terms")
-    val withToks = Tables.documents(spark, dir)
-      .filter(col("lang") === lit(lang))
-      .select(col("doc_id"),
-        explode(array(TextAnalyzer.tokens(col("text")))).as("toks"))
-    // positions of term t = indexes i where toks[i] == t (scan-local)
-    val posArrays = terms.map { t =>
-      filter(
-        transform(col("toks"),
-          (x, i) => when(x === lit(t), i).otherwise(lit(-1))),
-        v => v >= 0)
-    }
-    withToks
+    val posArrays = terms.indices.map(i => col(s"pos$i"))
+    topK(postings(spark, dir, terms, plain, Some(lang),
+        Want(positions = true))
       .select(col("doc_id"), array(posArrays: _*).as("pos_arrays"))
       .select(col("doc_id"),
         round(expr("cover_density_score(pos_arrays)"), 6).as("score"))
-      .filter(col("score") > 0)
-      .orderBy(col("score").desc, col("doc_id").asc)
-      .limit(k)
+      .filter(col("score") > 0), k)
   }
 
   /** Oracle for `searchCoverDensity` — the Clarke/Cormack/Tudhope cover
@@ -1463,39 +1014,23 @@ object Fts {
     * terms are added left-to-right in query-term order, identical in
     * the oracle; round(…, 6).
     *
-    * Scale shape: one scan-local pass computes (dl, tf_i per term) per
-    * doc; the corpus stats (N, Σdl, df_i) are ONE tiny aggregate row
-    * cross-joined back by broadcast — at 100 TB that is a full scan +
-    * a 1-row broadcast, no per-term shuffle, and the TakeOrdered top-k
-    * never materializes the ranking. */
+    * Scale shape: the posting source carries (dl, tf_i) per doc and
+    * the corpus stats (N, Σdl, df_i) as 1-row broadcast frames (one
+    * aggregate over the scan, or the `_cs` sidecar + the pruned
+    * postings' dfs on the index route) — no per-term shuffle, and the
+    * TakeOrdered top-k never materializes the ranking. */
   def searchBm25(spark: SparkSession, dir: String, query: String,
       lang: String, k: Int, k1: Double = 1.2, b: Double = 0.75): DataFrame =
-    bm25Scored(spark, dir, query, lang, k1, b)
-      .select(col("doc_id"), col("score"))
-      .orderBy(col("score").desc, col("doc_id").asc)
-      .limit(k)
+    topK(bm25Scored(spark, dir, query, lang, k1, b)
+      .select(col("doc_id"), col("score")), k)
 
   /** The full BM25-scored match frame (no top-k), with `grade` = number
     * of distinct query terms present in the doc — the graded-relevance
-    * label the retrieval-eval operator (RetrievalEval.ndcg) uses. Same
-    * plan shape as searchBm25: one scan-local pass for (dl, tf_i), a
-    * 1-row broadcast stats frame, no per-term shuffle. */
+    * label the retrieval-eval operator (RetrievalEval.ndcg) uses. */
   def bm25Scored(spark: SparkSession, dir: String, query: String,
       lang: String, k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     val terms = TextAnalyzer.analyze(query).distinct
     require(terms.nonEmpty, "query analyzes to no terms")
-    val withToks = Tables.documents(spark, dir)
-      .filter(col("lang") === lit(lang))
-      .select(col("doc_id"),
-        explode(array(TextAnalyzer.tokens(col("text")))).as("toks"))
-    val perDoc = withToks.select(
-      col("doc_id") +: size(col("toks")).as("dl") +:
-        terms.indices.map(i =>
-          size(filter(col("toks"), x => x === lit(terms(i)))).as(s"tf$i")): _*)
-    val statAggs = count(lit(1)).as("n") +: sum(col("dl")).as("sumdl") +:
-      terms.indices.map(i =>
-        sum(when(col(s"tf$i") > 0, 1L).otherwise(0L)).as(s"df$i"))
-    val stats = perDoc.agg(statAggs.head, statAggs.tail: _*)
     val avgdl = col("sumdl").cast("double") / col("n")
     val contrib = terms.indices.map { i =>
       val idf = log(lit(1.0) +
@@ -1509,7 +1044,7 @@ object Fts {
     val grade = terms.indices
       .map(i => when(col(s"tf$i") > 0, 1).otherwise(0))
       .reduce(_ + _)
-    perDoc.crossJoin(broadcast(stats))
+    postings(spark, dir, terms, plain, Some(lang), Want(corpus = true))
       .filter(terms.indices.map(i => col(s"tf$i") > 0).reduce(_ || _))
       .select(col("doc_id"),
         round(contrib.reduce(_ + _), 6).as("score"),
@@ -1602,27 +1137,24 @@ object Fts {
 
   /** Phrase search: documents containing the query terms ADJACENT and in
     * order (the tsquery `<->` followed-by analog). A phrase of k terms
-    * is exactly a k-gram over the analyzed token stream, so matching is
-    * scan-local: slide a k-window, count exact matches, rank by
-    * occurrence count. Same zero-exchange plan shape as `search`.
+    * is exactly a k-gram over the analyzed token stream: an occurrence
+    * at position p is p ∈ positions(term₀) with p+j ∈ positions(termⱼ)
+    * for every later phrase slot (a full match never runs past the end,
+    * because its last slot's position exists). Ranked by occurrence
+    * count.
     */
   def phraseSearch(spark: SparkSession, dir: String, phrase: String,
       lang: String, k: Int): DataFrame = {
     val terms = TextAnalyzer.analyze(phrase)
     require(terms.length >= 2, "phrase needs at least 2 analyzed terms")
-    val n = terms.length
-    val withToks = Tables.documents(spark, dir)
-      .filter(col("lang") === lit(lang))
-      .select(col("doc_id"),
-        explode(array(TextAnalyzer.tokens(col("text")))).as("toks"))
-    val idx = when(size(col("toks")) >= n,
-      sequence(lit(0), size(col("toks")) - n))
-      .otherwise(array().cast("array<int>"))
-    val matches = filter(transform(idx, i =>
-      terms.indices.map(j =>
-        element_at(col("toks"), i + j + 1) === lit(terms(j)))
-        .reduce(_ && _)), b => b)
-    withToks
+    val uniq = terms.distinct
+    val slot = terms.map(uniq.indexOf) // phrase slot j → position column
+    val matches = filter(col(s"pos${slot.head}"),
+      p => terms.indices.tail
+        .map(j => array_contains(col(s"pos${slot(j)}"), p + j))
+        .reduce(_ && _))
+    postings(spark, dir, uniq, plain, Some(lang),
+        Want(positions = true, allTerms = true))
       .select(col("doc_id"), size(matches).cast("long").as("n_occurrences"))
       .filter(col("n_occurrences") > 0)
       .orderBy(col("n_occurrences").desc, col("doc_id").asc)
@@ -1634,28 +1166,19 @@ object Fts {
     * generalization PG reaches with repeated `<N>` phrase operators:
     * documents where `a` and `b` occur within `w` token positions of
     * each other (either order), ranked by the closest approach then by
-    * pair density. Same scan-local shape as [[phraseSearch]]: token
-    * positions and the pair-gap minimum are computed inside the scan
-    * from the analyzed token array (cost ∝ occurrences of a × b per
-    * doc — tiny, and never a shuffle), then TakeOrderedAndProject.
-    * Output (doc_id, n_pairs, min_gap). */
+    * pair density. The pair gaps come from the two terms' ascending
+    * position lists (cost ∝ occurrences of a × b per doc — tiny), then
+    * TakeOrderedAndProject. Output (doc_id, n_pairs, min_gap). */
   def nearSearch(spark: SparkSession, dir: String, a: String, b: String,
       w: Int, lang: String, k: Int): DataFrame = {
     val Seq(ta, tb) = TextAnalyzer.analyze(s"$a $b").take(2)
-    val withToks = Tables.documents(spark, dir)
-      .filter(col("lang") === lit(lang))
-      .select(col("doc_id"),
-        explode(array(TextAnalyzer.tokens(col("text")))).as("toks"))
-    // empty-token guard: sequence(1, 0) would DESCEND and ANSI
-    // element_at would throw on the out-of-range index
-    def posOf(t: String) = filter(
-      when(size(col("toks")) > 0,
-        sequence(lit(1), size(col("toks"))))
-        .otherwise(array().cast("array<int>")),
-      i => element_at(col("toks"), i) === lit(t))
-    val gaps = flatten(transform(posOf(ta),
-      x => transform(posOf(tb), y => abs(y - x))))
-    withToks
+    val uniq = Seq(ta, tb).distinct
+    val posA = col(s"pos${uniq.indexOf(ta)}")
+    val posB = col(s"pos${uniq.indexOf(tb)}")
+    val gaps = flatten(transform(posA,
+      x => transform(posB, y => abs(y - x))))
+    postings(spark, dir, uniq, plain, Some(lang),
+        Want(positions = true, allTerms = true))
       .select(col("doc_id"),
         size(filter(gaps, d => d <= lit(w))).cast("long").as("n_pairs"),
         array_min(gaps).as("min_gap"))
@@ -1697,20 +1220,12 @@ object Fts {
   def phraseDistSearch(spark: SparkSession, dir: String, a: String,
       b: String, n: Int, lang: String, k: Int): DataFrame = {
     val Seq(ta, tb) = TextAnalyzer.analyze(s"$a $b").take(2)
-    val withToks = Tables.documents(spark, dir)
-      .filter(col("lang") === lit(lang))
-      .select(col("doc_id"),
-        explode(array(TextAnalyzer.tokens(col("text")))).as("toks"))
-    // bound i to size-n so the lookahead never indexes past the array
-    // (ANSI element_at throws on out-of-range; and sequence(1, 0)
-    // would DESCEND — the phraseSearch guard pattern)
-    val idxs = when(size(col("toks")) > n,
-      sequence(lit(1), size(col("toks")) - lit(n)))
-      .otherwise(array().cast("array<int>"))
-    val hits = filter(idxs,
-      i => element_at(col("toks"), i) === lit(ta) &&
-        element_at(col("toks"), i + lit(n)) === lit(tb))
-    withToks
+    val uniq = Seq(ta, tb).distinct
+    val posA = col(s"pos${uniq.indexOf(ta)}")
+    val posB = col(s"pos${uniq.indexOf(tb)}")
+    val hits = filter(posA, p => array_contains(posB, p + lit(n)))
+    postings(spark, dir, uniq, plain, Some(lang),
+        Want(positions = true, allTerms = true))
       .select(col("doc_id"), size(hits).cast("long").as("n_occurrences"))
       .filter(col("n_occurrences") > 0)
       .orderBy(col("n_occurrences").desc, col("doc_id").asc)
@@ -1827,6 +1342,9 @@ object Fts {
     * tf. */
   def ensureReverseIndex(spark: SparkSession, dir: String): String = {
     val name = s"graft_fts_rev_${ScaleOps.contentHash(dir, "documents")}"
+    // the input first: its generation must be current before this
+    // family's marker is checked against it
+    ensureIndex(spark, dir)
     ScaleOps.ensure(spark, ScaleOps.Family("fts_reverse", 1),
         ScaleOps.AttachSpec(name, "rterm", 32)) {
       Seq(spark.table(ensureIndex(spark, dir))
@@ -2150,28 +1668,22 @@ object Fts {
        |FROM perdoc GROUP BY lang ORDER BY lang ASC""".stripMargin
   }
 
-  /** [[facetedSearchIndexed]] over the VACUUMED forward index + attrs
-    * sidecar — the post-delete facet panel with no anti-join anywhere
-    * in the query (both generations already dropped the tombstones);
-    * the oracle recomputes the facets from the surviving corpus. */
+  /** [[facetedSearch]]'s index route over the VACUUMED forward index +
+    * attrs sidecar — the post-delete facet panel with no anti-join
+    * anywhere in the query (both generations already dropped the
+    * tombstones); the oracle recomputes the facets from the surviving
+    * corpus. */
   def facetedSearchVacuumed(spark: SparkSession, dir: String,
       query: String, mod: Long): DataFrame = {
     val terms = TextAnalyzer.analyze(query).distinct
     require(terms.nonEmpty, "query analyzes to no terms")
-    val postings =
+    val hits =
       ScaleOps.bucketProbe(spark, ensureVacuumedIndex(spark, dir, mod), terms)
     val attrs = spark.table(ScaleOps.ensureVacuumed(spark,
         ensureDocAttrs(spark, dir), mod)(withoutDeletes(spark, dir, mod)))
       .select("doc_id", "lang", "source")
-    pivotedTfs(postings, terms)
-      .filter(terms.indices.map(i => col(s"tf$i").isNotNull)
-        .reduce(_ && _))
-      .join(attrs, Seq("doc_id"))
-      .groupBy("lang", "source")
-      .agg(count(lit(1)).as("n_docs"),
-        sum(terms.indices.map(i => col(s"tf$i")).reduce(_ + _))
-          .cast("long").as("matched_tf"))
-      .orderBy(col("lang").asc, col("source").asc)
+    facets(pivot(hits, terms, positions = false).join(attrs, Seq("doc_id")),
+      terms.length)
   }
 
   def facetedSearchVacuumedOracleSql(query: String, mod: Long): String = {
@@ -2238,29 +1750,26 @@ object Fts {
     * AND ([[graft.functions.BoolQuery]] holds the grammar): one
     * driver-side parse, then the SAME AST emits both the Spark
     * predicate and the oracle SQL, so the semantics have one source of
-    * truth. Matching stays scan-local exactly like [[search]] (per-term
-    * tf columns from the analyzed token array, zero exchanges before
-    * the top-k); ranking sums the tf of terms in NON-negated positions
-    * only (a doc matching `a & !b` ranks by a, not b). */
+    * truth. Matching reads the posting source's per-term tf columns;
+    * ranking sums the tf of terms in NON-negated positions only (a doc
+    * matching `a & !b` ranks by a, not b). A PURE-NEGATION query — one
+    * whose predicate holds with every term absent (e.g. `!sort`) —
+    * matches docs with no query-term posting at all, so it asks the
+    * source for every doc in scope. */
   def booleanSearch(spark: SparkSession, dir: String, query: String,
       lang: String, k: Int): DataFrame = {
-    val ast = graft.functions.BoolQuery.parse(query)
-    val terms = graft.functions.BoolQuery.terms(ast)
-    val pos = graft.functions.BoolQuery.positiveTerms(ast)
-    val withToks = Tables.documents(spark, dir)
-      .filter(col("lang") === lang)
-      .select(col("doc_id"),
-        TextAnalyzer.tokens(col("text")).as("toks"))
-    val tfCols = terms.map(t =>
-      size(filter(col("toks"), x => x === lit(t))).as(s"tf_$t"))
-    val projected = withToks
-      .select(col("doc_id") +: tfCols: _*)
-    val pred = graft.functions.BoolQuery
-      .predicate(ast, t => col(s"tf_$t") > 0)
+    import graft.functions.BoolQuery
+    val ast = BoolQuery.parse(query)
+    val terms = BoolQuery.terms(ast)
+    val pos = BoolQuery.positiveTerms(ast)
+    def tf(t: String) = col(s"tf${terms.indexOf(t)}")
+    val pred = BoolQuery.predicate(ast, t => tf(t) > 0)
     val rank =
       if (pos.isEmpty) lit(0L)
-      else pos.map(t => col(s"tf_$t").cast("long")).reduce(_ + _)
-    projected.filter(pred)
+      else pos.map(t => tf(t).cast("long")).reduce(_ + _)
+    postings(spark, dir, terms, plain, Some(lang),
+        Want(universe = BoolQuery.matches(ast, _ => false)))
+      .filter(pred)
       .select(col("doc_id"), rank.as("matched_tf"))
       .orderBy(col("matched_tf").desc, col("doc_id").asc)
       .limit(k)
@@ -2294,12 +1803,12 @@ object Fts {
     * algebra): quoted phrases, bare `OR`, glued `-` negation, nothing
     * is a syntax error ([[graft.functions.WebSearchQuery]] holds the
     * grammar and PG-semantics notes). One driver-side parse; the SAME
-    * AST emits the Spark predicate and the oracle SQL. Matching stays
-    * scan-local like [[search]]/[[phraseSearch]]: per-term tf and
-    * per-phrase adjacency counts computed from the analyzed token
-    * array inside the scan, zero exchanges before the top-k. Rank =
-    * total match count of atoms in non-negated positions (term tf +
-    * phrase occurrences), the booleanSearch convention. */
+    * AST emits the Spark predicate and the oracle SQL. Term atoms count
+    * via the posting source's tf columns, phrase atoms via its position
+    * lists (the [[phraseSearch]] rule), and a pure-negation query asks
+    * for every doc in scope (the [[booleanSearch]] rule). Rank = total
+    * match count of atoms in non-negated positions (term tf + phrase
+    * occurrences), the booleanSearch convention. */
   def websearchSearch(spark: SparkSession, dir: String, query: String,
       lang: String, k: Int): DataFrame = {
     import graft.functions.WebSearchQuery
@@ -2308,32 +1817,27 @@ object Fts {
     val atoms = WebSearchQuery.atoms(ast)
     val pos = WebSearchQuery.positiveAtoms(ast)
     val name = atoms.zipWithIndex.map { case (a, i) => a -> s"m$i" }.toMap
-    // explode(array(...)) barrier (the search/phraseSearch trick):
-    // materialize the token array once per row — project collapse
-    // would otherwise inline the tokenizer into EVERY match column,
-    // and subexpression elimination is off inside HOF lambdas
-    // (measured: 2.1 s -> phrase-class without the barrier at sf0.1)
-    val withToks = Tables.documents(spark, dir)
-      .filter(col("lang") === lit(lang))
-      .select(col("doc_id"),
-        explode(array(TextAnalyzer.tokens(col("text")))).as("toks"))
-    def phraseCount(ts: Seq[String]): Column = {
-      val n = ts.length
-      val idx = when(size(col("toks")) >= n,
-        sequence(lit(0), size(col("toks")) - n))
-        .otherwise(array().cast("array<int>"))
-      size(filter(transform(idx, i =>
-        ts.indices.map(j =>
-          element_at(col("toks"), i + j + 1) === lit(ts(j)))
-          .reduce(_ && _)), b => b))
-    }
+    val fetch = atoms.flatMap {
+      case WTerm(t) => Seq(t)
+      case WPhrase(ts) => ts
+      case other => throw new IllegalStateException(s"non-leaf $other")
+    }.distinct
+    def posOf(t: String) = col(s"pos${fetch.indexOf(t)}")
+    def phraseCount(ts: Seq[String]): Column =
+      if (ts.length == 1) size(posOf(ts.head))
+      else size(filter(posOf(ts.head),
+        p => ts.indices.tail
+          .map(j => array_contains(posOf(ts(j)), p + j))
+          .reduce(_ && _)))
     val matchCols = atoms.map {
-      case a @ WTerm(t) =>
-        size(filter(col("toks"), x => x === lit(t))).as(name(a))
+      case a @ WTerm(t) => col(s"tf${fetch.indexOf(t)}").as(name(a))
       case a @ WPhrase(ts) => phraseCount(ts).as(name(a))
       case other => throw new IllegalStateException(s"non-leaf $other")
     }
-    val projected = withToks.select(col("doc_id") +: matchCols: _*)
+    val projected = postings(spark, dir, fetch, plain, Some(lang),
+        Want(positions = atoms.exists(_.isInstanceOf[WPhrase]),
+          universe = WebSearchQuery.matches(ast, _ => false)))
+      .select(col("doc_id") +: matchCols: _*)
     val pred = WebSearchQuery.predicate(ast, a => col(name(a)))
     val rank =
       if (pos.isEmpty) lit(0L)
@@ -2486,28 +1990,26 @@ object Fts {
   /** Faceted search — the aggregation panel every search UI renders
     * beside the hit list (Elastic terms-aggs, PG GROUP BY over the
     * match): the AND-match doc set of `query`, bucketed by
-    * (lang, source) with doc counts and total matched tf. One
-    * scan-local match pass (the [[search]] formulation keeps facets on
-    * the SAME zero-exchange scan) feeding one partial-aggregated
-    * groupBy — never a join between hits and facets. */
+    * (lang, source) with doc counts and total matched tf: the posting
+    * source over every language, with the facet keys as its attrs
+    * columns, feeding one partial-aggregated groupBy. */
   def facetedSearch(spark: SparkSession, dir: String,
       query: String): DataFrame = {
     val terms = TextAnalyzer.analyze(query).distinct
     require(terms.nonEmpty, "query analyzes to no terms")
-    val withToks = Tables.documents(spark, dir)
-      .select(col("doc_id"), col("lang"), col("source"),
-        explode(array(TextAnalyzer.tokens(col("text")))).as("toks"))
-    val tfCols = terms.indices.map(i =>
-      size(filter(col("toks"), x => x === lit(terms(i)))).as(s"tf$i"))
-    withToks
-      .select(col("doc_id") +: col("lang") +: col("source") +: tfCols: _*)
-      .filter(terms.indices.map(i => col(s"tf$i") > 0).reduce(_ && _))
+    facets(postings(spark, dir, terms, plain, None,
+      Want(attrs = true, allTerms = true)), terms.length)
+  }
+
+  /** The facet panel over per-doc tf columns + (lang, source). */
+  private def facets(docs: DataFrame, nTerms: Int): DataFrame =
+    docs
+      .filter((0 until nTerms).map(i => col(s"tf$i") > 0).reduce(_ && _))
       .groupBy("lang", "source")
       .agg(count(lit(1)).as("n_docs"),
-        sum(terms.indices.map(i => col(s"tf$i")).reduce(_ + _))
+        sum((0 until nTerms).map(i => col(s"tf$i")).reduce(_ + _))
           .cast("long").as("matched_tf"))
       .orderBy(col("lang").asc, col("source").asc)
-  }
 
   def facetedSearchOracleSql(query: String): String = {
     val terms = TextAnalyzer.analyze(query).distinct
@@ -2708,10 +2210,9 @@ object Fts {
     val terms = TextAnalyzer.analyze(query).distinct
     require(terms.nonEmpty, "query analyzes to no terms")
     // the hit list rides the probe route when the corpus is past the
-    // routing threshold (bit-identical to the scan route, FtsRouteSpec)
-    // — the snippet pass then anchors on k index-probe rows instead of
-    // a second corpus tokenization (r18)
-    val top = searchAuto(spark, dir, query, lang, k)
+    // routing threshold — the snippet pass then anchors on k index-probe
+    // rows instead of a second corpus tokenization (r18)
+    val top = search(spark, dir, query, lang, k)
     val docs = Tables.documents(spark, dir)
       .filter(col("lang") === lit(lang))
       .select(col("doc_id"), col("text"))
@@ -2857,21 +2358,23 @@ object Fts {
       lang: String, k: Int): DataFrame = {
     val terms = TextAnalyzer.analyze(query).distinct
     require(terms.nonEmpty, "query analyzes to no terms")
-    rarestFirstChain(spark, ensureIndex(spark, dir), terms, lang, k)
+    topK(andScored(rarestFirstChain(spark, ensureIndex(spark, dir), terms,
+      lang), terms.length), k)
   }
 
-  /** The chain itself, shared by [[searchRarestFirst]] (always-chain,
-    * the registered rewrite) and [[searchIndexed]]'s adaptive route.
+  /** The chain itself — (doc_id, tf$i) of the docs holding every term —
+    * shared by [[searchRarestFirst]] (always-chain, the registered
+    * rewrite) and the adaptive AND route of the posting source's probe.
     * The df probe rides the [[termDfs]] memo, so steady-state repeats
     * of a query skip the statistics job entirely. */
   private def rarestFirstChain(spark: SparkSession, idxName: String,
-      terms: Seq[String], lang: String, k: Int): DataFrame = {
+      terms: Seq[String], lang: String): DataFrame = {
     val dfs = termDfs(spark, idxName, terms, lang)
     // an absent term makes the AND-match provably empty — skip the
     // joins entirely (the posting engine's same short-circuit)
     if (terms.exists(t => !dfs.contains(t)))
-      return spark.table(idxName).filter(lit(false))
-        .select(col("doc_id"), lit(0.0).as("score"))
+      return spark.table(idxName).filter(lit(false)).select(col("doc_id") +:
+        terms.indices.map(i => lit(0L).as(s"tf$i")): _*)
     // join in ascending-df order, but carry each term's tf under its
     // ORIGINAL query index so the final sum can replay search()'s tree
     val origIdx = terms.zipWithIndex.toMap
@@ -2880,17 +2383,8 @@ object Fts {
       ScaleOps.bucketProbe(spark, idxName, Seq(t))
         .filter(col("lang") === lit(lang))
         .select(col("doc_id"), col("tf").as(s"tf${origIdx(t)}"))
-    val joined = ordered.tail.foldLeft(post(ordered.head)) {
+    ordered.tail.foldLeft(post(ordered.head)) {
       (cur, t) => cur.join(post(t), "doc_id")
     }
-    // identical expression tree to search(): query-term-index order
-    val s = terms.indices
-      .map(i => log(lit(1.0) + col(s"tf$i")))
-      .reduce(_ + _)
-    joined
-      .select(col("doc_id"),
-        round(s / (lit(1.0) + s), 6).as("score"))
-      .orderBy(col("score").desc, col("doc_id").asc)
-      .limit(k)
   }
 }

@@ -66,6 +66,9 @@ object FuzzySearch {
   def ensureFuzzyIndex(spark: SparkSession, dir: String,
       lang: String): String = {
     val name = s"graft_fuzzy_${lang}_${ScaleOps.contentHash(dir, "documents")}"
+    // the input first: its generation must be current before this
+    // family's marker is checked against it
+    Fts.ensureIndex(spark, dir)
     ScaleOps.ensure(spark, ScaleOps.Family("fuzzy", 1),
         ScaleOps.AttachSpec(name, "variant", 32)) {
       val vocab = spark.table(Fts.ensureIndex(spark, dir))

@@ -48,6 +48,9 @@ object GraphAnn {
       nCentroids: Int, m: Int): String = {
     val name =
       s"graft_gann_${nCentroids}_${m}_${ScaleOps.contentHash(dir, "embeddings")}"
+    // the input first: its generation must be current before this
+    // family's marker is checked against it
+    Similarity.ensureIvfIndex(spark, dir, nCentroids)
     ScaleOps.ensure(spark, ScaleOps.Family("graph_ann", 1),
         ScaleOps.AttachSpec(name, "src", 16)) {
       // probe-2 assignment against the SAME stored trained centroids

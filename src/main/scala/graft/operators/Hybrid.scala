@@ -50,14 +50,13 @@ object Hybrid {
     def ranks(rows: Array[Row], key: Row => Double): Map[Long, Long] =
       rows.sortBy(r => (key(r), r.getLong(0))).zipWithIndex
         .map { case (r, i) => r.getLong(0) -> (i + 1L) }.toMap
-    // searchAuto rides the persisted index probe when the corpus is
-    // past the routing threshold (bit-identical to the scan route,
-    // FtsRouteSpec) — the hybrid's FTS side is then corpus-size-
+    // search rides the persisted index probe when the corpus is past
+    // the routing threshold — the hybrid's FTS side is then corpus-size-
     // independent instead of re-tokenizing documents per query (r18)
     val Seq(knn, fts) = DriverThreads.all(
       () => ranks(Similarity.knnCosine(spark, dir, qid, kEach, 2.0)
         .select(col("vec_id"), col("dist")).collect(), _.getDouble(1)),
-      () => ranks(Fts.searchAuto(spark, dir, query, lang, kEach)
+      () => ranks(Fts.search(spark, dir, query, lang, kEach)
         .select(col("doc_id"), col("score")).collect(), -_.getDouble(1)))
     fuseOnDriver(spark, "fts_rank" -> fts, "knn_rank" -> knn, LongType,
       round(
@@ -172,12 +171,12 @@ object Hybrid {
               .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble)
         }.toMap
       }
-    // the index-probe FTS route, bit-identical to the scan route (see
-    // rrfSearch); both retrievals run concurrently
+    // the routed FTS side (see rrfSearch); both retrievals run
+    // concurrently
     val Seq(knn, fts) = DriverThreads.all(
       () => normed(Similarity.knnCosine(spark, dir, qid, kEach, 2.0)
         .select(col("vec_id"), col("dist")).collect(), -_),
-      () => normed(Fts.searchAuto(spark, dir, query, lang, kEach)
+      () => normed(Fts.search(spark, dir, query, lang, kEach)
         .select(col("doc_id"), col("score")).collect(), identity))
     fuseOnDriver(spark, "fts_n" -> fts, "knn_n" -> knn, DoubleType,
       round(lit(alpha) * coalesce(col("fts_n"), lit(0.0)) +

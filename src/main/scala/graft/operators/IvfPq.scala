@@ -152,12 +152,17 @@ object IvfPq {
     * (the same layout as the IVF index) — every probe statically
     * prunes to its nProbe buckets of the 32x-smaller table. */
   def ensureCodesTable(spark: SparkSession, dir: String,
-      nCentroids: Int): String =
+      nCentroids: Int): String = {
+    // the inputs first: their generations must be current before this
+    // family's marker is checked against them
+    Similarity.ensureIvfIndex(spark, dir, nCentroids)
+    ensureCodebook(spark, dir, nCentroids)
     ScaleOps.ensure(spark, ScaleOps.Family("ivfpq_codes", 1),
         ScaleOps.AttachSpec(codesName(dir, nCentroids), "centroid_id",
           nCentroids)) {
       Seq(encode(spark, dir, nCentroids))
     }
+  }
 
   /** Assign + residual-encode an arbitrary (vec_id, label, embedding)
     * delta frame against the STORED centroids and codebook (both ride

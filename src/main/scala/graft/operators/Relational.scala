@@ -98,15 +98,18 @@ object Relational {
       .join(broadcast(reg), col("n_regionkey") === col("r_regionkey"))
       .groupBy("r_name", "n_name")
       .agg(
-        round(sum(col("l_extendedprice") * (lit(1.0) - col("l_discount"))), 2)
-          .as("revenue"),
+        // decimal addition is exact and order-independent — the plain
+        // double sum landed one cent apart between engines at sf1
+        round(sum((col("l_extendedprice") * (lit(1.0) - col("l_discount")))
+          .cast("decimal(18,6)")), 2).cast("double").as("revenue"),
         count(lit(1)).as("n_items"))
       .orderBy(col("r_name").asc, col("revenue").desc, col("n_name").asc)
   }
 
   val q5OracleSql: String =
     """SELECT r_name, n_name,
-      |  round(sum(l_extendedprice * (1.0 - l_discount)), 2) AS revenue,
+      |  CAST(round(sum(CAST(l_extendedprice * (1.0 - l_discount)
+      |    AS DECIMAL(18,6))), 2) AS DOUBLE) AS revenue,
       |  count(*) AS n_items
       |FROM lineitem, supplier, nation, region
       |WHERE l_suppkey = s_suppkey AND s_nationkey = n_nationkey

@@ -44,12 +44,8 @@ object RetrievalEval {
     // corpus tokenize+score subtree (r16 job-floor fix). ROUTED like
     // fts_bm25 (r17): past the corpus-size threshold the scored frame
     // is the index probe, so the retrieval eval never re-tokenizes the
-    // corpus either — the two routes are bit-identical (FtsRouteSpec),
-    // so the eval's numbers don't depend on the route taken.
-    val scored = CacheScope.cached(
-      if (Fts.routeToIndex(spark, dir))
-        Fts.bm25ScoredIndexed(spark, dir, query, lang)
-      else Fts.bm25Scored(spark, dir, query, lang))
+    // corpus either.
+    val scored = CacheScope.cached(Fts.bm25Scored(spark, dir, query, lang))
 
     // engine ranking: bounded top-k collect (k ≤ 10, same regime as
     // Hybrid's RRF rank fold — documented driver-side bound)

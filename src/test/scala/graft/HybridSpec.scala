@@ -12,7 +12,7 @@ class HybridSpec extends SparkSpec {
   private def sparkSideRrf(query: String, lang: String, qid: Long,
       kEach: Int, kRrf: Int, k: Int): DataFrame = {
     import spark.implicits._
-    val fts = Fts.searchAuto(spark, Sf0001, query, lang, kEach)
+    val fts = Fts.search(spark, Sf0001, query, lang, kEach)
       .select(col("doc_id"), col("score")).collect()
       .map(r => (r.getLong(0), r.getDouble(1)))
       .sortBy { case (id, s) => (-s, id) }
@@ -60,7 +60,7 @@ class HybridSpec extends SparkSpec {
     import spark.implicits._
     def norm6(x: Double): Double =
       BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-    val fts = Fts.searchAuto(spark, Sf0001, query, lang, kEach)
+    val fts = Fts.search(spark, Sf0001, query, lang, kEach)
       .select(col("doc_id"), col("score")).collect()
       .map(r => (r.getLong(0), r.getDouble(1)))
     val ftsN = (if (fts.isEmpty) Seq.empty[(Long, Double)]

@@ -118,8 +118,9 @@ class PlanFactsSpec extends SparkSpec {
     // postings, TakeOrderedAndProject — corpus never rescanned
     ("fts_topk", routeIndex, Facts(1, 0, false)),
     // BM25 scan route: one 1-row stats aggregate exchange + its
-    // broadcast ride, TakeOrderedAndProject
-    ("fts_bm25", routeScan, Facts(1, 1, false)),
+    // broadcast ride over the partition-pruned documents scan,
+    // TakeOrderedAndProject
+    ("fts_bm25", routeScan, Facts(1, 1, true)),
     // BM25 probe: postings pivot exchange + its re-partition into the
     // bucketed dl-sidecar join; broadcasts = the two 1-row stats
     // frames (dfs, corpus n/sumdl) + the planner's fixture-size choice

@@ -405,6 +405,63 @@ class ScaleOpsSpec extends SparkSpec {
     Seq(in, rel, lits).foreach(reset)
   }
 
+  test("ensure: a dependent family ensures its input first, so a fresh " +
+      "session rebuilds it over a rebuilt input") {
+    import java.nio.file.Files
+    import scala.jdk.CollectionConverters._
+    import graft.operators.{Fts, FuzzySearch, GraphAnn, IvfPq, Similarity}
+    // a copy of the fixture: its own content hashes, so its own
+    // generations
+    val dir = Files.createTempDirectory("graft-dep-order")
+    installCopyTo(java.nio.file.Paths.get(Sf0001), dir)
+    val d = dir.toString
+    val hashes = Seq("documents", "embeddings").map(ScaleOps.contentHash(d, _))
+    def marker(t: String) = location(t).resolve("_GRAFT_ATTACH")
+    // a fresh session's view: every generation's files, no catalog entry
+    def forget(): Unit = spark.catalog.listTables().collect().map(_.name)
+      .filter(t => hashes.exists(t.contains)).foreach { t =>
+        val keep = Files.createTempDirectory("graft-dep")
+        installCopyTo(location(t), keep)
+        reset(t)
+        installCopyTo(keep, location(t))
+        graft.sources.ParquetStore.deleteRecursively(keep)
+      }
+    val families: Seq[(String, () => String, () => String)] = Seq(
+      ("fuzzy", () => Fts.ensureIndex(spark, d),
+        () => FuzzySearch.ensureFuzzyIndex(spark, d, "en")),
+      ("fts_df", () => Fts.ensureIndex(spark, d),
+        () => Fts.ensureDfStats(spark, d)),
+      ("fts_reverse", () => Fts.ensureIndex(spark, d),
+        () => Fts.ensureReverseIndex(spark, d)),
+      ("graph_ann", () => Similarity.ensureIvfIndex(spark, d, 8),
+        () => GraphAnn.ensureGraphIndex(spark, d, 8, 4)),
+      ("ivfpq_codes", () => Similarity.ensureIvfIndex(spark, d, 10),
+        () => IvfPq.ensureCodesTable(spark, d, 10)))
+    try {
+      val stale = families.flatMap { case (family, input, dependent) =>
+        // the input's generation on disk is an older version's, and the
+        // dependent is built over it
+        val in = input()
+        Files.write(marker(in), Files.readAllLines(marker(in)).asScala
+          .map(l => if (l.startsWith("version=")) "version=0" else l).asJava)
+        val dep = dependent()
+        val before = Files.readString(marker(dep))
+        forget()
+        assert(dependent() == dep)
+        val rebuilt = !Files.readString(marker(in)).contains("version=0") &&
+          Files.readString(marker(dep)) != before
+        forget()
+        Option.when(!rebuilt)(family)
+      }
+      assert(stale.isEmpty,
+        s"attached over their input's older generation: $stale")
+    } finally {
+      spark.catalog.listTables().collect().map(_.name)
+        .filter(t => hashes.exists(t.contains)).foreach(reset)
+      graft.sources.ParquetStore.deleteRecursively(dir)
+    }
+  }
+
   test("attach: registering a built group starts no Spark job and " +
       "registers the building session's schema") {
     layouts.foreach { case (layout, spec) =>

@@ -17,6 +17,10 @@ class ServingPathSpec extends SparkSpec {
     (d.schema.json, d.collect().map(_.toSeq.toList).toSeq)
   }
 
+  /** `body` on the FTS index route. */
+  private def indexed[A](body: => A): A =
+    withConf("graft.fts.route" -> "index")(body)
+
   /** (lookups off, lookups on) results of `df`. */
   private def bothPaths(df: => DataFrame)
       : ((String, Seq[Seq[Any]]), (String, Seq[Seq[Any]])) =
@@ -51,26 +55,24 @@ class ServingPathSpec extends SparkSpec {
 
   test("searchIndexed is bit-identical on both paths and takes the " +
       "same AND route") {
-    def route(q: String) = Fts.searchIndexed(spark, Sf0001, q, "en", 10)
-      .queryExecution.executedPlan.toString.contains("Join")
+    def probe(q: String) = indexed(Fts.search(spark, Sf0001, q, "en", 10))
+    def route(q: String) =
+      probe(q).queryExecution.executedPlan.toString.contains("Join")
     val queries = Seq("hash", "hash join", "hash join merge",
       "hash zzqxabsent")
     for (q <- queries) {
-      val (off, on) = bothPaths(Fts.searchIndexed(spark, Sf0001, q, "en", 10))
+      val (off, on) = bothPaths(probe(q))
       assert(on == off, q)
       assert(withBroadcastThreshold("-1")(route(q)) == route(q), q)
     }
-    assert(result(Fts.searchIndexed(spark, Sf0001, "hash join", "en", 10))
-      ._2.nonEmpty)
-    assert(result(Fts.searchIndexed(spark, Sf0001, "hash zzqxabsent",
-      "en", 10))._2.isEmpty)
+    assert(result(probe("hash join"))._2.nonEmpty)
+    assert(result(probe("hash zzqxabsent"))._2.isEmpty)
     // both AND routes are exercised: the share pin forces the chain,
     // and the two paths still agree on it
     try {
       spark.conf.set("graft.fts.rarestMaxDfShare", "1.0")
       assert(route("hash join merge"))
-      val (off, on) = bothPaths(
-        Fts.searchIndexed(spark, Sf0001, "hash join merge", "en", 10))
+      val (off, on) = bothPaths(probe("hash join merge"))
       assert(on == off && on._2.nonEmpty)
     } finally spark.conf.unset("graft.fts.rarestMaxDfShare")
   }
@@ -137,10 +139,10 @@ class ServingPathSpec extends SparkSpec {
     assert(jobsFired(
       Similarity.knnCosine(spark, Sf0001, 7L, 10, 0.95).collect())._2 == 1)
 
-    Fts.searchIndexed(spark, Sf0001, "hash join", "en", 10)
+    indexed(Fts.search(spark, Sf0001, "hash join", "en", 10))
     for (q <- Seq("sort merge", "hash join merge", "table scan index"))
-      assert(jobsFired(Fts.searchIndexed(spark, Sf0001, q, "en", 10))._2 == 0,
-        q)
+      assert(jobsFired(indexed(Fts.search(spark, Sf0001, q, "en", 10)))._2
+        == 0, q)
   }
 
   test("a bucket-file probe selecting more than 32 files is one job " +
@@ -216,14 +218,14 @@ class ServingPathSpec extends SparkSpec {
     val idx = Fts.ensureIndex(spark, Sf0001)
     val probes: Seq[(String, String, () => Unit)] = Seq(
       ("phrase", idx, () =>
-        Fts.phraseSearchIndexed(spark, Sf0001, "hash join", "en", 10)),
-      ("boolean", idx, () => Fts.booleanSearchIndexed(spark, Sf0001,
-        "(hash | merge) & !sort", "en", 10)),
-      ("bm25ScoredIndexed", idx, () =>
-        Fts.bm25ScoredIndexed(spark, Sf0001, "hash join", "en")),
-      ("searchLangIndexed", Fts.ensureLangIndex(spark, Sf0001, "fr"), () =>
-        Fts.searchLangIndexed(spark, Sf0001, "le merge et la table", "fr",
-          10)),
+        indexed(Fts.phraseSearch(spark, Sf0001, "hash join", "en", 10))),
+      ("boolean", idx, () => indexed(Fts.booleanSearch(spark, Sf0001,
+        "(hash | merge) & !sort", "en", 10))),
+      ("bm25Scored", idx, () =>
+        indexed(Fts.bm25Scored(spark, Sf0001, "hash join", "en"))),
+      ("searchLang", Fts.ensureLangIndex(spark, Sf0001, "fr"), () =>
+        indexed(Fts.searchLang(spark, Sf0001, "le merge et la table", "fr",
+          10))),
       ("fuzzySearch", idx, () => FuzzySearch.fuzzySearch(spark, Sf0001,
         "hashe joim merg", "en", 10, 8)),
       ("ivfPqScan", IvfPq.ensureCodesTable(spark, Sf0001, 10), () =>
@@ -300,10 +302,10 @@ class ServingPathSpec extends SparkSpec {
       ("rrfSearch (index route)", index,
         i => Hybrid.rrfSearch(spark, Sf0001, text(i), "en", vec(i)._1, 20,
           60, 10)),
-      ("searchAuto (index route)", index,
-        i => Fts.searchAuto(spark, Sf0001, text(i), "en", 10)),
-      ("searchBm25Auto", Nil,
-        i => Fts.searchBm25Auto(spark, Sf0001, text(i), "en", 10)),
+      ("search (index route)", index,
+        i => Fts.search(spark, Sf0001, text(i), "en", 10)),
+      ("searchBm25 (scan route)", Nil,
+        i => Fts.searchBm25(spark, Sf0001, text(i), "en", 10)),
       ("paginateDocuments", Nil,
         i => Relational.paginateDocuments(spark, Sf0001, 50, 7 * i)))
     val counts = classes.map { case (name, conf, request) =>

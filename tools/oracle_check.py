@@ -3,6 +3,8 @@
 
 Usage: python3 tools/oracle_check.py <sfDir> <verifyOutDir> \
            [--budget SECONDS] [--json OUT.json]
+       python3 tools/oracle_check.py <sfDir> <verifyOutDir> \
+           --against <otherVerifyOutDir>
 
 Loads each <name>/ parquet result written by graft.Verify, runs the
 matching oracle SQL from oracle_sql.json in DuckDB (tables = the sfDir
@@ -12,6 +14,13 @@ parquet files), sorts columns by name, and compares row counts, schemas
 Tables may be single files (<sfDir>/<t>.parquet, the driver fixture
 layout) or Spark-written directories (<sfDir>/<t>.parquet/part-*.parquet,
 the ScaleUp sf1 layout) — both resolve.
+
+--against DIR compares two Verify outputs instead of running the oracles:
+every query present in both must have the same column names and types
+and the same rows (sorted, exact values, no float tolerance). Every
+differing query is listed with the rows found on one side only. Use it
+for a default run against a forced-route run of the same code, or for a
+parent's run against a change's.
 
 --budget N time-boxes each ORACLE's DuckDB run to N seconds via
 connection interrupt; an over-budget oracle is reported SKIP (listed,
@@ -198,6 +207,52 @@ def main(sf_dir: str, out_dir: str, budget: float = 0.0,
     sys.exit(1 if n_fail else 0)
 
 
+def result_dirs(out_dir: str) -> set:
+    return {n for n in os.listdir(out_dir)
+            if os.path.isdir(f"{out_dir}/{n}") and
+            any(f.endswith(".parquet") for f in os.listdir(f"{out_dir}/{n}"))}
+
+
+def against(out_dir: str, other_dir: str, shown: int = 5) -> None:
+    """Row-identity of every query present in both Verify outputs."""
+    mine, theirs = result_dirs(out_dir), result_dirs(other_dir)
+    for name in sorted(mine ^ theirs):
+        side = out_dir if name in mine else other_dir
+        print(f"ONLY {name}: present in {side} only (not compared)")
+    n_same = n_diff = 0
+    con = duckdb.connect()
+    for name in sorted(mine & theirs):
+        a = f"read_parquet('{out_dir}/{name}/*.parquet')"
+        b = f"read_parquet('{other_dir}/{name}/*.parquet')"
+        schema_a = con.execute(f"DESCRIBE SELECT * FROM {a}").fetchall()
+        schema_b = con.execute(f"DESCRIBE SELECT * FROM {b}").fetchall()
+        cols_a = [(c[0], c[1]) for c in schema_a]
+        cols_b = [(c[0], c[1]) for c in schema_b]
+        if cols_a != cols_b:
+            print(f"DIFF {name}: columns {cols_a} vs {cols_b}")
+            n_diff += 1
+            continue
+        # EXCEPT ALL both ways: multiset difference, NaN equal to NaN
+        only_a = con.execute(
+            f"SELECT * FROM {a} EXCEPT ALL SELECT * FROM {b} ORDER BY ALL").fetchall()
+        only_b = con.execute(
+            f"SELECT * FROM {b} EXCEPT ALL SELECT * FROM {a} ORDER BY ALL").fetchall()
+        if only_a or only_b:
+            print(f"DIFF {name}: {len(only_a)} rows only in {out_dir}, "
+                  f"{len(only_b)} rows only in {other_dir}")
+            for r in only_a[:shown]:
+                print(f"  < {r}")
+            for r in only_b[:shown]:
+                print(f"  > {r}")
+            n_diff += 1
+        else:
+            n_same += 1
+    con.close()
+    print(f"\n{n_same} identical, {n_diff} different, "
+          f"{len(mine ^ theirs)} not in both")
+    sys.exit(1 if n_diff else 0)
+
+
 if __name__ == "__main__":
     import argparse
     ap = argparse.ArgumentParser(
@@ -210,6 +265,11 @@ if __name__ == "__main__":
                     help="write a CORRECTNESS-shaped artifact here")
     ap.add_argument("--skip-file", default="",
                     help="file of query names to skip (resume support)")
+    ap.add_argument("--against", default="",
+                    help="compare with this Verify output dir instead of "
+                         "running the oracles: row-identical or fail")
     args = ap.parse_args()
+    if args.against:
+        against(args.out_dir, args.against)
     main(args.sf_dir, args.out_dir, args.budget, args.json,
          args.skip_file)
